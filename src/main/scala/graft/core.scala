@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -66,13 +67,27 @@ object T {
     if (!spark.experimental.extraOptimizations.contains(plans.NanoTsPushdown))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ plans.NanoTsPushdown
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     NanoTsCols.getOrElse(name, Nil).foldLeft(df) { (acc, c) =>
       if (acc.schema(c).dataType == LongType)
         acc.withColumn(c, timestamp_micros(expr(s"$c div 1000")))
       else acc
     }
   }
+
+  /** Every parquet read of the engine: `s.read.parquet(paths: _*)` with
+    * the schema Spark would infer handed to it up front. Inference runs a
+    * one-task Spark job per open, even when it touches a single footer;
+    * here that footer is read on the driver instead ([[GraftParquetBridge]]),
+    * so opening a table submits no job. Partition columns are still
+    * discovered by Spark; a missing path or a directory without data
+    * files reads without a schema, so Spark raises its own error.
+    */
+  def parquet(s: SparkSession, paths: String*): DataFrame =
+    GraftParquetBridge.footerSchema(s, paths) match {
+      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
+    }
 
   /** As-of day = max event date in the testdata (events span
     * 2024-01-01..2024-01-30 at every scale factor). The reference slices on

@@ -903,7 +903,7 @@ object DedupOps {
     }
     val serve = () =>
       applyDedupDelta(
-        s, delta, s.read.parquet(s"$root/md5"), s.read.parquet(s"$root/band"))
+        s, delta, T.parquet(s, s"$root/md5"), T.parquet(s, s"$root/band"))
         .crossJoin(broadcast(thrDf))
         .select(
           $"doc_id",
@@ -994,7 +994,7 @@ object DedupOps {
         buildEmbedIndex(s, base).write.mode(SaveMode.Overwrite).parquet(root))
       ()
     }
-    val serve = () => applyEmbedDelta(s, delta, s.read.parquet(root))
+    val serve = () => applyEmbedDelta(s, delta, T.parquet(s, root))
     (build, serve)
   }
 

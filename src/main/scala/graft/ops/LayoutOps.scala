@@ -123,7 +123,7 @@ object LayoutOps {
       inDir: String,
       outDir: String,
       targetRowsPerFile: Long): Int = {
-    val df = spark.read.parquet(inDir)
+    val df = T.parquet(spark, inDir)
     val n = df.count()
     val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     df.repartition(files).write.mode("overwrite").parquet(outDir)

@@ -170,8 +170,8 @@ object LmOps {
     val build = () => { TextOps.writeBm25Index(s, d); () }
     val serve = () => {
       val path = SimilarityOps.serveRoot(s, d) + "/bm25"
-      val postings = s.read.parquet(s"$path/postings")
-      val nTotal = s.read.parquet(s"$path/stats")
+      val postings = T.parquet(s, s"$path/postings")
+      val nTotal = T.parquet(s, s"$path/stats")
         .agg(sum(col("l")).as("n_total"))
       lmScoreOf(docs(s, d), lmScoreAggFromPostings(postings, nTotal))
     }
@@ -212,8 +212,8 @@ object LmOps {
   private def bm25Frames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val path = SimilarityOps.serveRoot(s, d) + "/bm25"
     (
-      s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/stats").agg(sum(col("l")).as("n_total")))
+      T.parquet(s, s"$path/postings"),
+      T.parquet(s, s"$path/stats").agg(sum(col("l")).as("n_total")))
   }
 
   private[graft] def lmKnSplit(
@@ -221,7 +221,7 @@ object LmOps {
     val build = () => { writeBigramCounts(s, d); () }
     val serve = () =>
       lmKnFromCounts(
-        s.read.parquet(SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
+        T.parquet(s, SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
         docs(s, d))
     (build, serve)
   }
@@ -237,7 +237,7 @@ object LmOps {
     val serve = () => {
       val (postings, nTotal) = bm25Frames(s, d)
       lmInterpFromCounts(
-        s.read.parquet(SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
+        T.parquet(s, SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
         postings.groupBy($"term".as("w2")).agg(sum($"tf").as("cf1")),
         nTotal.select($"n_total".as("lt")),
         docs(s, d))
@@ -421,11 +421,10 @@ object LmOps {
       ()
     }
     val serve = () => {
-      val model = s.read.parquet(s"$root/model")
+      val model = T.parquet(s, s"$root/model")
       val deltaScores = lmScoreOf(
         delta, rarityAggOf(TextOps.bm25TokensOf(delta), model))
-      s.read
-        .parquet(s"$root/scores_v0")
+      T.parquet(s, s"$root/scores_v0")
         .unionByName(deltaScores)
         .orderBy($"doc_id")
     }

@@ -503,8 +503,7 @@ object RelationalOps {
     import s.implicits._
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
-    s.read
-      .parquet(s"$path/days")
+    T.parquet(s, s"$path/days")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_days"), union($"sk").as("msk"))
       .select(
@@ -605,7 +604,7 @@ object RelationalOps {
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
     val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
     paths
-      .map(p => s.read.parquet(p))
+      .map(p => T.parquet(s, p))
       .reduce(_ unionByName _)
       .groupBy($"event_type")
       .agg(
@@ -634,7 +633,7 @@ object RelationalOps {
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
     val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
     paths
-      .map(p => s.read.parquet(p))
+      .map(p => T.parquet(s, p))
       .reduce(_ unionByName _)
       .groupBy($"day", $"event_type")
       .agg(

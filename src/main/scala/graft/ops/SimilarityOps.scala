@@ -407,7 +407,9 @@ object SimilarityOps {
     // CPU-for-wall trade that is wrong at every scale. The sample is
     // O(256·k) rows by the FAISS posture; one task per Lloyd pass IS the
     // intended cost envelope.
-    val xs = xs0
+    // a NULL vector has no coordinates: it neither moves a mean nor
+    // counts toward one (and has no cell under the cosine scores)
+    val xs = xs0.filter($"x".isNotNull)
     val seeds = xs
       .filter($"vec_id" < k)
       .select($"grp", $"vec_id", $"x")
@@ -467,7 +469,7 @@ object SimilarityOps {
         .agg(
           graft.expr.VecDecimalSum(
             transform($"x", v => v.cast("decimal(27,10)"))).as("sums"),
-          count(lit(1)).as("cnt"))
+          count($"x").as("cnt"))
         .select(
           $"grp",
           $"cell",
@@ -756,7 +758,7 @@ object SimilarityOps {
       indexPaths: Seq[String],
       probes: DataFrame): DataFrame = {
     import s.implicits._
-    val idx = indexPaths.map(p => s.read.parquet(p)).reduce(_.unionByName(_))
+    val idx = indexPaths.map(p => T.parquet(s, p)).reduce(_.unionByName(_))
     val probeBuckets =
       probes.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     val w = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
@@ -947,7 +949,7 @@ object SimilarityOps {
       indexPaths: Seq[String],
       probeVecs: DataFrame): DataFrame = {
     import s.implicits._
-    val cbRead = s.read.parquet(s"${indexPaths.head}/codebook")
+    val cbRead = T.parquet(s, s"${indexPaths.head}/codebook")
     val probeCells = probeVecs
       .crossJoin(broadcast(codebookRow(cbRead)))
       .select(
@@ -959,7 +961,7 @@ object SimilarityOps {
     val pcells =
       probeCells.select($"pcell").distinct().collect().map(_.get(0)).toSeq
     val idx = indexPaths
-      .map(p => s.read.parquet(s"$p/cells").filter($"cell".isin(pcells: _*)))
+      .map(p => T.parquet(s, s"$p/cells").filter($"cell".isin(pcells: _*)))
       .reduce(_ unionByName _)
     val w = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
     idx
@@ -1219,7 +1221,7 @@ object SimilarityOps {
     val pbuckets = probes.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     quantStage(
       indexPaths
-        .map(p => s.read.parquet(p).filter($"bucket".isin(pbuckets: _*)))
+        .map(p => T.parquet(s, p).filter($"bucket".isin(pbuckets: _*)))
         .reduce(_ unionByName _),
       probes)
   }
@@ -1413,8 +1415,7 @@ object SimilarityOps {
     val serve = () => {
       val batch = cells.filter($"vec_id" > thr).localCheckpoint(true)
       val probed = batch.select($"cell").distinct().collect().map(_.get(0))
-      val base = s.read
-        .parquet(path)
+      val base = T.parquet(s, path)
         .filter($"cell".isin(probed.toSeq: _*))
         .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell"))
       batch
@@ -1591,8 +1592,7 @@ object SimilarityOps {
     val probed = b.select($"cell").distinct().collect().map(_.get(0)).toSeq
     val prior = memberRoots
       .map(p =>
-        s.read
-          .parquet(s"$p/cells")
+        T.parquet(s, s"$p/cells")
           .filter($"cell".isin(probed: _*))
           .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell")))
       .reduce(_ unionByName _)
@@ -1990,15 +1990,14 @@ object SimilarityOps {
       codebookPath: String,
       codesPaths: Seq[String]): DataFrame = {
     import s.implicits._
-    val cents = s.read
-      .parquet(codebookPath)
+    val cents = T.parquet(s, codebookPath)
       .select($"m", $"c_id", $"c", Vec.norm2($"c").as("cn2"))
     val cbRow = pqCodebookRow(cents)
     val qtab = pqProbeTab(emb(s, d).select($"vec_id", $"embedding"), cbRow)
       .crossJoin(broadcast(cbRow.select(
         transform($"mcb", mc =>
           transform(mc.getField("cb"), c => c.getField("cn2"))).as("ct"))))
-    val codes = codesPaths.map(p => s.read.parquet(p)).reduce(_ unionByName _)
+    val codes = codesPaths.map(p => T.parquet(s, p)).reduce(_ unionByName _)
     val dotSum = (0 until PqM)
       .map(m =>
         element_at(

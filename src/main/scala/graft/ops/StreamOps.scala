@@ -151,7 +151,7 @@ object StreamOps {
     // the directory is generation-homogeneous — all files share one
     // physical ts type, which a single wire schema requires anyway; a
     // mixed-generation feed must be split into homogeneous sources.
-    val rawSchema = s.read.parquet(sourceDir).schema
+    val rawSchema = T.parquet(s, sourceDir).schema
     val tsStoredAsNanoLong =
       rawSchema("ts").dataType == org.apache.spark.sql.types.LongType
     val src = s.readStream.options(options).schema(rawSchema).parquet(sourceDir)
@@ -375,7 +375,7 @@ object StreamOps {
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(path),
       fold = (s, roots, path) =>
-        aggregateSummaries(s.read.parquet(roots: _*))
+        aggregateSummaries(T.parquet(s, roots: _*))
           .coalesce(1)
           .write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -387,7 +387,7 @@ object StreamOps {
     */
   def publishedCorpusReport(s: SparkSession, summaryDir: String): DataFrame =
     aggregateSummaries(
-      s.read.parquet(
+      T.parquet(s,
         graft.index.GenLog.roots(s, summaryDir, what = "report summary"): _*))
 
   /** Daily compaction for the report summary — same stopped-stream
@@ -776,7 +776,7 @@ object StreamOps {
     * the banded-Jaccard lineage.
     */
   def ccFromPairState(s: SparkSession, indexDir: String): DataFrame = {
-    def read(sub: String): DataFrame = s.read.parquet(
+    def read(sub: String): DataFrame = T.parquet(s,
       indexVersions(s, indexDir, requiring = sub)
         .sorted
         .map(v => s"$indexDir/v$v/$sub"): _*)
@@ -880,21 +880,21 @@ object StreamOps {
     // each increment dir is its own partitioned root — read separately
     // and union (fan-in is O(batches since last compaction) by contract)
     def union(base: DataFrame, paths: Seq[String], cols: Seq[String]) =
-      (base +: paths.map(s.read.parquet(_)))
+      (base +: paths.map(T.parquet(s, _)))
         .map(_.select(cols.map(col): _*))
         .reduce(_ unionByName _)
     val md5 = union(
-      s.read.parquet(s"$indexDir/v$snapVer/md5_index"),
+      T.parquet(s, s"$indexDir/v$snapVer/md5_index"),
       vers("md5_inc"),
       Md5Cols :+ "cluster_id")
     val band = union(
-      s.read.parquet(s"$indexDir/v$snapVer/band_index"),
+      T.parquet(s, s"$indexDir/v$snapVer/band_index"),
       vers("band_inc"),
       BandCols :+ "cluster_id")
     val remapPaths = vers("remap")
     if (remapPaths.isEmpty) (md5, band)
     else {
-      val r = composeRemap(s.read.parquet(remapPaths: _*))
+      val r = composeRemap(T.parquet(s, remapPaths: _*))
       (applyRemap(md5, r, Md5Cols), applyRemap(band, r, BandCols))
     }
   }
@@ -1025,7 +1025,7 @@ object StreamOps {
   def readDedupAssignments(s: SparkSession, indexDir: String): DataFrame = {
     // committed assign dirs only (not a v*/assign glob): an in-flight
     // batch's partial write must never leak into the read view
-    val a = s.read.parquet(
+    val a = T.parquet(s,
       indexVersions(s, indexDir, requiring = "assign")
         .sorted
         .map(v => s"$indexDir/v$v/assign"): _*)
@@ -1033,7 +1033,7 @@ object StreamOps {
     if (remapVers.isEmpty) a
     else {
       val r = composeRemap(
-        s.read.parquet(remapVers.map(v => s"$indexDir/v$v/remap"): _*))
+        T.parquet(s, remapVers.map(v => s"$indexDir/v$v/remap"): _*))
       a.join(r, a("cluster_id") === r("old_cid"), "left")
         .select(a("doc_id"), coalesce(r("new_cid"), a("cluster_id")).as("cluster_id"))
     }
@@ -1071,7 +1071,7 @@ object StreamOps {
     // partitioned roots must be read separately (fan-in bounded by
     // compaction cadence)
     (s"$indexDir/v$snapVer/band_index" +: incs)
-      .map(p => s.read.parquet(p).select(EmbedCols.map(col): _*))
+      .map(p => T.parquet(s, p).select(EmbedCols.map(col): _*))
       .reduce(_ unionByName _)
   }
 
@@ -1148,7 +1148,7 @@ object StreamOps {
     * leaks into the read view).
     */
   def readEmbedPairs(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(
+    T.parquet(s,
       indexVersions(s, indexDir, requiring = "pairs")
         .sorted
         .map(v => s"$indexDir/v$v/pairs"): _*)
@@ -1179,7 +1179,7 @@ object StreamOps {
     write = (s, docs, path) => { TextOps.writeBm25IndexFrom(s, docs, path); () },
     fold = (s, roots, path) => {
       roots
-        .map(p => s.read.parquet(s"$p/postings"))
+        .map(p => T.parquet(s, s"$p/postings"))
         .reduce(_ unionByName _)
         .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tshard"))
         .repartition(col("tshard"))
@@ -1188,7 +1188,7 @@ object StreamOps {
         .partitionBy("tshard")
         .parquet(s"$path/postings")
       roots
-        .map(p => s.read.parquet(s"$p/stats"))
+        .map(p => T.parquet(s, s"$p/stats"))
         .reduce(_ unionByName _)
         .agg(sum(col("l")).as("l"), sum(col("n")).as("n"))
         .write
@@ -1201,7 +1201,7 @@ object StreamOps {
     write = (s, vecs, path) => SimilarityOps.writeAnnIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
-        .map(p => s.read.parquet(p)
+        .map(p => T.parquet(s, p)
           .select(col("vec_id"), col("embedding"), col("n2"), col("bucket")))
         .reduce(_ unionByName _)
         .repartition(col("bucket"))
@@ -1218,7 +1218,7 @@ object StreamOps {
     write = (s, vecs, path) => SimilarityOps.writeEmbStoreFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
-        .map(p => s.read.parquet(p)
+        .map(p => T.parquet(s, p)
           .select(
             col("vec_id"), col("embedding"), col("n2"),
             col("bucket"), col("ishard")))
@@ -1291,7 +1291,7 @@ object StreamOps {
         new graft.expr.QDigestMergeAgg(RelationalOps.QdK),
         org.apache.spark.sql.Encoders.BINARY)
       roots
-        .map(p => s.read.parquet(p))
+        .map(p => T.parquet(s, p))
         .reduce(_ unionByName _)
         .groupBy(col("day"), col("event_type"))
         .agg(
@@ -1352,7 +1352,7 @@ object StreamOps {
     write = (s, docs, path) => TextOps.writePhraseIndexFrom(s, docs, path),
     fold = (s, roots, path) =>
       roots
-        .map(p => s.read.parquet(s"$p/postings")
+        .map(p => T.parquet(s, s"$p/postings")
           .select(col("term"), col("doc_id"), col("pos"), col("tshard")))
         .reduce(_ unionByName _)
         .repartition(col("tshard"))
@@ -1395,10 +1395,10 @@ object StreamOps {
   private def lmFrames(s: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
     val roots = bm25GenerationRoots(s, indexDir)
     val postings = roots
-      .map(p => s.read.parquet(s"$p/postings"))
+      .map(p => T.parquet(s, s"$p/postings"))
       .reduce(_ unionByName _)
     val nTotal = roots
-      .map(p => s.read.parquet(s"$p/stats"))
+      .map(p => T.parquet(s, s"$p/stats"))
       .reduce(_ unionByName _)
       .agg(sum(col("l")).as("n_total"))
     (postings, nTotal)
@@ -1561,7 +1561,7 @@ object StreamOps {
     write = (s, vecs, path) => SimilarityOps.writeQuantIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
-        .map(p => s.read.parquet(p)
+        .map(p => T.parquet(s, p)
           .select(
             col("vec_id"), col("embedding"), col("n2"),
             col("bucket"), col("qv")))
@@ -1610,13 +1610,13 @@ object StreamOps {
     */
   private def ivfFamily(indexDir: String) = graft.index.GenLog.GenFamily(
     write = (s, vecs, path) => {
-      val cb = s.read.parquet(
+      val cb = T.parquet(s,
         s"${graft.index.GenLog.roots(s, indexDir, "IVF index").head}/codebook")
       SimilarityOps.writeIvfCellsFrom(s, vecs, cb, path)
     },
     fold = (s, roots, path) => {
       roots
-        .map(p => s.read.parquet(s"$p/cells")
+        .map(p => T.parquet(s, s"$p/cells")
           .select(
             col("vec_id"), col("embedding"), col("n2"), col("cell")))
         .reduce(_ unionByName _)
@@ -1625,7 +1625,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("cell")
         .parquet(s"$path/cells")
-      s.read.parquet(s"${roots.head}/codebook")
+      T.parquet(s, s"${roots.head}/codebook")
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/codebook")
@@ -1701,7 +1701,7 @@ object StreamOps {
       newCents: DataFrame,
       newIndexDir: String): Unit = {
     val vectors = ivfGenerationRoots(s, indexDir)
-      .map(p => s.read.parquet(s"$p/cells")
+      .map(p => T.parquet(s, s"$p/cells")
         .select(col("vec_id"), col("embedding")))
       .reduce(_ unionByName _)
     val p = s"$newIndexDir/v0/full"
@@ -1743,12 +1743,12 @@ object StreamOps {
       val roots = graft.index.GenLog
         .roots(s, indexDir, "semantic index")
         .filterNot(_ == path)
-      val cents = s.read.parquet(s"${roots.head}/cents")
+      val cents = T.parquet(s, s"${roots.head}/cents")
       SimilarityOps.writeSemGeneration(s, batch, cents, roots, path)
     },
     fold = (s, roots, path) => {
       roots
-        .map(p => s.read.parquet(s"$p/cells")
+        .map(p => T.parquet(s, s"$p/cells")
           .select(
             col("vec_id"), col("embedding"), col("n2"),
             col("cell").cast("long").as("cell")))
@@ -1759,12 +1759,12 @@ object StreamOps {
         .partitionBy("cell")
         .parquet(s"$path/cells")
       roots
-        .map(p => s.read.parquet(s"$p/survivors"))
+        .map(p => T.parquet(s, s"$p/survivors"))
         .reduce(_ unionByName _)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/survivors")
-      s.read.parquet(s"${roots.head}/cents")
+      T.parquet(s, s"${roots.head}/cents")
         .coalesce(1)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1802,7 +1802,7 @@ object StreamOps {
     */
   def serveSemanticContinuous(s: SparkSession, indexDir: String): DataFrame =
     semGenerationRoots(s, indexDir)
-      .map(p => s.read.parquet(s"$p/survivors"))
+      .map(p => T.parquet(s, s"$p/survivors"))
       .reduce(_ unionByName _)
       .orderBy(col("vec_id"))
 
@@ -1822,11 +1822,11 @@ object StreamOps {
   def serveClusterStatsContinuous(s: SparkSession, indexDir: String): DataFrame = {
     val roots = semGenerationRoots(s, indexDir)
     val members = roots
-      .map(p => s.read.parquet(s"$p/cells")
+      .map(p => T.parquet(s, s"$p/cells")
         .select(col("vec_id"), col("cell").cast("long").as("cell")))
       .reduce(_ unionByName _)
     val kept = roots
-      .map(p => s.read.parquet(s"$p/survivors"))
+      .map(p => T.parquet(s, s"$p/survivors"))
       .reduce(_ unionByName _)
     members
       .groupBy(col("cell"))
@@ -1855,7 +1855,7 @@ object StreamOps {
     seedSemanticIndex(
       s,
       semGenerationRoots(s, indexDir)
-        .map(p => s.read.parquet(s"$p/cells")
+        .map(p => T.parquet(s, s"$p/cells")
           .select(col("vec_id"), col("embedding")))
         .reduce(_ unionByName _),
       newIndexDir)
@@ -1879,7 +1879,7 @@ object StreamOps {
     SimilarityOps.writeSemSeedTrained(
       s,
       semGenerationRoots(s, indexDir)
-        .map(r => s.read.parquet(s"$r/cells")
+        .map(r => T.parquet(s, s"$r/cells")
           .select(col("vec_id"), col("embedding")))
         .reduce(_ unionByName _),
       p)
@@ -1904,7 +1904,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      s.read.parquet(roots: _*)
+      T.parquet(s, roots: _*)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
@@ -1929,7 +1929,7 @@ object StreamOps {
     */
   def serveBoilerplateContinuous(s: SparkSession, dir: String): DataFrame =
     TextOps.boilerplateReportOf(
-      s.read.parquet(
+      T.parquet(s,
         graft.index.GenLog.roots(s, dir, what = "boilerplate stats"): _*))
 
   /** The corpus-scale (df-fraction) report from the SAME maintained
@@ -1939,7 +1939,7 @@ object StreamOps {
     */
   def serveBoilerplateFracContinuous(s: SparkSession, dir: String): DataFrame =
     TextOps.boilerplateFracReportOf(
-      s.read.parquet(
+      T.parquet(s,
         graft.index.GenLog.roots(s, dir, what = "boilerplate stats"): _*))
 
   /** Compaction (kernel protocol; fold = concatenation). */
@@ -1970,7 +1970,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      s.read.parquet(roots: _*)
+      T.parquet(s, roots: _*)
         .groupBy(col("split"), col("w1"), col("w2"))
         .agg(sum(col("cf2")).as("cf2"))
         .write
@@ -1994,7 +1994,7 @@ object StreamOps {
     */
   def serveLmBigramContinuous(s: SparkSession, dir: String): DataFrame =
     LmOps.lmBigramFromCounts(
-      s.read.parquet(
+      T.parquet(s,
         graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*))
 
   /** q_lm_bigram_apply served from the SAME maintained counts: the
@@ -2009,8 +2009,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmBigramApplyFromCounts(
-      s.read
-        .parquet(graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
+      T.parquet(s, graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
         .filter(col("split") === "train")
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
@@ -2028,8 +2027,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmKnFromCounts(
-      s.read
-        .parquet(graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
+      T.parquet(s, graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
 
@@ -2047,8 +2045,7 @@ object StreamOps {
       allDocs: DataFrame): DataFrame = {
     val (postings, nTotal) = lmFrames(s, indexDir)
     LmOps.lmInterpFromCounts(
-      s.read
-        .parquet(graft.index.GenLog.roots(s, bigramDir, what = "bigram stats"): _*)
+      T.parquet(s, graft.index.GenLog.roots(s, bigramDir, what = "bigram stats"): _*)
         .select(col("w1"), col("w2"), col("cf2")),
       postings.groupBy(col("term").as("w2")).agg(sum(col("tf")).as("cf1")),
       nTotal.select(col("n_total").as("lt")),
@@ -2095,7 +2092,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      s.read.parquet(roots: _*)
+      T.parquet(s, roots: _*)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
@@ -2148,7 +2145,7 @@ object StreamOps {
       TextOps.passageMinlenSpansOf(passageState(s, dir)))
 
   private def passageState(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(
+    T.parquet(s,
       graft.index.GenLog.roots(s, dir, what = "passage grams"): _*)
 
   /** Compaction (kernel protocol; fold = concatenation). */

@@ -1223,7 +1223,7 @@ object TextOps {
     import s.implicits._
     val shards = phraseProbedShards(s, phrases)
     val toks = paths
-      .map(p => s.read.parquet(s"$p/postings").filter($"tshard".isin(shards: _*)))
+      .map(p => T.parquet(s, s"$p/postings").filter($"tshard".isin(shards: _*)))
       .reduce(_ unionByName _)
       .select($"doc_id", $"pos", $"term")
     phraseHitsFromToks(toks, phrases)
@@ -1475,7 +1475,7 @@ object TextOps {
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("tshard")
       .parquet(s"$path/postings")
-    s.read.parquet(s"$path/postings")
+    T.parquet(s, s"$path/postings")
       .agg(sum($"tf").as("l"))
       .crossJoin(broadcast(docsDf.agg(count(lit(1)).as("n"))))
       .write
@@ -1522,11 +1522,11 @@ object TextOps {
     import s.implicits._
     val shards = bm25ProbedShardsOf(q)
     val postings = paths
-      .map(p => s.read.parquet(s"$p/postings").filter($"tshard".isin(shards: _*)))
+      .map(p => T.parquet(s, s"$p/postings").filter($"tshard".isin(shards: _*)))
       .reduce(_ unionByName _)
     val dfreq = postings.groupBy($"term").agg(count(lit(1)).as("df"))
     val stats = paths
-      .map(p => s.read.parquet(s"$p/stats"))
+      .map(p => T.parquet(s, s"$p/stats"))
       .reduce(_ unionByName _)
       .agg(sum($"l").as("l"), sum($"n").as("n"))
     val hits = postings
@@ -1750,7 +1750,7 @@ object TextOps {
       .map(_.get(0))
       .toSeq
     val store = storePaths
-      .map(p => s.read.parquet(p))
+      .map(p => T.parquet(s, p))
       .reduce(_ unionByName _)
       .filter($"ishard".isin(lexShards: _*))
     val sw = Window.partitionBy($"query_id").orderBy($"lex_rank")
@@ -1805,7 +1805,7 @@ object TextOps {
       seed.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     val cw = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id")
     val sem = annPaths
-      .map(p => s.read.parquet(p))
+      .map(p => T.parquet(s, p))
       .reduce(_ unionByName _)
       .filter($"bucket".isin(probeBuckets: _*))
       .join(broadcast(seed), $"bucket" === $"pbucket")

@@ -1,5 +1,7 @@
 package org.apache.spark
 
+import scala.util.control.NonFatal
+
 /** Bridge to the listener bus's drain primitive (private[spark]): the
   * bench's per-query job/taskSec attribution reads listener counters
   * between queries, and the bus is async — a bounded wait-until-empty is
@@ -9,10 +11,17 @@ package org.apache.spark
   */
 object GraftListenerBridge {
   /** Wait until the listener bus has dispatched every queued event, up
-    * to `timeoutMs`; false if the timeout elapsed first (counters may
-    * then lag — callers treat attribution as best-effort diagnostics).
+    * to `timeoutMs`; false if the timeout elapsed first or the wait was
+    * interrupted (counters may then lag — callers treat attribution as
+    * best-effort diagnostics). An interrupt stays set on the caller's
+    * thread; fatal errors propagate.
     */
   def drain(sc: SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
-    catch { case _: Throwable => false }
+    catch {
+      case _: InterruptedException =>
+        Thread.currentThread().interrupt() // the caller still sees it
+        false
+      case NonFatal(_) => false
+    }
 }

@@ -26,6 +26,25 @@ class IvfTrainSpec extends SparkSpec {
     assert(a.size == 16 && a.forall(_._2.length == 64))
   }
 
+  test("a NULL vector neither moves nor counts toward its cell's mean") {
+    import spark.implicits._
+    val rows = Seq[(Int, Long, Option[Seq[Float]])](
+      (0, 0L, Some(Seq(0f, 0f))),
+      (0, 1L, Some(Seq(10f, 10f))),
+      (0, 2L, Some(Seq(2f, 2f))),
+      (0, 3L, Some(Seq(8f, 8f))),
+      (0, 4L, Some(Seq(1f, 3f))))
+    val clean = rows.toDF("grp", "vec_id", "x")
+    val withNull = (rows :+ ((0, 5L, None))).toDF("grp", "vec_id", "x")
+    for (cosine <- Seq(false, true)) {
+      val want = SimilarityOps.trainLloyd(clean, 2, 2, groups = 1, cosine)
+      assert(SimilarityOps.trainLloyd(withNull, 2, 2, groups = 1, cosine) == want, s"cosine=$cosine")
+    }
+    // cell 0 holds vectors 0, 2 and 4: the mean divides by 3, not 4
+    val cell0 = SimilarityOps.trainLloyd(withNull, 2, 1, groups = 1, cosine = false)(0).head._2
+    assert(cell0 == Seq(1f, (BigDecimal(5) / 3).toFloat), cell0)
+  }
+
   test("trained IVF recall vs exact top-10 meets the contract floor") {
     import spark.implicits._
     val got = SimilarityOps
