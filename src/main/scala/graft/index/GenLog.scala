@@ -1,14 +1,16 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The shared generation-log kernel behind every persisted index in the
   * library — the ONE implementation of version directories, commit
   * markers, merge-on-read root resolution, compaction, and snapshot
-  * pruning that the four incremental index families (text-dedup bands,
-  * embedding bands, BM25 postings, ANN buckets) and the monolithic
-  * serving builds all ride.
+  * pruning that every maintained index family rides: the twelve
+  * generation-local families ([[GenFamily]]), the dedup families'
+  * bespoke folds ([[graceDelete]], [[pruneSnapshots]]) and the
+  * monolithic serving builds ([[buildOnce]]).
   *
   * Layout contract: an index directory holds `v<N>` version directories,
   * each holding named ARTIFACT directories (`full`, `gen`, `assign`,
@@ -69,7 +71,7 @@ object GenLog {
     * first call (files stay intact for readers whose scan listing was
     * resolved before the fold committed), delete it on a later call —
     * a live reader outlives its snapshot for one full compaction
-    * interval. Shared by the kernel's [[compact]] and the dedup
+    * interval. Shared by [[GenFamily.compact]] and the dedup
     * families' bespoke compactions.
     */
   private[graft] def graceDelete(fs: FileSystem, path: Path): Unit = {
@@ -460,194 +462,185 @@ object GenLog {
     }
   }
 
-  /** One generation-local index family: how to build a generation from a
-    * frame, and how to fold generation roots into one full snapshot.
-    * Writers never mark — the kernel owns the commit protocol.
+  /** Full snapshots a compaction keeps. Two, so a superseded full
+    * outlives the fold that superseded it by one compaction interval —
+    * the same live-reader grace [[GenFamily.compact]] gives superseded
+    * generations by tombstone.
     */
-  final case class GenFamily(
-      write: (SparkSession, DataFrame, String) => Unit,
-      fold: (SparkSession, Seq[String], String) => Unit)
+  val KeepFulls = 2
 
-  /** Seed an index: the base corpus becomes the committed v0 full
-    * snapshot.
+  /** An append-mode stream writer that runs `body` on every micro-batch.
+    * It adds no emptiness check of its own: a body that skips empty
+    * batches checks once itself, so no micro-batch pays an extra job.
     */
-  def seed(s: SparkSession, fam: GenFamily, base: DataFrame, dir: String): Unit = {
-    val p = s"$dir/v0/$FullSub"
-    fam.write(s, base, p)
-    markCommitted(s, p)
-  }
-
-  /** Continuous maintenance for a generation-local family: each
-    * micro-batch writes its OWN committed generation — O(batch) work and
-    * bytes, no prior state read, the base snapshot never rewritten.
-    * Exactly-once without a transaction log: batch b writes the fresh
-    * directory v(b+1); a retry deterministically overwrites the same
-    * output from the same input (the marker is re-dropped after the
-    * overwrite), and version gaps from empty batches are skipped on
-    * read.
-    */
-  /** Commit micro-batch `batchId`'s rows as generation v(batchId+1) —
-    * the per-batch body of [[streamWriter]], exposed so a COMPOSED
-    * pipeline (one foreachBatch driving several maintenance legs from
-    * the same micro-batch) can call it directly. Idempotent per
-    * (batchId, input): a retry deterministically overwrites the same
-    * uncommitted directory before the marker lands.
-    */
-  def commitGeneration(
-      fam: GenFamily,
-      batch: DataFrame,
-      dir: String,
-      batchId: Long): Unit = {
-    val sess = batch.sparkSession
-    val p = s"$dir/v${batchId + 1}/$GenSub"
-    fam.write(sess, batch, p)
-    markCommitted(sess, p)
-  }
-
-  def streamWriter(
-      df: DataFrame,
-      fam: GenFamily,
-      dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  private[graft] def appendWriter(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) commitGeneration(fam, batch, dir, batchId)
-        ()
-      }
+      .foreachBatch(body)
 
-  /** The roots a merge-on-read serve unions: the newest COMMITTED full
-    * snapshot (seed or compaction) plus every later committed batch
-    * generation. Generations at or below the newest full are superseded
-    * (folded into it); an uncommitted full (compaction crashed mid-write)
-    * is invisible, so reads are unchanged until the fold commits.
-    */
-  def roots(s: SparkSession, dir: String, what: String = "index"): Seq[String] = {
-    val fulls = versions(s, dir, requiring = FullSub)
-    require(
-      fulls.nonEmpty,
-      s"$what at $dir has no committed full snapshot (seed it first)")
-    val f = fulls.max
-    s"$dir/v$f/$FullSub" +:
-      versions(s, dir, requiring = GenSub)
-        .filter(_ > f)
-        .sorted
-        .map(v => s"$dir/v$v/$GenSub")
-  }
-
-  /** Compaction: fold the current roots into one full snapshot at the
-    * newest committed generation version, commit it, then bound the
-    * directory — superseded generations are dropped and all but the
-    * newest `keepFulls` full snapshots are pruned (without pruning, each
-    * compaction would strand one full corpus copy forever). Crash-safe
-    * at every cut: the fold's partial output is uncommitted (ignored),
-    * deletes only begin after the marker lands, and a crash mid-delete
-    * leaves superseded dirs that the next compaction re-collects.
-    *
-    * Live-reader grace: a reader that resolved [[roots]] just before the
-    * fold committed still holds scans over the now-superseded generation
-    * dirs, so deleting them here would race that reader's file listing.
-    * Superseded generations are therefore TOMBSTONED on the compaction
-    * that supersedes them and physically deleted only on the next one —
-    * a reader outlives its snapshot for a full compaction interval
-    * (superseded FULLS get the same grace structurally: `keepFulls >= 2`
-    * keeps the previous full through one more compaction). New readers
-    * are unaffected either way — [[roots]] never returns superseded
-    * paths.
-    */
-  def compact(s: SparkSession, dir: String, fam: GenFamily, keepFulls: Int = 2): Unit = {
-    // ONE listing decides both the fold inputs and the fold version: a
-    // generation committed after this listing has a version above `k`
-    // (stream versions are monotonic), so it can neither be missing
-    // from the fold it is claimed by nor be deleted by the cleanup —
-    // deriving `k` from a second listing would let a gen that landed
-    // between the listings be superseded without ever being folded
-    val fulls0 = versions(s, dir, requiring = FullSub)
-    require(fulls0.nonEmpty, s"index at $dir has no committed full snapshot")
-    val f = fulls0.max
-    val gens = versions(s, dir, requiring = GenSub).filter(_ > f).sorted
-    if (gens.nonEmpty) {
-      val rs = s"$dir/v$f/$FullSub" +: gens.map(v => s"$dir/v$v/$GenSub")
-      val k = gens.max
-      val p = s"$dir/v$k/$FullSub"
-      fam.fold(s, rs, p)
-      markCommitted(s, p)
-    }
-    val fs = fsOf(s, dir)
-    val fulls = versions(s, dir, requiring = FullSub).sorted
-    val newestFull = fulls.max
-    versions(s, dir, requiring = GenSub).filter(_ <= newestFull).foreach { v =>
-      graceDelete(fs, new Path(s"$dir/v$v/$GenSub"))
-    }
-    fulls.dropRight(math.max(keepFulls, 1)).foreach { v =>
-      fs.delete(new Path(s"$dir/v$v/$FullSub"), true)
-    }
-  }
-
-  /** Count/size-triggered compaction policy: compact when the committed
-    * generations above the newest full exceed [[CompactMaxGensKey]]
-    * (default 8) OR their total bytes exceed [[CompactGenBytesFracKey]]
-    * (default 0.5) of the full snapshot's bytes. Each fold rewrites a
-    * full corpus snapshot, so its cost is amortized only if cadence
-    * scales with what accumulated: the count trigger bounds merge-on-read
-    * fan-in (reads union f + gens paths), the bytes trigger bounds the
-    * fraction of the corpus living in un-folded generations — a composed
-    * pipeline calls this per batch and self-tunes instead of relying on
-    * the caller's day-2 compaction loop. Returns whether it compacted.
+  /** Conf keys of the count/size-triggered compaction policy
+    * ([[GenFamily.maybeCompact]]).
     */
   val CompactMaxGensKey = "spark.graft.index.compact.maxGens"
   val CompactGenBytesFracKey = "spark.graft.index.compact.genBytesFraction"
 
-  def maybeCompact(s: SparkSession, dir: String, fam: GenFamily, keepFulls: Int = 2): Boolean = {
-    val fulls = versions(s, dir, requiring = FullSub)
-    if (fulls.isEmpty) return false
-    val f = fulls.max
-    val gens = versions(s, dir, requiring = GenSub).filter(_ > f)
-    if (gens.isEmpty) return false
-    val maxGens =
-      s.conf.getOption(CompactMaxGensKey).map(_.toInt).getOrElse(8)
-    val frac =
-      s.conf.getOption(CompactGenBytesFracKey).map(_.toDouble).getOrElse(0.5)
-    val due = gens.size >= maxGens || {
-      val fs = fsOf(s, dir)
-      def bytes(p: String): Long =
-        try fs.getContentSummary(new Path(p)).getLength
-        catch { case _: java.io.IOException => 0L }
-      val fullBytes = bytes(s"$dir/v$f/$FullSub")
-      val genBytes = gens.map(v => bytes(s"$dir/v$v/$GenSub")).sum
-      fullBytes > 0L && genBytes >= (fullBytes * frac).toLong
-    }
-    if (due) compact(s, dir, fam, keepFulls)
-    due
-  }
-
-  /** Adopt a PRE-CATALOG index directory: drop a commit marker into
-    * every non-empty artifact directory under its `v<N>` versions.
-    * Marker-gated recognition would otherwise treat an intact directory
-    * written before the marker protocol existed as fully uncommitted
-    * (roots() refuses, reads see nothing). Adoption is an explicit
-    * OPERATOR action asserting the directory is healthy — the one-time
-    * upgrade migration — not automatic recognition: everything written
-    * after it carries real markers and the crash-safety contract.
-    * Returns the adopted (version, artifact) pairs.
+  /** One generation-local index family and its whole lifecycle: how to
+    * build a generation from a frame, how to fold generation roots into
+    * one full snapshot, and the label its errors name. Writers never
+    * mark — the lifecycle methods own the commit protocol, so every
+    * family seeds, commits, serves roots and compacts through one code
+    * path.
     */
-  def adopt(s: SparkSession, dir: String): Seq[(Long, String)] = {
-    val fs = fsOf(s, dir)
-    versions(s, dir).sorted.flatMap { v =>
-      fs.listStatus(new Path(s"$dir/v$v"))
-        .toSeq
-        .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
-        .map(_.getPath.getName)
-        .filter { a =>
-          val p = s"$dir/v$v/$a"
-          !isCommitted(s, p) && fs.listStatus(new Path(p)).nonEmpty
-        }
-        .map { a =>
-          markCommitted(s, s"$dir/v$v/$a")
-          (v, a)
-        }
+  final case class GenFamily(
+      label: String,
+      write: (SparkSession, DataFrame, String) => Unit,
+      fold: (SparkSession, Seq[String], String) => Unit) {
+
+    /** Seed an index: the base corpus becomes the committed v0 full
+      * snapshot.
+      */
+    def seed(s: SparkSession, base: DataFrame, dir: String): Unit = {
+      val p = s"$dir/v0/$FullSub"
+      write(s, base, p)
+      markCommitted(s, p)
     }
+
+    /** Commit micro-batch `batchId`'s rows as generation v(batchId+1) —
+      * the per-batch body of [[streamWriter]], exposed so a COMPOSED
+      * pipeline (one foreachBatch driving several maintenance legs from
+      * the same micro-batch) can call it directly. Idempotent per
+      * (batchId, input): a retry deterministically overwrites the same
+      * uncommitted directory before the marker lands.
+      */
+    def commit(batch: DataFrame, dir: String, batchId: Long): Unit = {
+      val sess = batch.sparkSession
+      val p = s"$dir/v${batchId + 1}/$GenSub"
+      write(sess, batch, p)
+      markCommitted(sess, p)
+    }
+
+    /** Continuous maintenance: each micro-batch writes its OWN committed
+      * generation — O(batch) work and bytes, no prior state read, the
+      * base snapshot never rewritten. Exactly-once without a transaction
+      * log: batch b writes the fresh directory v(b+1); a retry
+      * deterministically overwrites the same output from the same input
+      * (the marker is re-dropped after the overwrite), and version gaps
+      * from empty batches are skipped on read.
+      */
+    def streamWriter(df: DataFrame, dir: String, checkpoint: String): DataStreamWriter[Row] =
+      appendWriter(df, checkpoint) { (batch, batchId) =>
+        if (!batch.isEmpty) commit(batch, dir, batchId)
+      }
+
+    /** The roots a merge-on-read serve unions: the newest COMMITTED full
+      * snapshot (seed or compaction) plus every later committed batch
+      * generation. Generations at or below the newest full are superseded
+      * (folded into it); an uncommitted full (compaction crashed
+      * mid-write) is invisible, so reads are unchanged until the fold
+      * commits.
+      */
+    def roots(s: SparkSession, dir: String): Seq[String] = {
+      val (f, gens) = live(s, dir)
+      paths(dir, f, gens)
+    }
+
+    /** Compaction: fold the current roots into one full snapshot at the
+      * newest committed generation version, commit it, then bound the
+      * directory — superseded generations are dropped and all but the
+      * newest [[KeepFulls]] full snapshots are pruned (without pruning,
+      * each compaction would strand one full corpus copy forever).
+      * Crash-safe at every cut: the fold's partial output is uncommitted
+      * (ignored), deletes only begin after the marker lands, and a crash
+      * mid-delete leaves superseded dirs that the next compaction
+      * re-collects.
+      *
+      * Live-reader grace: a reader that resolved [[roots]] just before
+      * the fold committed still holds scans over the now-superseded
+      * generation dirs, so deleting them here would race that reader's
+      * file listing. Superseded generations are therefore TOMBSTONED on
+      * the compaction that supersedes them and physically deleted only on
+      * the next one — a reader outlives its snapshot for a full
+      * compaction interval (superseded FULLS get the same grace
+      * structurally: [[KeepFulls]] keeps the previous full through one
+      * more compaction). New readers are unaffected either way —
+      * [[roots]] never returns superseded paths.
+      */
+    def compact(s: SparkSession, dir: String): Unit = {
+      // ONE listing decides both the fold inputs and the fold version: a
+      // generation committed after this listing has a version above `k`
+      // (stream versions are monotonic), so it can neither be missing
+      // from the fold it is claimed by nor be deleted by the cleanup —
+      // deriving `k` from a second listing would let a gen that landed
+      // between the listings be superseded without ever being folded
+      val (f, gens) = live(s, dir)
+      if (gens.nonEmpty) {
+        val p = s"$dir/v${gens.max}/$FullSub"
+        fold(s, paths(dir, f, gens), p)
+        markCommitted(s, p)
+      }
+      val fs = fsOf(s, dir)
+      val fulls = versions(s, dir, requiring = FullSub).sorted
+      val newestFull = fulls.max
+      versions(s, dir, requiring = GenSub).filter(_ <= newestFull).foreach { v =>
+        graceDelete(fs, new Path(s"$dir/v$v/$GenSub"))
+      }
+      fulls.dropRight(KeepFulls).foreach { v =>
+        fs.delete(new Path(s"$dir/v$v/$FullSub"), true)
+      }
+    }
+
+    /** Count/size-triggered compaction policy: compact when the committed
+      * generations above the newest full exceed [[CompactMaxGensKey]]
+      * (default 8) OR their total bytes exceed [[CompactGenBytesFracKey]]
+      * (default 0.5) of the full snapshot's bytes. Each fold rewrites a
+      * full corpus snapshot, so its cost is amortized only if cadence
+      * scales with what accumulated: the count trigger bounds
+      * merge-on-read fan-in (reads union f + gens paths), the bytes
+      * trigger bounds the fraction of the corpus living in un-folded
+      * generations — a composed pipeline calls this per batch and
+      * self-tunes instead of relying on the caller's day-2 compaction
+      * loop. Returns whether it compacted; an unseeded directory never
+      * compacts.
+      */
+    def maybeCompact(s: SparkSession, dir: String): Boolean = {
+      val fulls = versions(s, dir, requiring = FullSub)
+      if (fulls.isEmpty) return false
+      val f = fulls.max
+      val gens = versions(s, dir, requiring = GenSub).filter(_ > f)
+      if (gens.isEmpty) return false
+      val maxGens =
+        s.conf.getOption(CompactMaxGensKey).map(_.toInt).getOrElse(8)
+      val frac =
+        s.conf.getOption(CompactGenBytesFracKey).map(_.toDouble).getOrElse(0.5)
+      val due = gens.size >= maxGens || {
+        val fs = fsOf(s, dir)
+        def bytes(p: String): Long =
+          try fs.getContentSummary(new Path(p)).getLength
+          catch { case _: java.io.IOException => 0L }
+        val fullBytes = bytes(s"$dir/v$f/$FullSub")
+        val genBytes = gens.map(v => bytes(s"$dir/v$v/$GenSub")).sum
+        fullBytes > 0L && genBytes >= (fullBytes * frac).toLong
+      }
+      if (due) compact(s, dir)
+      due
+    }
+
+    // The newest committed full snapshot and the committed generations
+    // above it, from one listing each; an unseeded directory is refused
+    // with the family's label.
+    private def live(s: SparkSession, dir: String): (Long, Seq[Long]) = {
+      val fulls = versions(s, dir, requiring = FullSub)
+      require(
+        fulls.nonEmpty,
+        s"$label at $dir has no committed full snapshot (seed it first)")
+      val f = fulls.max
+      (f, versions(s, dir, requiring = GenSub).filter(_ > f).sorted)
+    }
+
+    private def paths(dir: String, f: Long, gens: Seq[Long]): Seq[String] =
+      s"$dir/v$f/$FullSub" +: gens.map(v => s"$dir/v$v/$GenSub")
   }
 
   /** Drop all but the newest `keep` committed copies of an artifact —

@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.{QueryDef, T, X}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.index.GenLog
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 
 /** Tier B-STREAM (SURVEY §2): the reference's run loop is a micro-batch
@@ -329,8 +331,7 @@ object StreamOps {
       reportSummaryDir: String,
       jdbcUrl: String,
       reportTable: String,
-      // the positional phrase index (r15, THIRTEENTH family) — "" keeps
-      // a pre-existing 12-family deployment's call sites valid
+      // the positional phrase index — "" leaves the phrase leg off
       phraseIndexDir: String = "",
       props: java.util.Properties = new java.util.Properties)
 
@@ -357,7 +358,7 @@ object StreamOps {
       .groupBy(col("split"), col("lang"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_chars")).as("sum_chars"))
 
-  /** The report-summary generation family on the [[graft.index.GenLog]]
+  /** The report-summary generation family on the [[GenLog]]
     * kernel: each micro-batch persists its OWN O(groups) summary
     * ([[corpusReport]] over just the batch's rows), and fold re-aggregates
     * summary roots into one full summary — so the published report is
@@ -366,8 +367,9 @@ object StreamOps {
     * O(batch) like every other leg). Crash safety, bounded snapshot
     * copies, and committed-only reads are the kernel's.
     */
-  private[graft] val ReportFamily: graft.index.GenLog.GenFamily =
-    graft.index.GenLog.GenFamily(
+  val ReportFamily: GenLog.GenFamily =
+    GenLog.GenFamily(
+      label = "report summary",
       write = (_, rows, path) =>
         corpusReport(rows)
           .coalesce(1)
@@ -386,16 +388,7 @@ object StreamOps {
     * rows; the daily compaction folds it back to one file.
     */
   def publishedCorpusReport(s: SparkSession, summaryDir: String): DataFrame =
-    aggregateSummaries(
-      T.parquet(s,
-        graft.index.GenLog.roots(s, summaryDir, what = "report summary"): _*))
-
-  /** Daily compaction for the report summary — same stopped-stream
-    * cadence and kernel contract as [[compactDedupIndex]] /
-    * [[compactBm25Index]].
-    */
-  def compactCorpusReport(s: SparkSession, summaryDir: String): Unit =
-    graft.index.GenLog.compact(s, summaryDir, ReportFamily)
+    aggregateSummaries(T.parquet(s, ReportFamily.roots(s, summaryDir): _*))
 
   /** ONE micro-batch through every leg of the composed program: curated
     * rows land in a deterministic per-batch lake partition, the near-dup
@@ -435,40 +428,26 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"${p.lakeDir}/batch=$batchId")
       incrDedupCommit(batch, p.dedupIndexDir, batchId)
-      bm25IndexCommit(batch, p.bm25IndexDir, batchId)
-      // Text-frequency legs: generation-local state (per-batch shingle
-      // counts / gram fingerprints), so the commit is the same O(batch)
-      // kernel write as the report leg, idempotent per batchId, and the
-      // in-stream policy fold applies — no standalone writer, no second
-      // read of the feed.
-      graft.index.GenLog.commitGeneration(
-        BoilerFamily, batch, p.boilerStatsDir, batchId)
-      graft.index.GenLog.maybeCompact(
-        batch.sparkSession, p.boilerStatsDir, BoilerFamily)
-      graft.index.GenLog.commitGeneration(
-        PassageFamily, batch, p.passageGramsDir, batchId)
-      graft.index.GenLog.maybeCompact(
-        batch.sparkSession, p.passageGramsDir, PassageFamily)
-      graft.index.GenLog.commitGeneration(
-        BigramFamily, batch, p.bigramStatsDir, batchId)
-      graft.index.GenLog.maybeCompact(
-        batch.sparkSession, p.bigramStatsDir, BigramFamily)
-      if (p.phraseIndexDir.nonEmpty) {
-        graft.index.GenLog.commitGeneration(
-          PhraseFamily, batch, p.phraseIndexDir, batchId)
-        graft.index.GenLog.maybeCompact(
-          batch.sparkSession, p.phraseIndexDir, PhraseFamily)
+      Bm25Family.commit(batch, p.bm25IndexDir, batchId)
+      // Text-frequency and report legs: generation-local state (per-batch
+      // shingle counts / gram fingerprints / O(groups) summaries), so each
+      // commit is an O(batch) kernel write, idempotent per batchId — no
+      // standalone writer, no second read of the feed. Each is followed
+      // by its self-tuning fold: foreachBatch serializes batches, so
+      // between-commits is exactly the safe point, and the policy (gens >
+      // N or gen-bytes > fraction of full) keeps merge-on-read fan-in
+      // bounded without the caller's day-2 loop. The dedup/bm25 legs keep
+      // their stopped-stream compactions — the day-2 cycle owns them.
+      val phrase =
+        if (p.phraseIndexDir.nonEmpty) Seq(PhraseFamily -> p.phraseIndexDir) else Nil
+      (Seq(
+        BoilerFamily -> p.boilerStatsDir,
+        PassageFamily -> p.passageGramsDir,
+        BigramFamily -> p.bigramStatsDir) ++ phrase :+
+        (ReportFamily -> p.reportSummaryDir)).foreach { case (fam, dir) =>
+        fam.commit(batch, dir, batchId)
+        fam.maybeCompact(batch.sparkSession, dir)
       }
-      graft.index.GenLog.commitGeneration(
-        ReportFamily, batch, p.reportSummaryDir, batchId)
-      // Self-tuning fold for the kernel-protocol report leg: foreachBatch
-      // serializes batches, so between-commits is exactly the safe point,
-      // and the policy (gens > N or gen-bytes > fraction of full) keeps
-      // merge-on-read fan-in bounded without the caller's day-2 loop.
-      // The dedup/bm25 legs keep their stopped-stream compactions — their
-      // bespoke folds rewrite multi-artifact state the day-2 cycle owns.
-      graft.index.GenLog.maybeCompact(
-        batch.sparkSession, p.reportSummaryDir, ReportFamily)
       // empty jdbcUrl = no external warehouse configured: the summary
       // family above is still maintained and publishedCorpusReport still
       // serves — only the push to the external table is skipped (also
@@ -492,7 +471,7 @@ object StreamOps {
       s: SparkSession,
       curatedBase: DataFrame,
       p: CorpusPipeline): Unit = {
-    // seedDedupState, not seedDedupIndex (r18): the composed pipeline's
+    // seedDedupState, not seedDedupIndex: the composed pipeline's
     // dedup leg serves the FULL-corpus assignment (base + streamed) and
     // starts the verified pair log at v0 — the q_dedup_cc_incr family's
     // state, at no extra pass (the seed build computes the base closure
@@ -500,13 +479,13 @@ object StreamOps {
     seedDedupState(
       s, curatedBase.select(col("doc_id"), col("lang"), col("text")),
       p.dedupIndexDir)
-    seedBm25Index(s, curatedBase, p.bm25IndexDir)
-    seedBoilerplateStats(s, curatedBase, p.boilerStatsDir)
-    seedPassageGrams(s, curatedBase, p.passageGramsDir)
-    seedBigramStats(s, curatedBase, p.bigramStatsDir)
+    Bm25Family.seed(s, curatedBase, p.bm25IndexDir)
+    BoilerFamily.seed(s, curatedBase, p.boilerStatsDir)
+    PassageFamily.seed(s, curatedBase, p.passageGramsDir)
+    BigramFamily.seed(s, curatedBase, p.bigramStatsDir)
     if (p.phraseIndexDir.nonEmpty)
-      seedPhraseIndex(s, curatedBase, p.phraseIndexDir)
-    graft.index.GenLog.seed(s, ReportFamily, curatedBase, p.reportSummaryDir)
+      PhraseFamily.seed(s, curatedBase, p.phraseIndexDir)
+    ReportFamily.seed(s, curatedBase, p.reportSummaryDir)
     curatedBase.select(CorpusLakeCols.map(col): _*)
       .write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -520,22 +499,16 @@ object StreamOps {
 
   /** The composed continuous corpus program as a stream writer: feed it
     * [[liftCuratedDocs]] and start. Stop/compact/resume is the daily
-    * loop — compactDedupIndex + compactBm25Index + compactCorpusReport
-    * while stopped, then restart from the same checkpoint
+    * loop — [[compactDedupIndex]] and the Bm25Family / ReportFamily
+    * compactions while stopped, then restart from the same checkpoint
     * (EndToEndPipelineSpec proves the whole cycle ≡ the batch pipeline,
     * day over day).
     */
   def corpusPipelineWriter(
       curated: DataFrame,
       p: CorpusPipeline,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    curated.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        corpusPipelineBatch(batch, batchId, p)
-        ()
-      }
+      checkpoint: String): DataStreamWriter[Row] =
+    GenLog.appendWriter(curated, checkpoint)(corpusPipelineBatch(_, _, p))
 
   /** Streaming lift of q_expect_constraints' ROW-LEVEL rules — the
     * at-ingest quarantine channel: every event carries its violation list
@@ -692,7 +665,7 @@ object StreamOps {
   }
 
   /** Version listing for every persisted index family — delegated to the
-    * shared generation-log kernel ([[graft.index.GenLog]]): `v<N>`
+    * shared generation-log kernel ([[GenLog]]): `v<N>`
     * subdirectories whose required artifact is COMMITTED (carries the
     * kernel's marker), so a crashed write is invisible to every reader.
     */
@@ -700,7 +673,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       requiring: String = ""): Seq[Long] =
-    graft.index.GenLog.versions(s, indexDir, requiring)
+    GenLog.versions(s, indexDir, requiring)
 
   /** Maintenance for the versioned continuous-dedup indexes: drop the
     * SUPERSEDED index snapshots (md5/band state of all but the newest
@@ -715,7 +688,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       keep: Int = 2): Unit =
-    graft.index.GenLog.pruneSnapshots(
+    GenLog.pruneSnapshots(
       s, indexDir, arts = Seq("band_index", "md5_index"),
       gate = "band_index", keep = keep)
 
@@ -727,7 +700,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       keep: Int = 2): Unit =
-    graft.index.GenLog.pruneSnapshots(
+    GenLog.pruneSnapshots(
       s, indexDir, arts = Seq("band_index"), gate = "band_index", keep = keep)
 
   /** Seed the continuous-dedup index: build the base corpus's persisted
@@ -739,13 +712,13 @@ object StreamOps {
     */
   def seedDedupIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
     val (md5Index, bandIndex) = DedupOps.buildDedupIndex(s, base)
-    graft.index.GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
-    graft.index.GenLog.commitParquet(
+    GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
+    GenLog.commitParquet(
       bandIndex, s"$indexDir/v0/band_index", partitionBy = Seq("band_idx"))
   }
 
   /** [[seedDedupIndex]] plus the FULL-VIEW state the pair-graph family
-    * (verdict-r17 #1) starts from: the base corpus's assignment
+    * (q_dedup_cc_incr) starts from: the base corpus's assignment
     * (v0/assign — so [[readDedupAssignments]] serves ALL docs, not just
     * streamed batches) and its verified rep-level pair set (v0/pairs —
     * the seed generation of the maintained pair graph). One build pass
@@ -754,10 +727,10 @@ object StreamOps {
     */
   def seedDedupState(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
     val (assign, pairs, md5Index, bandIndex) = DedupOps.buildDedupState(s, base)
-    graft.index.GenLog.commitParquet(assign, s"$indexDir/v0/assign")
-    graft.index.GenLog.commitParquet(pairs, s"$indexDir/v0/pairs")
-    graft.index.GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
-    graft.index.GenLog.commitParquet(
+    GenLog.commitParquet(assign, s"$indexDir/v0/assign")
+    GenLog.commitParquet(pairs, s"$indexDir/v0/pairs")
+    GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
+    GenLog.commitParquet(
       bandIndex, s"$indexDir/v0/band_index", partitionBy = Seq("band_idx"))
   }
 
@@ -899,6 +872,32 @@ object StreamOps {
     }
   }
 
+  /** Commit micro-batch `batchId`'s O(batch) dedup increments as version
+    * v(batchId+1) — the per-batch body of [[incrDedupStreamWriter]],
+    * exposed so a COMPOSED pipeline (curate → dedup → index → publish in
+    * one foreachBatch) can drive this leg from the same micro-batch.
+    */
+  def incrDedupCommit(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
+    val sess = batch.sparkSession
+    val (md5Index, bandIndex) =
+      readDedupIndexState(sess, indexDir, upTo = batchId)
+    val (assign, remap, md5New, bandNew, pairs) = DedupOps.applyDedupDeltaIncr(
+      sess,
+      batch.select("doc_id", "lang", "text"),
+      md5Index,
+      bandIndex)
+    val next = s"$indexDir/v${batchId + 1}"
+    GenLog.commitParquet(assign, s"$next/assign")
+    GenLog.commitParquet(remap, s"$next/remap")
+    // the batch's verified-pair generation: slim id pairs, part of
+    // the permanent per-batch log like assign/remap — never folded or
+    // pruned; band_inc stays LAST as the batch's commit gate
+    GenLog.commitParquet(pairs, s"$next/pairs")
+    GenLog.commitParquet(md5New, s"$next/md5_inc")
+    GenLog.commitParquet(
+      bandNew, s"$next/band_inc", partitionBy = Seq("band_idx"))
+  }
+
   /** Continuous incremental near-dedup — the streaming form of
     * q_dedup_incr: each micro-batch runs the full incremental semantics
     * ([[DedupOps.applyDedupDeltaIncr]] — md5 set probe, band-join against
@@ -927,43 +926,13 @@ object StreamOps {
     * [[DedupOps.fullAssign]] ground truth, including a batch-1 cluster
     * merged by a batch-2 bridge and a two-hop remap chain).
     */
-  /** Commit micro-batch `batchId`'s O(batch) dedup increments as version
-    * v(batchId+1) — the per-batch body of [[incrDedupStreamWriter]],
-    * exposed so a COMPOSED pipeline (curate → dedup → index → publish in
-    * one foreachBatch) can drive this leg from the same micro-batch.
-    */
-  def incrDedupCommit(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
-    val sess = batch.sparkSession
-    val (md5Index, bandIndex) =
-      readDedupIndexState(sess, indexDir, upTo = batchId)
-    val (assign, remap, md5New, bandNew, pairs) = DedupOps.applyDedupDeltaIncr(
-      sess,
-      batch.select("doc_id", "lang", "text"),
-      md5Index,
-      bandIndex)
-    val next = s"$indexDir/v${batchId + 1}"
-    graft.index.GenLog.commitParquet(assign, s"$next/assign")
-    graft.index.GenLog.commitParquet(remap, s"$next/remap")
-    // the batch's verified-pair generation (r18): slim id pairs, part of
-    // the permanent per-batch log like assign/remap — never folded or
-    // pruned; band_inc stays LAST as the batch's commit gate
-    graft.index.GenLog.commitParquet(pairs, s"$next/pairs")
-    graft.index.GenLog.commitParquet(md5New, s"$next/md5_inc")
-    graft.index.GenLog.commitParquet(
-      bandNew, s"$next/band_inc", partitionBy = Seq("band_idx"))
-  }
-
   def incrDedupStreamWriter(
       docs: DataFrame,
       indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) incrDedupCommit(batch, indexDir, batchId)
-        ()
-      }
+      checkpoint: String): DataStreamWriter[Row] =
+    GenLog.appendWriter(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) incrDedupCommit(batch, indexDir, batchId)
+    }
 
   /** Fold the accumulated O(batch) increments into a fresh FULL snapshot
     * at the newest committed version — the compaction leg of the
@@ -995,11 +964,11 @@ object StreamOps {
       // md5 first, band last: recognition keys on the band marker, so a
       // crash anywhere before it leaves the fold invisible (the increments
       // are still in place — reads are unchanged) and a rerun overwrites
-      graft.index.GenLog.commitParquet(md5, s"$indexDir/v$k/md5_index")
-      graft.index.GenLog.commitParquet(
+      GenLog.commitParquet(md5, s"$indexDir/v$k/md5_index")
+      GenLog.commitParquet(
         band, s"$indexDir/v$k/band_index", partitionBy = Seq("band_idx"))
     }
-    // cleanup runs even with nothing to fold (the GenLog.compact shape),
+    // cleanup runs even with nothing to fold (the GenFamily.compact shape),
     // so a grace tombstone planted last compaction is collected now.
     // Live-reader grace: folded increments are tombstoned first, deleted
     // a compaction later — a reader that resolved its merge-on-read
@@ -1009,7 +978,7 @@ object StreamOps {
     val snapVer = indexVersions(s, indexDir, requiring = "band_index").max
     Seq("md5_inc", "band_inc").foreach { sub =>
       indexVersions(s, indexDir, requiring = sub).filter(_ <= snapVer).foreach { v =>
-        graft.index.GenLog.graceDelete(
+        GenLog.graceDelete(
           fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$sub"))
       }
     }
@@ -1043,7 +1012,7 @@ object StreamOps {
     * sign-LSH band rows ([[DedupOps.buildEmbedIndex]]) as version v0.
     */
   def seedEmbedIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.commitParquet(
+    GenLog.commitParquet(
       DedupOps.buildEmbedIndex(s, base),
       s"$indexDir/v0/band_index",
       partitionBy = Seq("band_idx"))
@@ -1093,25 +1062,21 @@ object StreamOps {
   def incrEmbedDedupStreamWriter(
       vecs: DataFrame,
       indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val sess = batch.sparkSession
-          val bandIndex = readEmbedIndexState(sess, indexDir, upTo = batchId)
-          val b = batch.select("vec_id", "embedding")
-          val pairs = DedupOps.applyEmbedDelta(sess, b, bandIndex)
-          val next = s"$indexDir/v${batchId + 1}"
-          graft.index.GenLog.commitParquet(pairs, s"$next/pairs")
-          graft.index.GenLog.commitParquet(
-            DedupOps.buildEmbedIndex(sess, b).select(EmbedCols.map(col): _*),
-            s"$next/band_inc",
-            partitionBy = Seq("band_idx"))
-        }
-        ()
+      checkpoint: String): DataStreamWriter[Row] =
+    GenLog.appendWriter(vecs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val sess = batch.sparkSession
+        val bandIndex = readEmbedIndexState(sess, indexDir, upTo = batchId)
+        val b = batch.select("vec_id", "embedding")
+        val pairs = DedupOps.applyEmbedDelta(sess, b, bandIndex)
+        val next = s"$indexDir/v${batchId + 1}"
+        GenLog.commitParquet(pairs, s"$next/pairs")
+        GenLog.commitParquet(
+          DedupOps.buildEmbedIndex(sess, b).select(EmbedCols.map(col): _*),
+          s"$next/band_inc",
+          partitionBy = Seq("band_idx"))
       }
+    }
 
   /** Compaction for the embedding index: fold `band_inc` increments into
     * a full snapshot at the newest committed version and drop the folded
@@ -1128,7 +1093,7 @@ object StreamOps {
     if (committed.nonEmpty && snaps0.max < committed.max) {
       // write-then-mark: a crash mid-fold leaves an uncommitted snapshot
       // that readEmbedIndexState ignores (the increments are still there)
-      graft.index.GenLog.commitParquet(
+      GenLog.commitParquet(
         readEmbedIndexState(s, indexDir, upTo = committed.max),
         s"$indexDir/v${committed.max}/band_index",
         partitionBy = Seq("band_idx"))
@@ -1138,7 +1103,7 @@ object StreamOps {
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val snapVer = indexVersions(s, indexDir, requiring = "band_index").max
     indexVersions(s, indexDir, requiring = "band_inc").filter(_ <= snapVer).foreach { v =>
-      graft.index.GenLog.graceDelete(
+      GenLog.graceDelete(
         fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/band_inc"))
     }
   }
@@ -1156,8 +1121,10 @@ object StreamOps {
   // ---- the generation-local index families, over the shared kernel ---
   //
   // Each family is two functions — build one generation from a frame,
-  // fold generation roots into one full snapshot — and the kernel
-  // ([[graft.index.GenLog]]) owns everything else: version directories,
+  // fold generation roots into one full snapshot — plus a label. The
+  // family value carries the whole lifecycle (`F.seed`, `F.commit`,
+  // `F.streamWriter`, `F.roots`, `F.compact`, `F.maybeCompact`), and the
+  // kernel ([[GenLog]]) owns everything else: version directories,
   // commit markers (a crashed fold is invisible until its marker lands),
   // merge-on-read root resolution, superseded-generation drops, and
   // full-snapshot pruning (without it each compaction would strand one
@@ -1175,7 +1142,8 @@ object StreamOps {
     * unions postings shard-wise and sums the one-row corpus stats —
     * union-preserving, so no read changes (df is derived at serve time).
     */
-  private val Bm25Family = graft.index.GenLog.GenFamily(
+  val Bm25Family = GenLog.GenFamily(
+    label = "lexical index",
     write = (s, docs, path) => { TextOps.writeBm25IndexFrom(s, docs, path); () },
     fold = (s, roots, path) => {
       roots
@@ -1197,7 +1165,8 @@ object StreamOps {
     })
 
   /** ANN bucket family (the streaming form of q_sim_incr). */
-  private[graft] val AnnFamily = graft.index.GenLog.GenFamily(
+  val AnnFamily = GenLog.GenFamily(
+    label = "ANN index",
     write = (s, vecs, path) => SimilarityOps.writeAnnIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
@@ -1214,7 +1183,8 @@ object StreamOps {
     * the ANN buckets (the serving tier's feedback-seed fetch): same
     * generation protocol, partitioned on ishard instead of bucket.
     */
-  private val EmbStoreFamily = graft.index.GenLog.GenFamily(
+  val EmbStoreFamily = GenLog.GenFamily(
+    label = "embedding store",
     write = (s, vecs, path) => SimilarityOps.writeEmbStoreFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
@@ -1229,47 +1199,16 @@ object StreamOps {
         .partitionBy("ishard")
         .parquet(path))
 
-  /** Seed the continuous LEXICAL index: the base corpus's postings
-    * generation as the committed v0 full snapshot.
-    */
-  def seedBm25Index(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.seed(s, Bm25Family, base, indexDir)
-
-  /** Per-batch commit of the continuous lexical index — the foreachBatch
-    * body of [[bm25IndexStreamWriter]], exposed for composed pipelines.
-    */
-  def bm25IndexCommit(batch: DataFrame, indexDir: String, batchId: Long): Unit =
-    graft.index.GenLog.commitGeneration(Bm25Family, batch, indexDir, batchId)
-
-  /** Continuous lexical index maintenance (see the family block note). */
-  def bm25IndexStreamWriter(
-      docs: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(docs, Bm25Family, indexDir, checkpoint)
-
-  private[graft] def bm25GenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "lexical index")
-
   /** Serve the fixed BM25 query set from the continuous index —
-    * merge-on-read over [[bm25GenerationRoots]] through the same
+    * merge-on-read over the [[Bm25Family]] roots through the same
     * [[TextOps.serveBm25]] union q_index_bm25_incr uses, so the streamed
     * index answers exactly like a single rebuilt one.
     */
   def serveBm25Continuous(s: SparkSession, indexDir: String): DataFrame =
-    TextOps.serveBm25(s, bm25GenerationRoots(s, indexDir))
+    TextOps.serveBm25(s, Bm25Family.roots(s, indexDir))
 
-  /** Compaction for the lexical index (kernel protocol: fold, commit,
-    * drop superseded generations, prune all but the newest `keepFulls`
-    * snapshots).
-    */
-  def compactBm25Index(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, Bm25Family, keepFulls)
-
-  /** Metrics-rollup family — the FOURTEENTH maintained family
-    * (verdict-r16 #1): per-(day, event_type) HLL + q-digest sketch state
+  /** Metrics-rollup family — the events table's maintained family:
+    * per-(day, event_type) HLL + q-digest sketch state
     * ([[RelationalOps.rollupStateFrom]]) under the same generation
     * protocol as the retrieval indexes. Each events micro-batch writes
     * its OWN committed generation — O(batch) work and bytes, base day
@@ -1283,7 +1222,8 @@ object StreamOps {
     * digest (extra early compressions) — StreamingRollupSpec pins exact
     * identity on day-aligned feeds and the invariants on straddled ones.
     */
-  private[graft] val RollupFamily = graft.index.GenLog.GenFamily(
+  val RollupFamily = GenLog.GenFamily(
+    label = "rollup state",
     write = (s, events, path) =>
       RelationalOps.writeRollupStateFrom(s, events, path),
     fold = (s, roots, path) => {
@@ -1302,44 +1242,19 @@ object StreamOps {
         .parquet(path)
     })
 
-  /** Seed the continuous rollup: the base corpus's day sketches as the
-    * committed v0 full snapshot.
-    */
-  def seedRollupState(s: SparkSession, baseEvents: DataFrame, dir: String): Unit =
-    graft.index.GenLog.seed(s, RollupFamily, baseEvents, dir)
-
-  /** Per-batch commit of the continuous rollup — the foreachBatch body
-    * of [[rollupStreamWriter]], exposed for composed pipelines.
-    */
-  def rollupCommit(batch: DataFrame, dir: String, batchId: Long): Unit =
-    graft.index.GenLog.commitGeneration(RollupFamily, batch, dir, batchId)
-
-  /** Continuous rollup maintenance over the events feed. */
-  def rollupStreamWriter(
-      events: DataFrame,
-      dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(events, RollupFamily, dir, checkpoint)
-
   /** The merged distinct/quantile report from the maintained state —
     * merge-on-read over the committed roots through the same
     * [[RelationalOps.serveRollup]] the registry's incremental query
     * uses, so the streamed rollup answers exactly like a rebuilt one.
     */
   def serveRollupContinuous(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.serveRollup(
-      s, graft.index.GenLog.roots(s, dir, what = "rollup state"))
+    RelationalOps.serveRollup(s, RollupFamily.roots(s, dir))
 
   /** The time-sliced (day, event_type) report from the same maintained
     * state — see [[RelationalOps.serveRollupDaily]].
     */
   def serveRollupDailyContinuous(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.serveRollupDaily(
-      s, graft.index.GenLog.roots(s, dir, what = "rollup state"))
-
-  /** Compaction for the rollup state (kernel protocol). */
-  def compactRollupState(s: SparkSession, dir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, dir, RollupFamily, keepFulls)
+    RelationalOps.serveRollupDaily(s, RollupFamily.roots(s, dir))
 
   /** Positional-postings family — the streaming form of
     * q_index_phrase_served's index: each batch writes its OWN
@@ -1348,7 +1263,8 @@ object StreamOps {
     * doc sets are disjoint, so merge-on-read union over roots answers
     * exactly like a single rebuilt index; fold is a re-shard concat.
     */
-  private val PhraseFamily = graft.index.GenLog.GenFamily(
+  val PhraseFamily = GenLog.GenFamily(
+    label = "phrase index",
     write = (s, docs, path) => TextOps.writePhraseIndexFrom(s, docs, path),
     fold = (s, roots, path) =>
       roots
@@ -1361,17 +1277,6 @@ object StreamOps {
         .partitionBy("tshard")
         .parquet(s"$path/postings"))
 
-  /** Seed the continuous positional index: base corpus as v0. */
-  def seedPhraseIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.seed(s, PhraseFamily, base, indexDir)
-
-  /** Continuous positional-index maintenance (kernel protocol). */
-  def phraseIndexStreamWriter(
-      docs: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(docs, PhraseFamily, indexDir, checkpoint)
-
   /** Serve the phrase benchmark from the continuous positional index —
     * merge-on-read over generation roots through the same
     * [[TextOps.servePhrase]] the registry's served query uses (pruned to
@@ -1379,21 +1284,14 @@ object StreamOps {
     * index answers exactly like a single rebuilt one.
     */
   def servePhraseContinuous(s: SparkSession, indexDir: String): DataFrame =
-    TextOps.servePhrase(
-      s,
-      graft.index.GenLog.roots(s, indexDir, what = "phrase index"),
-      TextOps.PhraseQueries)
-
-  /** Compaction for the positional index (kernel protocol). */
-  def compactPhraseIndex(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, PhraseFamily, keepFulls)
+    TextOps.servePhrase(s, PhraseFamily.roots(s, indexDir), TextOps.PhraseQueries)
 
   // merge-on-read postings + summed corpus stats — the two frames every
   // LM serve derives from (generation-local postings union like the
   // BM25 serve; stats rows sum because each generation's `l` is its own
   // batch's token count)
   private def lmFrames(s: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
-    val roots = bm25GenerationRoots(s, indexDir)
+    val roots = Bm25Family.roots(s, indexDir)
     val postings = roots
       .map(p => T.parquet(s, s"$p/postings"))
       .reduce(_ unionByName _)
@@ -1472,26 +1370,8 @@ object StreamOps {
       .orderBy($"doc_id")
   }
 
-  /** Seed the continuous ANN index: the base corpus becomes the
-    * committed v0 full bucket-partitioned snapshot.
-    */
-  def seedAnnIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.seed(s, AnnFamily, base, indexDir)
-
-  /** Continuous ANN index maintenance (see the family block note). */
-  def annIndexStreamWriter(
-      vectors: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(vectors, AnnFamily, indexDir, checkpoint)
-
-  private[graft] def annGenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "ANN index")
-
   /** Serve a probe batch from the continuous ANN index — merge-on-read
-    * over [[annGenerationRoots]] through the same pruned union
+    * over the [[AnnFamily]] roots through the same pruned union
     * `q_sim_incr` uses, so the streamed index answers exactly like a
     * single rebuilt one.
     */
@@ -1499,38 +1379,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       probes: DataFrame): DataFrame =
-    SimilarityOps.serveAnnBatchMulti(s, annGenerationRoots(s, indexDir), probes)
-
-  /** Compaction for the continuous ANN index (kernel protocol). */
-  def compactAnnIndex(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, AnnFamily, keepFulls)
-
-  /** Seed the continuous embedding STORE: v0 full ishard-partitioned
-    * snapshot.
-    */
-  def seedEmbStoreIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.seed(s, EmbStoreFamily, base, indexDir)
-
-  /** Continuous embedding-store maintenance — runs beside
-    * [[annIndexStreamWriter]] over the same vector feed (its own
-    * checkpoint), maintaining the id-sharded store generations the
-    * continuous hybrid serve fetches feedback-seed vectors from.
-    */
-  def embStoreStreamWriter(
-      vectors: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(vectors, EmbStoreFamily, indexDir, checkpoint)
-
-  private[graft] def embStoreGenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "embedding store")
-
-  /** Compaction for the embedding store (kernel protocol). */
-  def compactEmbStoreIndex(
-      s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, EmbStoreFamily, keepFulls)
+    SimilarityOps.serveAnnBatchMulti(s, AnnFamily.roots(s, indexDir), probes)
 
   /** CONTINUOUS HYBRID RETRIEVAL — q_retrieval_rrf served from the three
     * maintained generation sets (streamed postings, streamed ANN
@@ -1548,16 +1397,17 @@ object StreamOps {
       storeIndexDir: String): DataFrame =
     TextOps.serveRrfMulti(
       s,
-      bm25GenerationRoots(s, bm25IndexDir),
-      annGenerationRoots(s, annIndexDir),
-      embStoreGenerationRoots(s, storeIndexDir))
+      Bm25Family.roots(s, bm25IndexDir),
+      AnnFamily.roots(s, annIndexDir),
+      EmbStoreFamily.roots(s, storeIndexDir))
 
   /** Quantized-index family — the int8 scan tier maintained
     * continuously beside the float tier: same generation-local shape as
     * [[AnnFamily]] (quantization is per-vector, so a batch quantizes
     * without reading prior state).
     */
-  private val QuantFamily = graft.index.GenLog.GenFamily(
+  val QuantFamily = GenLog.GenFamily(
+    label = "quantized index",
     write = (s, vecs, path) => SimilarityOps.writeQuantIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
       roots
@@ -1572,46 +1422,29 @@ object StreamOps {
         .partitionBy("bucket")
         .parquet(path))
 
-  /** Seed / continuous maintenance / serve / compaction for the
-    * quantized scan tier (kernel protocol — the [[AnnFamily]] notes
-    * apply verbatim).
+  /** Serve a probe batch from the quantized scan tier — merge-on-read
+    * over the [[QuantFamily]] roots (the [[AnnFamily]] notes apply
+    * verbatim).
     */
-  def seedQuantIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
-    graft.index.GenLog.seed(s, QuantFamily, base, indexDir)
-
-  def quantIndexStreamWriter(
-      vectors: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(vectors, QuantFamily, indexDir, checkpoint)
-
-  private[graft] def quantGenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "quantized index")
-
   def serveQuantContinuous(
       s: SparkSession,
       indexDir: String,
       probes: DataFrame): DataFrame =
-    SimilarityOps.serveQuantBatchMulti(s, quantGenerationRoots(s, indexDir), probes)
+    SimilarityOps.serveQuantBatchMulti(s, QuantFamily.roots(s, indexDir), probes)
 
-  def compactQuantIndex(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, QuantFamily, keepFulls)
-
-  /** IVF family — the last similarity index without a continuous path.
-    * Unlike the sign-bucket families, a cell assignment DEPENDS on model
-    * state: the coarse quantizer. The streaming contract fixes it per
+  /** IVF family — the cell-partitioned similarity index. Unlike the
+    * sign-bucket families, a cell assignment DEPENDS on model state:
+    * the coarse quantizer. The streaming contract fixes it per
     * EPOCH — every generation assigns against the newest full snapshot's
     * codebook (readable at write time; compaction copies it forward), so
     * increments stay generation-local and merge-on-read stays exact.
     * Retraining the quantizer is an epoch roll (re-seed + backfill), not
     * a streaming operation — the standard IVF production contract.
     */
-  private def ivfFamily(indexDir: String) = graft.index.GenLog.GenFamily(
+  def ivfFamily(indexDir: String): GenLog.GenFamily = GenLog.GenFamily(
+    label = "IVF index",
     write = (s, vecs, path) => {
-      val cb = T.parquet(s,
-        s"${graft.index.GenLog.roots(s, indexDir, "IVF index").head}/codebook")
+      val cb = T.parquet(s, s"${ivfFamily(indexDir).roots(s, indexDir).head}/codebook")
       SimilarityOps.writeIvfCellsFrom(s, vecs, cb, path)
     },
     fold = (s, roots, path) => {
@@ -1646,23 +1479,8 @@ object StreamOps {
     // derives n2 itself
     SimilarityOps.writeIvfIndexFrom(
       s, base.select(col("vec_id"), col("embedding")), cents, p)
-    graft.index.GenLog.markCommitted(s, p)
+    GenLog.markCommitted(s, p)
   }
-
-  /** Continuous IVF maintenance: each micro-batch assigns its vectors
-    * against the epoch codebook and commits its own cell-partitioned
-    * generation — O(batch) work, the base never re-read or rewritten.
-    */
-  def ivfIndexStreamWriter(
-      vectors: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(vectors, ivfFamily(indexDir), indexDir, checkpoint)
-
-  private[graft] def ivfGenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "IVF index")
 
   /** Serve a probe batch from the continuous IVF index — merge-on-read
     * through the same pruned cell union [[SimilarityOps.serveIvfBatchMulti]]
@@ -1672,13 +1490,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       probeVecs: DataFrame): DataFrame =
-    SimilarityOps.serveIvfBatchMulti(s, ivfGenerationRoots(s, indexDir), probeVecs)
-
-  /** Compaction for the continuous IVF index (kernel protocol; the fold
-    * carries the epoch codebook forward).
-    */
-  def compactIvfIndex(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, ivfFamily(indexDir), keepFulls)
+    SimilarityOps.serveIvfBatchMulti(s, ivfFamily(indexDir).roots(s, indexDir), probeVecs)
 
   /** The EPOCH ROLL — the operation the streaming contract defers
     * quantizer retraining to: reassign every vector across the current
@@ -1700,20 +1512,20 @@ object StreamOps {
       indexDir: String,
       newCents: DataFrame,
       newIndexDir: String): Unit = {
-    val vectors = ivfGenerationRoots(s, indexDir)
+    val vectors = ivfFamily(indexDir).roots(s, indexDir)
       .map(p => T.parquet(s, s"$p/cells")
         .select(col("vec_id"), col("embedding")))
       .reduce(_ unionByName _)
     val p = s"$newIndexDir/v0/full"
     SimilarityOps.writeIvfIndexFrom(s, vectors, newCents, p)
-    graft.index.GenLog.markCommitted(s, p)
+    GenLog.markCommitted(s, p)
   }
 
-  /** SEMANTIC dedup family (SemDeDup) — the seventh generation family.
-    * Model state = the epoch codebook (the first-k base vectors,
-    * k = max(16, ⌈√N_base⌉), pinned at seed — the IVF epoch contract;
-    * retraining is an epoch roll). What makes this family special: the
-    * anchor rule is MONOTONE in vec_id and ingest ids are monotone
+  /** SEMANTIC dedup family (SemDeDup). Model state = the epoch codebook
+    * (the first-k base vectors, k = max(16, ⌈√N_base⌉), pinned at seed —
+    * the IVF epoch contract; retraining is an epoch roll). What makes
+    * this family special: the anchor rule is MONOTONE in vec_id and
+    * ingest ids are monotone
     * across batches, so each batch's survivor set is FINAL at commit
     * time — a generation carries its cell-partitioned members AND its
     * survivor log, witness probes read only the batch's cells from each
@@ -1728,7 +1540,8 @@ object StreamOps {
     * contributed by the batch-internal leg, so the overwrite reproduces
     * the identical artifacts.
     */
-  private[graft] def semFamily(indexDir: String) = graft.index.GenLog.GenFamily(
+  def semFamily(indexDir: String): GenLog.GenFamily = GenLog.GenFamily(
+    label = "semantic index",
     write = (s, batch, path) => {
       // At-least-once retry: if this generation COMMITTED before the
       // crash, roots() now includes `path` itself — and the lazy witness
@@ -1740,9 +1553,7 @@ object StreamOps {
       // contribute is already contributed by the batch-internal leg, and
       // strict a < b excludes self-pairs — the retry reproduces the
       // identical artifacts without ever reading its own target.
-      val roots = graft.index.GenLog
-        .roots(s, indexDir, "semantic index")
-        .filterNot(_ == path)
+      val roots = semFamily(indexDir).roots(s, indexDir).filterNot(_ == path)
       val cents = T.parquet(s, s"${roots.head}/cents")
       SimilarityOps.writeSemGeneration(s, batch, cents, roots, path)
     },
@@ -1777,40 +1588,18 @@ object StreamOps {
   def seedSemanticIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
     val p = s"$indexDir/v0/full"
     SimilarityOps.writeSemSeed(s, base, p)
-    graft.index.GenLog.markCommitted(s, p)
+    GenLog.markCommitted(s, p)
   }
-
-  /** Continuous semantic-dedup maintenance: each micro-batch assigns
-    * against the epoch codebook, probes prior cells for witnesses, and
-    * commits its own generation (members + final survivor log) —
-    * O(batch + probed slice) work, the base never re-read in full.
-    */
-  def semanticIndexStreamWriter(
-      vectors: DataFrame,
-      indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(vectors, semFamily(indexDir), indexDir, checkpoint)
-
-  private[graft] def semGenerationRoots(
-      s: SparkSession,
-      indexDir: String): Seq[String] =
-    graft.index.GenLog.roots(s, indexDir, what = "semantic index")
 
   /** The maintained corpus-wide survivor set: the union of per-root
     * survivor logs (final at commit under the monotone anchor rule), in
     * q_dedup_semantic's output shape.
     */
   def serveSemanticContinuous(s: SparkSession, indexDir: String): DataFrame =
-    semGenerationRoots(s, indexDir)
+    semFamily(indexDir).roots(s, indexDir)
       .map(p => T.parquet(s, s"$p/survivors"))
       .reduce(_ unionByName _)
       .orderBy(col("vec_id"))
-
-  /** Compaction (kernel protocol; the fold carries the epoch codebook
-    * forward and concatenates the survivor logs — both read-invariant).
-    */
-  def compactSemanticIndex(s: SparkSession, indexDir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, indexDir, semFamily(indexDir), keepFulls)
 
   /** The cluster report served from the MAINTAINED semantic index
     * (q_cluster_stats' shape): member counts from the cells artifacts,
@@ -1820,7 +1609,7 @@ object StreamOps {
     * corpus; an epoch roll re-aligns them).
     */
   def serveClusterStatsContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val roots = semGenerationRoots(s, indexDir)
+    val roots = semFamily(indexDir).roots(s, indexDir)
     val members = roots
       .map(p => T.parquet(s, s"$p/cells")
         .select(col("vec_id"), col("cell").cast("long").as("cell")))
@@ -1854,7 +1643,7 @@ object StreamOps {
       newIndexDir: String): Unit =
     seedSemanticIndex(
       s,
-      semGenerationRoots(s, indexDir)
+      semFamily(indexDir).roots(s, indexDir)
         .map(p => T.parquet(s, s"$p/cells")
           .select(col("vec_id"), col("embedding")))
         .reduce(_ unionByName _),
@@ -1878,12 +1667,12 @@ object StreamOps {
     val p = s"$newIndexDir/v0/full"
     SimilarityOps.writeSemSeedTrained(
       s,
-      semGenerationRoots(s, indexDir)
+      semFamily(indexDir).roots(s, indexDir)
         .map(r => T.parquet(s, s"$r/cells")
           .select(col("vec_id"), col("embedding")))
         .reduce(_ unionByName _),
       p)
-    graft.index.GenLog.markCommitted(s, p)
+    GenLog.markCommitted(s, p)
   }
 
   /** Boilerplate shingle-stats family — the continuous lift of
@@ -1897,7 +1686,8 @@ object StreamOps {
     * recomputation of any generation. Fold = concatenation (doc sets
     * disjoint), so compaction is read-invariant by construction.
     */
-  private[graft] val BoilerFamily = graft.index.GenLog.GenFamily(
+  val BoilerFamily = GenLog.GenFamily(
+    label = "boilerplate stats",
     write = (_, docsRows, path) =>
       TextOps.shingleCountsOf(docsRows)
         .write
@@ -1909,28 +1699,13 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
 
-  /** Seed the continuous boilerplate stats: the base corpus's counts as
-    * the committed v0 full snapshot.
-    */
-  def seedBoilerplateStats(s: SparkSession, base: DataFrame, dir: String): Unit =
-    graft.index.GenLog.seed(s, BoilerFamily, base, dir)
-
-  /** Continuous maintenance (kernel protocol; see the family note). */
-  def boilerplateStreamWriter(
-      docs: DataFrame,
-      dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(docs, BoilerFamily, dir, checkpoint)
-
   /** The corpus-wide boilerplate report served merge-on-read from the
     * maintained counts — ≡ the monolithic q_text_boilerplate over the
     * union of all ingested documents at every point in time
     * (StreamingBoilerplateSpec).
     */
   def serveBoilerplateContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateReportOf(
-      T.parquet(s,
-        graft.index.GenLog.roots(s, dir, what = "boilerplate stats"): _*))
+    TextOps.boilerplateReportOf(T.parquet(s, BoilerFamily.roots(s, dir): _*))
 
   /** The corpus-scale (df-fraction) report from the SAME maintained
     * counts — the threshold is derived from the served state's document
@@ -1938,13 +1713,7 @@ object StreamOps {
     * the corpus: no family change, no re-seed, one serve-side knob.
     */
   def serveBoilerplateFracContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateFracReportOf(
-      T.parquet(s,
-        graft.index.GenLog.roots(s, dir, what = "boilerplate stats"): _*))
-
-  /** Compaction (kernel protocol; fold = concatenation). */
-  def compactBoilerplateStats(s: SparkSession, dir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, dir, BoilerFamily, keepFulls)
+    TextOps.boilerplateFracReportOf(T.parquet(s, BoilerFamily.roots(s, dir): _*))
 
   /** Bigram-count family — the continuous lift of q_lm_bigram: each
     * micro-batch persists its docs' (w1, w2, cf2) pair counts
@@ -1958,7 +1727,8 @@ object StreamOps {
     * (which rides the bm25 postings for free), pair adjacency is not in
     * any existing state — this is the family that carries it.
     */
-  private[graft] val BigramFamily = graft.index.GenLog.GenFamily(
+  val BigramFamily = GenLog.GenFamily(
+    label = "bigram stats",
     // payload keyed (split, w1, w2): splits partition the doc set, so
     // summing cf2 over split recovers the corpus counts exactly while
     // filtering split = 'train' serves q_lm_bigram_apply's train-only
@@ -1977,25 +1747,12 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
 
-  /** Seed the continuous bigram counts: the base corpus as v0. */
-  def seedBigramStats(s: SparkSession, base: DataFrame, dir: String): Unit =
-    graft.index.GenLog.seed(s, BigramFamily, base, dir)
-
-  /** Continuous maintenance (kernel protocol; see the family note). */
-  def bigramStreamWriter(
-      docs: DataFrame,
-      dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(docs, BigramFamily, dir, checkpoint)
-
   /** The conditional model served merge-on-read from the maintained
     * counts — ≡ the monolithic q_lm_bigram over the union of all
     * ingested documents at every point in time (StreamingLmSpec).
     */
   def serveLmBigramContinuous(s: SparkSession, dir: String): DataFrame =
-    LmOps.lmBigramFromCounts(
-      T.parquet(s,
-        graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*))
+    LmOps.lmBigramFromCounts(T.parquet(s, BigramFamily.roots(s, dir): _*))
 
   /** q_lm_bigram_apply served from the SAME maintained counts: the
     * split-keyed payload filtered to split = 'train' IS the train-only
@@ -2009,7 +1766,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmBigramApplyFromCounts(
-      T.parquet(s, graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
+      T.parquet(s, BigramFamily.roots(s, dir): _*)
         .filter(col("split") === "train")
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
@@ -2027,7 +1784,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmKnFromCounts(
-      T.parquet(s, graft.index.GenLog.roots(s, dir, what = "bigram stats"): _*)
+      T.parquet(s, BigramFamily.roots(s, dir): _*)
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
 
@@ -2045,22 +1802,18 @@ object StreamOps {
       allDocs: DataFrame): DataFrame = {
     val (postings, nTotal) = lmFrames(s, indexDir)
     LmOps.lmInterpFromCounts(
-      T.parquet(s, graft.index.GenLog.roots(s, bigramDir, what = "bigram stats"): _*)
+      T.parquet(s, BigramFamily.roots(s, bigramDir): _*)
         .select(col("w1"), col("w2"), col("cf2")),
       postings.groupBy(col("term").as("w2")).agg(sum(col("tf")).as("cf1")),
       nTotal.select(col("n_total").as("lt")),
       allDocs)
   }
 
-  /** Compaction (kernel protocol; fold = re-aggregation). */
-  def compactBigramStats(s: SparkSession, dir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, dir, BigramFamily, keepFulls)
-
-  /** Passage-gram family — the continuous lift of q_text_passage_dup
-    * and the TENTH family on the kernel: each micro-batch persists its
-    * docs' positioned 5-gram rows ([[TextOps.passageGramsOf]] — O(batch)
-    * work and bytes, no prior state read). Every document is wholly in
-    * one batch and gram DOCUMENT-frequency is a distinct-count over
+  /** Passage-gram family — the continuous lift of q_text_passage_dup:
+    * each micro-batch persists its docs' positioned 5-gram rows
+    * ([[TextOps.passageGramsOf]] — O(batch) work and bytes, no prior
+    * state read). Every document is wholly in one batch and gram
+    * DOCUMENT-frequency is a distinct-count over
     * disjoint doc sets, so merge-on-read over the generation roots
     * recovers the exact corpus-wide coverage report — with the same
     * RETROACTIVE property as the boilerplate stats: an OLD document's
@@ -2084,7 +1837,8 @@ object StreamOps {
     * schema, the logical-width shrink, and serve ≡ registry for every
     * consumer.
     */
-  private[graft] val PassageFamily = graft.index.GenLog.GenFamily(
+  val PassageFamily = GenLog.GenFamily(
+    label = "passage grams",
     write = (_, docsRows, path) =>
       TextOps.passageGramsOf(docsRows)
         .withColumn("g5", unhex(md5(col("g5"))))
@@ -2096,17 +1850,6 @@ object StreamOps {
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
-
-  /** Seed the continuous passage grams: the base corpus as v0. */
-  def seedPassageGrams(s: SparkSession, base: DataFrame, dir: String): Unit =
-    graft.index.GenLog.seed(s, PassageFamily, base, dir)
-
-  /** Continuous maintenance (kernel protocol; see the family note). */
-  def passageStreamWriter(
-      docs: DataFrame,
-      dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.index.GenLog.streamWriter(docs, PassageFamily, dir, checkpoint)
 
   /** The corpus-wide passage-duplication report served merge-on-read
     * from the maintained grams — ≡ the monolithic q_text_passage_dup
@@ -2145,12 +1888,7 @@ object StreamOps {
       TextOps.passageMinlenSpansOf(passageState(s, dir)))
 
   private def passageState(s: SparkSession, dir: String): DataFrame =
-    T.parquet(s,
-      graft.index.GenLog.roots(s, dir, what = "passage grams"): _*)
-
-  /** Compaction (kernel protocol; fold = concatenation). */
-  def compactPassageGrams(s: SparkSession, dir: String, keepFulls: Int = 2): Unit =
-    graft.index.GenLog.compact(s, dir, PassageFamily, keepFulls)
+    T.parquet(s, PassageFamily.roots(s, dir): _*)
 
   /** The eval-set decontamination spans served from the SAME maintained
     * passage grams — the split label is a pure function of doc_id (the
@@ -2205,15 +1943,15 @@ object StreamOps {
       base: DataFrame,
       cents: DataFrame,
       p: VectorPipeline): Unit = {
-    seedAnnIndex(s, base, p.annDir)
-    seedQuantIndex(s, base, p.quantDir)
+    AnnFamily.seed(s, base, p.annDir)
+    QuantFamily.seed(s, base, p.quantDir)
     seedIvfIndex(s, base, cents, p.ivfDir)
     seedSemanticIndex(s, base, p.semDir)
-    seedEmbStoreIndex(s, base, p.storeDir)
+    EmbStoreFamily.seed(s, base, p.storeDir)
   }
 
   /** ONE micro-batch through all five vector maintenance legs — each
-    * leg is the same [[graft.index.GenLog.commitGeneration]] body its
+    * leg is the same [[GenLog.GenFamily.commit]] body its
     * standalone writer runs, so composed and single-family streams
     * share one implementation and per-leg idempotence
     * (overwrite-then-mark per batchId) is inherited unchanged.
@@ -2232,15 +1970,15 @@ object StreamOps {
   private[graft] def vectorLegs(
       batch: DataFrame,
       batchId: Long,
-      p: VectorPipeline): Unit = {
-    graft.index.GenLog.commitGeneration(AnnFamily, batch, p.annDir, batchId)
-    graft.index.GenLog.commitGeneration(QuantFamily, batch, p.quantDir, batchId)
-    graft.index.GenLog.commitGeneration(
-      ivfFamily(p.ivfDir), batch, p.ivfDir, batchId)
-    graft.index.GenLog.commitGeneration(
-      semFamily(p.semDir), batch, p.semDir, batchId)
-    graft.index.GenLog.commitGeneration(EmbStoreFamily, batch, p.storeDir, batchId)
-  }
+      p: VectorPipeline): Unit =
+    vectorFamilies(p).foreach { case (fam, dir) => fam.commit(batch, dir, batchId) }
+
+  private def vectorFamilies(p: VectorPipeline): Seq[(GenLog.GenFamily, String)] = Seq(
+    AnnFamily -> p.annDir,
+    QuantFamily -> p.quantDir,
+    ivfFamily(p.ivfDir) -> p.ivfDir,
+    semFamily(p.semDir) -> p.semDir,
+    EmbStoreFamily -> p.storeDir)
 
   /** The composed vector program as a stream writer: feed it the vector
     * stream and start. The daily loop is stop →
@@ -2249,25 +1987,14 @@ object StreamOps {
   def vectorPipelineWriter(
       vectors: DataFrame,
       p: VectorPipeline,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        vectorPipelineBatch(batch, batchId, p)
-        ()
-      }
+      checkpoint: String): DataStreamWriter[Row] =
+    GenLog.appendWriter(vectors, checkpoint)(vectorPipelineBatch(_, _, p))
 
   /** Compact all five families (kernel protocol, stopped-stream
     * cadence).
     */
-  def compactVectorPipeline(s: SparkSession, p: VectorPipeline): Unit = {
-    compactAnnIndex(s, p.annDir)
-    compactQuantIndex(s, p.quantDir)
-    compactIvfIndex(s, p.ivfDir)
-    compactSemanticIndex(s, p.semDir)
-    compactEmbStoreIndex(s, p.storeDir)
-  }
+  def compactVectorPipeline(s: SparkSession, p: VectorPipeline): Unit =
+    vectorFamilies(p).foreach { case (fam, dir) => fam.compact(s, dir) }
 
   // ───────────────── the unified text+vector program ─────────────────
 
@@ -2354,22 +2081,16 @@ object StreamOps {
   def unifiedPipelineWriter(
       feed: DataFrame,
       p: UnifiedPipeline,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    feed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unifiedPipelineBatch(batch, batchId, p)
-        ()
-      }
+      checkpoint: String): DataStreamWriter[Row] =
+    GenLog.appendWriter(feed, checkpoint)(unifiedPipelineBatch(_, _, p))
 
   /** Stopped-stream compaction for all thirteen families. */
   def compactUnifiedPipeline(s: SparkSession, p: UnifiedPipeline): Unit = {
     compactDedupIndex(s, p.corpus.dedupIndexDir)
-    compactBm25Index(s, p.corpus.bm25IndexDir)
+    Bm25Family.compact(s, p.corpus.bm25IndexDir)
     if (p.corpus.phraseIndexDir.nonEmpty)
-      compactPhraseIndex(s, p.corpus.phraseIndexDir)
-    compactCorpusReport(s, p.corpus.reportSummaryDir)
+      PhraseFamily.compact(s, p.corpus.phraseIndexDir)
+    ReportFamily.compact(s, p.corpus.reportSummaryDir)
     compactVectorPipeline(s, p.vectors)
   }
 
@@ -2385,7 +2106,7 @@ object StreamOps {
       url: String,
       table: String,
       keys: Seq[String],
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      checkpoint: String): DataStreamWriter[Row] =
     df.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)

@@ -1769,31 +1769,36 @@ object TextOps {
                 .map(j => $"bucket".bitwiseXOR(lit(1L << j))): _*)).as("pbucket"))
   }
 
+  /** The lexical leg of the served RRF tier, collected to a
+    * LocalRelation. It is ≤ topK·|queries| rows but its lineage is the
+    * full pruned-postings scoring plan, and the serve references it four
+    * times (two bounded-state collects, the seed join, the fusion):
+    * collecting it once (bounded model state, the probe-bucket
+    * precedent) reads and scores the postings exactly once per serve, and
+    * every downstream reference — the shard probe, the seed join's
+    * broadcast, the fusion — reads driver-local rows instead of re-running
+    * (or even re-fetching) a checkpointed partition.
+    */
+  private[graft] def rrfLexFrame(s: SparkSession, bm25Paths: Seq[String]): DataFrame = {
+    import s.implicits._
+    val lexDist = serveBm25(s, bm25Paths)
+      .select($"query_id", $"doc_id", $"rank".as("lex_rank"))
+    s.createDataFrame(java.util.Arrays.asList(lexDist.collect(): _*), lexDist.schema)
+  }
+
   private[graft] def serveRrfMulti(
       s: SparkSession,
       bm25Paths: Seq[String],
       annPaths: Seq[String],
       storePaths: Seq[String]): DataFrame = {
     import s.implicits._
-    // The lexical leg is ≤ topK·|queries| rows but its lineage is the full
-    // pruned-postings scoring plan, and serve references it four times
-    // (two bounded-state collects, the seed join, the fusion): COLLECT it
-    // once to a LocalRelation (bounded model state, the probe-bucket
-    // precedent) so the postings are read and scored exactly once per
-    // serve and every downstream reference — the shard probe, the seed
-    // join's broadcast, the fusion — reads driver-local rows instead of
-    // re-running (or even re-fetching) a checkpointed partition.
-    val lexDist = serveBm25(s, bm25Paths)
-      .select($"query_id", $"doc_id", $"rank".as("lex_rank"))
-    val lex = s.createDataFrame(
-      java.util.Arrays.asList(lexDist.collect(): _*),
-      lexDist.schema)
+    val lex = rrfLexFrame(s, bm25Paths)
     // The SEED is equally bounded — ≤ (1 + SignBits)·|queries| rows of
     // (query_id, feedback vector, probe bucket) — so it too collects ONCE
-    // to a LocalRelation (r19 opt): the lazy form executed the ishard-
-    // pruned store scan + seed window TWICE per serve (once for the
+    // to a LocalRelation: a lazy seed would execute the ishard-pruned
+    // store scan + seed window TWICE per serve (once for the
     // probe-bucket collect, once inside the final plan's broadcast). The
-    // pruned store scan now runs exactly once, inside [[rrfSeedFrame]],
+    // pruned store scan runs exactly once, inside [[rrfSeedFrame]],
     // where ServeIndexSpec asserts the literal ishard partition filter
     // on the plan that actually executes.
     val seedDist = rrfSeedFrame(s, storePaths, lex)

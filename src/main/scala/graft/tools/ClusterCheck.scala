@@ -173,16 +173,16 @@ object ClusterCheck {
       "evfeed1", 1000000L)
     stageTo(evSrc)(ev.filter(col("event_id") > evC1), "evfeed2", 2000000L)
     val rollupDir = s"$work/rollup"
-    StreamOps.seedRollupState(s, ev.filter(col("event_id") <= evCut), rollupDir)
-    val qr = StreamOps
-      .rollupStreamWriter(
+    StreamOps.RollupFamily.seed(s, ev.filter(col("event_id") <= evCut), rollupDir)
+    val qr = StreamOps.RollupFamily
+      .streamWriter(
         StreamOps.eventsStream(s, evSrc, Map("maxFilesPerTrigger" -> "1")),
         rollupDir,
         s"$work/ckpt_rollup")
       .start()
     try qr.processAllAvailable()
     finally qr.stop()
-    StreamOps.compactRollupState(s, rollupDir)
+    StreamOps.RollupFamily.compact(s, rollupDir)
     // deterministic vector probes, derived from the static table the same
     // way on both sides of the fork
     val e = emb.select(
@@ -218,7 +218,7 @@ object ClusterCheck {
         s, pipe.vectors.ivfDir, e.filter(col("vec_id") < 5)),
       "sem" -> StreamOps.serveSemanticContinuous(s, pipe.vectors.semDir),
       "store" -> StreamOps
-        .embStoreGenerationRoots(s, pipe.vectors.storeDir)
+        .EmbStoreFamily.roots(s, pipe.vectors.storeDir)
         .map(r => s.read.parquet(r))
         .reduce(_ unionByName _)
         .select(col("vec_id"), col("ishard").cast("long").as("ishard")),

@@ -3,7 +3,6 @@ package graft.tools
 import graft.SparkEntry
 import graft.index.GenLog
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Cross-session durable-root proof harness, driven by DurableRootSpec:
   * each invocation is its OWN JVM + SparkSession pointed at a shared
@@ -14,14 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * args: `<phase> <warehouseRoot> <sfDir> <outDir>`
   *
-  * Phase `build`: runs the served queries (building their indexes under
-  * the root) and plants a marker-less legacy v-layout ANN directory.
-  * Phase `serve` (a FRESH JVM): runs the same queries — every one must
-  * skip its build and answer from the previous session's committed
-  * bytes — and adopts + serves the legacy directory on the same root.
-  * Both phases dump results to parquet and print one `[cross]` line
-  * with the process-wide build/skip counters; the spec compares dumps
-  * across the session boundary and asserts `builds=0` in `serve`.
+  * Phase `build`: runs the served queries, building their indexes under
+  * the root. Phase `serve` (a FRESH JVM): runs the same queries — every
+  * one must skip its build and answer from the previous session's
+  * committed bytes. Both phases dump results to parquet and print one
+  * `[cross]` line with the process-wide build/skip counters; the spec
+  * compares dumps across the session boundary and asserts `builds=0` in
+  * `serve`.
   */
 object CrossSession {
   private val Served = Seq("q_sim_served", "q_index_bm25_served")
@@ -41,35 +39,10 @@ object CrossSession {
       .config(GenLog.RootKey, root)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     Served.foreach { n =>
       SparkEntry.queries(n)(spark, sfDir)
         .write.mode("overwrite").parquet(s"$outDir/${phase}_$n")
-    }
-
-    val legacy = s"$root/_legacy_ann"
-    val all = graft.T(spark, sfDir, "embeddings")
-    if (phase == "build") {
-      // a pre-catalog index on the same durable root: real artifacts in
-      // the v-layout, written WITHOUT commit markers
-      val cut = all.agg(max($"vec_id")).head().getLong(0) * 8 / 10
-      graft.ops.SimilarityOps.writeAnnIndexFor(
-        spark, all.filter($"vec_id" <= cut), s"$legacy/v0/full")
-      graft.ops.SimilarityOps.writeAnnIndexFor(
-        spark, all.filter($"vec_id" > cut), s"$legacy/v1/gen")
-    } else {
-      // the one-time migration, executed by a LATER session against the
-      // same root: adopt, then serve merge-on-read from the adopted dirs
-      val adopted = GenLog.adopt(spark, legacy)
-      require(
-        adopted.toSet == Set((0L, "full"), (1L, "gen")),
-        s"adopt() on the durable root found $adopted")
-      require(GenLog.adopt(spark, legacy).isEmpty, "adopt() must be idempotent")
-      graft.ops.StreamOps
-        .serveAnnContinuous(
-          spark, legacy, graft.ops.SimilarityOps.batchProbeFrame(spark, sfDir))
-        .write.mode("overwrite").parquet(s"$outDir/${phase}_legacy")
     }
 
     println(

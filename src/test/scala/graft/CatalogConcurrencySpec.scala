@@ -53,7 +53,7 @@ class CatalogConcurrencySpec extends SparkSpec {
     }
 
     val indexDir = Files.createTempDirectory("graft_conc_idx").toString
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= cuts(0)), indexDir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= cuts(0)), indexDir)
 
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val served = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
@@ -64,8 +64,7 @@ class CatalogConcurrencySpec extends SparkSpec {
     val writer = new Thread(() =>
       try {
         for (b <- 1 to Batches) {
-          graft.index.GenLog.commitGeneration(
-            StreamOps.AnnFamily, slice(b), indexDir, batchId = (b - 1).toLong)
+          StreamOps.AnnFamily.commit(slice(b), indexDir, batchId = (b - 1).toLong)
           Thread.sleep(400)
         }
       } catch { case t: Throwable => errors.add(t) }
@@ -73,7 +72,7 @@ class CatalogConcurrencySpec extends SparkSpec {
 
     val compactor = new Thread(() =>
       try while (!writerDone.get()) {
-        StreamOps.compactAnnIndex(spark, indexDir)
+        StreamOps.AnnFamily.compact(spark, indexDir)
         compactions.incrementAndGet()
         // the grace contract: a reader must outlive its snapshot for one
         // compaction interval — so the compactor runs at a realistic
@@ -104,7 +103,7 @@ class CatalogConcurrencySpec extends SparkSpec {
     }
     // quiesced: one more compaction cycle, then the final answer is the
     // full corpus, exactly
-    StreamOps.compactAnnIndex(spark, indexDir)
+    StreamOps.AnnFamily.compact(spark, indexDir)
     assert(
       rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)) ===
         prefixAnswers.last)

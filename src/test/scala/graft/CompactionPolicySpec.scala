@@ -7,7 +7,7 @@ import graft.ops.{SimilarityOps, StreamOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** [[GenLog.maybeCompact]] — the self-tuning compaction cadence: a
+/** [[GenLog.GenFamily.maybeCompact]] — the self-tuning compaction cadence: a
   * composed pipeline calls it once per batch and the policy decides,
   * from what actually accumulated, whether this batch pays for a fold.
   * Count trigger bounds merge-on-read fan-in; bytes trigger bounds the
@@ -31,7 +31,7 @@ class CompactionPolicySpec extends SparkSpec {
     val Batches = 6
     val cuts = (0 to Batches).map(i => maxId / 2 + (maxId - maxId / 2) * i / Batches)
     val dir = Files.createTempDirectory("graft_policy_idx").toString
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= cuts(0)), dir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= cuts(0)), dir)
     val slices = (1 to Batches).map(i =>
       all.filter($"vec_id" > cuts(i - 1) && $"vec_id" <= cuts(i)))
     val probes = SimilarityOps.batchProbeFrame(spark, sf).localCheckpoint(true)
@@ -51,9 +51,9 @@ class CompactionPolicySpec extends SparkSpec {
     try {
       var folds = 0
       slices.zipWithIndex.foreach { case (b, i) =>
-        GenLog.commitGeneration(StreamOps.AnnFamily, b, dir, batchId = i.toLong)
+        StreamOps.AnnFamily.commit(b, dir, batchId = i.toLong)
         val before = probeRows(dir)
-        val did = GenLog.maybeCompact(spark, dir, StreamOps.AnnFamily)
+        val did = StreamOps.AnnFamily.maybeCompact(spark, dir)
         if (did) folds += 1
         val gensAbove = {
           val f = GenLog.versions(spark, dir, requiring = "full").max
@@ -68,7 +68,7 @@ class CompactionPolicySpec extends SparkSpec {
       }
       assert(folds === 1, s"6 batches at maxGens=4 pay for exactly one fold, got $folds")
       // quiesce: final answer is the full corpus
-      GenLog.compact(spark, dir, StreamOps.AnnFamily)
+      StreamOps.AnnFamily.compact(spark, dir)
       assert(probeRows(dir) === expect)
     } finally {
       spark.conf.unset(GenLog.CompactMaxGensKey)
@@ -142,17 +142,17 @@ class CompactionPolicySpec extends SparkSpec {
     spark.conf.set(GenLog.CompactMaxGensKey, "1000")
     spark.conf.set(GenLog.CompactGenBytesFracKey, "0.0")
     try {
-      assert(!GenLog.maybeCompact(spark, dir, StreamOps.AnnFamily),
+      assert(!StreamOps.AnnFamily.maybeCompact(spark, dir),
         "no gens yet: nothing to fold regardless of thresholds")
-      GenLog.commitGeneration(StreamOps.AnnFamily, slices.head, dir, batchId = 0L)
+      StreamOps.AnnFamily.commit(slices.head, dir, batchId = 0L)
       val before = probeRows(dir)
-      assert(GenLog.maybeCompact(spark, dir, StreamOps.AnnFamily),
+      assert(StreamOps.AnnFamily.maybeCompact(spark, dir),
         "one committed gen must trip the 0-fraction bytes trigger")
       assert(probeRows(dir) === before)
       // and a fraction no realistic gen mass reaches never fires
-      GenLog.commitGeneration(StreamOps.AnnFamily, slices(1), dir, batchId = 1L)
+      StreamOps.AnnFamily.commit(slices(1), dir, batchId = 1L)
       spark.conf.set(GenLog.CompactGenBytesFracKey, "1e9")
-      assert(!GenLog.maybeCompact(spark, dir, StreamOps.AnnFamily))
+      assert(!StreamOps.AnnFamily.maybeCompact(spark, dir))
     } finally {
       spark.conf.unset(GenLog.CompactMaxGensKey)
       spark.conf.unset(GenLog.CompactGenBytesFracKey)

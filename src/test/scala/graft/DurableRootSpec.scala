@@ -10,8 +10,7 @@ import scala.sys.process._
   * `spark.graft.index.root` at a fixed directory and builds the served
   * indexes; a FRESH `serve` JVM (new process, new SparkSession, zero
   * shared driver state) answers the same queries from the committed
-  * artifacts alone — builds_run must be 0 — and exercises `adopt()` on
-  * a marker-less legacy directory under the same root. Each phase runs
+  * artifacts alone — builds_run must be 0. Each phase runs
   * [[graft.tools.CrossSession]] in its own forked JVM with this test
   * JVM's classpath.
   */
@@ -79,13 +78,6 @@ class DurableRootSpec extends SparkSpec {
         .orderBy($"probe_id", $"cos".desc, $"vec_id")) ===
         rows(SparkEntry.queries("q_sim_batch")(spark, sf)),
       "cross-session serve diverged from the monolithic oracle answer")
-
-    // the adopted legacy index on the same root serves the full corpus
-    assert(
-      rows(spark.read.parquet(s"$out/serve_legacy")
-        .orderBy($"probe_id", $"cos".desc, $"vec_id")) ===
-        rows(SparkEntry.queries("q_sim_batch")(spark, sf)),
-      "adopt() on the durable root did not serve exactly")
   }
 
   test("two PROCESSES racing one buildOnce key: exactly one builds, both serve") {

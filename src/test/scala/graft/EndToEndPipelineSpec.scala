@@ -291,10 +291,10 @@ class EndToEndPipelineSpec extends SparkSpec {
 
     // compaction of all five maintained families is read-invariant
     StreamOps.compactDedupIndex(spark, dedupIdx)
-    StreamOps.compactBm25Index(spark, bm25Idx)
-    StreamOps.compactBoilerplateStats(spark, boilerIdx)
-    StreamOps.compactPassageGrams(spark, passageIdx)
-    StreamOps.compactCorpusReport(spark, sumIdx)
+    StreamOps.Bm25Family.compact(spark, bm25Idx)
+    StreamOps.BoilerFamily.compact(spark, boilerIdx)
+    StreamOps.PassageFamily.compact(spark, passageIdx)
+    StreamOps.ReportFamily.compact(spark, sumIdx)
     assert(
       rows(StreamOps.publishedCorpusReport(spark, sumIdx)) ===
         rows(report(curatedAll)),

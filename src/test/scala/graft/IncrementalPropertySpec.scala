@@ -308,8 +308,8 @@ class IncrementalPropertySpec extends SparkSpec {
     val mono = Files.createTempDirectory("graft_prop_ann_m").toString + "/idx"
     val base = vecFrame(_ == 0)
     val delta = vecFrame(_ == 1)
-    StreamOps.seedAnnIndex(spark, base, dir)
-    graft.index.GenLog.commitGeneration(StreamOps.AnnFamily, delta, dir, batchId = 0L)
+    StreamOps.AnnFamily.seed(spark, base, dir)
+    StreamOps.AnnFamily.commit(delta, dir, batchId = 0L)
     SimilarityOps.writeAnnIndexFor(spark, base.unionByName(delta), mono)
     // one multi-probe per corpus: its first vector, Hamming-1 exploded
     // (the batchProbeFrame shape over the generated corpus)

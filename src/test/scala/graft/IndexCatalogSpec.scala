@@ -80,7 +80,7 @@ class IndexCatalogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_cat_crash").toString
     val all = T(spark, sf, "embeddings")
     val cut = all.agg(max($"vec_id")).head().getLong(0) * 8 / 10
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= cut), dir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= cut), dir)
     // a "streamed" generation, committed through the kernel protocol
     SimilarityOps.writeAnnIndexFor(
       spark, all.filter($"vec_id" > cut), s"$dir/v1/gen")
@@ -106,14 +106,14 @@ class IndexCatalogSpec extends SparkSpec {
     // generation gets a one-compaction GRACE (tombstoned, excluded from
     // roots, files intact for readers that resolved pre-fold); the next
     // compaction deletes it.
-    StreamOps.compactAnnIndex(spark, dir)
+    StreamOps.AnnFamily.compact(spark, dir)
     assert(GenLog.versions(spark, dir, requiring = "full").max === 1L)
     assert(
       fsOf(dir).exists(
         new org.apache.hadoop.fs.Path(s"$dir/v1/gen/${GenLog.Superseded}")))
-    assert(!GenLog.roots(spark, dir).exists(_.endsWith("v1/gen")))
+    assert(!StreamOps.AnnFamily.roots(spark, dir).exists(_.endsWith("v1/gen")))
     assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
-    StreamOps.compactAnnIndex(spark, dir)
+    StreamOps.AnnFamily.compact(spark, dir)
     assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
     assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
   }
@@ -122,7 +122,7 @@ class IndexCatalogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_cat_prune").toString
     val all = T(spark, sf, "embeddings")
     val m = all.agg(max($"vec_id")).head().getLong(0)
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= m / 2), dir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= m / 2), dir)
     def addGen(v: Int, lo: Long, hi: Long): Unit = {
       SimilarityOps.writeAnnIndexFor(
         spark,
@@ -131,51 +131,49 @@ class IndexCatalogSpec extends SparkSpec {
       GenLog.markCommitted(spark, s"$dir/v$v/gen")
     }
     val probes = SimilarityOps.batchProbeFrame(spark, sf)
-    addGen(1, m / 2, m * 3 / 4)
-    StreamOps.compactAnnIndex(spark, dir, keepFulls = 1)
-    // keepFulls=1: the v0 seed snapshot is pruned after the fold commits
-    assert(GenLog.versions(spark, dir, requiring = "full") === Seq(1L))
-    addGen(2, m * 3 / 4, m)
-    StreamOps.compactAnnIndex(spark, dir, keepFulls = 1)
-    assert(GenLog.versions(spark, dir, requiring = "full") === Seq(2L))
-    // after two fold+prune cycles the index still answers exactly
+    assert(GenLog.KeepFulls === 2)
+    addGen(1, m / 2, m * 2 / 3)
+    StreamOps.AnnFamily.compact(spark, dir)
+    // two fulls fit the bound: the v0 seed snapshot survives the first fold
+    assert(GenLog.versions(spark, dir, requiring = "full").sorted === Seq(0L, 1L))
+    addGen(2, m * 2 / 3, m * 5 / 6)
+    StreamOps.AnnFamily.compact(spark, dir)
+    // every snapshot but the newest two is pruned after each fold commits
+    assert(GenLog.versions(spark, dir, requiring = "full").sorted === Seq(1L, 2L))
+    addGen(3, m * 5 / 6, m)
+    StreamOps.AnnFamily.compact(spark, dir)
+    assert(GenLog.versions(spark, dir, requiring = "full").sorted === Seq(2L, 3L))
+    // after three fold+prune cycles the index still answers exactly
     assert(
       rows(StreamOps.serveAnnContinuous(spark, dir, probes)) ===
         rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
     // the directory holds O(keep) corpus copies with one-compaction lag:
-    // v1/gen (superseded two compactions ago) is gone, v2/gen rides out
-    // its grace tombstoned, and the next compaction collects it too
-    assert(GenLog.versions(spark, dir, requiring = "gen") === Seq(2L))
+    // v1/gen and v2/gen (superseded two compactions ago or more) are
+    // gone, v3/gen rides out its grace tombstoned, and the next
+    // compaction collects it too
+    assert(GenLog.versions(spark, dir, requiring = "gen") === Seq(3L))
     assert(
       fsOf(dir).exists(
-        new org.apache.hadoop.fs.Path(s"$dir/v2/gen/${GenLog.Superseded}")))
-    StreamOps.compactAnnIndex(spark, dir, keepFulls = 1)
+        new org.apache.hadoop.fs.Path(s"$dir/v3/gen/${GenLog.Superseded}")))
+    StreamOps.AnnFamily.compact(spark, dir)
     assert(GenLog.versions(spark, dir, requiring = "gen").isEmpty)
   }
 
-  test("adopt() migrates a pre-catalog (marker-less) index directory") {
-    val dir = Files.createTempDirectory("graft_cat_adopt").toString
-    val all = T(spark, sf, "embeddings")
-    val cut = all.agg(max($"vec_id")).head().getLong(0) * 8 / 10
-    // a legacy layout: real artifacts, written without markers
-    graft.ops.SimilarityOps.writeAnnIndexFor(
-      spark, all.filter($"vec_id" <= cut), s"$dir/v0/full")
-    graft.ops.SimilarityOps.writeAnnIndexFor(
-      spark, all.filter($"vec_id" > cut), s"$dir/v1/gen")
-    // marker-gated recognition refuses the intact directory...
-    intercept[IllegalArgumentException] {
-      StreamOps.serveAnnContinuous(
-        spark, dir, SimilarityOps.batchProbeFrame(spark, sf))
+  test("roots and compact on an unseeded directory name the family") {
+    val dir = Files.createTempDirectory("graft_cat_unseeded").toString
+    for ((fam, label) <- Seq(
+        StreamOps.Bm25Family -> "lexical index",
+        StreamOps.AnnFamily -> "ANN index")) {
+      assert(fam.label === label)
+      val fromRoots = intercept[IllegalArgumentException](fam.roots(spark, dir))
+      val fromCompact = intercept[IllegalArgumentException](fam.compact(spark, dir))
+      for (e <- Seq(fromRoots, fromCompact))
+        assert(
+          e.getMessage.contains(s"$label at $dir has no committed full snapshot"),
+          e.getMessage)
+      // the policy fold never compacts an unseeded directory
+      assert(!fam.maybeCompact(spark, dir))
     }
-    // ...until the operator adopts it; then it serves exactly
-    val adopted = GenLog.adopt(spark, dir)
-    assert(adopted.toSet === Set((0L, "full"), (1L, "gen")))
-    assert(
-      rows(StreamOps.serveAnnContinuous(
-        spark, dir, SimilarityOps.batchProbeFrame(spark, sf))) ===
-        rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
-    // idempotent: a second adoption finds nothing to do
-    assert(GenLog.adopt(spark, dir).isEmpty)
   }
 
   test("buildOnce: two racing writers build one key exactly once, both serve identical bytes") {
@@ -243,7 +241,7 @@ class IndexCatalogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_cat_grace").toString
     val all = T(spark, sf, "embeddings")
     val cut = all.agg(max($"vec_id")).head().getLong(0) * 8 / 10
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= cut), dir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= cut), dir)
     SimilarityOps.writeAnnIndexFor(
       spark, all.filter($"vec_id" > cut), s"$dir/v1/gen")
     GenLog.markCommitted(spark, s"$dir/v1/gen")
@@ -253,14 +251,14 @@ class IndexCatalogSpec extends SparkSpec {
     // BEFORE the compaction commits its fold
     val preCompact =
       SimilarityOps.serveAnnBatchMulti(
-        spark, StreamOps.annGenerationRoots(spark, dir), probes)
-    StreamOps.compactAnnIndex(spark, dir)
+        spark, StreamOps.AnnFamily.roots(spark, dir), probes)
+    StreamOps.AnnFamily.compact(spark, dir)
     // without the grace tombstone this collect would race the delete of
     // v1/gen's part files (FileNotFoundException); with it, the reader
     // outlives its snapshot for a full compaction interval
     assert(rows(preCompact) === want)
     // post-grace, the next compaction collects the directory
-    StreamOps.compactAnnIndex(spark, dir)
+    StreamOps.AnnFamily.compact(spark, dir)
     assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
     assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
   }

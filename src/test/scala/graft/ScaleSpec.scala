@@ -829,8 +829,7 @@ class ScaleSpec extends SparkSpec {
       .localCheckpoint(eager = true)
 
     def applyOn(idx: String): Unit =
-      graft.index.GenLog.commitGeneration(
-        StreamOps.semFamily(idx), batch, idx, batchId = 0L)
+      StreamOps.semFamily(idx).commit(batch, idx, batchId = 0L)
     applyOn(idx1) // warmup (codegen; the overwrite retry is idempotent)
     val tApply1 = timed(applyOn(idx1))
     val tApply10 = timed(applyOn(idx10))

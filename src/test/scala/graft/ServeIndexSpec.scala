@@ -195,16 +195,11 @@ class ServeIndexSpec extends SparkSpec {
         rows(SparkEntry.queries("q_retrieval_rrf")(spark, sf)))
     // the feedback-seed fetch reads the embedding store through a literal
     // ishard partition filter — by-id lookups never scan the full store.
-    // r19: the serve collects the bounded seed ONCE, so the store scan
-    // lives (and executes, exactly once) in the SEED frame's plan, not
-    // the final fused plan — assert the filter where the scan runs.
+    // The serve collects the bounded seed ONCE, so the store scan lives
+    // (and executes, exactly once) in the SEED frame's plan, not the
+    // final fused plan — assert the filter where the scan runs.
     val root = SimilarityOps.serveRoot(spark, sf)
-    val lexDist = TextOps
-      .serveBm25(spark, Seq(s"$root/bm25"))
-      .selectExpr("query_id", "doc_id", "rank AS lex_rank")
-    val lex = spark.createDataFrame(
-      java.util.Arrays.asList(lexDist.collect(): _*),
-      lexDist.schema)
+    val lex = TextOps.rrfLexFrame(spark, Seq(s"$root/bm25"))
     val seedPlan = TextOps
       .rrfSeedFrame(spark, Seq(s"$root/embstore"), lex)
       .queryExecution.executedPlan.toString

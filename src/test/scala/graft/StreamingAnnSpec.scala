@@ -6,7 +6,7 @@ import graft.ops.{SimilarityOps, StreamOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous ANN index maintenance ([[StreamOps.annIndexStreamWriter]]):
+/** Continuous ANN index maintenance ([[StreamOps.AnnFamily]]):
   * per-batch bucket generations merged on read must answer the standard
   * probe batch exactly like a single rebuilt index at every point in time
   * — mid-stream against an in-session rebuild over the prefix corpus, and
@@ -50,13 +50,13 @@ class StreamingAnnSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ann_ckpt").toString
     val probes = SimilarityOps.batchProbeFrame(spark, sf)
 
-    StreamOps.seedAnnIndex(spark, all.filter($"vec_id" <= c0), indexDir)
+    StreamOps.AnnFamily.seed(spark, all.filter($"vec_id" <= c0), indexDir)
     stageFile(src, all.filter($"vec_id" > c0 && $"vec_id" <= c1), "batch1", 1000000L)
     stageFile(src, all.filter($"vec_id" > c1 && $"vec_id" <= c2), "batch2", 2000000L)
 
     def run(): Unit = {
-      val q = StreamOps
-        .annIndexStreamWriter(
+      val q = StreamOps.AnnFamily
+        .streamWriter(
           spark.readStream
             .schema(all.schema)
             .option("maxFilesPerTrigger", "1")
@@ -93,7 +93,7 @@ class StreamingAnnSpec extends SparkSpec {
     assert(modTimes("v0/full").max <= (modTimes("v1/gen") ++ modTimes("v2/gen")).min)
 
     // compaction folds the generations into v2/full without changing a hit
-    StreamOps.compactAnnIndex(spark, indexDir)
+    StreamOps.AnnFamily.compact(spark, indexDir)
     // grace contract: superseded generations are tombstoned (excluded
     // from roots, files intact for pre-fold readers); the NEXT
     // compaction deletes them (IndexCatalogSpec proves the full cycle)

@@ -6,7 +6,7 @@ import graft.ops.{StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous lexical index maintenance ([[StreamOps.bm25IndexStreamWriter]]):
+/** Continuous lexical index maintenance ([[StreamOps.Bm25Family]]):
   * per-batch postings generations merged on read must answer the fixed BM25
   * query set exactly like a single rebuilt index at every point in time —
   * mid-stream against an in-session rebuild over the prefix corpus, and at
@@ -51,13 +51,13 @@ class StreamingBm25Spec extends SparkSpec {
     val indexDir = Files.createTempDirectory("graft_bm25_idx").toString
     val ckpt = Files.createTempDirectory("graft_bm25_ckpt").toString
 
-    StreamOps.seedBm25Index(spark, all.filter($"doc_id" <= c0), indexDir)
+    StreamOps.Bm25Family.seed(spark, all.filter($"doc_id" <= c0), indexDir)
     stageFile(src, all.filter($"doc_id" > c0 && $"doc_id" <= c1), "batch1", 1000000L)
     stageFile(src, all.filter($"doc_id" > c1 && $"doc_id" <= c2), "batch2", 2000000L)
 
     def run(): Unit = {
-      val q = StreamOps
-        .bm25IndexStreamWriter(
+      val q = StreamOps.Bm25Family
+        .streamWriter(
           StreamOps.docsStream(
             spark, s"$src/documents.parquet", Map("maxFilesPerTrigger" -> "1")),
           indexDir,
@@ -94,7 +94,7 @@ class StreamingBm25Spec extends SparkSpec {
     assert(modTimes("v0/full").max <= (modTimes("v1/gen") ++ modTimes("v2/gen")).min)
 
     // compaction folds the generations into v2/full without changing a hit
-    StreamOps.compactBm25Index(spark, indexDir)
+    StreamOps.Bm25Family.compact(spark, indexDir)
     // grace contract: superseded generations are tombstoned (excluded
     // from roots, files intact for pre-fold readers); the NEXT
     // compaction deletes them (IndexCatalogSpec proves the full cycle)

@@ -6,7 +6,7 @@ import graft.ops.{StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous boilerplate stats ([[StreamOps.boilerplateStreamWriter]]):
+/** Continuous boilerplate stats ([[StreamOps.BoilerFamily]]):
   * per-batch shingle-count generations merged on read must reproduce the
   * monolithic q_text_boilerplate report over the union of all ingested
   * documents at every point in time. The interesting property is the
@@ -55,12 +55,12 @@ class StreamingBoilerplateSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_boil_idx").toString
     val ckpt = Files.createTempDirectory("graft_boil_ckpt").toString
 
-    StreamOps.seedBoilerplateStats(spark, all.filter($"doc_id" <= c0), dir)
+    StreamOps.BoilerFamily.seed(spark, all.filter($"doc_id" <= c0), dir)
     stageFile(src, all.filter($"doc_id" > c0 && $"doc_id" <= c1), "batch1", 1000000L)
     stageFile(src, all.filter($"doc_id" > c1), "batch2", 2000000L)
 
-    val q = StreamOps
-      .boilerplateStreamWriter(
+    val q = StreamOps.BoilerFamily
+      .streamWriter(
         spark.readStream
           .schema(all.schema)
           .option("maxFilesPerTrigger", "1")
@@ -107,7 +107,7 @@ class StreamingBoilerplateSpec extends SparkSpec {
     // compaction (fold = concatenation over disjoint docs) is
     // read-invariant, and the grace contract holds
     val want = rows(StreamOps.serveBoilerplateContinuous(spark, dir))
-    StreamOps.compactBoilerplateStats(spark, dir)
+    StreamOps.BoilerFamily.compact(spark, dir)
     assert(rows(StreamOps.serveBoilerplateContinuous(spark, dir)) === want)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

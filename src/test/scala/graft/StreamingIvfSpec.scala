@@ -6,7 +6,7 @@ import graft.ops.{SimilarityOps, StreamOps, Vec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous IVF index maintenance ([[StreamOps.ivfIndexStreamWriter]]):
+/** Continuous IVF index maintenance ([[StreamOps.ivfFamily]]):
   * the model-state variant of the generation-local families — every
   * generation assigns against the EPOCH codebook (the newest full
   * snapshot's), so merge-on-read must answer the probe batch exactly like
@@ -65,7 +65,8 @@ class StreamingIvfSpec extends SparkSpec {
 
     def run(): Unit = {
       val q = StreamOps
-        .ivfIndexStreamWriter(
+        .ivfFamily(indexDir)
+        .streamWriter(
           spark.readStream
             .schema(all.schema)
             .option("maxFilesPerTrigger", "1")
@@ -108,7 +109,7 @@ class StreamingIvfSpec extends SparkSpec {
 
     // compaction folds cells AND carries the codebook forward, changing
     // no answer
-    StreamOps.compactIvfIndex(spark, indexDir)
+    StreamOps.ivfFamily(indexDir).compact(spark, indexDir)
     // grace contract: superseded generations are tombstoned (excluded
     // from roots, files intact for pre-fold readers); the NEXT
     // compaction deletes them (IndexCatalogSpec proves the full cycle)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * every point — mid-stream against the prefix corpus, after
   * compaction, and at end-of-feed against the oracle-checked q_lm_*.
   * One state, one more serve: the stream feeding this spec is the SAME
-  * bm25IndexStreamWriter the lexical family runs — no LM-specific
+  * Bm25Family.streamWriter the lexical family runs — no LM-specific
   * maintenance exists to test.
   */
 class StreamingLmSpec extends SparkSpec {
@@ -60,12 +60,12 @@ class StreamingLmSpec extends SparkSpec {
     val indexDir = Files.createTempDirectory("graft_lm_idx").toString
     val ckpt = Files.createTempDirectory("graft_lm_ckpt").toString
 
-    StreamOps.seedBm25Index(spark, all.filter($"doc_id" <= c0), indexDir)
+    StreamOps.Bm25Family.seed(spark, all.filter($"doc_id" <= c0), indexDir)
     stageFile(src, all.filter($"doc_id" > c0 && $"doc_id" <= c1), "batch1")
 
     def run(): Unit = {
-      val q = StreamOps
-        .bm25IndexStreamWriter(
+      val q = StreamOps.Bm25Family
+        .streamWriter(
           StreamOps.docsStream(
             spark, s"$src/documents.parquet", Map("maxFilesPerTrigger" -> "1")),
           indexDir,
@@ -98,7 +98,7 @@ class StreamingLmSpec extends SparkSpec {
         rows(graft.ops.CurationOps.sampleImportanceOf(prefix)))
 
     // compaction folds generations without moving a probability
-    StreamOps.compactBm25Index(spark, indexDir)
+    StreamOps.Bm25Family.compact(spark, indexDir)
     assert(rows(StreamOps.serveLmUnigramContinuous(spark, indexDir)) ===
       wantUnigram(prefix))
 
@@ -130,17 +130,17 @@ class StreamingLmSpec extends SparkSpec {
     val idx = Files.createTempDirectory("graft_bg_lex").toString
     val ckpt2 = Files.createTempDirectory("graft_bg_ckpt2").toString
 
-    StreamOps.seedBigramStats(spark, all.filter($"doc_id" <= c0), dir)
-    StreamOps.seedBm25Index(spark, all.filter($"doc_id" <= c0), idx)
+    StreamOps.BigramFamily.seed(spark, all.filter($"doc_id" <= c0), dir)
+    StreamOps.Bm25Family.seed(spark, all.filter($"doc_id" <= c0), idx)
     stageFile(src, all.filter($"doc_id" > c0 && $"doc_id" <= c1), "batch1")
 
     def run(): Unit = {
       val feed = () => StreamOps.docsStream(
         spark, s"$src/documents.parquet", Map("maxFilesPerTrigger" -> "1"))
-      val q = StreamOps.bigramStreamWriter(feed(), dir, ckpt).start()
+      val q = StreamOps.BigramFamily.streamWriter(feed(), dir, ckpt).start()
       try q.processAllAvailable()
       finally q.stop()
-      val q2 = StreamOps.bm25IndexStreamWriter(feed(), idx, ckpt2).start()
+      val q2 = StreamOps.Bm25Family.streamWriter(feed(), idx, ckpt2).start()
       try q2.processAllAvailable()
       finally q2.stop()
     }
@@ -176,7 +176,7 @@ class StreamingLmSpec extends SparkSpec {
 
     // compaction folds by RE-AGGREGATION (not concatenation): the
     // snapshot stays O(bigram types) and no probability moves
-    StreamOps.compactBigramStats(spark, dir)
+    StreamOps.BigramFamily.compact(spark, dir)
     assert(rows(StreamOps.serveLmBigramContinuous(spark, dir)) === want(prefix))
     assert(gotApply(prefix) === wantApply(prefix))
     assert(gotKn(prefix) === rows(LmOps.lmKnOf(prefix)))

@@ -6,7 +6,7 @@ import graft.ops.{StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous passage-duplication stats ([[StreamOps.passageStreamWriter]],
+/** Continuous passage-duplication stats ([[StreamOps.PassageFamily]],
   * the tenth GenLog family): per-batch positioned 5-gram generations
   * merged on read must reproduce the monolithic q_text_passage_dup
   * report over the union of all ingested documents at every point in
@@ -51,12 +51,12 @@ class StreamingPassageSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_pass_idx").toString
     val ckpt = Files.createTempDirectory("graft_pass_ckpt").toString
 
-    StreamOps.seedPassageGrams(spark, all.filter($"doc_id" <= c0), dir)
+    StreamOps.PassageFamily.seed(spark, all.filter($"doc_id" <= c0), dir)
     stageFile(src, all.filter($"doc_id" > c0 && $"doc_id" <= c1), "batch1", 1000000L)
     stageFile(src, all.filter($"doc_id" > c1), "batch2", 2000000L)
 
-    val q = StreamOps
-      .passageStreamWriter(
+    val q = StreamOps.PassageFamily
+      .streamWriter(
         spark.readStream
           .schema(all.schema)
           .option("maxFilesPerTrigger", "1")
@@ -141,8 +141,7 @@ class StreamingPassageSpec extends SparkSpec {
     val want = rows(StreamOps.servePassageDupContinuous(spark, dir))
     spark.conf.set(graft.index.GenLog.CompactMaxGensKey, "2")
     try {
-      assert(graft.index.GenLog.maybeCompact(
-        spark, dir, StreamOps.PassageFamily),
+      assert(StreamOps.PassageFamily.maybeCompact(spark, dir),
         "two gens at maxGens=2 must trigger the policy fold")
       assert(rows(StreamOps.servePassageDupContinuous(spark, dir)) === want)
     } finally spark.conf.unset(graft.index.GenLog.CompactMaxGensKey)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Continuous quantized-index maintenance
-  * ([[StreamOps.quantIndexStreamWriter]]): the int8 scan tier's
+  * ([[StreamOps.QuantFamily]]): the int8 scan tier's
   * per-batch bucket generations merged on read must run the identical
   * integer stage-1 cut + float rescore as a single rebuilt index at
   * every point in time — the stage-1 cut is an exact BIGINT ranking, so
@@ -51,13 +51,13 @@ class StreamingQuantSpec extends SparkSpec {
     // the standard probe (vec_id 0) lives in the base prefix
     val probes = SimilarityOps.quantProbeFrame(spark, sf)
 
-    StreamOps.seedQuantIndex(spark, all.filter($"vec_id" <= c0), indexDir)
+    StreamOps.QuantFamily.seed(spark, all.filter($"vec_id" <= c0), indexDir)
     stageFile(src, all.filter($"vec_id" > c0 && $"vec_id" <= c1), "batch1", 1000000L)
     stageFile(src, all.filter($"vec_id" > c1 && $"vec_id" <= c2), "batch2", 2000000L)
 
     def run(): Unit = {
-      val q = StreamOps
-        .quantIndexStreamWriter(
+      val q = StreamOps.QuantFamily
+        .streamWriter(
           spark.readStream
             .schema(all.schema)
             .option("maxFilesPerTrigger", "1")
@@ -85,7 +85,7 @@ class StreamingQuantSpec extends SparkSpec {
       assert(gen(v) > 0 && gen(v) < base / 3, v)
 
     // compaction changes no answer
-    StreamOps.compactQuantIndex(spark, indexDir)
+    StreamOps.QuantFamily.compact(spark, indexDir)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // grace contract: the superseded generation is tombstoned, not

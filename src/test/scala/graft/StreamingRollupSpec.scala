@@ -71,15 +71,15 @@ class StreamingRollupSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_rollup_state").toString
     val ckpt = Files.createTempDirectory("graft_rollup_ckpt").toString
 
-    StreamOps.seedRollupState(spark, all.filter(to_date($"ts") <= lit(c0)), dir)
+    StreamOps.RollupFamily.seed(spark, all.filter(to_date($"ts") <= lit(c0)), dir)
     stageFile(
       src,
       all.filter(to_date($"ts") > lit(c0) && to_date($"ts") <= lit(c1)),
       "batch1")
 
     def run(): Unit = {
-      val q = StreamOps
-        .rollupStreamWriter(
+      val q = StreamOps.RollupFamily
+        .streamWriter(
           StreamOps.eventsStream(spark, src, Map("maxFilesPerTrigger" -> "1")),
           dir,
           ckpt)
@@ -96,7 +96,7 @@ class StreamingRollupSpec extends SparkSpec {
       === wantPrefix)
 
     // compaction folds generations without moving the report
-    StreamOps.compactRollupState(spark, dir)
+    StreamOps.RollupFamily.compact(spark, dir)
     assert(rows(StreamOps.serveRollupContinuous(spark, dir).orderBy("event_type"))
       === wantPrefix)
 
@@ -130,12 +130,12 @@ class StreamingRollupSpec extends SparkSpec {
   test("day-straddling generations: exact columns conserved, estimates stay in bound") {
     val c0 = days((days.size * 8) / 10)
     val dir = Files.createTempDirectory("graft_rollup_straddle").toString
-    StreamOps.seedRollupState(spark, all.filter(to_date($"ts") <= lit(c0)), dir)
+    StreamOps.RollupFamily.seed(spark, all.filter(to_date($"ts") <= lit(c0)), dir)
     // the remaining days arrive split mid-day: every day's rows land in
     // BOTH generations (event_id parity), the worst straddle shape
     val tail = all.filter(to_date($"ts") > lit(c0))
-    StreamOps.rollupCommit(tail.filter($"event_id" % 2 === 0), dir, 0L)
-    StreamOps.rollupCommit(tail.filter($"event_id" % 2 =!= 0), dir, 1L)
+    StreamOps.RollupFamily.commit(tail.filter($"event_id" % 2 === 0), dir, 0L)
+    StreamOps.RollupFamily.commit(tail.filter($"event_id" % 2 =!= 0), dir, 1L)
 
     val served = StreamOps.serveRollupContinuous(spark, dir)
     // the daily view under the SAME straddle: per-(day, type) mass must

@@ -53,9 +53,9 @@ class StreamingRrfSpec extends SparkSpec {
     val ckpts = (1 to 3).map(_ => Files.createTempDirectory("graft_rrf_ckpt").toString)
 
     // seed all three indexes from the base corpus (yesterday's state)
-    StreamOps.seedBm25Index(spark, docsAll.filter($"doc_id" <= c0), bm25Dir)
-    StreamOps.seedAnnIndex(spark, vecsAll.filter($"vec_id" <= c0), annDir)
-    StreamOps.seedEmbStoreIndex(spark, vecsAll.filter($"vec_id" <= c0), storeDir)
+    StreamOps.Bm25Family.seed(spark, docsAll.filter($"doc_id" <= c0), bm25Dir)
+    StreamOps.AnnFamily.seed(spark, vecsAll.filter($"vec_id" <= c0), annDir)
+    StreamOps.EmbStoreFamily.seed(spark, vecsAll.filter($"vec_id" <= c0), storeDir)
 
     def stageBatch(name: String, lo: Long, hi: Long, mtime: Long): Unit = {
       stageFile(
@@ -70,17 +70,17 @@ class StreamingRrfSpec extends SparkSpec {
 
     def run(): Unit = {
       val qs = Seq(
-        StreamOps.bm25IndexStreamWriter(
+        StreamOps.Bm25Family.streamWriter(
           StreamOps.docsStream(
             spark, s"$src/documents.parquet", Map("maxFilesPerTrigger" -> "1")),
           bm25Dir, ckpts(0)),
-        StreamOps.annIndexStreamWriter(
+        StreamOps.AnnFamily.streamWriter(
           spark.readStream
             .schema(vecsAll.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(s"$src/embeddings.parquet"),
           annDir, ckpts(1)),
-        StreamOps.embStoreStreamWriter(
+        StreamOps.EmbStoreFamily.streamWriter(
           spark.readStream
             .schema(vecsAll.schema)
             .option("maxFilesPerTrigger", "1")
@@ -105,9 +105,9 @@ class StreamingRrfSpec extends SparkSpec {
     assert(continuous() === prefixWant)
 
     // compacting all three families is union-preserving: no hit changes
-    StreamOps.compactBm25Index(spark, bm25Dir)
-    StreamOps.compactAnnIndex(spark, annDir)
-    StreamOps.compactEmbStoreIndex(spark, storeDir)
+    StreamOps.Bm25Family.compact(spark, bm25Dir)
+    StreamOps.AnnFamily.compact(spark, annDir)
+    StreamOps.EmbStoreFamily.compact(spark, storeDir)
     assert(continuous() === prefixWant)
 
     // the final batch arrives over the compacted indexes; the continuous

@@ -6,7 +6,7 @@ import graft.ops.{SimilarityOps, StreamOps, Vec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Continuous semantic dedup ([[StreamOps.semanticIndexStreamWriter]]):
+/** Continuous semantic dedup ([[StreamOps.semFamily]]):
   * the seventh generation family. The anchor rule is monotone in vec_id
   * and ingest ids are monotone across batches, so each generation's
   * survivor log is FINAL at commit — the continuous survivor set (a
@@ -73,7 +73,8 @@ class StreamingSemanticSpec extends SparkSpec {
     stageFile(src, all.filter($"vec_id" > c1 && $"vec_id" <= c2), "batch2", 2000000L)
     def run(): Unit = {
       val q = StreamOps
-        .semanticIndexStreamWriter(
+        .semFamily(indexDir)
+        .streamWriter(
           spark.readStream
             .schema(all.schema)
             .option("maxFilesPerTrigger", "1")
@@ -101,7 +102,7 @@ class StreamingSemanticSpec extends SparkSpec {
 
     // compaction folds members + survivor logs and carries the epoch
     // codebook forward, changing no answer
-    StreamOps.compactSemanticIndex(spark, indexDir)
+    StreamOps.semFamily(indexDir).compact(spark, indexDir)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // grace contract: the superseded generation is tombstoned, not
@@ -166,7 +167,8 @@ class StreamingSemanticSpec extends SparkSpec {
     stageFile(src, all.filter($"vec_id" > c1 && $"vec_id" <= c2), "batch2", 2000000L)
     def run(dir: String, cp: String): Unit = {
       val q = StreamOps
-        .semanticIndexStreamWriter(
+        .semFamily(dir)
+        .streamWriter(
           spark.readStream
             .schema(all.schema)
             .option("maxFilesPerTrigger", "1")
@@ -213,7 +215,8 @@ class StreamingSemanticSpec extends SparkSpec {
     val src2 = Files.createTempDirectory("graft_semt_src2").toString
     stageFile(src2, all.filter($"vec_id" > c2), "batch3", 3000000L)
     val q2 = StreamOps
-      .semanticIndexStreamWriter(
+      .semFamily(rolledDir)
+      .streamWriter(
         spark.readStream
           .schema(all.schema)
           .option("maxFilesPerTrigger", "1")
@@ -243,7 +246,7 @@ class StreamingSemanticSpec extends SparkSpec {
     StreamOps.seedSemanticIndex(spark, all.filter($"vec_id" <= c0), indexDir)
     val batch = all.filter($"vec_id" > c0 && $"vec_id" <= c1)
     val fam = StreamOps.semFamily(indexDir)
-    graft.index.GenLog.commitGeneration(fam, batch, indexDir, batchId = 0L)
+    fam.commit(batch, indexDir, batchId = 0L)
     val first = rows(StreamOps.serveSemanticContinuous(spark, indexDir))
     // The crash window: generation v1 already committed, the stream
     // restarts, and foreachBatch re-delivers batch 0. The write must not
@@ -251,7 +254,7 @@ class StreamingSemanticSpec extends SparkSpec {
     // self-root filter this deterministically threw FileNotFoundException
     // (the cached listing of $path/cells raced the Overwrite) and wedged
     // the pipeline on every restart.
-    graft.index.GenLog.commitGeneration(fam, batch, indexDir, batchId = 0L)
+    fam.commit(batch, indexDir, batchId = 0L)
     assert(rows(StreamOps.serveSemanticContinuous(spark, indexDir)) === first)
   }
 }

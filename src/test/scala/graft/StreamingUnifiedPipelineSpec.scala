@@ -156,8 +156,8 @@ class StreamingUnifiedPipelineSpec extends SparkSpec {
     // vector: the survivor-set invariant — the store carries EXACTLY the
     // curated documents' vectors (a gated-out row reaching an index is
     // the composition bug this spec exists to catch)
-    val storeIds = StreamOps
-      .embStoreGenerationRoots(spark, p.vectors.storeDir)
+    val storeIds = StreamOps.EmbStoreFamily
+      .roots(spark, p.vectors.storeDir)
       .map(r => spark.read.parquet(r))
       .reduce(_ unionByName _)
       .select($"vec_id")

@@ -141,8 +141,8 @@ class StreamingVectorPipelineSpec extends SparkSpec {
     val storeRebuilt = Files.createTempDirectory("graft_vp_st_rb").toString
     SimilarityOps.writeEmbStoreFor(spark, e, storeRebuilt)
     def storeGot() = rows(
-      StreamOps
-        .embStoreGenerationRoots(spark, p.storeDir)
+      StreamOps.EmbStoreFamily
+        .roots(spark, p.storeDir)
         .map(r => spark.read.parquet(r))
         .reduce(_ unionByName _)
         .select($"vec_id", $"ishard".cast("long").as("ishard"))
