@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,15 +11,7 @@ object Verify {
     // Optional trailing query names: dump only that subset (iteration aid;
     // the driver passes none and gets the full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -29,18 +22,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Data-dependent oracles (trained-codebook literals) render HERE,
     // against the same sf dir the queries just ran on — each guarded so a
     // generator failure costs that one oracle (weaker rows-only check),
@@ -54,9 +35,9 @@ object Verify {
           None
         }
       }
-    val json = (SparkEntry.oracleSql ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = JObject((SparkEntry.oracleSql ++ dynamic).toList
+      .map { case (k, v) => k -> JString(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(render(json)))
     spark.stop()
   }
 }

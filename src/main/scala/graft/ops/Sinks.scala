@@ -24,16 +24,18 @@ object Sinks {
       keys: Seq[String]): DataFrame =
     staged.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
-  /** The reference's full Postgres sink path (main.py:180-228): staged
-    * rows → idempotent keyed append → `INSERT` over JDBC. The target table
-    * is read back as the anti-join's "existing" side (absent table ≡ empty,
-    * mirroring CREATE TABLE IF NOT EXISTS at main.py:184-190), then the
-    * surviving rows are appended with the standard distributed JDBC writer
-    * (one connection per partition — at scale, `staged.repartition(n)`
-    * bounds the connection count). The anti-join is against a snapshot;
-    * a production deployment keeps the reference's unique index on the key
-    * so concurrent writers degrade to the DB constraint, not duplicates.
+  /** A plain JDBC connection. spark.read.jdbc loads the 'driver'
+    * connection property explicitly; a raw DriverManager.getConnection does
+    * not — without this a driver supplied only via that property throws
+    * "No suitable driver" here.
     */
+  private def connect(url: String, props: java.util.Properties): java.sql.Connection = {
+    Option(props.getProperty("driver")).foreach { cls =>
+      java.lang.Class.forName(cls, true, Thread.currentThread.getContextClassLoader)
+    }
+    java.sql.DriverManager.getConnection(url, props)
+  }
+
   /** Explicit existence probe over plain JDBC: a zero-row SELECT against
     * the table. ONLY the SQL-standard 42-class (syntax error / undefined
     * object — Derby 42X05, Postgres 42P01) maps to "absent"; connectivity,
@@ -45,13 +47,7 @@ object Sinks {
       url: String,
       table: String,
       props: java.util.Properties): Boolean = {
-    // spark.read.jdbc loads the 'driver' connection property explicitly;
-    // a raw DriverManager.getConnection does not — without this a driver
-    // supplied only via that property throws "No suitable driver" here
-    Option(props.getProperty("driver")).foreach { cls =>
-      java.lang.Class.forName(cls, true, Thread.currentThread.getContextClassLoader)
-    }
-    val conn = java.sql.DriverManager.getConnection(url, props)
+    val conn = connect(url, props)
     try {
       val st = conn.createStatement()
       try {
@@ -91,6 +87,16 @@ object Sinks {
       probe(Option(schema).map(_.toLowerCase).orNull, name.toLowerCase)
   }
 
+  /** The reference's full Postgres sink path (main.py:180-228): staged
+    * rows → idempotent keyed append → `INSERT` over JDBC. The target table
+    * is read back as the anti-join's "existing" side (absent table ≡ empty,
+    * mirroring CREATE TABLE IF NOT EXISTS at main.py:184-190), then the
+    * surviving rows are appended with the standard distributed JDBC writer
+    * (one connection per partition — at scale, `staged.repartition(n)`
+    * bounds the connection count). The anti-join is against a snapshot;
+    * a production deployment keeps the reference's unique index on the key
+    * so concurrent writers degrade to the DB constraint, not duplicates.
+    */
   def idempotentAppendJdbc(
       staged: DataFrame,
       url: String,
@@ -188,10 +194,7 @@ object Sinks {
         .unionByName(staged)
         .localCheckpoint(true) // sever JDBC lineage: see upsertSnapshotJdbc
       merged.write.mode(SaveMode.Overwrite).jdbc(url, stagingTable, props)
-      Option(props.getProperty("driver")).foreach { cls =>
-        java.lang.Class.forName(cls, true, Thread.currentThread.getContextClassLoader)
-      }
-      val conn = java.sql.DriverManager.getConnection(url, props)
+      val conn = connect(url, props)
       try {
         conn.setAutoCommit(false)
         val st = conn.createStatement()

@@ -228,6 +228,18 @@ object ClusterCheck {
         .orderBy(col("day"), col("event_type")))
   }
 
+  /** The JDK 17 module opens Spark needs outside spark-submit, for every
+    * JVM these drivers launch (build.sbt gives the same list to the forks).
+    */
+  private[graft] val JdkOpens = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar")
+
   /** Surface names [[runPipeline]] dumps — the spec iterates these. */
   private[graft] val StreamSurfaces =
     Seq("lake", "dedup", "cc_pairs", "bm25", "boiler", "passage50", "bigram",
@@ -247,15 +259,7 @@ object ClusterCheck {
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config(
         "spark.executor.extraJavaOptions",
-        Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar",
-        ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
+        JdkOpens.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
       .config("spark.executor.memory", "1024m")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")

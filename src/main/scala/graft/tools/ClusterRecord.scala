@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.sys.process._
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Commit the real-cluster run as a round artifact (verdict-r15 #6):
   * [[ClusterCheck]] proves the custom kernels and the composed
@@ -23,16 +24,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ClusterRecord {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   /** Fork ClusterCheck (extra arg "stream" selects the pipeline mode);
     * returns (wall seconds, executor count parsed from the [cluster]
     * line). Nonzero exit or a missing line aborts the record — a partial
@@ -40,7 +31,7 @@ object ClusterRecord {
     */
   private def fork(sfDir: String, out: String, mode: Seq[String]): (Double, Int) = {
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
-      addOpens ++ Seq(
+      ClusterCheck.JdkOpens.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++ Seq(
       "-Xmx4g",
       "-cp", System.getProperty("java.class.path"),
       "graft.tools.ClusterCheck", sfDir, out) ++ mode
@@ -68,16 +59,7 @@ object ClusterRecord {
     val (wallS, execsS) = fork(sfDir, outS, Seq("stream"))
 
     // single-JVM reference, in-process (the forks were separate JVMs)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-cluster-record-ref")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
@@ -96,16 +78,16 @@ object ClusterRecord {
       (n, clustered.size, clustered == localSurfaces(n))
     }
 
-    def block(rows: Seq[(String, Int, Boolean)]): String = rows
-      .map { case (n, r, ok) => s""""$n":{"rows":$r,"match":$ok}""" }
-      .mkString("{", ",", "}")
+    def block(rows: Seq[(String, Int, Boolean)]) = JObject(rows.toList.map {
+      case (n, r, ok) => n -> JObject("rows" -> JInt(r), "match" -> JBool(ok)) })
     val allOk = (queryRows ++ surfaceRows).forall(_._3)
-    val json =
-      s"""{"master":"local-cluster[2,4,2048]","executors":${math.min(execsB, execsS)},""" +
-        s""""sf":"$sfDir","all_match":$allOk,""" +
-        s""""batch_wall_sec":$wallB,"stream_wall_sec":$wallS,""" +
-        s""""queries":${block(queryRows)},"surfaces":${block(surfaceRows)},""" +
-        s""""method":"fork graft.tools.ClusterCheck (2 real executor JVMs) for the custom-kernel query slice and the composed 15-family streaming program (14 document-fed incl. the verified pair log + the events-fed rollup, served through both rollup faces and both dedup serves); compare every dumped result row-identical to an in-process local[*] reference (LocalClusterSpec's construction, recorded)"}"""
+    val json = compact(render(JObject(
+      "master" -> JString("local-cluster[2,4,2048]"),
+      "executors" -> JInt(math.min(execsB, execsS)),
+      "sf" -> JString(sfDir), "all_match" -> JBool(allOk),
+      "batch_wall_sec" -> JDouble(wallB), "stream_wall_sec" -> JDouble(wallS),
+      "queries" -> block(queryRows), "surfaces" -> block(surfaceRows),
+      "method" -> JString("fork graft.tools.ClusterCheck (2 real executor JVMs) for the custom-kernel query slice and the composed 15-family streaming program (14 document-fed incl. the verified pair log + the events-fed rollup, served through both rollup faces and both dedup serves); compare every dumped result row-identical to an in-process local[*] reference (LocalClusterSpec's construction, recorded)"))))
     Files.write(Paths.get(outJson), (json + "\n").getBytes("UTF-8"))
     println(s"[cluster-record] executors=${math.min(execsB, execsS)} " +
       s"queries=${queryRows.size} surfaces=${surfaceRows.size} all_match=$allOk -> $outJson")

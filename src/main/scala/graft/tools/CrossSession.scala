@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.index.GenLog
-import org.apache.spark.sql.SparkSession
 
 /** Cross-session durable-root proof harness, driven by DurableRootSpec:
   * each invocation is its OWN JVM + SparkSession pointed at a shared
@@ -28,17 +27,8 @@ object CrossSession {
     val Array(phase, root, sfDir, outDir) = args
     if (phase == "claim") { claimRace(root, sfDir, outDir); return }
     if (phase == "stall") { stall(root); return }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-cross-$phase")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config(GenLog.RootKey, root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
+    spark.conf.set(GenLog.RootKey, root)
 
     Served.foreach { n =>
       SparkEntry.queries(n)(spark, sfDir)
@@ -57,12 +47,7 @@ object CrossSession {
     * against it.
     */
   private def stall(root: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-cross-stall")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(2)
     GenLog.buildOnce(spark, s"$root/racekey") {
       println("[cross] phase=stall claimed=1")
       Console.out.flush()
@@ -82,17 +67,8 @@ object CrossSession {
     * the "stale" claim mid-build and the built-sum would be 2.
     */
   private def claimRace(root: String, sfDir: String, outDir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-cross-claim")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config(GenLog.ClaimTtlKey, "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(2)
+    spark.conf.set(GenLog.ClaimTtlKey, "2000")
     val key = s"$root/racekey"
     val ran = GenLog.buildOnce(spark, key) {
       // widen the race window past process startup skew AND outlive the

@@ -2,10 +2,10 @@ package org.apache.spark
 
 import scala.util.control.NonFatal
 
-/** Bridge to the listener bus's drain primitive (private[spark]): the
-  * bench's per-query job/taskSec attribution reads listener counters
+/** Bridge to the listener bus's drain primitive (private[spark]): per-query
+  * job/taskSec attribution ([[graft.JobCounter]]) reads listener counters
   * between queries, and the bus is async — a bounded wait-until-empty is
-  * the deterministic seam (ADVICE r18 on PhaseProfile's fixed sleep).
+  * the deterministic seam, where a fixed sleep can under-wait under load.
   * Timing is NEVER inside the drained window: callers snapshot the query
   * wall clock first, then drain, then read counters.
   */

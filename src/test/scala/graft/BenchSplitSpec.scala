@@ -22,87 +22,4 @@ class BenchSplitSpec extends SparkSpec {
       assert(rows(serve()).sorted === rows(composed).sorted, name)
     }
   }
-
-  test("budget gate basis: min across interleaved iterations, not the median") {
-    // The reported medians and the gate statistic deliberately differ: a
-    // transient host-load window inflates SOME samples (the round-13
-    // q_index_bm25_incr false flag: one 3.2 s sample on code whose clean
-    // time is 1.3 s) and the min escapes it, while a genuine regression
-    // slows EVERY sample and the min still catches it.
-    val samples = Map(
-      "q_loaded" -> List(3.2, 1.3, 1.4), // one contaminated sample
-      "q_regressed" -> List(3.2, 3.1, 3.3), // all samples slow
-      "q_failed" -> List.empty[Double])
-    val gate = Bench.gateTimes(
-      Seq("q_loaded", "q_regressed", "q_failed", "q_absent"), samples)
-    assert(gate === Seq("q_loaded" -> 1.3, "q_regressed" -> 3.1))
-    // against a 2.0 budget: the load window does NOT flag, the true
-    // regression DOES
-    val f = java.nio.file.Files.createTempFile("graft_budgets_min", ".json")
-    java.nio.file.Files.write(f,
-      """{"sf":"sf0.1","budgets":{"q_loaded":2.0,"q_regressed":2.0}}"""
-        .getBytes("UTF-8"))
-    assert(
-      Bench.budgetViolations("/root/testdata/sf0.1", gate, f.toString) ===
-        Seq(("q_regressed", 3.1, 2.0)))
-  }
-
-  test("budget gate: violations flag only over-budget queries at the budgeted scale") {
-    val f = java.nio.file.Files.createTempFile("graft_budgets", ".json")
-    java.nio.file.Files.write(f,
-      """{"sf":"sf0.1","budgets":{"q_a":1.0,"q_b":2.0,"q_gone":1.0}}"""
-        .getBytes("UTF-8"))
-    val results = Seq("q_a" -> 1.5, "q_b" -> 1.9, "q_new" -> 99.0)
-    // q_a over, q_b under, q_new has no budget (new query), q_gone unmeasured
-    assert(
-      Bench.budgetViolations("/root/testdata/sf0.1", results, f.toString) ===
-        Seq(("q_a", 1.5, 1.0)))
-    // scale mismatch: budgets are sf0.1-specific, an sf0.01 run never flags
-    assert(Bench.budgetViolations("/root/testdata/sf0.01", results, f.toString)
-      === Nil)
-    // absent or malformed file disables the check, never fails the bench
-    assert(Bench.budgetViolations("/root/testdata/sf0.1", results,
-      "/nonexistent/budgets.json") === Nil)
-    java.nio.file.Files.write(f, "not json".getBytes("UTF-8"))
-    assert(Bench.budgetViolations("/root/testdata/sf0.1", results, f.toString)
-      === Nil)
-    // calibration-normalized gate: with a recorded derivation probe,
-    // budgets scale by thisRun/baseline — a slow host (ratio 2) stops
-    // flagging uniform inflation; a FAST probe never tightens below the
-    // raw budgets (round 15: a 0.38 probe ratio on a run whose true
-    // medians ran 1.28x SLOW manufactured 114 phantom violations at the
-    // old 0.5 floor — the pure-CPU probe does not predict this mixed
-    // scan/shuffle workload in the fast direction)
-    java.nio.file.Files.write(f,
-      """{"sf":"sf0.1","probe":1.0,"budgets":{"q_a":1.0,"q_b":2.0}}"""
-        .getBytes("UTF-8"))
-    val d = "/root/testdata/sf0.1"
-    // slow host: q_a at 1.5 is inside its 2.0 effective budget
-    assert(Bench.budgetViolations(d, results, f.toString, calibration = 2.0)
-      === Nil)
-    // fast host: budgets stay RAW — q_a still flags, q_b still doesn't
-    assert(Bench.budgetViolations(d, results, f.toString, calibration = 0.5)
-      === Seq(("q_a", 1.5, 1.0)))
-    // ratio clamps at 4x: an absurd probe cannot disable the gate
-    assert(Bench.budgetViolations(d, Seq("q_a" -> 4.1), f.toString,
-      calibration = 100.0) === Seq(("q_a", 4.1, 4.0)))
-    // ...and never tightens below 1x: an ultra-fast probe cannot
-    // manufacture violations a raw-budget gate wouldn't fire
-    assert(Bench.budgetViolations(d, Seq("q_b" -> 1.1), f.toString,
-      calibration = 0.01) === Nil)
-    // no calibration measured -> raw budgets (back-compat)
-    assert(Bench.budgetViolations(d, results, f.toString) ===
-      Seq(("q_a", 1.5, 1.0)))
-    // the checked-in BUDGETS.json covers the full registry
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("BUDGETS.json")), "UTF-8")
-    val parsed = org.json4s.jackson.JsonMethods.parse(txt)
-    import org.json4s._
-    implicit val fmts: Formats = DefaultFormats
-    val budgeted = (parsed \ "budgets").extract[Map[String, Double]].keySet
-    val missing = SparkEntry.queries.keySet -- budgeted
-    // new queries land without a budget until the next round records a
-    // median; more than a handful unbudgeted means the file went stale
-    assert(missing.size <= 5, s"unbudgeted queries: $missing")
-  }
 }

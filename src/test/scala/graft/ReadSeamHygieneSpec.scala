@@ -9,12 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * table submits no inference job. A raw `read.parquet` (or its
   * `read.format("parquet")` spelling) anywhere else in `src/main/scala/graft`
   * brings the job back; this spec fails on it. `graft.tools` is exempt:
-  * those are ad-hoc profilers, not engine paths.
+  * its mains (Probe, the cluster and cross-session drivers, MakeScaled)
+  * are developer and test entry points, not engine paths.
+  *
+  * Sessions have one seam as well: [[Session.local]] is the only
+  * `SparkSession.builder` in `src/main/scala/graft` apart from
+  * ClusterCheck's `local-cluster` session.
   */
 class ReadSeamHygieneSpec extends AnyFunSuite {
 
   private val Root = Paths.get("src/main/scala/graft")
   private val Seam = Root.resolve("core.scala")
+  private val Builder = """SparkSession\s*\.\s*builder\b""".r
   private val RawRead = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
 
   /** Source text with comments blanked (line breaks kept), so prose may
@@ -32,13 +38,15 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
     src.substring(start, src.indexOf("\n\n", start))
   }
 
-  test("no raw parquet read in src/main/scala/graft outside T.parquet") {
+  private def sources: Seq[Path] = {
     val files = Files.walk(Root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.startsWith(Root.resolve("tools")))
-      .toSeq
+      .filter(p => p.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, s"walked only ${files.size} files under $Root")
-    val offenders = files.flatMap { p =>
+    files
+  }
+
+  test("no raw parquet read in src/main/scala/graft outside T.parquet") {
+    val offenders = sources.filterNot(_.startsWith(Root.resolve("tools"))).flatMap { p =>
       val src = code(p)
       val checked = if (p == Seam) src.replace(seamDef(src), "") else src
       RawRead.findAllMatchIn(checked).map { m =>
@@ -47,6 +55,16 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
       }
     }
     assert(offenders.isEmpty, offenders.mkString("raw parquet reads:\n", "\n", ""))
+  }
+
+  test("no SparkSession.builder in src/main/scala/graft outside graft.Session") {
+    Seq("SparkSession.builder()", "SparkSession\n  .builder()")
+      .foreach(t => assert(Builder.findFirstIn(t).nonEmpty, t))
+    val builders = sources.map(p => p -> Builder.findAllMatchIn(code(p)).size)
+      .filter(_._2 > 0).toMap
+    assert(builders === Map(
+      Root.resolve("Session.scala") -> 1,
+      Root.resolve("tools/ClusterCheck.scala") -> 1))
   }
 
   test("the pattern catches the single-line and split-line spellings") {
