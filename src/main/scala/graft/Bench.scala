@@ -2,59 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-
-/** Build/serve decompositions of the served/incremental queries: the
-  * composed registry queries charge index construction to every bench
-  * iteration, masking serve-latency regressions — the figure a retrieval
-  * or daily-ingest tier actually tracks. Build runs once per bench
-  * (amortized across days in production); serve is the tracked metric.
-  * BenchSplitSpec pins each serve's rows ≡ the composed query's.
-  */
-object BenchSplits {
-  def of(s: SparkSession, d: String): Seq[(String, (() => Unit, () => DataFrame))] =
-    Seq(
-      "q_sim_served" -> ops.SimilarityOps.simServedSplit(s, d),
-      "q_sim_incr" -> ops.SimilarityOps.simIncrSplit(s, d),
-      "q_sim_ivf_served" -> ops.SimilarityOps.simIvfServedSplit(s, d),
-      "q_sim_quantized_served" -> ops.SimilarityOps.simQuantizedServedSplit(s, d),
-      "q_index_bm25_served" -> ops.TextOps.bm25Split(s, d),
-      "q_index_phrase_served" -> ops.TextOps.phraseSplit(s, d),
-      "q_index_phrase_incr" -> ops.TextOps.phraseIncrSplit(s, d),
-      "q_lm_score" -> ops.LmOps.lmScoreSplit(s, d),
-      "q_lm_kn" -> ops.LmOps.lmKnSplit(s, d),
-      "q_lm_interp" -> ops.LmOps.lmInterpSplit(s, d),
-      "q_lm_bucket" -> ops.LmOps.lmBucketSplit(s, d),
-      "q_lm_score_lang" -> ops.LmOps.lmScoreLangSplit(s, d),
-      // q_lm_score_incr: serve = O(batch) delta scoring under the
-      // pinned base-epoch model + slim score-state read — the per-doc
-      // score family's daily-ingest figure.
-      "q_lm_score_incr" -> ops.LmOps.lmScoreIncrSplit(s, d),
-      "q_index_bm25_incr" -> ops.TextOps.bm25IncrSplit(s, d),
-      "q_retrieval_rrf_served" -> ops.TextOps.rrfServedSplit(s, d),
-      // q_agg_quantile_served has NO split entry: its composed output is
-      // the gate CONTRACT (exact companions + booleans), not the served
-      // report, so the split-identity rule (serve ≡ composed) cannot
-      // hold while keeping the serve figure state-only. QDigestSpec pins
-      // serve ≡ the in-session merge path instead.
-      // q_agg_quantile_incr DOES split (the dedupIncr shape): build
-      // writes both sketch generations once; serve is merge-on-read plus
-      // the one-pass contract armor — the serve figure includes that
-      // gate-scale raw pass (documented; the production state-only serve
-      // is RelationalOps.serveRollup, identity-pinned by
-      // StreamingRollupSpec).
-      "q_agg_quantile_incr" -> ops.RelationalOps.quantileIncrSplit(s, d),
-      // q_agg_rollup_daily: same deviation as q_agg_quantile_incr — the
-      // serve leg is the straddled merge-on-read PLUS the one-pass
-      // contract armor (production serve = serveRollupDaily alone).
-      "q_agg_rollup_daily" -> ops.RelationalOps.rollupDailySplit(s, d),
-      "q_dedup_incr" -> ops.DedupOps.dedupIncrSplit(s, d),
-      // q_dedup_cc_incr: serve INCLUDES the per-batch apply commit (the
-      // daily-ingest figure the apply<<rebuild claim is about) plus the
-      // slim merge-on-read view; build is the one-time base seed.
-      "q_dedup_cc_incr" -> ops.DedupOps.dedupCcIncrSplit(s, d),
-      "q_dedup_embed_incr" -> ops.DedupOps.embedIncrSplit(s, d),
-      "q_dedup_semantic_incr" -> ops.SimilarityOps.semanticIncrSplit(s, d))
-}
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -179,6 +127,46 @@ object Bench {
           case p if p > 0.0 && calibration > 0.0 => bf -> calibration / p
         }
       } catch { case _: Throwable => None }
+    }
+
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+
+  /** Build/serve sub-timings, (name, build, serve) in `splits` order.
+    * The registry queries charge state construction to every run, which
+    * masks serve-latency regressions — the figure a retrieval or
+    * daily-ingest tier tracks — so each split is timed apart: the split
+    * is constructed and built inside the timed build (construction may
+    * itself run jobs), one untimed serve absorbs file-listing
+    * first-touch, then `iters` timed serves, median. A split that throws
+    * records `<name>.split` in `errors` and yields no figure.
+    */
+  private[graft] def timeSplits(
+      s: SparkSession,
+      d: String,
+      splits: Seq[(String, QueryDef.Split)],
+      iters: Int,
+      errors: collection.mutable.Map[String, String]): Seq[(String, Double, Double)] =
+    splits.flatMap { case (name, split) =>
+      try {
+        val b0 = System.nanoTime()
+        val (build, serve) = split(s, d)
+        build()
+        val tb = (System.nanoTime() - b0) / 1e9
+        def serveOnce(): Double = {
+          val t0 = System.nanoTime()
+          serve().write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        serveOnce()
+        val ts = (1 to iters).map(_ => serveOnce()).sorted
+        Some((name, tb, ts(ts.size / 2)))
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] split $name: $e")
+          errors(s"$name.split") = describe(e)
+          None
+      }
     }
 
   /** The bench record: one JSON object, keys in a fixed order. Per-query
@@ -349,9 +337,9 @@ object Bench {
           samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples(name)
           counts(name) = (counter.snapshot() - c0) :: counts(name)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name: $e")
-            errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+            errors(name) = describe(e)
         }
       }
       // a probe sample inside the same load window as this round's queries
@@ -375,41 +363,20 @@ object Bench {
     val gateResults = gateTimes(names.map(_._1), samples)
     val builds = (graft.index.GenLog.buildsRun.get() - builds0,
       graft.index.GenLog.buildsSkipped.get() - skips0)
-    // Build/serve sub-timings: build once (timed), one untimed serve to
-    // absorb file-listing first-touch, then `iters` timed serves, median.
-    // The headline per-query numbers above stay the composed queries, so
-    // they remain comparable across runs; "serve" here is the tracked
-    // serve-latency metric. The splits run under their OWN fresh
-    // warehouse root: the registry phase's build-once catalog already
-    // committed every canonical index, so without the override each
-    // split's "build" would time a marker check, not a build — the
-    // fresh root keeps the build figure the true from-cold index cost
-    // (and q_retrieval_rrf_served's build still drops to store-only,
-    // because the sibling splits commit the shared bm25/ann artifacts
-    // under this root first).
+    // Build/serve sub-timings ([[timeSplits]]). The headline per-query
+    // numbers above stay the registry queries, so they remain comparable
+    // across runs; "serve" here is the tracked serve-latency metric. The
+    // splits run under their OWN fresh warehouse root: the registry
+    // phase's build-once catalog already committed every canonical index,
+    // so without the override each split's "build" would time a marker
+    // check, not a build — the fresh root keeps the build figure the true
+    // from-cold index cost (and q_retrieval_rrf_served's build still
+    // drops to store-only, because the sibling splits commit the shared
+    // bm25/ann artifacts under this root first).
     spark.conf.set(
       graft.index.GenLog.RootKey,
       s"${System.getProperty("java.io.tmpdir")}/graft_bench_splits_${spark.sparkContext.applicationId}")
-    val splits = BenchSplits.of(spark, sfDir).flatMap {
-      case (name, (build, serve)) =>
-        try {
-          val b0 = System.nanoTime()
-          build()
-          val tb = (System.nanoTime() - b0) / 1e9
-          def serveOnce(): Double = {
-            val t0 = System.nanoTime()
-            serve().write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          serveOnce()
-          val ts = (1 to iters).map(_ => serveOnce()).sorted
-          Some((name, tb, ts(ts.size / 2)))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] split $name: $e")
-            None
-        }
-    }
+    val splits = timeSplits(spark, sfDir, SparkEntry.splits, iters, errors)
     // Per-query latency budgets (BUDGETS.json: 2x the last recorded
     // median, floored): the 2x TOTAL gate can hide one query regressing
     // 5x while others improve — a violation here makes that single-query

@@ -23,6 +23,12 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
+  /** The build/serve decompositions, in registry order: Bench times their
+    * two legs and BenchSplitSpec pins each serve ≡ its registry query.
+    */
+  lazy val splits: Seq[(String, QueryDef.Split)] =
+    all.flatMap(q => q.split.map(q.name -> _))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

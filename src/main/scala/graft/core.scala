@@ -18,12 +18,38 @@ import org.apache.spark.sql.types.LongType
   * assignment + prune + top-k hash-checkable end-to-end, the
   * q_dedup_embed_rh hyperplane-literal idiom with trained instead of
   * seeded state). At most one of oracle/oracleGen is set.
+  *
+  * `split` is the query's build/serve decomposition: build commits the
+  * persisted state once, serve answers from it. A served or incremental
+  * query is declared once with [[QueryDef.served]], whose `fn` is build
+  * then serve; a query whose composed form is a different in-session
+  * computation sets both, and BenchSplitSpec pins that the two agree.
+  * Bench times the two legs separately (`splits` in its record).
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
-    oracleGen: Option[(SparkSession, String) => String] = None)
+    oracleGen: Option[(SparkSession, String) => String] = None,
+    split: Option[QueryDef.Split] = None)
+
+object QueryDef {
+  type Split = (SparkSession, String) => (() => Unit, () => DataFrame)
+
+  /** A query served from persisted state: the registry runs build, then
+    * returns serve's frame.
+    */
+  def served(name: String, split: Split, oracle: String): QueryDef =
+    QueryDef(
+      name,
+      (s, d) => {
+        val (build, serve) = split(s, d)
+        build()
+        serve()
+      },
+      Some(oracle),
+      split = Some(split))
+}
 
 /** The reference's fixed 7-field output row (main.py:164-172), the typed
   * ingest boundary promised in SURVEY §1.4: `Option` fields are exactly

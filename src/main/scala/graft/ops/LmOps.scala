@@ -156,7 +156,7 @@ object LmOps {
       .orderBy($"doc_id")
   }
 
-  /** Bench split for q_lm_score: build commits the canonical /bm25
+  /** Build/serve split of q_lm_score: build commits the canonical /bm25
     * lexical index — PHYSICALLY the same buildOnce-guarded artifact the
     * bm25 splits build, not a byte-identical copy under a private path,
     * so when the lexical splits have already committed it this build is
@@ -169,22 +169,22 @@ object LmOps {
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => { TextOps.writeBm25Index(s, d); () }
     val serve = () => {
-      val path = SimilarityOps.serveRoot(s, d) + "/bm25"
-      val postings = T.parquet(s, s"$path/postings")
-      val nTotal = T.parquet(s, s"$path/stats")
-        .agg(sum(col("l")).as("n_total"))
+      val (postings, nTotal) = bm25Frames(s, d)
       lmScoreOf(docs(s, d), lmScoreAggFromPostings(postings, nTotal))
     }
     (build, serve)
   }
 
+  /** Root of the canonical persisted bigram pair counts. */
+  private[graft] def bigramRoot(s: SparkSession, d: String): String =
+    SimilarityOps.serveRoot(s, d) + "/bigram"
+
   /** Canonical persisted bigram pair counts (the continuous
     * BigramFamily's payload, batch-built) — build-once under the shared
-    * index catalog, the model state the smoothed-LM bench splits serve
-    * from.
+    * index catalog, the model state the smoothed-LM splits serve from.
     */
   private[graft] def writeBigramCounts(s: SparkSession, d: String): String = {
-    val path = SimilarityOps.serveRoot(s, d) + "/bigram"
+    val path = bigramRoot(s, d)
     graft.index.GenLog.buildOnce(s, path) {
       bigramCountsOf(docs(s, d))
         .write
@@ -194,12 +194,12 @@ object LmOps {
     path
   }
 
-  // ---- bench splits for the model-state LM queries (round-17 #6) -----
+  // ---- build/serve splits for the model-state LM queries -------------
   //
   // The composed q_lm_kn / q_lm_interp / q_lm_bucket / q_lm_score_lang
   // charge MODEL construction (pair counts, unigram postings) to every
-  // bench iteration, burying how much of their wall is one-time state
-  // build vs serve — the figure the continuous forms
+  // run, burying how much of their wall is one-time state build vs
+  // serve — the figure the continuous forms
   // (StreamOps.serveLmKnContinuous etc., StreamingLmSpec) already
   // amortize. Each split's build commits the canonical state the
   // lexical/bigram families already maintain (buildOnce: when a sibling
@@ -210,7 +210,7 @@ object LmOps {
   // StreamingLmSpec pins.
 
   private def bm25Frames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val path = SimilarityOps.serveRoot(s, d) + "/bm25"
+    val path = TextOps.bm25Root(s, d)
     (
       T.parquet(s, s"$path/postings"),
       T.parquet(s, s"$path/stats").agg(sum(col("l")).as("n_total")))
@@ -221,7 +221,7 @@ object LmOps {
     val build = () => { writeBigramCounts(s, d); () }
     val serve = () =>
       lmKnFromCounts(
-        T.parquet(s, SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
+        T.parquet(s, bigramRoot(s, d) + "/counts"),
         docs(s, d))
     (build, serve)
   }
@@ -237,7 +237,7 @@ object LmOps {
     val serve = () => {
       val (postings, nTotal) = bm25Frames(s, d)
       lmInterpFromCounts(
-        T.parquet(s, SimilarityOps.serveRoot(s, d) + "/bigram/counts"),
+        T.parquet(s, bigramRoot(s, d) + "/counts"),
         postings.groupBy($"term".as("w2")).agg(sum($"tf").as("cf1")),
         nTotal.select($"n_total".as("lt")),
         docs(s, d))
@@ -376,9 +376,9 @@ object LmOps {
   private val LmScoreSql =
     ScoreCtes + " SELECT doc_id, n_tokens, rarity6 FROM score ORDER BY doc_id"
 
-  /** q_lm_score_incr — the maintained per-doc LM score family
-    * (verdict-r17 #3): q_lm_score's serve is inherently O(corpus)
-    * because every doc rescans under the CURRENT model; the incremental
+  /** q_lm_score_incr — the maintained per-doc LM score family:
+    * q_lm_score's serve is inherently O(corpus) because every doc
+    * rescans under the CURRENT model; the incremental
     * form pins the model at the base EPOCH (the IVF-codebook rule — a
     * model refresh is an explicit new epoch, not a silent drift) so
     * per-doc scores become immutable state: the base generation persists
@@ -386,25 +386,17 @@ object LmOps {
     * own docs against the persisted (term, cf, n_total) model —
     * O(batch) tokenization + one broadcast model join — then
     * merge-on-read unions the slim score generations. The newest ~10%
-    * of docs by id are today's ingest (the dedupIncr shape). The oracle
+    * of docs by id are today's ingest (the q_dedup_incr shape). The oracle
     * scores the FULL corpus under the base-epoch model in SQL, so the
     * hash gate re-proves delta-apply ≡ rebuild-under-pinned-model at
-    * both scales every round.
+    * both scales every round. Serve is the O(batch) delta scoring under
+    * the pinned base-epoch model plus the slim score-state read — the
+    * per-doc score family's daily-ingest figure.
     */
-  private def lmScoreIncr(s: SparkSession, d: String): DataFrame = {
-    val (build, serve) = lmScoreIncrSplit(s, d)
-    build()
-    serve()
-  }
-
   private[graft] def lmScoreIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val all = docs(s, d).select($"doc_id", $"lang", $"text")
-    val thrDf = all.agg(expr("(max(doc_id) * 9) div 10").as("thr"))
-    val withThr = all.crossJoin(broadcast(thrDf))
-    val base = withThr.filter($"doc_id" <= $"thr").select($"doc_id", $"lang", $"text")
-    val delta = withThr.filter($"doc_id" > $"thr").select($"doc_id", $"lang", $"text")
+    val (base, delta) = TextOps.newestTenth(docs(s, d).select($"doc_id", $"lang", $"text"))
     val root = SimilarityOps.serveRoot(s, d) + "/lm_score_incr"
     val build = () => {
       graft.index.GenLog.buildOnce(s, root) {
@@ -1301,15 +1293,15 @@ object LmOps {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q_lm_unigram", lmUnigram, Some(LmUnigramSql)),
-    QueryDef("q_lm_score", lmScore, Some(LmScoreSql)),
-    QueryDef("q_lm_score_incr", lmScoreIncr, Some(LmScoreIncrSql)),
-    QueryDef("q_lm_bucket", lmBucket, Some(LmBucketSql)),
+    QueryDef("q_lm_score", lmScore, Some(LmScoreSql), split = Some(lmScoreSplit)),
+    QueryDef.served("q_lm_score_incr", lmScoreIncrSplit, LmScoreIncrSql),
+    QueryDef("q_lm_bucket", lmBucket, Some(LmBucketSql), split = Some(lmBucketSplit)),
     QueryDef("q_lm_unigram_lang", lmUnigramLang, Some(LmUnigramLangSql)),
-    QueryDef("q_lm_score_lang", lmScoreLang, Some(LmScoreLangSql)),
+    QueryDef("q_lm_score_lang", lmScoreLang, Some(LmScoreLangSql), split = Some(lmScoreLangSplit)),
     QueryDef("q_lm_bigram", lmBigram, Some(LmBigramSql)),
     QueryDef("q_lm_bigram_score", lmBigramScore, Some(LmBigramScoreSql)),
-    QueryDef("q_lm_interp", lmInterp, Some(LmInterpSql)),
-    QueryDef("q_lm_kn", lmKn, Some(LmKnSql)),
+    QueryDef("q_lm_interp", lmInterp, Some(LmInterpSql), split = Some(lmInterpSplit)),
+    QueryDef("q_lm_kn", lmKn, Some(LmKnSql), split = Some(lmKnSplit)),
     QueryDef("q_lm_apply", lmApply, Some(LmApplySql)),
     QueryDef("q_lm_bigram_apply", lmBigramApply, Some(LmBigramApplySql)))
 }

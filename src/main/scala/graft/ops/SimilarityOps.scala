@@ -813,10 +813,11 @@ object SimilarityOps {
     * and oracle as q_sim_batch: persisting and pruning must not change a
     * single hit.
     */
-  private def simServed(s: SparkSession, d: String): DataFrame = {
+  private[graft] def simServedSplit(
+      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val path = s"${serveRoot(s, d)}/ann"
-    writeAnnIndex(s, d, path)
-    serveAnnBatch(s, path, batchProbeFrame(s, d))
+    (() => writeAnnIndex(s, d, path),
+      () => serveAnnBatch(s, path, batchProbeFrame(s, d)))
   }
 
   /** q_sim_incr — INCREMENTAL ANN index maintenance, the vector sibling
@@ -829,32 +830,16 @@ object SimilarityOps {
     * exact) with the same literal bucket INSET pruning pushed into BOTH
     * scans. The oracle is the monolithic q_sim_batch SQL: merge-on-read
     * must not change a single hit, re-proven by the hash gate every
-    * round.
-    */
-  private def simIncr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val root = s"${serveRoot(s, d)}/ann_incr"
-    // the split threshold is ONE long of bounded driver state (the probe
-    // bucket-id precedent): ids above ⌊9·max/10⌋ form the batch
-    graft.index.GenLog.buildOnce(s, root) {
-      val thr = emb(s, d).agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
-      writeAnnIndexFor(s, emb(s, d).filter($"vec_id" <= thr), s"$root/gen0")
-      writeAnnIndexFor(s, emb(s, d).filter($"vec_id" > thr), s"$root/gen1")
-    }
-    serveAnnBatchMulti(s, Seq(s"$root/gen0", s"$root/gen1"), batchProbeFrame(s, d))
-  }
-
-  /** Build/serve decomposition of q_sim_incr: build persists both
-    * generations (base = yesterday's state, written once; the batch
-    * generation is the daily O(batch) commit); serve is the
-    * merge-on-read probe answer — the daily-ingest latency the composed
-    * query's per-iteration rebuild masks.
+    * round. Build persists both generations; serve is the merge-on-read
+    * probe answer, the daily-ingest latency.
     */
   private[graft] def simIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
     val root = s"${serveRoot(s, d)}/ann_incr"
     val build = () => {
+      // the split threshold is ONE long of bounded driver state (the probe
+      // bucket-id precedent): ids above ⌊9·max/10⌋ form the batch
       graft.index.GenLog.buildOnce(s, root) {
         val thr = emb(s, d).agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
         writeAnnIndexFor(s, emb(s, d).filter($"vec_id" <= thr), s"$root/gen0")
@@ -982,31 +967,6 @@ object SimilarityOps {
     * serve reads back only the probed cell directories. Same output
     * contract and oracle as q_sim_ivf_batch.
     */
-  private def simIvfServed(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val path = s"${serveRoot(s, d)}/ivf"
-    writeIvfIndex(s, d, path)
-    val probeVecs = emb(s, d)
-      .select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
-      .filter($"vec_id" < BatchProbes)
-    serveIvfBatch(s, path, probeVecs)
-  }
-
-  /** Build/serve decomposition of q_sim_served for the bench's split
-    * timings: the composed query charges index construction to every
-    * iteration, masking serve-latency regressions — the number a
-    * retrieval tier actually tracks. Build persists the bucket index
-    * once (amortized across days in production); serve answers the
-    * standard probe batch from it.
-    */
-  private[graft] def simServedSplit(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val path = s"${serveRoot(s, d)}/ann"
-    (() => writeAnnIndex(s, d, path),
-      () => serveAnnBatch(s, path, batchProbeFrame(s, d)))
-  }
-
-  /** [[simServedSplit]] for q_sim_ivf_served. */
   private[graft] def simIvfServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
@@ -1236,15 +1196,6 @@ object SimilarityOps {
     * oracle as q_sim_quantized: persistence and pruning must not change
     * a single hit.
     */
-  private def simQuantizedServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${serveRoot(s, d)}/annq"
-    writeQuantIndex(s, d, path)
-    serveQuantBatchMulti(s, Seq(path), quantProbeFrame(s, d))
-  }
-
-  /** Build/serve decomposition of q_sim_quantized_served for the bench's
-    * split timings ([[simServedSplit]] rationale).
-    */
   private[graft] def simQuantizedServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val path = s"${serveRoot(s, d)}/annq"
@@ -1385,12 +1336,6 @@ object SimilarityOps {
     * the epoch contract pins k and the codebook to the FULL corpus count
     * so a batch never re-derives them.
     */
-  private def dedupSemanticIncr(s: SparkSession, d: String): DataFrame = {
-    val (build, serve) = semanticIncrSplit(s, d)
-    build()
-    serve()
-  }
-
   private[graft] def semanticIncrSplit(
       s: SparkSession,
       d: String): (() => Unit, () => DataFrame) = {
@@ -2231,14 +2176,14 @@ object SimilarityOps {
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q_dedup_semantic", dedupSemantic, Some(SemanticSql)),
-    QueryDef("q_dedup_semantic_incr", dedupSemanticIncr, Some(SemanticIncrSql)),
+    QueryDef.served("q_dedup_semantic_incr", semanticIncrSplit, SemanticIncrSql),
     QueryDef("q_cluster_stats", clusterStats, Some(ClusterStatsSql)),
     QueryDef("q_cluster_terms", clusterTerms, Some(ClusterTermsSql)),
     QueryDef("q_dedup_semantic_trained", dedupSemanticTrained, None,
       oracleGen = Some(semTrainedOracle)),
     QueryDef("q_embed_quantize", embedQuantize, Some(QuantizeSql)),
     QueryDef("q_sim_quantized", simQuantized, Some(QuantizedSql)),
-    QueryDef("q_sim_quantized_served", simQuantizedServed, Some(QuantizedSql)),
+    QueryDef.served("q_sim_quantized_served", simQuantizedServedSplit, QuantizedSql),
     QueryDef("q_sim_cosine", simCosine, Some(CosineSql)),
     QueryDef("q_sim_topk", simTopk, Some(TopkSql)),
     QueryDef("q_sim_ann", simAnn, Some(AnnSql)),
@@ -2246,9 +2191,9 @@ object SimilarityOps {
     QueryDef("q_sim_fetch", simFetch, Some(FetchSql)),
     QueryDef("q_sim_ivf", simIvf, Some(IvfSql)),
     QueryDef("q_sim_ivf_batch", simIvfBatch, Some(IvfBatchSql)),
-    QueryDef("q_sim_served", simServed, Some(BatchSql)),
-    QueryDef("q_sim_incr", simIncr, Some(BatchSql)),
-    QueryDef("q_sim_ivf_served", simIvfServed, Some(IvfBatchSql)),
+    QueryDef.served("q_sim_served", simServedSplit, BatchSql),
+    QueryDef.served("q_sim_incr", simIncrSplit, BatchSql),
+    QueryDef.served("q_sim_ivf_served", simIvfServedSplit, IvfBatchSql),
     QueryDef("q_sim_ivf_trained", simIvfTrained, None,
       oracleGen = Some(ivfTrainedOracle)),
     QueryDef("q_sim_pq", simPq, Some(PqSql)),

@@ -139,19 +139,29 @@ object Sinks {
       url: String,
       table: String,
       keys: Seq[String],
-      props: java.util.Properties = new java.util.Properties): Unit = {
-    val spark = staged.sparkSession
+      props: java.util.Properties = new java.util.Properties): Unit =
     if (!tableExists(url, table, props)) {
       staged.write.mode(SaveMode.ErrorIfExists).jdbc(url, table, props)
     } else {
-      val e = spark.read.jdbc(url, table, props)
-      val merged = e
-        .join(staged.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(staged)
-        .localCheckpoint(true) // sever JDBC lineage: see doc comment
-      merged.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
+      mergedSnapshot(staged, url, table, keys, props)
+        .write.mode(SaveMode.Overwrite).jdbc(url, table, props)
     }
-  }
+
+  /** The snapshot both upserts write: the table's rows minus the staged
+    * keys (left-anti), union staged, materialized with an eager
+    * `localCheckpoint` that severs the JDBC lineage before the table it
+    * was read from is dropped ([[upsertSnapshotJdbc]]'s rationale).
+    */
+  private def mergedSnapshot(
+      staged: DataFrame,
+      url: String,
+      table: String,
+      keys: Seq[String],
+      props: java.util.Properties): DataFrame =
+    staged.sparkSession.read.jdbc(url, table, props)
+      .join(staged.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(staged)
+      .localCheckpoint(true)
 
   /** The table-rename DDL per target family: Derby and MySQL speak
     * `RENAME TABLE a TO b`; the SQL-standard-adjacent `ALTER TABLE a
@@ -183,17 +193,12 @@ object Sinks {
       table: String,
       keys: Seq[String],
       props: java.util.Properties = new java.util.Properties): Unit = {
-    val spark = staged.sparkSession
     if (!tableExists(url, table, props)) {
       staged.write.mode(SaveMode.ErrorIfExists).jdbc(url, table, props)
     } else {
       val stagingTable = s"${table}_swap_staging"
-      val e = spark.read.jdbc(url, table, props)
-      val merged = e
-        .join(staged.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(staged)
-        .localCheckpoint(true) // sever JDBC lineage: see upsertSnapshotJdbc
-      merged.write.mode(SaveMode.Overwrite).jdbc(url, stagingTable, props)
+      mergedSnapshot(staged, url, table, keys, props)
+        .write.mode(SaveMode.Overwrite).jdbc(url, stagingTable, props)
       val conn = connect(url, props)
       try {
         conn.setAutoCommit(false)

@@ -1235,12 +1235,6 @@ object TextOps {
     * shards. Oracle is the full-corpus [[PhraseSql]], so the hash gate
     * re-proves serve-from-index ≡ in-session every round.
     */
-  private def indexPhraseServed(s: SparkSession, d: String): DataFrame =
-    servePhrase(s, Seq(writePhraseIndex(s, d)), PhraseQueries)
-
-  /** Build/serve decomposition of q_index_phrase_served for the bench's
-    * split timings ([[bm25Split]] rationale).
-    */
   private[graft] def phraseSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val path = SimilarityOps.serveRoot(s, d) + "/phrase"
@@ -1249,7 +1243,7 @@ object TextOps {
   }
 
   /** q_index_phrase_incr — INCREMENTAL positional maintenance, the
-    * phrase sibling of [[indexBm25Incr]]: the newest 10% of doc ids
+    * phrase sibling of [[bm25IncrSplit]]: the newest 10% of doc ids
     * (monotone-ingest contract) write their OWN occurrence generation —
     * O(batch) build work, the base generation's files never rewritten or
     * re-read — and serving merges generations on read (occurrence rows
@@ -1258,29 +1252,18 @@ object TextOps {
     * re-proves merge-on-read ≡ a single rebuilt positional index every
     * round.
     */
-  private def indexPhraseIncr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val root = SimilarityOps.serveRoot(s, d) + "/phraseincr"
-    graft.index.GenLog.buildOnce(s, root) {
-      val all = docs(s, d)
-      val thrDf = all.agg(expr("(max(doc_id) * 9) div 10").as("thr"))
-      val withThr = all.crossJoin(broadcast(thrDf))
-      writePhraseIndexFrom(
-        s, withThr.filter($"doc_id" <= $"thr").drop("thr"), s"$root/base")
-      writePhraseIndexFrom(
-        s, withThr.filter($"doc_id" > $"thr").drop("thr"), s"$root/inc")
-    }
-    servePhrase(s, Seq(s"$root/base", s"$root/inc"), PhraseQueries)
-  }
-
-  /** [[phraseSplit]] for q_index_phrase_incr: build writes both
-    * generations; serve is the merge-on-read phrase cut.
-    */
   private[graft] def phraseIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val root = SimilarityOps.serveRoot(s, d) + "/phraseincr"
-    (() => { indexPhraseIncr(s, d); () },
-      () => servePhrase(s, Seq(s"$root/base", s"$root/inc"), PhraseQueries))
+    val build = () => {
+      graft.index.GenLog.buildOnce(s, root) {
+        val (base, batch) = newestTenth(docs(s, d))
+        writePhraseIndexFrom(s, base, s"$root/base")
+        writePhraseIndexFrom(s, batch, s"$root/inc")
+      }
+      ()
+    }
+    (build, () => servePhrase(s, Seq(s"$root/base", s"$root/inc"), PhraseQueries))
   }
 
   private val PhraseSql = {
@@ -1438,10 +1421,9 @@ object TextOps {
     * directories; scoring is identical. Same output and oracle as
     * q_index_bm25: persistence and pruning must not change a single hit.
     */
-  private def indexBm25Served(s: SparkSession, d: String): DataFrame = {
-    val path = writeBm25Index(s, d)
-    serveBm25(s, path)
-  }
+  private[graft] def bm25Split(
+      s: SparkSession, d: String): (() => Unit, () => DataFrame) =
+    (() => { writeBm25Index(s, d); () }, () => serveBm25(s, bm25Root(s, d)))
 
   /** Write one GENERATION of the postings index from an arbitrary doc
     * frame: (term, doc_id, tf, dl) for the FULL vocabulary (an index
@@ -1484,12 +1466,18 @@ object TextOps {
     path
   }
 
+  /** Root of the canonical postings index: the lexical serves and the LM
+    * scores read the one index [[writeBm25Index]] builds there.
+    */
+  private[graft] def bm25Root(s: SparkSession, d: String): String =
+    SimilarityOps.serveRoot(s, d) + "/bm25"
+
   /** Dataset-keyed canonical postings build — build-once-serve-many
     * ([[graft.index.GenLog.buildOnce]]): every query over the same
     * dataset shares one physical postings index.
     */
   private[graft] def writeBm25Index(s: SparkSession, d: String): String = {
-    val path = SimilarityOps.serveRoot(s, d) + "/bm25"
+    val path = bm25Root(s, d)
     graft.index.GenLog.buildOnce(s, path) {
       writeBm25IndexFrom(s, docs(s, d), path)
       ()
@@ -1548,56 +1536,38 @@ object TextOps {
     * sets make df a plain count and (N, L) an element-wise sum). The
     * oracle is the FULL-corpus BM25, so the hash gate re-proves
     * merge-on-read ≡ single rebuilt index every round — the lexical
-    * sibling of q_dedup_incr's delta ≡ rebuild theorem.
-    */
-  private def indexBm25Incr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val root = SimilarityOps.serveRoot(s, d) + "/bm25incr"
-    graft.index.GenLog.buildOnce(s, root) {
-      val all = docs(s, d)
-      val thrDf = all.agg(expr("(max(doc_id) * 9) div 10").as("thr"))
-      val withThr = all.crossJoin(broadcast(thrDf))
-      writeBm25IndexFrom(
-        s, withThr.filter($"doc_id" <= $"thr").drop("thr"), s"$root/base")
-      writeBm25IndexFrom(
-        s, withThr.filter($"doc_id" > $"thr").drop("thr"), s"$root/inc")
-      ()
-    }
-    serveBm25(s, Seq(s"$root/base", s"$root/inc"))
-  }
-
-  /** Build/serve decomposition of q_index_bm25_served for the bench's
-    * split timings (SimilarityOps.simServedSplit rationale).
-    */
-  private[graft] def bm25Split(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val path = SimilarityOps.serveRoot(s, d) + "/bm25"
-    (() => { writeBm25Index(s, d); () }, () => serveBm25(s, path))
-  }
-
-  /** [[bm25Split]] for q_index_bm25_incr: build writes both generations;
-    * serve is the multi-generation merge-on-read — the retrieval-latency
-    * figure including the merge overhead a compaction would remove.
+    * sibling of q_dedup_incr's delta ≡ rebuild theorem. The serve figure
+    * includes the merge overhead a compaction would remove.
     */
   private[graft] def bm25IncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    import s.implicits._
     val root = SimilarityOps.serveRoot(s, d) + "/bm25incr"
     val build = () => {
       graft.index.GenLog.buildOnce(s, root) {
-        val all = docs(s, d)
-        val thrDf = all.agg(expr("(max(doc_id) * 9) div 10").as("thr"))
-        val withThr = all.crossJoin(broadcast(thrDf))
-        writeBm25IndexFrom(
-          s, withThr.filter($"doc_id" <= $"thr").drop("thr"), s"$root/base")
-        writeBm25IndexFrom(
-          s, withThr.filter($"doc_id" > $"thr").drop("thr"), s"$root/inc")
+        val (base, batch) = newestTenth(docs(s, d))
+        writeBm25IndexFrom(s, base, s"$root/base")
+        writeBm25IndexFrom(s, batch, s"$root/inc")
         ()
       }
       ()
     }
     (build, () => serveBm25(s, Seq(s"$root/base", s"$root/inc")))
   }
+
+  /** The ingest split of the incremental doc queries: under the
+    * monotone-ingest contract the newest tenth by id (ids above
+    * ⌊9·max/10⌋) is today's batch, the rest the base. Lazy: the
+    * threshold is a broadcast one-row aggregate, so no job runs here.
+    */
+  private[graft] def newestTenth(docsDf: DataFrame): (DataFrame, DataFrame) = {
+    val withThr = docsDf.crossJoin(broadcast(tenthThreshold(docsDf)))
+    (withThr.filter(col("doc_id") <= col("thr")).drop("thr"),
+      withThr.filter(col("doc_id") > col("thr")).drop("thr"))
+  }
+
+  /** [[newestTenth]]'s one-row (thr) frame. */
+  private[graft] def tenthThreshold(docsDf: DataFrame): DataFrame =
+    docsDf.agg(expr("(max(doc_id) * 9) div 10").as("thr"))
 
   /** q_retrieval_rrf — hybrid retrieval: reciprocal-rank fusion (k = 60)
     * of the lexical BM25 ranking with a semantic vector leg seeded by
@@ -1701,15 +1671,19 @@ object TextOps {
     * bucket directories. Same output contract and oracle as
     * q_retrieval_rrf: persistence and pruning must not change a hit.
     */
-  private def retrievalRrfServed(s: SparkSession, d: String): DataFrame = {
+  private[graft] def rrfServedSplit(
+      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val root = SimilarityOps.serveRoot(s, d)
-    // the three serving artifacts are CANONICAL, dataset-keyed builds
-    // shared with q_index_bm25_served / q_sim_served (same params, same
-    // corpus — one physical index each, built once per warehouse root)
-    val bm25Path = writeBm25Index(s, d)
-    SimilarityOps.writeAnnIndex(s, d, s"$root/ann")
-    SimilarityOps.writeEmbStore(s, d, s"$root/embstore")
-    serveRrf(s, bm25Path, s"$root/ann", s"$root/embstore")
+    val build = () => {
+      // the three serving artifacts are CANONICAL, dataset-keyed builds
+      // shared with q_index_bm25_served / q_sim_served (same params, same
+      // corpus — one physical index each, built once per warehouse root):
+      // when a sibling already committed bm25/ann, this build is store-only
+      writeBm25Index(s, d)
+      SimilarityOps.writeAnnIndex(s, d, s"$root/ann")
+      SimilarityOps.writeEmbStore(s, d, s"$root/embstore")
+    }
+    (build, () => serveRrf(s, bm25Root(s, d), s"$root/ann", s"$root/embstore"))
   }
 
   private[graft] def serveRrf(
@@ -1822,26 +1796,6 @@ object TextOps {
       .filter($"sem_rank" <= RrfTopK)
       .select($"query_id", $"vec_id".as("doc_id"), $"sem_rank")
     rrfFuse(s, lex, sem)
-  }
-
-  /** Build/serve decomposition of q_retrieval_rrf_served for the bench's
-    * split timings ([[bm25Split]] rationale): build writes all three
-    * serving artifacts, serve is the three-pruned-read fusion.
-    */
-  private[graft] def rrfServedSplit(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val root = SimilarityOps.serveRoot(s, d)
-    val bm25Path = s"$root/bm25"
-    val build = () => {
-      // canonical shared artifacts: when the bm25/ann indexes were
-      // already committed by the sibling served splits, this build is
-      // store-only — the build-once contract the index catalog exists for
-      writeBm25Index(s, d)
-      SimilarityOps.writeAnnIndex(s, d, s"$root/ann")
-      SimilarityOps.writeEmbStore(s, d, s"$root/embstore")
-      ()
-    }
-    (build, () => serveRrf(s, bm25Path, s"$root/ann", s"$root/embstore"))
   }
 
   /** q_bpe_pairs — the first merge round of BPE tokenizer training:
@@ -2228,13 +2182,13 @@ object TextOps {
     QueryDef("q_text_chunk", textChunk, Some(ChunkSql)),
     QueryDef("q_index_inverted", indexInverted, Some(InvertedSql)),
     QueryDef("q_index_phrase", indexPhrase, Some(PhraseSql)),
-    QueryDef("q_index_phrase_served", indexPhraseServed, Some(PhraseSql)),
-    QueryDef("q_index_phrase_incr", indexPhraseIncr, Some(PhraseSql)),
+    QueryDef.served("q_index_phrase_served", phraseSplit, PhraseSql),
+    QueryDef.served("q_index_phrase_incr", phraseIncrSplit, PhraseSql),
     QueryDef("q_index_bm25", indexBm25, Some(Bm25Sql)),
-    QueryDef("q_index_bm25_served", indexBm25Served, Some(Bm25Sql)),
-    QueryDef("q_index_bm25_incr", indexBm25Incr, Some(Bm25Sql)),
+    QueryDef.served("q_index_bm25_served", bm25Split, Bm25Sql),
+    QueryDef.served("q_index_bm25_incr", bm25IncrSplit, Bm25Sql),
     QueryDef("q_retrieval_rrf", retrievalRrf, Some(RrfSql)),
-    QueryDef("q_retrieval_rrf_served", retrievalRrfServed, Some(RrfSql)),
+    QueryDef.served("q_retrieval_rrf_served", rrfServedSplit, RrfSql),
     QueryDef("q_bpe_pairs", bpePairs, Some(BpePairsSql)),
     QueryDef("q_bpe_train", bpeTrain, Some(BpeTrainSql)),
     QueryDef("q_bpe_encode", bpeEncode, Some(BpeEncodeSql))

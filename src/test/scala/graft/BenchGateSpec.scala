@@ -111,6 +111,21 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.probeRatios(d, Seq(probed), 0.0) === Nil)
   }
 
+  test("split timing: a split that throws records an error and no figure, serve never runs") {
+    var served = false
+    val errors = collection.mutable.Map.empty[String, String]
+    val buildFails: QueryDef.Split = (_, _) =>
+      (() => throw new IllegalStateException("no index"), () => { served = true; null })
+    val constructFails: QueryDef.Split = (_, _) => throw new ArithmeticException("boom")
+    val figures = Bench.timeSplits(
+      null, "sf", Seq("q_build" -> buildFails, "q_construct" -> constructFails), 3, errors)
+    assert(figures === Nil)
+    assert(errors.toMap === Map(
+      "q_build.split" -> "IllegalStateException: no index",
+      "q_construct.split" -> "ArithmeticException: boom"))
+    assert(!served)
+  }
+
   test("bench record: quotes, backslashes and newlines in sf and errors parse back") {
     val sf = "/data/\"odd\"\\dir\nsf0.1"
     val err = "AnalysisException: column \"a\\b\" not found\n  at line 2"

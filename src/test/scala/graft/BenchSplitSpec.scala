@@ -14,7 +14,8 @@ class BenchSplitSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq
 
   test("every bench split's serve equals its composed query") {
-    for ((name, (build, serve)) <- BenchSplits.of(spark, sf)) {
+    for ((name, split) <- SparkEntry.splits) {
+      val (build, serve) = split(spark, sf)
       build()
       val composed = SparkEntry.queries(name)(spark, sf)
       // pair-set queries order deterministically; compare sorted strings
