@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -8,9 +9,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * library — the ONE implementation of version directories, commit
   * markers, merge-on-read root resolution, compaction, and snapshot
   * pruning that every maintained index family rides: the twelve
-  * generation-local families ([[GenFamily]]), the dedup families'
-  * bespoke folds ([[graceDelete]], [[pruneSnapshots]]) and the
-  * monolithic serving builds ([[buildOnce]]).
+  * generation-local families ([[GenFamily]]) — streamed, or built once
+  * for a served or incremental query ([[GenFamily.buildOnce]]) — the
+  * dedup families' bespoke folds ([[graceDelete]], [[pruneSnapshots]])
+  * and the few serving builds with a layout of their own ([[buildOnce]]).
   *
   * Layout contract: an index directory holds `v<N>` version directories,
   * each holding named ARTIFACT directories (`full`, `gen`, `assign`,
@@ -425,6 +427,16 @@ object GenLog {
     markCommitted(df.sparkSession, path)
   }
 
+  /** Overwrite-write a frame hive-partitioned on `key` — the layout of
+    * every partitioned index artifact. The frame is repartitioned on the
+    * key first (the writeCorpusShards rule): without it every task
+    * appends a file to every partition directory (tasks × partitions
+    * small files); with it each directory is owned by the tasks that
+    * wrote it.
+    */
+  def writePartitioned(df: DataFrame, key: String, path: String): Unit =
+    df.repartition(col(key)).write.mode(SaveMode.Overwrite).partitionBy(key).parquet(path)
+
   /** Versions present in an index directory: `v<N>` subdirectories,
     * restricted (when `requiring` is set) to those whose named artifact
     * is COMMITTED — the marker gate that makes partial writes invisible.
@@ -506,6 +518,20 @@ object GenLog {
       write(s, base, p)
       markCommitted(s, p)
     }
+
+    /** Build-once over the family layout: under one [[GenLog.buildOnce]]
+      * claim on `dir`, the first frame seeds `v0/full` and each further
+      * frame commits the next generation (`v1/gen`, `v2/gen`, ...). The
+      * frames are constructed inside the claim, so a skipped build runs
+      * no Spark job. A served query is a seeded family; an incremental
+      * one adds one generation. Returns whether the build ran.
+      */
+    def buildOnce(s: SparkSession, dir: String)(frames: => Seq[DataFrame]): Boolean =
+      GenLog.buildOnce(s, dir) {
+        val gens = frames
+        seed(s, gens.head, dir)
+        gens.tail.zipWithIndex.foreach { case (g, i) => commit(g, dir, i.toLong) }
+      }
 
     /** Commit micro-batch `batchId`'s rows as generation v(batchId+1) —
       * the per-batch body of [[streamWriter]], exposed so a COMPOSED

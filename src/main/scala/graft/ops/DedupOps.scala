@@ -847,7 +847,7 @@ object DedupOps {
     import s.implicits._
     val all = docs(s, d).select($"doc_id", $"lang", $"text")
     val (base, delta) = TextOps.newestTenth(all)
-    val root = SimilarityOps.serveRoot(s, d) + "/dedup_incr"
+    val root = graft.index.GenLog.datasetRoot(s, d) + "/dedup_incr"
     val build = () => {
       graft.index.GenLog.buildOnce(s, root) {
         val (md5Index, bandIndex) = buildDedupIndex(s, base)
@@ -897,7 +897,7 @@ object DedupOps {
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
     val (base, batch) = TextOps.newestTenth(docs(s, d).select($"doc_id", $"lang", $"text"))
-    val root = SimilarityOps.serveRoot(s, d) + "/cc_incr"
+    val root = graft.index.GenLog.datasetRoot(s, d) + "/cc_incr"
     val build = () => {
       graft.index.GenLog.buildOnce(s, root)(StreamOps.seedDedupState(s, base, root))
       ()
@@ -941,7 +941,7 @@ object DedupOps {
     val withThr = all.crossJoin(broadcast(thrDf))
     val base = withThr.filter($"vec_id" <= $"thr").select($"vec_id", $"embedding")
     val delta = withThr.filter($"vec_id" > $"thr").select($"vec_id", $"embedding")
-    val root = SimilarityOps.serveRoot(s, d) + "/embed_incr"
+    val root = graft.index.GenLog.datasetRoot(s, d) + "/embed_incr"
     val build = () => {
       graft.index.GenLog.buildOnce(s, root)(
         buildEmbedIndex(s, base).write.mode(SaveMode.Overwrite).parquet(root))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, T, X}
+import graft.index.GenLog
 
 /** Unigram language-model quality scoring — the CCNet-style corpus
   * filter (Wenzek et al., arXiv:1911.00359): train a cheap LM on the
@@ -156,10 +157,10 @@ object LmOps {
       .orderBy($"doc_id")
   }
 
-  /** Build/serve split of q_lm_score: build commits the canonical /bm25
-    * lexical index — PHYSICALLY the same buildOnce-guarded artifact the
-    * bm25 splits build, not a byte-identical copy under a private path,
-    * so when the lexical splits have already committed it this build is
+  /** Build/serve split of q_lm_score: build seeds the canonical lexical
+    * index ([[TextOps.bm25Index]]) — PHYSICALLY the same build-once
+    * artifact the bm25 splits build, not a byte-identical copy under a
+    * private path, so when the lexical splits have already committed it this build is
     * a marker check and the LM genuinely rides the index for free (the
     * production story). Serve scores the whole corpus from its postings
     * + the lake's doc-id universe (totality: unscorable docs emit their
@@ -167,31 +168,26 @@ object LmOps {
     */
   private[graft] def lmScoreSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => { TextOps.writeBm25Index(s, d); () }
+    val (build, roots) = TextOps.bm25Index(s, d)
     val serve = () => {
-      val (postings, nTotal) = bm25Frames(s, d)
+      val (postings, nTotal) = lmFrames(s, roots())
       lmScoreOf(docs(s, d), lmScoreAggFromPostings(postings, nTotal))
     }
     (build, serve)
   }
 
-  /** Root of the canonical persisted bigram pair counts. */
-  private[graft] def bigramRoot(s: SparkSession, d: String): String =
-    SimilarityOps.serveRoot(s, d) + "/bigram"
-
-  /** Canonical persisted bigram pair counts (the continuous
-    * BigramFamily's payload, batch-built) — build-once under the shared
-    * index catalog, the model state the smoothed-LM splits serve from.
+  /** The canonical bigram pair counts of a dataset — a
+    * [[StreamOps.BigramFamily]] seeded once from the whole corpus — as
+    * its build and its (w1, w2, cf2) counts: the split-keyed rows are
+    * read as they are, and every model built on them re-aggregates over
+    * (w1, w2), so the split column sums away.
     */
-  private[graft] def writeBigramCounts(s: SparkSession, d: String): String = {
-    val path = bigramRoot(s, d)
-    graft.index.GenLog.buildOnce(s, path) {
-      bigramCountsOf(docs(s, d))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/counts")
-    }
-    path
+  private[graft] def bigramIndex(
+      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
+    val dir = GenLog.datasetRoot(s, d) + "/bigram"
+    (() => { StreamOps.BigramFamily.buildOnce(s, dir)(Seq(docs(s, d))); () },
+      () => T.parquet(s, StreamOps.BigramFamily.roots(s, dir): _*)
+        .select(col("w1"), col("w2"), col("cf2")))
   }
 
   // ---- build/serve splits for the model-state LM queries -------------
@@ -201,43 +197,41 @@ object LmOps {
   // run, burying how much of their wall is one-time state build vs
   // serve — the figure the continuous forms
   // (StreamOps.serveLmKnContinuous etc., StreamingLmSpec) already
-  // amortize. Each split's build commits the canonical state the
-  // lexical/bigram families already maintain (buildOnce: when a sibling
-  // split built it first, the build leg is a marker check — the
-  // production story); serve derives the model from that state and
-  // scores through the registry's own seams, so serve ≡ composed
+  // amortize. Each split's build seeds the canonical lexical/bigram
+  // family (build-once: when a sibling split built it first, the build
+  // leg is a marker check — the production story); serve derives the
+  // model from that state and scores through the registry's own seams, so serve ≡ composed
   // (BenchSplitSpec) by the tf-grouping / additive-count identities
   // StreamingLmSpec pins.
 
-  private def bm25Frames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val path = TextOps.bm25Root(s, d)
-    (
-      T.parquet(s, s"$path/postings"),
-      T.parquet(s, s"$path/stats").agg(sum(col("l")).as("n_total")))
-  }
+  /** Merge-on-read postings + summed corpus stats over the roots of a
+    * lexical index — the two frames every LM serve derives from
+    * (generation-local postings union like the BM25 serve; stats rows sum
+    * because each generation's `l` is its own batch's token count).
+    */
+  private[graft] def lmFrames(s: SparkSession, roots: Seq[String]): (DataFrame, DataFrame) =
+    (roots.map(p => T.parquet(s, s"$p/postings")).reduce(_ unionByName _),
+      roots
+        .map(p => T.parquet(s, s"$p/stats"))
+        .reduce(_ unionByName _)
+        .agg(sum(col("l")).as("n_total")))
 
   private[graft] def lmKnSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => { writeBigramCounts(s, d); () }
-    val serve = () =>
-      lmKnFromCounts(
-        T.parquet(s, bigramRoot(s, d) + "/counts"),
-        docs(s, d))
-    (build, serve)
+    val (build, counts) = bigramIndex(s, d)
+    (build, () => lmKnFromCounts(counts(), docs(s, d)))
   }
 
   private[graft] def lmInterpSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val build = () => {
-      writeBigramCounts(s, d)
-      TextOps.writeBm25Index(s, d)
-      ()
-    }
+    val (bigramBuild, counts) = bigramIndex(s, d)
+    val (bm25Build, roots) = TextOps.bm25Index(s, d)
+    val build = () => { bigramBuild(); bm25Build() }
     val serve = () => {
-      val (postings, nTotal) = bm25Frames(s, d)
+      val (postings, nTotal) = lmFrames(s, roots())
       lmInterpFromCounts(
-        T.parquet(s, bigramRoot(s, d) + "/counts"),
+        counts(),
         postings.groupBy($"term".as("w2")).agg(sum($"tf").as("cf1")),
         nTotal.select($"n_total".as("lt")),
         docs(s, d))
@@ -248,9 +242,9 @@ object LmOps {
   private[graft] def lmBucketSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val build = () => { TextOps.writeBm25Index(s, d); () }
+    val (build, roots) = TextOps.bm25Index(s, d)
     val serve = () => {
-      val (postings, nTotal) = bm25Frames(s, d)
+      val (postings, nTotal) = lmFrames(s, roots())
       // same one-join scorable frame as the composed query (scoredLangOf)
       langTerciles(
         docs(s, d)
@@ -269,9 +263,9 @@ object LmOps {
   private[graft] def lmScoreLangSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val build = () => { TextOps.writeBm25Index(s, d); () }
+    val (build, roots) = TextOps.bm25Index(s, d)
     val serve = () => {
-      val (postings, _) = bm25Frames(s, d)
+      val (postings, _) = lmFrames(s, roots())
       val dl = docs(s, d).select($"doc_id", $"lang")
       // totality: the composed query emits n_tokens = 0 rows (null
       // rarity6) for docs with no model token — postings carry no row
@@ -397,9 +391,9 @@ object LmOps {
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
     val (base, delta) = TextOps.newestTenth(docs(s, d).select($"doc_id", $"lang", $"text"))
-    val root = SimilarityOps.serveRoot(s, d) + "/lm_score_incr"
+    val root = GenLog.datasetRoot(s, d) + "/lm_score_incr"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
+      GenLog.buildOnce(s, root) {
         val ftBase = TextOps.bm25TokensOf(base)
         val counts = unigramCountsOf(ftBase).localCheckpoint(eager = true)
         counts.write

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, T, X}
+import graft.index.GenLog
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -479,14 +480,14 @@ object RelationalOps {
       "FROM events WHERE value IS NOT NULL GROUP BY event_type ORDER BY event_type"
 
   /** Dataset-keyed canonical day-sketch state — build-once-serve-many
-    * ([[graft.index.GenLog.buildOnce]], the retrieval families' rule):
+    * ([[GenLog.buildOnce]], the retrieval families' rule):
     * the per-(day, event_type) q-digest generation persists under the
     * shared index catalog, so every serve in the session reads the same
     * committed bytes and a concurrent second builder skips.
     */
   private[graft] def writeQuantileState(s: SparkSession, d: String): String = {
-    val path = SimilarityOps.serveRoot(s, d) + "/qdigest"
-    graft.index.GenLog.buildOnce(s, path) {
+    val path = GenLog.datasetRoot(s, d) + "/qdigest"
+    GenLog.buildOnce(s, path) {
       quantileDaily(s, d)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -672,9 +673,9 @@ object RelationalOps {
   private[graft] def quantileIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val root = SimilarityOps.serveRoot(s, d) + "/rollupincr"
+    val dir = GenLog.datasetRoot(s, d) + "/rollupincr"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
+      StreamOps.RollupFamily.buildOnce(s, dir) {
         val ev = T(s, d, "events")
         val thrDf = ev.agg(
           date_add(
@@ -682,15 +683,14 @@ object RelationalOps {
             expr("(datediff(max(to_date(ts)), min(to_date(ts))) * 9) div 10")
               .cast("int")).as("thr"))
         val withThr = ev.crossJoin(broadcast(thrDf))
-        writeRollupStateFrom(
-          s, withThr.filter(to_date($"ts") <= $"thr").drop("thr"), s"$root/base")
-        writeRollupStateFrom(
-          s, withThr.filter(to_date($"ts") > $"thr").drop("thr"), s"$root/inc")
+        Seq(
+          withThr.filter(to_date($"ts") <= $"thr").drop("thr"),
+          withThr.filter(to_date($"ts") > $"thr").drop("thr"))
       }
       ()
     }
     val serve = () => {
-      val served = serveRollup(s, Seq(s"$root/base", s"$root/inc"))
+      val served = serveRollup(s, StreamOps.RollupFamily.roots(s, dir))
         .select(
           $"event_type",
           $"n_days",
@@ -837,17 +837,16 @@ object RelationalOps {
   private[graft] def rollupDailySplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val root = SimilarityOps.serveRoot(s, d) + "/rollupdaily"
+    val dir = GenLog.datasetRoot(s, d) + "/rollupdaily"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
+      StreamOps.RollupFamily.buildOnce(s, dir) {
         val ev = T(s, d, "events")
-        writeRollupStateFrom(s, ev.filter($"event_id" % 2 === 0), s"$root/g0")
-        writeRollupStateFrom(s, ev.filter($"event_id" % 2 === 1), s"$root/g1")
+        Seq(ev.filter($"event_id" % 2 === 0), ev.filter($"event_id" % 2 === 1))
       }
       ()
     }
     val serve = () => {
-      val served = serveRollupDaily(s, Seq(s"$root/g0", s"$root/g1"))
+      val served = serveRollupDaily(s, StreamOps.RollupFamily.roots(s, dir))
         .select(
           $"day",
           $"event_type",

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, T, X}
+import graft.index.GenLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -652,60 +653,34 @@ object SimilarityOps {
       "SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS rn2 " +
       "FROM cand) WHERE rn2 <= 10 ORDER BY probe_id, cos DESC, vec_id"
 
-  /** Build/serve split for retrieval — the persisted index a serving tier
-    * reads, vs the in-session index the q_sim_batch/q_sim_ivf_batch
-    * queries rebuild per run. Build: the corpus hive-partitioned on its
-    * index key (sign-LSH bucket / IVF cell — each bucket directory is one
-    * posting list) plus, for IVF, the codebook as a k-row parquet. Serve:
-    * a probe batch resolves its probe keys FIRST (≤ 9·|probes| buckets /
-    * nprobe·|probes| cells — bounded model state, collected like a
-    * codebook), so the index scan carries a LITERAL partition filter:
-    * only the probed directories are listed, opened, or read — the
-    * partition-pruning contract LayoutSpec proves for z-order, applied to
-    * the retrieval path (plan-asserted via PartitionFilters + inputFiles
-    * in ServeIndexSpec / PlanShapeSpec).
-    */
-  private[graft] def serveRoot(s: SparkSession, d: String): String =
-    // keyed by (warehouse root, sanitized dataset path) through the
-    // shared index catalog: the root is CONFIGURABLE
-    // (spark.graft.index.root — a durable warehouse in production),
-    // defaulting to an application-scoped temp dir so unconfigured runs
-    // never race or see stale state
-    graft.index.GenLog.datasetRoot(s, d)
+  // ---- build/serve split for retrieval ------------------------------
+  //
+  // The persisted index a serving tier reads, vs the in-session index the
+  // q_sim_batch/q_sim_ivf_batch queries rebuild per run. Build: the
+  // corpus hive-partitioned on its index key (sign-LSH bucket / IVF cell
+  // — each bucket directory is one posting list) plus, for IVF, the
+  // codebook as a k-row parquet, in its family's layout under
+  // GenLog.datasetRoot (a served query seeds the family, an incremental
+  // one adds one generation). Serve: a probe batch resolves its probe
+  // keys FIRST (≤ 9·|probes| buckets / nprobe·|probes| cells — bounded
+  // model state, collected like a codebook), so each root's scan carries
+  // a LITERAL partition filter: only the probed directories are listed,
+  // opened, or read — the partition-pruning contract LayoutSpec proves
+  // for z-order, applied to the retrieval path (plan-asserted via
+  // PartitionFilters + inputFiles in ServeIndexSpec / PlanShapeSpec).
 
-  /** Bucket-partitioned index write for an arbitrary corpus slice — the
-    * shared kernel of the monolithic build and the per-generation
-    * incremental build.
+  /** Bucket-partitioned index write for an arbitrary corpus slice — one
+    * generation (seed or batch) of [[StreamOps.AnnFamily]].
     */
   private[graft] def writeAnnIndexFor(
       s: SparkSession,
       e: DataFrame,
       path: String): Unit = {
     import s.implicits._
-    e.select(
-        $"vec_id",
-        $"embedding",
-        Vec.norm2($"embedding").as("n2"),
-        bucketCol.as("bucket"))
-      // repartition on the partition key (the writeCorpusShards rule):
-      // without it every task appends a file to every bucket directory —
-      // tasks × 256 small files; with it each posting list is owned by
-      // the tasks that wrote it
-      .repartition($"bucket")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(path)
-  }
-
-  /** Dataset-keyed canonical ANN build: build-once-serve-many — a second
-    * call for an already-committed path is a no-op, so every query over
-    * the same dataset shares one physical index
-    * ([[graft.index.GenLog.buildOnce]]).
-    */
-  private[graft] def writeAnnIndex(s: SparkSession, d: String, path: String): Unit = {
-    graft.index.GenLog.buildOnce(s, path)(writeAnnIndexFor(s, emb(s, d), path))
-    ()
+    GenLog.writePartitioned(
+      e.select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"), bucketCol.as("bucket")),
+      "bucket",
+      path)
   }
 
   /** The serving tier's id-keyed EMBEDDING STORE: (vec_id, embedding, n2,
@@ -720,40 +695,24 @@ object SimilarityOps {
       e: DataFrame,
       path: String): Unit = {
     import s.implicits._
-    e.select(
+    GenLog.writePartitioned(
+      e.select(
         $"vec_id",
         $"embedding",
         Vec.norm2($"embedding").as("n2"),
         bucketCol.as("bucket"),
-        pmod(hash($"vec_id"), lit(64)).as("ishard"))
-      .repartition($"ishard")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("ishard")
-      .parquet(path)
-  }
-
-  private[graft] def writeEmbStore(s: SparkSession, d: String, path: String): Unit = {
-    graft.index.GenLog.buildOnce(s, path)(writeEmbStoreFor(s, emb(s, d), path))
-    ()
+        pmod(hash($"vec_id"), lit(64)).as("ishard")),
+      "ishard",
+      path)
   }
 
   /** Serve a probe frame (probe_id, p, pn2, pbucket — already multi-probe
-    * exploded) from a persisted ANN index: statically pruned scan of the
-    * probed bucket directories, broadcast probes, per-probe top-k.
+    * exploded) from the roots of a persisted ANN index, merged on read:
+    * vector ids are disjoint across generations (monotone ingest), so the
+    * union is exact and the bucket INSET filter pushes into every root's
+    * scan independently; broadcast probes, per-probe top-k.
     */
   private[graft] def serveAnnBatch(
-      s: SparkSession,
-      indexPath: String,
-      probes: DataFrame): DataFrame =
-    serveAnnBatchMulti(s, Seq(indexPath), probes)
-
-  /** Serve a probe batch from one or more index GENERATIONS merged on
-    * read: vector ids are disjoint across generations (monotone ingest),
-    * so the union is exact and the bucket INSET filter pushes into every
-    * generation's scan independently.
-    */
-  private[graft] def serveAnnBatchMulti(
       s: SparkSession,
       indexPaths: Seq[String],
       probes: DataFrame): DataFrame = {
@@ -815,18 +774,28 @@ object SimilarityOps {
     */
   private[graft] def simServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val path = s"${serveRoot(s, d)}/ann"
-    (() => writeAnnIndex(s, d, path),
-      () => serveAnnBatch(s, path, batchProbeFrame(s, d)))
+    val (build, roots) = annIndex(s, d)
+    (build, () => serveAnnBatch(s, roots(), batchProbeFrame(s, d)))
+  }
+
+  /** The canonical ANN index of a dataset — an [[StreamOps.AnnFamily]]
+    * seeded once from the whole corpus — as its build and its roots:
+    * q_sim_served and the RRF tier read this one physical index.
+    */
+  private[graft] def annIndex(
+      s: SparkSession, d: String): (() => Unit, () => Seq[String]) = {
+    val dir = s"${GenLog.datasetRoot(s, d)}/ann"
+    (() => { StreamOps.AnnFamily.buildOnce(s, dir)(Seq(emb(s, d))); () },
+      () => StreamOps.AnnFamily.roots(s, dir))
   }
 
   /** q_sim_incr — INCREMENTAL ANN index maintenance, the vector sibling
     * of `q_index_bm25_incr`: the newest 10% of vector ids (monotone
-    * ingest) are today's batch; the base generation stands in for
+    * ingest) are today's batch; the `v0/full` seed stands in for
     * yesterday's persisted bucket index. The batch writes its OWN
-    * bucket-partitioned generation — O(batch) build work and bytes, the
-    * base directories are never rewritten or re-read — and serving
-    * unions the generations on read (ids are disjoint, so the union is
+    * bucket-partitioned generation (`v1/gen`) — O(batch) build work and
+    * bytes, the base directories are never rewritten or re-read — and
+    * serving unions the roots on read (ids are disjoint, so the union is
     * exact) with the same literal bucket INSET pruning pushed into BOTH
     * scans. The oracle is the monolithic q_sim_batch SQL: merge-on-read
     * must not change a single hit, re-proven by the hash gate every
@@ -836,34 +805,18 @@ object SimilarityOps {
   private[graft] def simIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val root = s"${serveRoot(s, d)}/ann_incr"
+    val dir = s"${GenLog.datasetRoot(s, d)}/ann_incr"
     val build = () => {
-      // the split threshold is ONE long of bounded driver state (the probe
-      // bucket-id precedent): ids above ⌊9·max/10⌋ form the batch
-      graft.index.GenLog.buildOnce(s, root) {
+      StreamOps.AnnFamily.buildOnce(s, dir) {
+        // the split threshold is ONE long of bounded driver state (the
+        // probe bucket-id precedent): ids above ⌊9·max/10⌋ form the batch
         val thr = emb(s, d).agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
-        writeAnnIndexFor(s, emb(s, d).filter($"vec_id" <= thr), s"$root/gen0")
-        writeAnnIndexFor(s, emb(s, d).filter($"vec_id" > thr), s"$root/gen1")
+        Seq(emb(s, d).filter($"vec_id" <= thr), emb(s, d).filter($"vec_id" > thr))
       }
       ()
     }
     (build,
-      () =>
-        serveAnnBatchMulti(
-          s, Seq(s"$root/gen0", s"$root/gen1"), batchProbeFrame(s, d)))
-  }
-
-  private[graft] def writeIvfIndex(s: SparkSession, d: String, path: String): Unit = {
-    import s.implicits._
-    graft.index.GenLog.buildOnce(s, path) {
-      val e =
-        emb(s, d).select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
-      val cents = e
-        .filter($"vec_id" < IvfCells)
-        .select($"vec_id".as("c_id"), $"embedding".as("c"), $"n2".as("cn2"))
-      writeIvfIndexFrom(s, e, cents, path)
-    }
-    ()
+      () => serveAnnBatch(s, StreamOps.AnnFamily.roots(s, dir), batchProbeFrame(s, d)))
   }
 
   /** Cell-assignment write against a given codebook: the shared kernel
@@ -879,19 +832,11 @@ object SimilarityOps {
       cents: DataFrame,
       path: String): Unit = {
     import s.implicits._
-    vecs
+    val cells = vecs
       .select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
       .crossJoin(broadcast(codebookRow(cents)))
-      .select(
-        $"vec_id",
-        $"embedding",
-        $"n2",
-        (-array_max(scoredCol).getField("nid")).as("cell"))
-      .repartition($"cell") // one writer set per cell dir, not tasks×cells
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
+      .select($"vec_id", $"embedding", $"n2", (-array_max(scoredCol).getField("nid")).as("cell"))
+    GenLog.writePartitioned(cells, "cell", s"$path/cells")
   }
 
   /** IVF build with an arbitrary codebook (the stand-in cents for the
@@ -910,26 +855,16 @@ object SimilarityOps {
       .parquet(s"$path/codebook")
   }
 
-  /** Serve a probe frame from a persisted IVF index: the probes rank their
-    * top-nprobe cells against the READ-BACK codebook (broadcast, map-side
-    * scoring — the serving tier holds only the k×dim codebook), then the
-    * cell-partitioned corpus is scanned with a literal cell filter.
+  /** Serve a probe frame from the roots of a persisted IVF index, merged
+    * on read: the probes rank their top-nprobe cells against the
+    * READ-BACK codebook of the newest full snapshot (`indexPaths.head` —
+    * all generations assigned against the same epoch quantizer; broadcast,
+    * map-side scoring — the serving tier holds only the k×dim codebook),
+    * then each root's cell-partitioned scan is pruned by the same literal
+    * pcell filter independently. Vector ids are disjoint across
+    * generations (monotone ingest): the union is exact.
     */
   private[graft] def serveIvfBatch(
-      s: SparkSession,
-      indexPath: String,
-      probeVecs: DataFrame): DataFrame =
-    serveIvfBatchMulti(s, Seq(indexPath), probeVecs)
-
-  /** [[serveIvfBatch]] over index GENERATIONS merged on read: the
-    * codebook comes from the newest full snapshot (`paths.head` — all
-    * generations assigned against the same epoch quantizer, so one
-    * codebook ranks every probe), and each generation's cell scan is
-    * pruned by the same literal pcell filter independently. Vector ids
-    * are disjoint across generations (monotone ingest): the union is
-    * exact.
-    */
-  private[graft] def serveIvfBatchMulti(
       s: SparkSession,
       indexPaths: Seq[String],
       probeVecs: DataFrame): DataFrame = {
@@ -970,11 +905,22 @@ object SimilarityOps {
   private[graft] def simIvfServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val path = s"${serveRoot(s, d)}/ivf"
-    (() => writeIvfIndex(s, d, path),
+    val dir = s"${GenLog.datasetRoot(s, d)}/ivf"
+    val build = () => {
+      // a raw claim, not ivfFamily's buildOnce: the seed needs the codebook
+      GenLog.buildOnce(s, dir) {
+        val e = emb(s, d)
+        val cents = e
+          .filter($"vec_id" < IvfCells)
+          .select($"vec_id".as("c_id"), $"embedding".as("c"), Vec.norm2($"embedding").as("cn2"))
+        StreamOps.seedIvfIndex(s, e, cents, dir)
+      }
+      ()
+    }
+    (build,
       () => serveIvfBatch(
         s,
-        path,
+        StreamOps.ivfFamily(dir).roots(s, dir),
         emb(s, d)
           .select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
           .filter($"vec_id" < BatchProbes)))
@@ -1135,29 +1081,17 @@ object SimilarityOps {
     quantStage(e, quantProbe(e))
   }
 
-  /** Quantized-index write for an arbitrary corpus slice — the shared
-    * kernel of the monolithic build and the per-generation incremental
-    * build: the quantized frame bucket-partitioned to parquet — int8
-    * lanes in the scan tier, float vectors riding along for the 20-row
-    * rescore tier.
+  /** Quantized-index write for an arbitrary corpus slice — one
+    * generation (seed or batch) of [[StreamOps.QuantFamily]]: the
+    * quantized frame bucket-partitioned to parquet — int8 lanes in the
+    * scan tier, float vectors riding along for the 20-row rescore tier.
     */
   private[graft] def writeQuantIndexFor(
       s: SparkSession,
       vecs: DataFrame,
       path: String): Unit = {
     import s.implicits._
-    quantizedFrame(vecs.select($"vec_id", $"embedding"))
-      .repartition($"bucket")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(path)
-  }
-
-  /** Dataset-keyed quantized-index build (build-once). */
-  private[graft] def writeQuantIndex(s: SparkSession, d: String, path: String): Unit = {
-    graft.index.GenLog.buildOnce(s, path)(writeQuantIndexFor(s, emb(s, d), path))
-    ()
+    GenLog.writePartitioned(quantizedFrame(vecs.select($"vec_id", $"embedding")), "bucket", path)
   }
 
   /** The standard quantized probe (vec_id 0) computed in-session — one
@@ -1167,13 +1101,13 @@ object SimilarityOps {
   private[graft] def quantProbeFrame(s: SparkSession, d: String): DataFrame =
     quantProbe(quantizedFrame(emb(s, d))).localCheckpoint()
 
-  /** Serve the standard probe from one or more quantized index
-    * GENERATIONS merged on read: each generation's scan pruned by the
-    * same literal bucket INSET filter; vector ids disjoint across
-    * generations (monotone ingest), so the union — and therefore the
-    * integer stage-1 cut — is exact.
+  /** Serve the standard probe from the roots of a quantized index,
+    * merged on read: each root's scan pruned by the same literal bucket
+    * INSET filter; vector ids disjoint across generations (monotone
+    * ingest), so the union — and therefore the integer stage-1 cut — is
+    * exact.
     */
-  private[graft] def serveQuantBatchMulti(
+  private[graft] def serveQuantBatch(
       s: SparkSession,
       indexPaths: Seq[String],
       probes: DataFrame): DataFrame = {
@@ -1198,9 +1132,9 @@ object SimilarityOps {
     */
   private[graft] def simQuantizedServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val path = s"${serveRoot(s, d)}/annq"
-    (() => writeQuantIndex(s, d, path),
-      () => serveQuantBatchMulti(s, Seq(path), quantProbeFrame(s, d)))
+    val dir = s"${GenLog.datasetRoot(s, d)}/annq"
+    (() => { StreamOps.QuantFamily.buildOnce(s, dir)(Seq(emb(s, d))); () },
+      () => serveQuantBatch(s, StreamOps.QuantFamily.roots(s, dir), quantProbeFrame(s, d)))
   }
 
   private val QuantizedSql = {
@@ -1345,9 +1279,9 @@ object SimilarityOps {
     val k = semCellCount(e)
     val thr = e.agg(max($"vec_id")).head().getLong(0) / 2
     val cells = semanticCells(e, k)
-    val path = s"${serveRoot(s, d)}/semcells"
+    val path = s"${GenLog.datasetRoot(s, d)}/semcells"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, path) {
+      GenLog.buildOnce(s, path) {
         cells
           .filter($"vec_id" <= thr)
           .write
@@ -1502,12 +1436,7 @@ object SimilarityOps {
     cents.coalesce(1).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/cents")
-    semanticCellsWith(e, cents)
-      .repartition(col("cell"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
+    GenLog.writePartitioned(semanticCellsWith(e, cents), "cell", s"$path/cells")
     semSurvivorsWith(e, cents).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/survivors")
@@ -1544,11 +1473,7 @@ object SimilarityOps {
     val survivors = b
       .join(semWitnessed(prior.unionByName(b), b), Seq("vec_id"), "left_anti")
       .select($"vec_id", $"cell")
-    b.repartition(col("cell"))
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
+    GenLog.writePartitioned(b, "cell", s"$path/cells")
     survivors.write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/survivors")
@@ -1907,7 +1832,7 @@ object SimilarityOps {
 
   private[graft] def writePqIndex(s: SparkSession, d: String, path: String): Unit = {
     import s.implicits._
-    graft.index.GenLog.buildOnce(s, path) {
+    GenLog.buildOnce(s, path) {
       val e = emb(s, d).select($"vec_id", $"embedding")
       val cents = pqStandinCents(e)
       cents
@@ -1964,7 +1889,7 @@ object SimilarityOps {
   }
 
   private[graft] def simPqServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${serveRoot(s, d)}/pq"
+    val path = s"${GenLog.datasetRoot(s, d)}/pq"
     writePqIndex(s, d, path)
     servePqCodes(s, d, s"$path/codebook", Seq(s"$path/codes"))
   }
@@ -1978,8 +1903,8 @@ object SimilarityOps {
     */
   private def simPqIncr(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = s"${serveRoot(s, d)}/pq_incr"
-    graft.index.GenLog.buildOnce(s, root) {
+    val root = s"${GenLog.datasetRoot(s, d)}/pq_incr"
+    GenLog.buildOnce(s, root) {
       val e = emb(s, d).select($"vec_id", $"embedding")
       val cents = pqStandinCents(e)
       cents

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -200,20 +202,30 @@ object Sinks {
       mergedSnapshot(staged, url, table, keys, props)
         .write.mode(SaveMode.Overwrite).jdbc(url, stagingTable, props)
       val conn = connect(url, props)
-      try {
-        conn.setAutoCommit(false)
-        val st = conn.createStatement()
-        try {
-          st.executeUpdate(s"DROP TABLE $table")
-          st.executeUpdate(renameTableSql(url, stagingTable, table))
-        } finally st.close()
-        conn.commit()
-      } catch {
-        case t: Throwable =>
-          try conn.rollback()
-          finally {}
-          throw t
-      } finally conn.close()
+      try
+        executeAtomically(
+          conn, Seq(s"DROP TABLE $table", renameTableSql(url, stagingTable, table)))
+      finally conn.close()
+    }
+  }
+
+  /** Run `stmts` on `conn` as one transaction: commit them all, or roll
+    * back and rethrow the failure. A rollback that fails too is attached
+    * to that failure as suppressed, never thrown in its place — the
+    * caller sees why the publish failed, not only why the cleanup did.
+    */
+  private[ops] def executeAtomically(conn: java.sql.Connection, stmts: Seq[String]): Unit = {
+    conn.setAutoCommit(false)
+    try {
+      val st = conn.createStatement()
+      try stmts.foreach(q => st.executeUpdate(q))
+      finally st.close()
+      conn.commit()
+    } catch {
+      case NonFatal(t) =>
+        try conn.rollback()
+        catch { case NonFatal(r) => t.addSuppressed(r) }
+        throw t
     }
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{QueryDef, T, X}
 import graft.index.GenLog
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
@@ -664,17 +664,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Version listing for every persisted index family — delegated to the
-    * shared generation-log kernel ([[GenLog]]): `v<N>`
-    * subdirectories whose required artifact is COMMITTED (carries the
-    * kernel's marker), so a crashed write is invisible to every reader.
-    */
-  private def indexVersions(
-      s: SparkSession,
-      indexDir: String,
-      requiring: String = ""): Seq[Long] =
-    GenLog.versions(s, indexDir, requiring)
-
   /** Maintenance for the versioned continuous-dedup indexes: drop the
     * SUPERSEDED index snapshots (md5/band state of all but the newest
     * `keep` versions), never the per-batch outputs (assign / pairs dirs
@@ -750,7 +739,7 @@ object StreamOps {
     */
   def ccFromPairState(s: SparkSession, indexDir: String): DataFrame = {
     def read(sub: String): DataFrame = T.parquet(s,
-      indexVersions(s, indexDir, requiring = sub)
+      GenLog.versions(s, indexDir, requiring = sub)
         .sorted
         .map(v => s"$indexDir/v$v/$sub"): _*)
     DedupOps.ccAssign(
@@ -841,12 +830,12 @@ object StreamOps {
       indexDir: String,
       upTo: Long): (DataFrame, DataFrame) = {
     val snaps =
-      indexVersions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
+      GenLog.versions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
     require(
       snaps.nonEmpty,
       s"dedup index at $indexDir has no snapshot version <= $upTo (run seedDedupIndex)")
     val snapVer = snaps.max
-    def vers(sub: String): Seq[String] = indexVersions(s, indexDir, requiring = sub)
+    def vers(sub: String): Seq[String] = GenLog.versions(s, indexDir, requiring = sub)
       .filter(v => v > snapVer && v <= upTo)
       .sorted
       .map(v => s"$indexDir/v$v/$sub")
@@ -951,12 +940,12 @@ object StreamOps {
     // version k WITHOUT that batch's increments — and the retried
     // batch's increments, landing at v == snapVer, would then be
     // invisible to every merge-on-read forever
-    val committed = indexVersions(s, indexDir, requiring = "band_inc")
+    val committed = GenLog.versions(s, indexDir, requiring = "band_inc")
     // an unseeded dir (or one whose seed crashed pre-commit) has no
     // committed band_index at all — nothing to fold against and no
     // snapshot to gate cleanup on, so return before any .max on an
     // empty version list can throw
-    val snaps0 = indexVersions(s, indexDir, requiring = "band_index")
+    val snaps0 = GenLog.versions(s, indexDir, requiring = "band_index")
     if (snaps0.isEmpty) return
     if (committed.nonEmpty && snaps0.max < committed.max) {
       val k = committed.max
@@ -975,9 +964,9 @@ object StreamOps {
     // state just before the fold committed finishes its scan.
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val snapVer = indexVersions(s, indexDir, requiring = "band_index").max
+    val snapVer = GenLog.versions(s, indexDir, requiring = "band_index").max
     Seq("md5_inc", "band_inc").foreach { sub =>
-      indexVersions(s, indexDir, requiring = sub).filter(_ <= snapVer).foreach { v =>
+      GenLog.versions(s, indexDir, requiring = sub).filter(_ <= snapVer).foreach { v =>
         GenLog.graceDelete(
           fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$sub"))
       }
@@ -995,10 +984,10 @@ object StreamOps {
     // committed assign dirs only (not a v*/assign glob): an in-flight
     // batch's partial write must never leak into the read view
     val a = T.parquet(s,
-      indexVersions(s, indexDir, requiring = "assign")
+      GenLog.versions(s, indexDir, requiring = "assign")
         .sorted
         .map(v => s"$indexDir/v$v/assign"): _*)
-    val remapVers = indexVersions(s, indexDir, requiring = "remap")
+    val remapVers = GenLog.versions(s, indexDir, requiring = "remap")
     if (remapVers.isEmpty) a
     else {
       val r = composeRemap(
@@ -1028,12 +1017,12 @@ object StreamOps {
       indexDir: String,
       upTo: Long): DataFrame = {
     val snaps =
-      indexVersions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
+      GenLog.versions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
     require(
       snaps.nonEmpty,
       s"embed index at $indexDir has no snapshot version <= $upTo (run seedEmbedIndex)")
     val snapVer = snaps.max
-    val incs = indexVersions(s, indexDir, requiring = "band_inc")
+    val incs = GenLog.versions(s, indexDir, requiring = "band_inc")
       .filter(v => v > snapVer && v <= upTo)
       .sorted
       .map(v => s"$indexDir/v$v/band_inc")
@@ -1085,10 +1074,10 @@ object StreamOps {
   def compactEmbedIndex(s: SparkSession, indexDir: String): Unit = {
     // gate on band_inc, the batch's LAST-written artifact (the
     // compactDedupIndex rationale)
-    val committed = indexVersions(s, indexDir, requiring = "band_inc")
+    val committed = GenLog.versions(s, indexDir, requiring = "band_inc")
     // no committed band_index → unseeded (or seed crashed pre-commit):
     // return before an empty-Seq .max can throw (compactDedupIndex shape)
-    val snaps0 = indexVersions(s, indexDir, requiring = "band_index")
+    val snaps0 = GenLog.versions(s, indexDir, requiring = "band_index")
     if (snaps0.isEmpty) return
     if (committed.nonEmpty && snaps0.max < committed.max) {
       // write-then-mark: a crash mid-fold leaves an uncommitted snapshot
@@ -1101,8 +1090,8 @@ object StreamOps {
     // grace cleanup, unconditionally (the compactDedupIndex shape)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val snapVer = indexVersions(s, indexDir, requiring = "band_index").max
-    indexVersions(s, indexDir, requiring = "band_inc").filter(_ <= snapVer).foreach { v =>
+    val snapVer = GenLog.versions(s, indexDir, requiring = "band_index").max
+    GenLog.versions(s, indexDir, requiring = "band_inc").filter(_ <= snapVer).foreach { v =>
       GenLog.graceDelete(
         fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/band_inc"))
     }
@@ -1114,7 +1103,7 @@ object StreamOps {
     */
   def readEmbedPairs(s: SparkSession, indexDir: String): DataFrame =
     T.parquet(s,
-      indexVersions(s, indexDir, requiring = "pairs")
+      GenLog.versions(s, indexDir, requiring = "pairs")
         .sorted
         .map(v => s"$indexDir/v$v/pairs"): _*)
 
@@ -1138,23 +1127,27 @@ object StreamOps {
   // overwrites the same output from the same input, and version gaps
   // from empty batches are skipped on read.
 
-  /** Postings family (the streaming form of q_index_bm25_incr): fold
-    * unions postings shard-wise and sums the one-row corpus stats —
-    * union-preserving, so no read changes (df is derived at serve time).
+  // the fold of a partitioned artifact: the union of every root's `cols`,
+  // rewritten partitioned on `key`
+  private def foldPartitioned(
+      s: SparkSession, paths: Seq[String], key: String, out: String, cols: Column*): Unit =
+    GenLog.writePartitioned(
+      paths.map(p => T.parquet(s, p).select(cols: _*)).reduce(_ unionByName _), key, out)
+
+  /** Postings family (q_index_bm25_served's index, and the streaming
+    * form of q_index_bm25_incr): fold unions postings shard-wise and sums
+    * the one-row corpus stats — union-preserving, so no read changes (df
+    * is derived at serve time). Served by [[TextOps.serveBm25]] over
+    * [[GenLog.GenFamily.roots]], so the streamed index answers exactly
+    * like a single built one.
     */
   val Bm25Family = GenLog.GenFamily(
     label = "lexical index",
     write = (s, docs, path) => { TextOps.writeBm25IndexFrom(s, docs, path); () },
     fold = (s, roots, path) => {
-      roots
-        .map(p => T.parquet(s, s"$p/postings"))
-        .reduce(_ unionByName _)
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tshard"))
-        .repartition(col("tshard"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tshard")
-        .parquet(s"$path/postings")
+      foldPartitioned(
+        s, roots.map(p => s"$p/postings"), "tshard", s"$path/postings",
+        col("term"), col("doc_id"), col("tf"), col("dl"), col("tshard"))
       roots
         .map(p => T.parquet(s, s"$p/stats"))
         .reduce(_ unionByName _)
@@ -1164,20 +1157,15 @@ object StreamOps {
         .parquet(s"$path/stats")
     })
 
-  /** ANN bucket family (the streaming form of q_sim_incr). */
+  /** ANN bucket family (q_sim_served's index, and the streaming form of
+    * q_sim_incr), served by [[SimilarityOps.serveAnnBatch]] over its roots.
+    */
   val AnnFamily = GenLog.GenFamily(
     label = "ANN index",
     write = (s, vecs, path) => SimilarityOps.writeAnnIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
-      roots
-        .map(p => T.parquet(s, p)
-          .select(col("vec_id"), col("embedding"), col("n2"), col("bucket")))
-        .reduce(_ unionByName _)
-        .repartition(col("bucket"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(path))
+      foldPartitioned(
+        s, roots, "bucket", path, col("vec_id"), col("embedding"), col("n2"), col("bucket")))
 
   /** Id-sharded embedding-store family — the by-id lookup complement of
     * the ANN buckets (the serving tier's feedback-seed fetch): same
@@ -1187,25 +1175,9 @@ object StreamOps {
     label = "embedding store",
     write = (s, vecs, path) => SimilarityOps.writeEmbStoreFor(s, vecs, path),
     fold = (s, roots, path) =>
-      roots
-        .map(p => T.parquet(s, p)
-          .select(
-            col("vec_id"), col("embedding"), col("n2"),
-            col("bucket"), col("ishard")))
-        .reduce(_ unionByName _)
-        .repartition(col("ishard"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("ishard")
-        .parquet(path))
-
-  /** Serve the fixed BM25 query set from the continuous index —
-    * merge-on-read over the [[Bm25Family]] roots through the same
-    * [[TextOps.serveBm25]] union q_index_bm25_incr uses, so the streamed
-    * index answers exactly like a single rebuilt one.
-    */
-  def serveBm25Continuous(s: SparkSession, indexDir: String): DataFrame =
-    TextOps.serveBm25(s, Bm25Family.roots(s, indexDir))
+      foldPartitioned(
+        s, roots, "ishard", path,
+        col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("ishard")))
 
   /** Metrics-rollup family — the events table's maintained family:
     * per-(day, event_type) HLL + q-digest sketch state
@@ -1213,11 +1185,13 @@ object StreamOps {
     * protocol as the retrieval indexes. Each events micro-batch writes
     * its OWN committed generation — O(batch) work and bytes, base day
     * sketches never recomputed — and the merged distinct/quantile report
-    * ([[RelationalOps.serveRollup]]) serves continuously from maintained
-    * state. Fold re-merges same-day partials by key — both sketches'
-    * unions are associative (register-wise max / key-wise count sum), so
-    * compaction never moves an exact column (n rides IN the digests; day
-    * counts are countDistinct). Day-straddling batches keep every exact
+    * ([[RelationalOps.serveRollup]]) and its time-sliced form
+    * ([[RelationalOps.serveRollupDaily]]) serve over the roots, exactly
+    * like the registry's incremental queries. Fold re-merges same-day
+    * partials by key — both sketches' unions are associative
+    * (register-wise max / key-wise count sum), so compaction never moves
+    * an exact column (n rides IN the digests; day counts are
+    * countDistinct). Day-straddling batches keep every exact
     * column and the rank/rsd bounds but not bit-identity of the merged
     * digest (extra early compressions) — StreamingRollupSpec pins exact
     * identity on day-aligned feeds and the invariants on straddled ones.
@@ -1242,65 +1216,22 @@ object StreamOps {
         .parquet(path)
     })
 
-  /** The merged distinct/quantile report from the maintained state —
-    * merge-on-read over the committed roots through the same
-    * [[RelationalOps.serveRollup]] the registry's incremental query
-    * uses, so the streamed rollup answers exactly like a rebuilt one.
-    */
-  def serveRollupContinuous(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.serveRollup(s, RollupFamily.roots(s, dir))
-
-  /** The time-sliced (day, event_type) report from the same maintained
-    * state — see [[RelationalOps.serveRollupDaily]].
-    */
-  def serveRollupDailyContinuous(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.serveRollupDaily(s, RollupFamily.roots(s, dir))
-
   /** Positional-postings family — the streaming form of
     * q_index_phrase_served's index: each batch writes its OWN
     * (term, doc_id, pos) occurrence rows (O(batch) work and bytes, no
     * prior state read). Adjacency is within-document and generations'
     * doc sets are disjoint, so merge-on-read union over roots answers
-    * exactly like a single rebuilt index; fold is a re-shard concat.
+    * exactly like a single rebuilt index ([[TextOps.servePhrase]], pruned
+    * to the probed shards on every root's scan); fold is a re-shard
+    * concat.
     */
   val PhraseFamily = GenLog.GenFamily(
     label = "phrase index",
     write = (s, docs, path) => TextOps.writePhraseIndexFrom(s, docs, path),
     fold = (s, roots, path) =>
-      roots
-        .map(p => T.parquet(s, s"$p/postings")
-          .select(col("term"), col("doc_id"), col("pos"), col("tshard")))
-        .reduce(_ unionByName _)
-        .repartition(col("tshard"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tshard")
-        .parquet(s"$path/postings"))
-
-  /** Serve the phrase benchmark from the continuous positional index —
-    * merge-on-read over generation roots through the same
-    * [[TextOps.servePhrase]] the registry's served query uses (pruned to
-    * the probed shards on EVERY generation's scan), so the streamed
-    * index answers exactly like a single rebuilt one.
-    */
-  def servePhraseContinuous(s: SparkSession, indexDir: String): DataFrame =
-    TextOps.servePhrase(s, PhraseFamily.roots(s, indexDir), TextOps.PhraseQueries)
-
-  // merge-on-read postings + summed corpus stats — the two frames every
-  // LM serve derives from (generation-local postings union like the
-  // BM25 serve; stats rows sum because each generation's `l` is its own
-  // batch's token count)
-  private def lmFrames(s: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
-    val roots = Bm25Family.roots(s, indexDir)
-    val postings = roots
-      .map(p => T.parquet(s, s"$p/postings"))
-      .reduce(_ unionByName _)
-    val nTotal = roots
-      .map(p => T.parquet(s, s"$p/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("l")).as("n_total"))
-    (postings, nTotal)
-  }
+      foldPartitioned(
+        s, roots.map(p => s"$p/postings"), "tshard", s"$path/postings",
+        col("term"), col("doc_id"), col("pos"), col("tshard")))
 
   /** Serve the q_lm_unigram model from the continuous LEXICAL index —
     * cf = Σ tf over merge-on-read postings, N = Σ generation stats — so
@@ -1309,7 +1240,7 @@ object StreamOps {
     * (StreamingLmSpec asserts ≡ the registry query at every stage).
     */
   def serveLmUnigramContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val (postings, nTotal) = lmFrames(s, indexDir)
+    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     LmOps.lmUnigramFromCounts(
       postings
         .groupBy(col("term"))
@@ -1325,7 +1256,7 @@ object StreamOps {
     * never reads).
     */
   def serveLmScoreContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val (postings, nTotal) = lmFrames(s, indexDir)
+    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     LmOps.lmScoreFromPostings(postings, nTotal)
   }
 
@@ -1341,7 +1272,7 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       docLang: DataFrame): DataFrame = {
-    val (postings, _) = lmFrames(s, indexDir)
+    val (postings, _) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     CurationOps.sampleImportanceFromPostings(postings, docLang)
   }
 
@@ -1359,7 +1290,7 @@ object StreamOps {
       indexDir: String,
       docLang: DataFrame): DataFrame = {
     import s.implicits._
-    val (postings, _) = lmFrames(s, indexDir)
+    val (postings, _) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     LmOps.lmScoreLangAggFromPostings(postings, docLang)
       .join(docLang.select($"doc_id", $"lang"), Seq("doc_id"))
       .select(
@@ -1370,67 +1301,19 @@ object StreamOps {
       .orderBy($"doc_id")
   }
 
-  /** Serve a probe batch from the continuous ANN index — merge-on-read
-    * over the [[AnnFamily]] roots through the same pruned union
-    * `q_sim_incr` uses, so the streamed index answers exactly like a
-    * single rebuilt one.
-    */
-  def serveAnnContinuous(
-      s: SparkSession,
-      indexDir: String,
-      probes: DataFrame): DataFrame =
-    SimilarityOps.serveAnnBatchMulti(s, AnnFamily.roots(s, indexDir), probes)
-
-  /** CONTINUOUS HYBRID RETRIEVAL — q_retrieval_rrf served from the three
-    * maintained generation sets (streamed postings, streamed ANN
-    * buckets, streamed id-sharded store) through
-    * [[TextOps.serveRrfMulti]]: every leg unions its generation roots
-    * with the same pruning as the static serve, so the continuously
-    * maintained hybrid tier answers exactly like monolithic rebuilds at
-    * every point in time (StreamingRrfSpec pins serve ≡ the
-    * oracle-checked q_retrieval_rrf row-for-row after each batch).
-    */
-  def serveRrfContinuous(
-      s: SparkSession,
-      bm25IndexDir: String,
-      annIndexDir: String,
-      storeIndexDir: String): DataFrame =
-    TextOps.serveRrfMulti(
-      s,
-      Bm25Family.roots(s, bm25IndexDir),
-      AnnFamily.roots(s, annIndexDir),
-      EmbStoreFamily.roots(s, storeIndexDir))
-
   /** Quantized-index family — the int8 scan tier maintained
     * continuously beside the float tier: same generation-local shape as
     * [[AnnFamily]] (quantization is per-vector, so a batch quantizes
-    * without reading prior state).
+    * without reading prior state), served by
+    * [[SimilarityOps.serveQuantBatch]] over its roots.
     */
   val QuantFamily = GenLog.GenFamily(
     label = "quantized index",
     write = (s, vecs, path) => SimilarityOps.writeQuantIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
-      roots
-        .map(p => T.parquet(s, p)
-          .select(
-            col("vec_id"), col("embedding"), col("n2"),
-            col("bucket"), col("qv")))
-        .reduce(_ unionByName _)
-        .repartition(col("bucket"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(path))
-
-  /** Serve a probe batch from the quantized scan tier — merge-on-read
-    * over the [[QuantFamily]] roots (the [[AnnFamily]] notes apply
-    * verbatim).
-    */
-  def serveQuantContinuous(
-      s: SparkSession,
-      indexDir: String,
-      probes: DataFrame): DataFrame =
-    SimilarityOps.serveQuantBatchMulti(s, QuantFamily.roots(s, indexDir), probes)
+      foldPartitioned(
+        s, roots, "bucket", path,
+        col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("qv")))
 
   /** IVF family — the cell-partitioned similarity index. Unlike the
     * sign-bucket families, a cell assignment DEPENDS on model state:
@@ -1440,6 +1323,7 @@ object StreamOps {
     * increments stay generation-local and merge-on-read stays exact.
     * Retraining the quantizer is an epoch roll (re-seed + backfill), not
     * a streaming operation — the standard IVF production contract.
+    * Served by [[SimilarityOps.serveIvfBatch]] over its roots.
     */
   def ivfFamily(indexDir: String): GenLog.GenFamily = GenLog.GenFamily(
     label = "IVF index",
@@ -1448,16 +1332,9 @@ object StreamOps {
       SimilarityOps.writeIvfCellsFrom(s, vecs, cb, path)
     },
     fold = (s, roots, path) => {
-      roots
-        .map(p => T.parquet(s, s"$p/cells")
-          .select(
-            col("vec_id"), col("embedding"), col("n2"), col("cell")))
-        .reduce(_ unionByName _)
-        .repartition(col("cell"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell")
-        .parquet(s"$path/cells")
+      foldPartitioned(
+        s, roots.map(p => s"$p/cells"), "cell", s"$path/cells",
+        col("vec_id"), col("embedding"), col("n2"), col("cell"))
       T.parquet(s, s"${roots.head}/codebook")
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1481,16 +1358,6 @@ object StreamOps {
       s, base.select(col("vec_id"), col("embedding")), cents, p)
     GenLog.markCommitted(s, p)
   }
-
-  /** Serve a probe batch from the continuous IVF index — merge-on-read
-    * through the same pruned cell union [[SimilarityOps.serveIvfBatchMulti]]
-    * the static serve uses.
-    */
-  def serveIvfContinuous(
-      s: SparkSession,
-      indexDir: String,
-      probeVecs: DataFrame): DataFrame =
-    SimilarityOps.serveIvfBatchMulti(s, ivfFamily(indexDir).roots(s, indexDir), probeVecs)
 
   /** The EPOCH ROLL — the operation the streaming contract defers
     * quantizer retraining to: reassign every vector across the current
@@ -1558,17 +1425,9 @@ object StreamOps {
       SimilarityOps.writeSemGeneration(s, batch, cents, roots, path)
     },
     fold = (s, roots, path) => {
-      roots
-        .map(p => T.parquet(s, s"$p/cells")
-          .select(
-            col("vec_id"), col("embedding"), col("n2"),
-            col("cell").cast("long").as("cell")))
-        .reduce(_ unionByName _)
-        .repartition(col("cell"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell")
-        .parquet(s"$path/cells")
+      foldPartitioned(
+        s, roots.map(p => s"$p/cells"), "cell", s"$path/cells",
+        col("vec_id"), col("embedding"), col("n2"), col("cell").cast("long").as("cell"))
       roots
         .map(p => T.parquet(s, s"$p/survivors"))
         .reduce(_ unionByName _)
@@ -1800,7 +1659,7 @@ object StreamOps {
       bigramDir: String,
       indexDir: String,
       allDocs: DataFrame): DataFrame = {
-    val (postings, nTotal) = lmFrames(s, indexDir)
+    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     LmOps.lmInterpFromCounts(
       T.parquet(s, BigramFamily.roots(s, bigramDir): _*)
         .select(col("w1"), col("w2"), col("cf2")),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, T}
+import graft.index.GenLog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1171,30 +1172,10 @@ object TextOps {
   private[graft] def writePhraseIndexFrom(
       s: SparkSession, docsDf: DataFrame, path: String): Unit = {
     import s.implicits._
-    docsDf
-      .select(
-        $"doc_id",
-        posexplode(split(lower($"text"), " ")).as(Seq("pos", "term")))
-      .select(
-        $"term", $"doc_id", $"pos",
-        pmod(hash($"term"), lit(Bm25Shards)).as("tshard"))
-      // own each shard directory's files (writeCorpusShards rule)
-      .repartition($"tshard")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("tshard")
-      .parquet(s"$path/postings")
-  }
-
-  /** Dataset-keyed canonical positional-postings build — build-once-
-    * serve-many ([[graft.index.GenLog.buildOnce]]).
-    */
-  private[graft] def writePhraseIndex(s: SparkSession, d: String): String = {
-    val path = SimilarityOps.serveRoot(s, d) + "/phrase"
-    graft.index.GenLog.buildOnce(s, path) {
-      writePhraseIndexFrom(s, docs(s, d), path)
-    }
-    path
+    val occurrences = docsDf
+      .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "term")))
+      .select($"term", $"doc_id", $"pos", pmod(hash($"term"), lit(Bm25Shards)).as("tshard"))
+    GenLog.writePartitioned(occurrences, "tshard", s"$path/postings")
   }
 
   /** The shard ids a phrase set's terms probe — the literal partition
@@ -1208,11 +1189,11 @@ object TextOps {
       .distinct().collect().map(_.get(0)).toSeq
   }
 
-  /** Serve an ARBITRARY phrase set from persisted positional-postings
-    * generations (merge-on-read: generations' doc sets are disjoint by
-    * the ingest contract, so occurrence rows union cleanly): the phrase
-    * terms' shard ids become the literal partition filter on every
-    * generation's scan — at 100 TB only the probed shards' files are
+  /** Serve an ARBITRARY phrase set from the roots of a persisted
+    * positional-postings index (merge-on-read: generations' doc sets are
+    * disjoint by the ingest contract, so occurrence rows union cleanly):
+    * the phrase terms' shard ids become the literal partition filter on
+    * every root's scan — at 100 TB only the probed shards' files are
     * ever read — then the identical adjacency join + rank cut as the
     * in-session q_index_phrase.
     */
@@ -1231,39 +1212,40 @@ object TextOps {
 
   /** q_index_phrase_served — the phrase benchmark answered from the
     * PERSISTED positional index instead of an in-session corpus explode:
-    * build once per dataset, then every serve reads only the probed
-    * shards. Oracle is the full-corpus [[PhraseSql]], so the hash gate
-    * re-proves serve-from-index ≡ in-session every round.
+    * build once per dataset (the [[StreamOps.PhraseFamily]] seed), then
+    * every serve reads only the probed shards. Oracle is the full-corpus
+    * [[PhraseSql]], so the hash gate re-proves serve-from-index ≡
+    * in-session every round.
     */
   private[graft] def phraseSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val path = SimilarityOps.serveRoot(s, d) + "/phrase"
-    (() => { writePhraseIndex(s, d); () },
-      () => servePhrase(s, Seq(path), PhraseQueries))
+    val dir = GenLog.datasetRoot(s, d) + "/phrase"
+    (() => { StreamOps.PhraseFamily.buildOnce(s, dir)(Seq(docs(s, d))); () },
+      () => servePhrase(s, StreamOps.PhraseFamily.roots(s, dir), PhraseQueries))
   }
 
   /** q_index_phrase_incr — INCREMENTAL positional maintenance, the
     * phrase sibling of [[bm25IncrSplit]]: the newest 10% of doc ids
-    * (monotone-ingest contract) write their OWN occurrence generation —
-    * O(batch) build work, the base generation's files never rewritten or
-    * re-read — and serving merges generations on read (occurrence rows
-    * over disjoint doc sets union cleanly; adjacency is within-document).
+    * (monotone-ingest contract) write their OWN occurrence generation
+    * (`v1/gen` over the `v0/full` seed) — O(batch) build work, the base
+    * generation's files never rewritten or re-read — and serving merges
+    * generations on read (occurrence rows over disjoint doc sets union
+    * cleanly; adjacency is within-document).
     * The oracle is the FULL-corpus [[PhraseSql]], so the hash gate
     * re-proves merge-on-read ≡ a single rebuilt positional index every
     * round.
     */
   private[graft] def phraseIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val root = SimilarityOps.serveRoot(s, d) + "/phraseincr"
+    val dir = GenLog.datasetRoot(s, d) + "/phraseincr"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
+      StreamOps.PhraseFamily.buildOnce(s, dir) {
         val (base, batch) = newestTenth(docs(s, d))
-        writePhraseIndexFrom(s, base, s"$root/base")
-        writePhraseIndexFrom(s, batch, s"$root/inc")
+        Seq(base, batch)
       }
       ()
     }
-    (build, () => servePhrase(s, Seq(s"$root/base", s"$root/inc"), PhraseQueries))
+    (build, () => servePhrase(s, StreamOps.PhraseFamily.roots(s, dir), PhraseQueries))
   }
 
   private val PhraseSql = {
@@ -1420,10 +1402,14 @@ object TextOps {
     * LITERAL partition filter, so the scan lists only the probed
     * directories; scoring is identical. Same output and oracle as
     * q_index_bm25: persistence and pruning must not change a single hit.
+    * The postings are the canonical [[bm25Index]], shared with the RRF
+    * and LM serves.
     */
   private[graft] def bm25Split(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { writeBm25Index(s, d); () }, () => serveBm25(s, bm25Root(s, d)))
+      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
+    val (build, roots) = bm25Index(s, d)
+    (build, () => serveBm25(s, roots()))
+  }
 
   /** Write one GENERATION of the postings index from an arbitrary doc
     * frame: (term, doc_id, tf, dl) for the FULL vocabulary (an index
@@ -1447,16 +1433,9 @@ object TextOps {
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
     val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-    tf.join(dl, Seq("doc_id"))
-      .select(
-        $"term", $"doc_id", $"tf", $"dl",
-        pmod(hash($"term"), lit(Bm25Shards)).as("tshard"))
-      // own each shard directory's files (writeCorpusShards rule)
-      .repartition($"tshard")
-      .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("tshard")
-      .parquet(s"$path/postings")
+    val postings = tf.join(dl, Seq("doc_id"))
+      .select($"term", $"doc_id", $"tf", $"dl", pmod(hash($"term"), lit(Bm25Shards)).as("tshard"))
+    GenLog.writePartitioned(postings, "tshard", s"$path/postings")
     T.parquet(s, s"$path/postings")
       .agg(sum($"tf").as("l"))
       .crossJoin(broadcast(docsDf.agg(count(lit(1)).as("n"))))
@@ -1466,26 +1445,18 @@ object TextOps {
     path
   }
 
-  /** Root of the canonical postings index: the lexical serves and the LM
-    * scores read the one index [[writeBm25Index]] builds there.
+  /** The canonical postings index of a dataset — a [[StreamOps.Bm25Family]]
+    * seeded once from the whole corpus — as its build and its roots: the
+    * lexical, RRF and LM serves all read this one physical index.
     */
-  private[graft] def bm25Root(s: SparkSession, d: String): String =
-    SimilarityOps.serveRoot(s, d) + "/bm25"
-
-  /** Dataset-keyed canonical postings build — build-once-serve-many
-    * ([[graft.index.GenLog.buildOnce]]): every query over the same
-    * dataset shares one physical postings index.
-    */
-  private[graft] def writeBm25Index(s: SparkSession, d: String): String = {
-    val path = bm25Root(s, d)
-    graft.index.GenLog.buildOnce(s, path) {
-      writeBm25IndexFrom(s, docs(s, d), path)
-      ()
-    }
-    path
+  private[graft] def bm25Index(
+      s: SparkSession, d: String): (() => Unit, () => Seq[String]) = {
+    val dir = GenLog.datasetRoot(s, d) + "/bm25"
+    (() => { StreamOps.Bm25Family.buildOnce(s, dir)(Seq(docs(s, d))); () },
+      () => StreamOps.Bm25Family.roots(s, dir))
   }
 
-  /** Serve the fixed query set from one or more index GENERATIONS
+  /** Serve the fixed query set from the roots of a postings index
     * (merge-on-read): postings scans are each pruned to the probed
     * shards, generations union (doc sets are disjoint by the ingest
     * contract, so per-term df is the plain count over the union and
@@ -1524,13 +1495,10 @@ object TextOps {
     bm25Score(hits)
   }
 
-  private[graft] def serveBm25(s: SparkSession, path: String): DataFrame =
-    serveBm25(s, Seq(path))
-
   /** q_index_bm25_incr — INCREMENTAL postings maintenance: the newest 10%
-    * of doc ids (monotone-ingest contract) are today's batch; the base
-    * generation stands in for yesterday's persisted index. The batch
-    * writes its OWN generation — O(batch) build work; the base
+    * of doc ids (monotone-ingest contract) are today's batch; the `v0/full`
+    * seed stands in for yesterday's persisted index. The batch writes its
+    * OWN generation (`v1/gen`) — O(batch) build work; the base
     * generation's files are never rewritten or re-read — and serving
     * merges generations on read ([[serveBm25]]'s union: disjoint doc
     * sets make df a plain count and (N, L) an element-wise sum). The
@@ -1541,17 +1509,15 @@ object TextOps {
     */
   private[graft] def bm25IncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val root = SimilarityOps.serveRoot(s, d) + "/bm25incr"
+    val dir = GenLog.datasetRoot(s, d) + "/bm25incr"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
+      StreamOps.Bm25Family.buildOnce(s, dir) {
         val (base, batch) = newestTenth(docs(s, d))
-        writeBm25IndexFrom(s, base, s"$root/base")
-        writeBm25IndexFrom(s, batch, s"$root/inc")
-        ()
+        Seq(base, batch)
       }
       ()
     }
-    (build, () => serveBm25(s, Seq(s"$root/base", s"$root/inc")))
+    (build, () => serveBm25(s, StreamOps.Bm25Family.roots(s, dir)))
   }
 
   /** The ingest split of the incremental doc queries: under the
@@ -1588,7 +1554,7 @@ object TextOps {
   private def retrievalRrf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // the lexical leg collects ONCE to a LocalRelation (r19 opt, the
-    // serveRrfMulti precedent): it is ≤ topK·|queries| bounded rows, and
+    // serveRrf precedent): it is ≤ topK·|queries| bounded rows, and
     // lazy it executed its scoring plan twice — once broadcast under the
     // seed join, once as the fusion's union input (a broadcast exchange
     // and a plain subtree never share execution)
@@ -1660,10 +1626,10 @@ object TextOps {
 
   /** q_retrieval_rrf_served — q_retrieval_rrf answered ENTIRELY from
     * persisted indexes: the full serving-tier architecture in one query.
-    * Build writes three artifacts — the term-sharded postings index
-    * ([[writeBm25Index]]), the bucket-partitioned ANN index
-    * ([[SimilarityOps.writeAnnIndex]]), and the id-sharded embedding
-    * store ([[SimilarityOps.writeEmbStore]]) — and serve composes three
+    * Build seeds three families — the term-sharded postings index
+    * ([[bm25Index]]), the bucket-partitioned ANN index
+    * ([[SimilarityOps.annIndex]]), and the id-sharded embedding store
+    * ([[StreamOps.EmbStoreFamily]]) — and serve ([[serveRrf]]) composes three
     * pruned reads: lexical leg from the probed term shards, feedback-seed
     * vectors fetched by id from the probed ishard directories (the
     * candidate doc ids and their shard ids are bounded model state, the
@@ -1673,35 +1639,24 @@ object TextOps {
     */
   private[graft] def rrfServedSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val root = SimilarityOps.serveRoot(s, d)
+    // the postings and ANN indexes are CANONICAL, dataset-keyed builds
+    // shared with q_index_bm25_served / q_sim_served (same params, same
+    // corpus — one physical index each, built once per warehouse root):
+    // when a sibling already committed them, this build is store-only
+    val (bm25Build, bm25Roots) = bm25Index(s, d)
+    val (annBuild, annRoots) = SimilarityOps.annIndex(s, d)
+    val storeDir = GenLog.datasetRoot(s, d) + "/embstore"
     val build = () => {
-      // the three serving artifacts are CANONICAL, dataset-keyed builds
-      // shared with q_index_bm25_served / q_sim_served (same params, same
-      // corpus — one physical index each, built once per warehouse root):
-      // when a sibling already committed bm25/ann, this build is store-only
-      writeBm25Index(s, d)
-      SimilarityOps.writeAnnIndex(s, d, s"$root/ann")
-      SimilarityOps.writeEmbStore(s, d, s"$root/embstore")
+      bm25Build()
+      annBuild()
+      StreamOps.EmbStoreFamily.buildOnce(s, storeDir)(Seq(T(s, d, "embeddings")))
+      ()
     }
-    (build, () => serveRrf(s, bm25Root(s, d), s"$root/ann", s"$root/embstore"))
+    (build,
+      () => serveRrf(
+        s, bm25Roots(), annRoots(), StreamOps.EmbStoreFamily.roots(s, storeDir)))
   }
 
-  private[graft] def serveRrf(
-      s: SparkSession,
-      bm25Path: String,
-      annPath: String,
-      storePath: String): DataFrame =
-    serveRrfMulti(s, Seq(bm25Path), Seq(annPath), Seq(storePath))
-
-  /** [[serveRrf]] over index GENERATIONS merged on read — each leg unions
-    * its generation roots with the SAME pruning as the single-root serve
-    * (probed term shards, probed ishards, probed buckets pushed into
-    * every generation's scan independently; doc/vector ids are disjoint
-    * across generations under the monotone-ingest contract, so the
-    * unions are exact). This is the serving form the CONTINUOUS hybrid
-    * tier uses ([[StreamOps.serveRrfContinuous]]): answering from base +
-    * streamed increments must equal answering from monolithic rebuilds.
-    */
   /** The feedback-seed frame of the served RRF tier: each query's
     * best-ranked lexical hit that HAS a stored embedding, exploded to its
     * Hamming-1 probe buckets. `lex` must be driver-local (a collected
@@ -1760,7 +1715,16 @@ object TextOps {
     s.createDataFrame(java.util.Arrays.asList(lexDist.collect(): _*), lexDist.schema)
   }
 
-  private[graft] def serveRrfMulti(
+  /** Serve the hybrid tier from the roots of its three indexes merged on
+    * read — each leg unions its roots with the SAME pruning (probed term
+    * shards, probed ishards, probed buckets pushed into every root's scan
+    * independently; doc/vector ids are disjoint across generations under
+    * the monotone-ingest contract, so the unions are exact). The served
+    * query and the CONTINUOUS hybrid tier both serve through it: answering
+    * from base + streamed increments must equal answering from one
+    * seeded index.
+    */
+  private[graft] def serveRrf(
       s: SparkSession,
       bm25Paths: Seq[String],
       annPaths: Seq[String],

@@ -82,7 +82,7 @@ object ClusterCheck {
       work: String): Seq[(String, org.apache.spark.sql.DataFrame)] = {
     import org.apache.spark.sql.{DataFrame, functions => F}
     import F.{col, lit, max, md5, pmod, row_number, when}
-    import graft.ops.{CurationOps, Hashing, StreamOps}
+    import graft.ops.{CurationOps, Hashing, RelationalOps, StreamOps, TextOps}
     val all = graft.T(s, sfDir, "documents")
     val mx = all.agg(max(col("doc_id"))).head().getLong(0)
     val cut = mx * 8 / 10
@@ -205,26 +205,34 @@ object ClusterCheck {
       // generations with as-of-commit attachments — both across the
       // executor boundary
       "cc_pairs" -> StreamOps.ccFromPairState(s, pipe.corpus.dedupIndexDir),
-      "bm25" -> StreamOps.serveBm25Continuous(s, pipe.corpus.bm25IndexDir),
+      "bm25" -> TextOps.serveBm25(
+        s, StreamOps.Bm25Family.roots(s, pipe.corpus.bm25IndexDir)),
       "boiler" -> StreamOps.serveBoilerplateContinuous(s, pipe.corpus.boilerStatsDir),
       "passage50" -> StreamOps.servePassageDup50Continuous(s, pipe.corpus.passageGramsDir),
       "bigram" -> StreamOps.serveLmBigramContinuous(s, pipe.corpus.bigramStatsDir),
-      "phrase" -> StreamOps.servePhraseContinuous(s, pipe.corpus.phraseIndexDir),
+      "phrase" -> TextOps.servePhrase(
+        s, StreamOps.PhraseFamily.roots(s, pipe.corpus.phraseIndexDir), TextOps.PhraseQueries),
       "report" -> StreamOps.publishedCorpusReport(s, pipe.corpus.reportSummaryDir),
-      "ann" -> StreamOps.serveAnnContinuous(s, pipe.vectors.annDir, annProbes),
-      "quant" -> StreamOps.serveQuantContinuous(
-        s, pipe.vectors.quantDir, SimilarityOps.quantProbeFrame(s, sfDir)),
-      "ivf" -> StreamOps.serveIvfContinuous(
-        s, pipe.vectors.ivfDir, e.filter(col("vec_id") < 5)),
+      "ann" -> SimilarityOps.serveAnnBatch(
+        s, StreamOps.AnnFamily.roots(s, pipe.vectors.annDir), annProbes),
+      "quant" -> SimilarityOps.serveQuantBatch(
+        s,
+        StreamOps.QuantFamily.roots(s, pipe.vectors.quantDir),
+        SimilarityOps.quantProbeFrame(s, sfDir)),
+      "ivf" -> SimilarityOps.serveIvfBatch(
+        s,
+        StreamOps.ivfFamily(pipe.vectors.ivfDir).roots(s, pipe.vectors.ivfDir),
+        e.filter(col("vec_id") < 5)),
       "sem" -> StreamOps.serveSemanticContinuous(s, pipe.vectors.semDir),
       "store" -> StreamOps
         .EmbStoreFamily.roots(s, pipe.vectors.storeDir)
         .map(r => s.read.parquet(r))
         .reduce(_ unionByName _)
         .select(col("vec_id"), col("ishard").cast("long").as("ishard")),
-      "rollup" -> StreamOps.serveRollupContinuous(s, rollupDir)
+      "rollup" -> RelationalOps.serveRollup(s, StreamOps.RollupFamily.roots(s, rollupDir))
         .orderBy(col("event_type")),
-      "rollup_daily" -> StreamOps.serveRollupDailyContinuous(s, rollupDir)
+      "rollup_daily" -> RelationalOps
+        .serveRollupDaily(s, StreamOps.RollupFamily.roots(s, rollupDir))
         .orderBy(col("day"), col("event_type")))
   }
 

@@ -49,7 +49,7 @@ class CatalogConcurrencySpec extends SparkSpec {
       val dir = s"${Files.createTempDirectory("graft_conc_px")}/idx"
       SimilarityOps.writeAnnIndexFor(
         spark, all.filter($"vec_id" <= cuts(i)), dir)
-      rows(SimilarityOps.serveAnnBatch(spark, dir, probes))
+      rows(SimilarityOps.serveAnnBatch(spark, Seq(dir), probes))
     }
 
     val indexDir = Files.createTempDirectory("graft_conc_idx").toString
@@ -82,7 +82,8 @@ class CatalogConcurrencySpec extends SparkSpec {
 
     val reader = new Thread(() =>
       try while (!writerDone.get()) {
-        served.add(rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)))
+        served.add(rows(SimilarityOps.serveAnnBatch(
+          spark, StreamOps.AnnFamily.roots(spark, indexDir), probes)))
         midFlightReads.incrementAndGet()
       } catch { case t: Throwable => errors.add(t) })
 
@@ -105,7 +106,8 @@ class CatalogConcurrencySpec extends SparkSpec {
     // full corpus, exactly
     StreamOps.AnnFamily.compact(spark, indexDir)
     assert(
-      rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)) ===
+      rows(SimilarityOps.serveAnnBatch(
+        spark, StreamOps.AnnFamily.roots(spark, indexDir), probes)) ===
         prefixAnswers.last)
     assert(prefixAnswers.last === rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
   }

@@ -40,8 +40,8 @@ class CompactionPolicySpec extends SparkSpec {
   }
 
   private def probeRows(dir: String): Seq[String] =
-    rows(StreamOps.serveAnnContinuous(
-      spark, dir, SimilarityOps.batchProbeFrame(spark, sf)))
+    rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), SimilarityOps.batchProbeFrame(spark, sf)))
 
   test("count trigger: gens accumulate below maxGens, fold exactly at it, reads invariant") {
     val (dir, slices, expect) = setup()

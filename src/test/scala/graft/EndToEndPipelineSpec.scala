@@ -220,8 +220,8 @@ class EndToEndPipelineSpec extends SparkSpec {
     val rebuilt = Files.createTempDirectory("graft_e2e_rebuilt").toString
     TextOps.writeBm25IndexFrom(spark, curatedAll, rebuilt)
     assert(
-      rows(StreamOps.serveBm25Continuous(spark, bm25Idx)) ===
-        rows(TextOps.serveBm25(spark, rebuilt)))
+      rows(TextOps.serveBm25(spark, StreamOps.Bm25Family.roots(spark, bm25Idx))) ===
+        rows(TextOps.serveBm25(spark, Seq(rebuilt))))
 
     // text-frequency legs: every served surface equals the monolithic
     // kernel over the batch-curated corpus — ONE read of the feed
@@ -310,8 +310,8 @@ class EndToEndPipelineSpec extends SparkSpec {
       .toMap
     assert(got2 === want)
     assert(
-      rows(StreamOps.serveBm25Continuous(spark, bm25Idx)) ===
-        rows(TextOps.serveBm25(spark, rebuilt)))
+      rows(TextOps.serveBm25(spark, StreamOps.Bm25Family.roots(spark, bm25Idx))) ===
+        rows(TextOps.serveBm25(spark, Seq(rebuilt))))
 
     // ---- day 2: stage a new feed and RESTART the same program from its
     // checkpoint over the now-compacted indexes — the daily stop/compact/
@@ -396,8 +396,8 @@ class EndToEndPipelineSpec extends SparkSpec {
     val rebuilt2 = Files.createTempDirectory("graft_e2e_rebuilt2").toString
     TextOps.writeBm25IndexFrom(spark, curatedAll2, rebuilt2)
     assert(
-      rows(StreamOps.serveBm25Continuous(spark, bm25Idx)) ===
-        rows(TextOps.serveBm25(spark, rebuilt2)))
+      rows(TextOps.serveBm25(spark, StreamOps.Bm25Family.roots(spark, bm25Idx))) ===
+        rows(TextOps.serveBm25(spark, Seq(rebuilt2))))
     // the LM rides the SAME postings state the pipeline maintains for
     // BM25 — across day-2 restart + compaction, the model must equal a
     // from-scratch train over the curated corpus (zero LM-specific legs)

@@ -330,9 +330,9 @@ class IncrementalPropertySpec extends SparkSpec {
             (0 until SimilarityOps.SignBits)
               .map(j => $"bucket".bitwiseXOR(lit(1L << j))): _*)).as("pbucket"))
       .localCheckpoint(true)
-    val got = StreamOps.serveAnnContinuous(spark, dir, probes)
+    val got = SimilarityOps.serveAnnBatch(spark, StreamOps.AnnFamily.roots(spark, dir), probes)
       .collect().map(_.toString).toSeq
-    val want = SimilarityOps.serveAnnBatch(spark, mono, probes)
+    val want = SimilarityOps.serveAnnBatch(spark, Seq(mono), probes)
       .collect().map(_.toString).toSeq
     assert(got === want)
     assert(got.nonEmpty)

@@ -37,9 +37,12 @@ class IndexCatalogSpec extends SparkSpec {
     assert(GenLog.buildsRun.get() - runs0 === 1L)
     assert(GenLog.buildsSkipped.get() - skips0 === 1L)
 
-    // and through the public dataset-keyed path: no file is rewritten
-    val canonical = s"${SimilarityOps.serveRoot(spark, sf)}/ann"
-    SimilarityOps.writeAnnIndex(spark, sf, canonical)
+    // and through the family path a served query builds: no file is
+    // rewritten
+    val canonical = s"${GenLog.datasetRoot(spark, sf)}/ann"
+    def buildAnn(): Boolean =
+      StreamOps.AnnFamily.buildOnce(spark, canonical)(Seq(T(spark, sf, "embeddings")))
+    buildAnn()
     def newestMtime(d: String): Long = {
       val it = fsOf(d).listFiles(new org.apache.hadoop.fs.Path(d), true)
       var m = 0L
@@ -47,8 +50,34 @@ class IndexCatalogSpec extends SparkSpec {
       m
     }
     val before = newestMtime(canonical)
-    SimilarityOps.writeAnnIndex(spark, sf, canonical)
+    assert(!buildAnn())
     assert(newestMtime(canonical) === before, "re-request must not rewrite")
+  }
+
+  test("family buildOnce: seed plus generations under one claim, a skip runs no job") {
+    val e = T(spark, sf, "embeddings")
+    val counter = JobCounter.on(spark.sparkContext)
+    // the frames block runs a job of its own (the threshold), so a skip
+    // that evaluated it would show up as a submitted job
+    def frames(withBatch: Boolean): Seq[DataFrame] = {
+      val thr = e.agg(max($"vec_id")).head().getLong(0) * 9 / 10
+      if (withBatch) Seq(e.filter($"vec_id" <= thr), e.filter($"vec_id" > thr))
+      else Seq(e)
+    }
+    for (withBatch <- Seq(false, true)) {
+      val dir = s"${Files.createTempDirectory("graft_cat_fam")}/idx"
+      def build(): Boolean = StreamOps.AnnFamily.buildOnce(spark, dir)(frames(withBatch))
+      assert(build())
+      val want =
+        if (withBatch) Seq(s"$dir/v0/full", s"$dir/v1/gen") else Seq(s"$dir/v0/full")
+      assert(StreamOps.AnnFamily.roots(spark, dir) === want)
+      val skips0 = GenLog.buildsSkipped.get()
+      val c0 = counter.snapshot()
+      assert(!build(), "second build must skip")
+      assert((counter.snapshot() - c0).jobs === 0L, "a skipped build must submit no job")
+      assert(GenLog.buildsSkipped.get() - skips0 === 1L)
+      assert(StreamOps.AnnFamily.roots(spark, dir) === want)
+    }
   }
 
   test("the warehouse root is configurable and dataset-keyed") {
@@ -56,14 +85,16 @@ class IndexCatalogSpec extends SparkSpec {
     val prior = spark.conf.getOption(GenLog.RootKey)
     spark.conf.set(GenLog.RootKey, custom)
     try {
-      assert(SimilarityOps.serveRoot(spark, sf).startsWith(custom))
-      val path = s"${SimilarityOps.serveRoot(spark, sf)}/ann"
-      SimilarityOps.writeAnnIndex(spark, sf, path)
+      assert(GenLog.datasetRoot(spark, sf).startsWith(custom))
+      val path = s"${GenLog.datasetRoot(spark, sf)}/ann"
+      StreamOps.AnnFamily.buildOnce(spark, path)(Seq(T(spark, sf, "embeddings")))
       assert(fsOf(custom).exists(new org.apache.hadoop.fs.Path(path)))
       // the index under the custom root serves identically
       assert(
         rows(SimilarityOps.serveAnnBatch(
-          spark, path, SimilarityOps.batchProbeFrame(spark, sf))) ===
+          spark,
+          StreamOps.AnnFamily.roots(spark, path),
+          SimilarityOps.batchProbeFrame(spark, sf))) ===
           rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
       // two datasets never collide under one root
       assert(
@@ -87,7 +118,8 @@ class IndexCatalogSpec extends SparkSpec {
     GenLog.markCommitted(spark, s"$dir/v1/gen")
     val probes = SimilarityOps.batchProbeFrame(spark, sf)
     val want = rows(SparkEntry.queries("q_sim_batch")(spark, sf))
-    assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
 
     // simulate a compaction that crashed mid-write: a partial v1/full
     // with data files but NO commit marker
@@ -96,7 +128,8 @@ class IndexCatalogSpec extends SparkSpec {
       .write.parquet(s"$dir/v1/full")
     // the partial snapshot is invisible: roots and answers are unchanged
     assert(GenLog.versions(spark, dir, requiring = "full") === Seq(0L))
-    assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
     // the manifest reports it as present-but-uncommitted
     assert(GenLog.manifest(spark, dir).contains((1L, "full", false)))
     assert(GenLog.manifest(spark, dir).contains((1L, "gen", true)))
@@ -112,10 +145,12 @@ class IndexCatalogSpec extends SparkSpec {
       fsOf(dir).exists(
         new org.apache.hadoop.fs.Path(s"$dir/v1/gen/${GenLog.Superseded}")))
     assert(!StreamOps.AnnFamily.roots(spark, dir).exists(_.endsWith("v1/gen")))
-    assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
     StreamOps.AnnFamily.compact(spark, dir)
     assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
-    assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
   }
 
   test("compaction prunes all but the newest keepFulls full snapshots") {
@@ -145,7 +180,7 @@ class IndexCatalogSpec extends SparkSpec {
     assert(GenLog.versions(spark, dir, requiring = "full").sorted === Seq(2L, 3L))
     // after three fold+prune cycles the index still answers exactly
     assert(
-      rows(StreamOps.serveAnnContinuous(spark, dir, probes)) ===
+      rows(SimilarityOps.serveAnnBatch(spark, StreamOps.AnnFamily.roots(spark, dir), probes)) ===
         rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
     // the directory holds O(keep) corpus copies with one-compaction lag:
     // v1/gen and v2/gen (superseded two compactions ago or more) are
@@ -202,7 +237,7 @@ class IndexCatalogSpec extends SparkSpec {
     assert(!fsOf(dir).exists(GenLog.claimPath(dir)))
     assert(
       rows(SimilarityOps.serveAnnBatch(
-        spark, dir, SimilarityOps.batchProbeFrame(spark, sf))) ===
+        spark, Seq(dir), SimilarityOps.batchProbeFrame(spark, sf))) ===
         rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
   }
 
@@ -250,7 +285,7 @@ class IndexCatalogSpec extends SparkSpec {
     // the live reader: roots resolved and the scan's file listing built
     // BEFORE the compaction commits its fold
     val preCompact =
-      SimilarityOps.serveAnnBatchMulti(
+      SimilarityOps.serveAnnBatch(
         spark, StreamOps.AnnFamily.roots(spark, dir), probes)
     StreamOps.AnnFamily.compact(spark, dir)
     // without the grace tombstone this collect would race the delete of
@@ -260,7 +295,8 @@ class IndexCatalogSpec extends SparkSpec {
     // post-grace, the next compaction collects the directory
     StreamOps.AnnFamily.compact(spark, dir)
     assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
-    assert(rows(StreamOps.serveAnnContinuous(spark, dir, probes)) === want)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
   }
 
   test("dedup compaction ignores a mid-batch crash's partially-committed version") {

@@ -264,7 +264,7 @@ class PqSpec extends SparkSpec {
       SparkEntry.queries("q_sim_pq_incr")(spark, sf).collect().toSeq
     val mono = S.simPq(spark, sf).collect().toSeq
     assert(incr == mono, s"merge-on-read diverged:\n$incr\nvs\n$mono")
-    val root = s"${S.serveRoot(spark, sf)}/pq_incr"
+    val root = s"${graft.index.GenLog.datasetRoot(spark, sf)}/pq_incr"
     val gen1 = spark.read.parquet(s"$root/gen1").count()
     val n = e.count()
     assert(gen1 > 0 && gen1 <= n / 5, s"gen1 $gen1 of $n is not batch-sized")

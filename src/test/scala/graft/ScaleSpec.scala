@@ -531,7 +531,7 @@ class ScaleSpec extends SparkSpec {
             .map(j => $"bucket".bitwiseXOR(lit(1L << j))): _*)).as("pbucket"))
       .localCheckpoint(eager = true)
     def serveAnn(idx: String): Unit =
-      SimilarityOps.serveAnnBatch(spark, idx, probes).foreach(_ => ())
+      SimilarityOps.serveAnnBatch(spark, Seq(idx), probes).foreach(_ => ())
     serveAnn(ann1) // warm (codegen + listing first-touch)
     serveAnn(ann10)
     val (ta1, ba1) = measured(serveAnn(ann1))
@@ -563,7 +563,7 @@ class ScaleSpec extends SparkSpec {
     TextOps.writeBm25IndexFrom(
       spark, (0 until Replicas).map(docRep).reduce(_ unionByName _), bm10)
     def serveBm(idx: String): Unit =
-      TextOps.serveBm25(spark, idx).foreach(_ => ())
+      TextOps.serveBm25(spark, Seq(idx)).foreach(_ => ())
     serveBm(bm1) // warm
     serveBm(bm10)
     val (tb1, bb1) = measured(serveBm(bm1))
@@ -604,7 +604,7 @@ class ScaleSpec extends SparkSpec {
       .quantProbe(SimilarityOps.quantizedFrame(e1.select($"vec_id", $"embedding")))
       .localCheckpoint(eager = true)
     def serveQ(idx: String): Unit =
-      SimilarityOps.serveQuantBatchMulti(spark, Seq(idx), qprobes).foreach(_ => ())
+      SimilarityOps.serveQuantBatch(spark, Seq(idx), qprobes).foreach(_ => ())
     serveQ(q1) // warm
     serveQ(q10)
     val (tq1, bq1) = measured(serveQ(q1))
@@ -633,7 +633,7 @@ class ScaleSpec extends SparkSpec {
     SimilarityOps.writeIvfIndexFrom(spark, withN2(e10), cents, i10)
     val iprobes = withN2(e1).filter($"vec_id" < 5).localCheckpoint(eager = true)
     def serveI(idx: String): Unit =
-      SimilarityOps.serveIvfBatchMulti(spark, Seq(idx), iprobes).foreach(_ => ())
+      SimilarityOps.serveIvfBatch(spark, Seq(idx), iprobes).foreach(_ => ())
     serveI(i1) // warm
     serveI(i10)
     val (ti1, bi1) = measured(serveI(i1))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.index.GenLog
 import graft.ops.{SimilarityOps, TextOps, Vec}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,7 @@ class ServeIndexSpec extends SparkSpec {
       p)
     // directory-level proof: the index holds more bucket directories than
     // the probe set touches, so a pruned listing reads a strict subset
-    val idxDir = s"${SimilarityOps.serveRoot(spark, sf)}/ann"
+    val idxDir = s"${GenLog.datasetRoot(spark, sf)}/ann/v0/full"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketDirs = fs
@@ -58,7 +59,7 @@ class ServeIndexSpec extends SparkSpec {
       p)
     // directory-level proof: the probed shard set is a strict subset of
     // the index's shard directories
-    val idxDir = s"${SimilarityOps.serveRoot(spark, sf)}/bm25/postings"
+    val idxDir = s"${GenLog.datasetRoot(spark, sf)}/bm25/v0/full/postings"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val shardDirs = fs
@@ -81,7 +82,7 @@ class ServeIndexSpec extends SparkSpec {
       p)
     // directory-level proof: the phrase terms probe a strict subset of
     // the positional index's shard directories
-    val idxDir = s"${SimilarityOps.serveRoot(spark, sf)}/phrase/postings"
+    val idxDir = s"${GenLog.datasetRoot(spark, sf)}/phrase/v0/full/postings"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val shardDirs = fs
@@ -98,10 +99,10 @@ class ServeIndexSpec extends SparkSpec {
         rows(SparkEntry.queries("q_index_phrase")(spark, sf)))
     // O(batch) maintenance: the increment's occurrence rows are a small
     // fraction of the base generation's (same claim as the bm25 sibling)
-    val root = s"${SimilarityOps.serveRoot(spark, sf)}/phraseincr"
+    val root = s"${GenLog.datasetRoot(spark, sf)}/phraseincr"
     val postingsRows =
       (sub: String) => spark.read.parquet(s"$root/$sub/postings").count()
-    val (base, inc) = (postingsRows("base"), postingsRows("inc"))
+    val (base, inc) = (postingsRows("v0/full"), postingsRows("v1/gen"))
     assert(inc > 0 && inc < base / 3, s"inc=$inc base=$base")
   }
 
@@ -113,10 +114,10 @@ class ServeIndexSpec extends SparkSpec {
     // must be a small fraction of the base generation's — the O(batch)
     // maintenance claim (rows, not bytes: at spec scale per-file parquet
     // footer overhead across 64 shard dirs floors the byte sizes)
-    val root = s"${SimilarityOps.serveRoot(spark, sf)}/bm25incr"
+    val root = s"${GenLog.datasetRoot(spark, sf)}/bm25incr"
     val postingsRows =
       (sub: String) => spark.read.parquet(s"$root/$sub/postings").count()
-    val (base, inc) = (postingsRows("base"), postingsRows("inc"))
+    val (base, inc) = (postingsRows("v0/full"), postingsRows("v1/gen"))
     assert(inc > 0 && inc < base / 3, s"inc=$inc base=$base")
     // and the base generation is never rewritten by the batch build: its
     // newest file predates the increment's oldest
@@ -128,7 +129,7 @@ class ServeIndexSpec extends SparkSpec {
       while (it.hasNext) { val f = it.next(); if (f.isFile) b += f.getModificationTime }
       b.result()
     }
-    assert(modTimes("base").max <= modTimes("inc").min)
+    assert(modTimes("v0/full").max <= modTimes("v1/gen").min)
   }
 
   test("q_sim_incr: merge-on-read equals the monolithic search; increment is batch-sized") {
@@ -138,9 +139,9 @@ class ServeIndexSpec extends SparkSpec {
     // the batch generation holds ~10% of the vectors — the O(batch)
     // maintenance claim (rows, not bytes: parquet footer overhead across
     // bucket dirs floors byte sizes at spec scale)
-    val root = s"${SimilarityOps.serveRoot(spark, sf)}/ann_incr"
+    val root = s"${GenLog.datasetRoot(spark, sf)}/ann_incr"
     val gen = (sub: String) => spark.read.parquet(s"$root/$sub").count()
-    val (base, inc) = (gen("gen0"), gen("gen1"))
+    val (base, inc) = (gen("v0/full"), gen("v1/gen"))
     assert(inc > 0 && inc < base / 3, s"inc=$inc base=$base")
     // both generation scans carry the literal bucket INSET filter — the
     // probe set prunes every generation independently
@@ -154,15 +155,16 @@ class ServeIndexSpec extends SparkSpec {
   test("serveBm25For answers an arbitrary query frame (library API)") {
     import spark.implicits._
     import graft.ops.TextOps
-    val path = TextOps.writeBm25Index(spark, sf)
+    val (build, roots) = TextOps.bm25Index(spark, sf)
+    build()
     // per-query scoring is independent of which other queries ride the
     // batch, so a subset query frame must reproduce the full serve's
     // rows for those query ids exactly (through a smaller pruned scan)
     val subset = TextOps.Bm25Queries.filter(q => q._1 == 1 || q._1 == 4)
       .toDF("query_id", "term")
-    val got = rows(TextOps.serveBm25For(spark, Seq(path), subset))
+    val got = rows(TextOps.serveBm25For(spark, roots(), subset))
     val want = rows(
-      TextOps.serveBm25(spark, path).filter($"query_id".isin(1, 4)))
+      TextOps.serveBm25(spark, roots()).filter($"query_id".isin(1, 4)))
     assert(got === want && got.nonEmpty)
   }
 
@@ -179,7 +181,7 @@ class ServeIndexSpec extends SparkSpec {
       p)
     // directory-level proof: probed set is a strict subset of the
     // index's bucket directories
-    val idxDir = s"${SimilarityOps.serveRoot(spark, sf)}/annq"
+    val idxDir = s"${GenLog.datasetRoot(spark, sf)}/annq/v0/full"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketDirs = fs
@@ -198,10 +200,10 @@ class ServeIndexSpec extends SparkSpec {
     // The serve collects the bounded seed ONCE, so the store scan lives
     // (and executes, exactly once) in the SEED frame's plan, not the
     // final fused plan — assert the filter where the scan runs.
-    val root = SimilarityOps.serveRoot(spark, sf)
-    val lex = TextOps.rrfLexFrame(spark, Seq(s"$root/bm25"))
+    val root = GenLog.datasetRoot(spark, sf)
+    val lex = TextOps.rrfLexFrame(spark, Seq(s"$root/bm25/v0/full"))
     val seedPlan = TextOps
-      .rrfSeedFrame(spark, Seq(s"$root/embstore"), lex)
+      .rrfSeedFrame(spark, Seq(s"$root/embstore/v0/full"), lex)
       .queryExecution.executedPlan.toString
     assert(
       "PartitionFilters: \\[[^\\]]*ishard[^\\]]*(INSET|IN \\()".r
@@ -253,7 +255,7 @@ class ServeIndexSpec extends SparkSpec {
       .filter($"rn" <= 10)
       .select($"probe_id", $"vec_id", $"cell", $"cos")
       .orderBy($"probe_id", $"cos".desc, $"vec_id")
-    val served = SimilarityOps.serveIvfBatch(spark, dir, e.filter($"vec_id" < 5))
+    val served = SimilarityOps.serveIvfBatch(spark, Seq(dir), e.filter($"vec_id" < 5))
     assert(rows(served) === rows(expected))
     assert(served.count() > 0)
   }

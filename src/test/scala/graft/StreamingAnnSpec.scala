@@ -73,8 +73,9 @@ class StreamingAnnSpec extends SparkSpec {
     // must answer exactly like ONE index rebuilt over the prefix corpus
     val rebuilt = Files.createTempDirectory("graft_ann_rebuild").toString
     SimilarityOps.writeAnnIndexFor(spark, all.filter($"vec_id" <= c2), rebuilt)
-    val prefixWant = rows(SimilarityOps.serveAnnBatch(spark, rebuilt, probes))
-    assert(rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)) === prefixWant)
+    val prefixWant = rows(SimilarityOps.serveAnnBatch(spark, Seq(rebuilt), probes))
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, indexDir), probes)) === prefixWant)
 
     // O(batch): each committed generation is a small fraction of the seed
     // snapshot, and the seed is never rewritten
@@ -101,14 +102,16 @@ class StreamingAnnSpec extends SparkSpec {
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$indexDir/$v/${graft.index.GenLog.Superseded}")), v)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/v2/full")))
-    assert(rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)) === prefixWant)
+    assert(rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, indexDir), probes)) === prefixWant)
 
     // resume over the compacted index: the final batch arrives and the
     // continuous serve lands on the oracle-checked q_sim_batch
     stageFile(src, all.filter($"vec_id" > c2), "batch3", 3000000L)
     run()
     assert(
-      rows(StreamOps.serveAnnContinuous(spark, indexDir, probes)) ===
+      rows(SimilarityOps.serveAnnBatch(
+        spark, StreamOps.AnnFamily.roots(spark, indexDir), probes)) ===
         rows(SparkEntry.queries("q_sim_batch")(spark, sf)))
   }
 }

@@ -72,8 +72,9 @@ class StreamingBm25Spec extends SparkSpec {
     // must answer exactly like ONE index rebuilt over the prefix corpus
     val rebuilt = Files.createTempDirectory("graft_bm25_rebuild").toString
     TextOps.writeBm25IndexFrom(spark, all.filter($"doc_id" <= c2), rebuilt)
-    val prefixWant = rows(TextOps.serveBm25(spark, rebuilt))
-    assert(rows(StreamOps.serveBm25Continuous(spark, indexDir)) === prefixWant)
+    val prefixWant = rows(TextOps.serveBm25(spark, Seq(rebuilt)))
+    assert(rows(TextOps.serveBm25(
+      spark, StreamOps.Bm25Family.roots(spark, indexDir))) === prefixWant)
 
     // O(batch): each committed generation's postings are a small fraction
     // of the seed snapshot's, and the seed is never rewritten (every v0
@@ -102,14 +103,15 @@ class StreamingBm25Spec extends SparkSpec {
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$indexDir/$v/${graft.index.GenLog.Superseded}")), v)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/v2/full")))
-    assert(rows(StreamOps.serveBm25Continuous(spark, indexDir)) === prefixWant)
+    assert(rows(TextOps.serveBm25(
+      spark, StreamOps.Bm25Family.roots(spark, indexDir))) === prefixWant)
 
     // resume over the compacted index: the final batch arrives and the
     // continuous serve lands on the oracle-checked full-corpus query
     stageFile(src, all.filter($"doc_id" > c2), "batch3", 3000000L)
     run()
     assert(
-      rows(StreamOps.serveBm25Continuous(spark, indexDir)) ===
+      rows(TextOps.serveBm25(spark, StreamOps.Bm25Family.roots(spark, indexDir))) ===
         rows(SparkEntry.queries("q_index_bm25")(spark, sf)))
   }
 }

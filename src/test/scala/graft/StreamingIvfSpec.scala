@@ -88,8 +88,9 @@ class StreamingIvfSpec extends SparkSpec {
         .select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2")),
       cents,
       rebuilt)
-    val prefixWant = rows(SimilarityOps.serveIvfBatch(spark, rebuilt, probes))
-    assert(rows(StreamOps.serveIvfContinuous(spark, indexDir, probes)) === prefixWant)
+    val prefixWant = rows(SimilarityOps.serveIvfBatch(spark, Seq(rebuilt), probes))
+    assert(rows(SimilarityOps.serveIvfBatch(
+      spark, StreamOps.ivfFamily(indexDir).roots(spark, indexDir), probes)) === prefixWant)
 
     // O(batch) commits; the seed snapshot is never rewritten
     def cells(sub: String): Long =
@@ -117,7 +118,8 @@ class StreamingIvfSpec extends SparkSpec {
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$indexDir/$v/${graft.index.GenLog.Superseded}")), v)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/v2/full/codebook")))
-    assert(rows(StreamOps.serveIvfContinuous(spark, indexDir, probes)) === prefixWant)
+    assert(rows(SimilarityOps.serveIvfBatch(
+      spark, StreamOps.ivfFamily(indexDir).roots(spark, indexDir), probes)) === prefixWant)
 
     // resume over the compacted index: the final batch assigns against
     // the carried codebook and the serve lands on the oracle-checked
@@ -125,7 +127,8 @@ class StreamingIvfSpec extends SparkSpec {
     stageFile(src, all.filter($"vec_id" > c2), "batch3", 3000000L)
     run()
     assert(
-      rows(StreamOps.serveIvfContinuous(spark, indexDir, probes)) ===
+      rows(SimilarityOps.serveIvfBatch(
+        spark, StreamOps.ivfFamily(indexDir).roots(spark, indexDir), probes)) ===
         rows(SparkEntry.queries("q_sim_ivf_batch")(spark, sf)
           .select($"probe_id", $"vec_id", $"cell".cast("long").as("cell"), $"cos")))
 
@@ -149,11 +152,13 @@ class StreamingIvfSpec extends SparkSpec {
       newCents,
       monolithicNew)
     assert(
-      rows(StreamOps.serveIvfContinuous(spark, rolled, probes)) ===
-        rows(SimilarityOps.serveIvfBatch(spark, monolithicNew, probes)))
+      rows(SimilarityOps.serveIvfBatch(
+        spark, StreamOps.ivfFamily(rolled).roots(spark, rolled), probes)) ===
+        rows(SimilarityOps.serveIvfBatch(spark, Seq(monolithicNew), probes)))
     // old epoch still serves the old answers (blue/green: nothing moved)
     assert(
-      rows(StreamOps.serveIvfContinuous(spark, indexDir, probes)) ===
+      rows(SimilarityOps.serveIvfBatch(
+        spark, StreamOps.ivfFamily(indexDir).roots(spark, indexDir), probes)) ===
         rows(SparkEntry.queries("q_sim_ivf_batch")(spark, sf)
           .select($"probe_id", $"vec_id", $"cell".cast("long").as("cell"), $"cos")))
   }

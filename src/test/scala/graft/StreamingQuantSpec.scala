@@ -74,9 +74,10 @@ class StreamingQuantSpec extends SparkSpec {
     val rebuilt = Files.createTempDirectory("graft_quant_rebuild").toString
     SimilarityOps.writeQuantIndexFor(spark, all.filter($"vec_id" <= c2), rebuilt)
     val prefixWant =
-      rows(SimilarityOps.serveQuantBatchMulti(spark, Seq(rebuilt), probes))
+      rows(SimilarityOps.serveQuantBatch(spark, Seq(rebuilt), probes))
     assert(
-      rows(StreamOps.serveQuantContinuous(spark, indexDir, probes)) === prefixWant)
+      rows(SimilarityOps.serveQuantBatch(
+        spark, StreamOps.QuantFamily.roots(spark, indexDir), probes)) === prefixWant)
 
     // O(batch) commits; seed untouched
     def gen(sub: String): Long = spark.read.parquet(s"$indexDir/$sub").count()
@@ -94,14 +95,16 @@ class StreamingQuantSpec extends SparkSpec {
       s"$indexDir/v1/gen/${graft.index.GenLog.Superseded}")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/v2/full")))
     assert(
-      rows(StreamOps.serveQuantContinuous(spark, indexDir, probes)) === prefixWant)
+      rows(SimilarityOps.serveQuantBatch(
+        spark, StreamOps.QuantFamily.roots(spark, indexDir), probes)) === prefixWant)
 
     // resume + final batch: the continuous serve lands on the
     // oracle-checked q_sim_quantized
     stageFile(src, all.filter($"vec_id" > c2), "batch3", 3000000L)
     run()
     assert(
-      rows(StreamOps.serveQuantContinuous(spark, indexDir, probes)) ===
+      rows(SimilarityOps.serveQuantBatch(
+        spark, StreamOps.QuantFamily.roots(spark, indexDir), probes)) ===
         rows(SparkEntry.queries("q_sim_quantized")(spark, sf)))
   }
 }

@@ -92,18 +92,21 @@ class StreamingRollupSpec extends SparkSpec {
     // mid-stream: seed + one streamed generation ≡ the prefix corpus
     val prefix = all.filter(to_date($"ts") <= lit(c1))
     val wantPrefix = want(prefix)
-    assert(rows(StreamOps.serveRollupContinuous(spark, dir).orderBy("event_type"))
+    assert(rows(RelationalOps.serveRollup(
+      spark, StreamOps.RollupFamily.roots(spark, dir)).orderBy("event_type"))
       === wantPrefix)
 
     // compaction folds generations without moving the report
     StreamOps.RollupFamily.compact(spark, dir)
-    assert(rows(StreamOps.serveRollupContinuous(spark, dir).orderBy("event_type"))
+    assert(rows(RelationalOps.serveRollup(
+      spark, StreamOps.RollupFamily.roots(spark, dir)).orderBy("event_type"))
       === wantPrefix)
 
     // end-of-feed: the serve lands on the full-corpus batch path
     stageFile(src, all.filter(to_date($"ts") > lit(c1)), "batch2")
     run()
-    assert(rows(StreamOps.serveRollupContinuous(spark, dir).orderBy("event_type"))
+    assert(rows(RelationalOps.serveRollup(
+      spark, StreamOps.RollupFamily.roots(spark, dir)).orderBy("event_type"))
       === want(all))
 
     // the TIME-SLICED view reads the same state: one row per (day,
@@ -111,7 +114,7 @@ class StreamingRollupSpec extends SparkSpec {
     val wantDailyDir = Files.createTempDirectory("graft_rollup_wantd").toString
     RelationalOps.writeRollupStateFrom(spark, all, wantDailyDir)
     assert(
-      rows(StreamOps.serveRollupDailyContinuous(spark, dir)
+      rows(RelationalOps.serveRollupDaily(spark, StreamOps.RollupFamily.roots(spark, dir))
         .orderBy("day", "event_type")) ===
         rows(RelationalOps.serveRollupDaily(spark, Seq(wantDailyDir))
           .orderBy("day", "event_type")))
@@ -137,11 +140,11 @@ class StreamingRollupSpec extends SparkSpec {
     StreamOps.RollupFamily.commit(tail.filter($"event_id" % 2 === 0), dir, 0L)
     StreamOps.RollupFamily.commit(tail.filter($"event_id" % 2 =!= 0), dir, 1L)
 
-    val served = StreamOps.serveRollupContinuous(spark, dir)
+    val served = RelationalOps.serveRollup(spark, StreamOps.RollupFamily.roots(spark, dir))
     // the daily view under the SAME straddle: per-(day, type) mass must
     // be exact — same-day partials from two generations merge by count
     // sum, so the split cannot move a row count
-    val dailyGot = StreamOps.serveRollupDailyContinuous(spark, dir)
+    val dailyGot = RelationalOps.serveRollupDaily(spark, StreamOps.RollupFamily.roots(spark, dir))
       .select($"day", $"event_type", $"n")
       .collect().map(r => (r.getDate(0).toString, r.getString(1)) -> r.getLong(2)).toMap
     val dailyWant = all

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.StreamOps
+import graft.ops.{StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** CONTINUOUS HYBRID RETRIEVAL ([[StreamOps.serveRrfContinuous]]): the
-  * RRF composition served from the three MAINTAINED generation sets —
+/** CONTINUOUS HYBRID RETRIEVAL ([[TextOps.serveRrf]] over family roots):
+  * the RRF composition served from the three MAINTAINED generation sets —
   * streamed postings, streamed ANN buckets, streamed id-sharded store —
   * must answer exactly like the monolithic q_retrieval_rrf over the same
   * corpus at every point in time: mid-stream against the composed query
@@ -92,7 +92,11 @@ class StreamingRrfSpec extends SparkSpec {
     run()
 
     def continuous(): Seq[String] =
-      rows(StreamOps.serveRrfContinuous(spark, bm25Dir, annDir, storeDir))
+      rows(TextOps.serveRrf(
+        spark,
+        StreamOps.Bm25Family.roots(spark, bm25Dir),
+        StreamOps.AnnFamily.roots(spark, annDir),
+        StreamOps.EmbStoreFamily.roots(spark, storeDir)))
 
     // mid-stream identity: the maintained indexes must answer exactly
     // like the monolithic composed query over the staged prefix corpus

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.{CurationOps, SimilarityOps, StreamOps, Vec}
+import graft.ops.{CurationOps, SimilarityOps, StreamOps, TextOps, Vec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -148,7 +148,8 @@ class StreamingUnifiedPipelineSpec extends SparkSpec {
     // text: the continuous positional index answers the phrase benchmark
     // exactly like an in-session explode of the curated corpus — the
     // thirteenth family rides the same feed
-    def phraseGot() = rows(StreamOps.servePhraseContinuous(spark, p.corpus.phraseIndexDir))
+    def phraseGot() = rows(TextOps.servePhrase(
+      spark, StreamOps.PhraseFamily.roots(spark, p.corpus.phraseIndexDir), TextOps.PhraseQueries))
     val phraseWant =
       rows(graft.ops.TextOps.phraseHits(curatedAll, graft.ops.TextOps.PhraseQueries))
     assert(phraseGot() === phraseWant, "phrase leg diverged")
@@ -178,8 +179,9 @@ class StreamingUnifiedPipelineSpec extends SparkSpec {
       .localCheckpoint(true)
     val annRebuilt = Files.createTempDirectory("graft_up_ann_rb").toString
     SimilarityOps.writeAnnIndexFor(spark, embCur, annRebuilt)
-    def annGot() = rows(StreamOps.serveAnnContinuous(spark, p.vectors.annDir, annProbes))
-    val annWant = rows(SimilarityOps.serveAnnBatch(spark, annRebuilt, annProbes))
+    def annGot() = rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, p.vectors.annDir), annProbes))
+    val annWant = rows(SimilarityOps.serveAnnBatch(spark, Seq(annRebuilt), annProbes))
     assert(annGot() === annWant, "ANN leg diverged")
 
     // quantized tier: exact-BIGINT cut, no float-order slack
@@ -187,17 +189,19 @@ class StreamingUnifiedPipelineSpec extends SparkSpec {
     val quantRebuilt = Files.createTempDirectory("graft_up_q_rb").toString
     SimilarityOps.writeQuantIndexFor(spark, embCur, quantRebuilt)
     def quantGot() =
-      rows(StreamOps.serveQuantContinuous(spark, p.vectors.quantDir, qProbes))
+      rows(SimilarityOps.serveQuantBatch(
+        spark, StreamOps.QuantFamily.roots(spark, p.vectors.quantDir), qProbes))
     val quantWant =
-      rows(SimilarityOps.serveQuantBatchMulti(spark, Seq(quantRebuilt), qProbes))
+      rows(SimilarityOps.serveQuantBatch(spark, Seq(quantRebuilt), qProbes))
     assert(quantGot() === quantWant, "quantized leg diverged")
 
     // IVF: continuous serve ≡ one index rebuilt with the epoch codebook
     val ivfProbes = embCur.filter($"vec_id" < 5)
     val ivfRebuilt = Files.createTempDirectory("graft_up_ivf_rb").toString
     SimilarityOps.writeIvfIndexFrom(spark, embCur, cents, ivfRebuilt)
-    def ivfGot() = rows(StreamOps.serveIvfContinuous(spark, p.vectors.ivfDir, ivfProbes))
-    val ivfWant = rows(SimilarityOps.serveIvfBatch(spark, ivfRebuilt, ivfProbes))
+    def ivfGot() = rows(SimilarityOps.serveIvfBatch(
+      spark, StreamOps.ivfFamily(p.vectors.ivfDir).roots(spark, p.vectors.ivfDir), ivfProbes))
+    val ivfWant = rows(SimilarityOps.serveIvfBatch(spark, Seq(ivfRebuilt), ivfProbes))
     assert(ivfGot() === ivfWant, "IVF leg diverged")
 
     // semantic: survivor-log union ≡ the monolithic anchor prune over

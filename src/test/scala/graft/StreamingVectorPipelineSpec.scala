@@ -106,8 +106,9 @@ class StreamingVectorPipelineSpec extends SparkSpec {
       .localCheckpoint(eager = true)
     val annRebuilt = Files.createTempDirectory("graft_vp_ann_rb").toString
     SimilarityOps.writeAnnIndexFor(spark, e, annRebuilt)
-    def annGot() = rows(StreamOps.serveAnnContinuous(spark, p.annDir, annProbes))
-    val annWant = rows(SimilarityOps.serveAnnBatch(spark, annRebuilt, annProbes))
+    def annGot() = rows(SimilarityOps.serveAnnBatch(
+      spark, StreamOps.AnnFamily.roots(spark, p.annDir), annProbes))
+    val annWant = rows(SimilarityOps.serveAnnBatch(spark, Seq(annRebuilt), annProbes))
     assert(annGot() === annWant, "ANN leg diverged")
 
     // quantized tier: the exact-BIGINT stage-1 cut leaves no float-order
@@ -116,17 +117,19 @@ class StreamingVectorPipelineSpec extends SparkSpec {
     val quantRebuilt = Files.createTempDirectory("graft_vp_q_rb").toString
     SimilarityOps.writeQuantIndexFor(spark, e, quantRebuilt)
     def quantGot() =
-      rows(StreamOps.serveQuantContinuous(spark, p.quantDir, qProbes))
+      rows(SimilarityOps.serveQuantBatch(
+        spark, StreamOps.QuantFamily.roots(spark, p.quantDir), qProbes))
     val quantWant =
-      rows(SimilarityOps.serveQuantBatchMulti(spark, Seq(quantRebuilt), qProbes))
+      rows(SimilarityOps.serveQuantBatch(spark, Seq(quantRebuilt), qProbes))
     assert(quantGot() === quantWant, "quantized leg diverged")
 
     // IVF: continuous serve ≡ one index rebuilt with the epoch codebook
     val ivfProbes = e.filter($"vec_id" < 5)
     val ivfRebuilt = Files.createTempDirectory("graft_vp_ivf_rb").toString
     SimilarityOps.writeIvfIndexFrom(spark, e, cents, ivfRebuilt)
-    def ivfGot() = rows(StreamOps.serveIvfContinuous(spark, p.ivfDir, ivfProbes))
-    val ivfWant = rows(SimilarityOps.serveIvfBatch(spark, ivfRebuilt, ivfProbes))
+    def ivfGot() = rows(SimilarityOps.serveIvfBatch(
+      spark, StreamOps.ivfFamily(p.ivfDir).roots(spark, p.ivfDir), ivfProbes))
+    val ivfWant = rows(SimilarityOps.serveIvfBatch(spark, Seq(ivfRebuilt), ivfProbes))
     assert(ivfGot() === ivfWant, "IVF leg diverged")
 
     // semantic: survivor-log union ≡ the monolithic anchor prune under
