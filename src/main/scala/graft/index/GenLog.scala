@@ -8,11 +8,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The shared generation-log kernel behind every persisted index in the
   * library — the ONE implementation of version directories, commit
   * markers, merge-on-read root resolution, compaction, and snapshot
-  * pruning that every maintained index family rides: the twelve
-  * generation-local families ([[GenFamily]]) — streamed, or built once
-  * for a served or incremental query ([[GenFamily.buildOnce]]) — the
-  * dedup families' bespoke folds ([[graceDelete]], [[pruneSnapshots]])
-  * and the few serving builds with a layout of their own ([[buildOnce]]).
+  * pruning that every maintained index family rides: the generation-local
+  * families ([[GenFamily]]) — streamed, or built once for a served or
+  * incremental query ([[GenFamily.buildOnce]]) — the near-dup index's
+  * stateful log, whose compaction keeps [[KeepFulls]] snapshots and
+  * grace-deletes ([[graceDelete]]) like a family's, and the few serving
+  * builds with a layout of their own ([[buildOnce]]).
   *
   * Layout contract: an index directory holds `v<N>` version directories,
   * each holding named ARTIFACT directories (`full`, `gen`, `assign`,
@@ -73,8 +74,8 @@ object GenLog {
     * first call (files stay intact for readers whose scan listing was
     * resolved before the fold committed), delete it on a later call —
     * a live reader outlives its snapshot for one full compaction
-    * interval. Shared by [[GenFamily.compact]] and the dedup
-    * families' bespoke compactions.
+    * interval. Shared by [[GenFamily.compact]] and the near-dup index's
+    * compaction.
     */
   private[graft] def graceDelete(fs: FileSystem, path: Path): Unit = {
     val tomb = new Path(path, Superseded)
@@ -565,10 +566,13 @@ object GenLog {
       * generation. Generations at or below the newest full are superseded
       * (folded into it); an uncommitted full (compaction crashed
       * mid-write) is invisible, so reads are unchanged until the fold
-      * commits.
+      * commits. `upTo` reads the family as of that version — the newest
+      * full at or below it plus the generations in (full, upTo] — so a
+      * writer that reads prior state (batch b reads as of b) never reads
+      * its own committed generation when the batch is retried.
       */
-    def roots(s: SparkSession, dir: String): Seq[String] = {
-      val (f, gens) = live(s, dir)
+    def roots(s: SparkSession, dir: String, upTo: Long = Long.MaxValue): Seq[String] = {
+      val (f, gens) = live(s, dir, upTo)
       paths(dir, f, gens)
     }
 
@@ -653,38 +657,19 @@ object GenLog {
       due
     }
 
-    // The newest committed full snapshot and the committed generations
-    // above it, from one listing each; an unseeded directory is refused
-    // with the family's label.
-    private def live(s: SparkSession, dir: String): (Long, Seq[Long]) = {
-      val fulls = versions(s, dir, requiring = FullSub)
+    // The newest committed full snapshot at or below `upTo` and the
+    // committed generations in (full, upTo], from one listing each; an
+    // unseeded directory is refused with the family's label.
+    private def live(s: SparkSession, dir: String, upTo: Long = Long.MaxValue): (Long, Seq[Long]) = {
+      val fulls = versions(s, dir, requiring = FullSub).filter(_ <= upTo)
       require(
         fulls.nonEmpty,
         s"$label at $dir has no committed full snapshot (seed it first)")
       val f = fulls.max
-      (f, versions(s, dir, requiring = GenSub).filter(_ > f).sorted)
+      (f, versions(s, dir, requiring = GenSub).filter(v => v > f && v <= upTo).sorted)
     }
 
     private def paths(dir: String, f: Long, gens: Seq[Long]): Seq[String] =
       s"$dir/v$f/$FullSub" +: gens.map(v => s"$dir/v$v/$GenSub")
-  }
-
-  /** Drop all but the newest `keep` committed copies of an artifact —
-    * the standalone pruning cadence for families whose compaction is
-    * bespoke (the dedup index's md5/band snapshot pairs).
-    */
-  def pruneSnapshots(
-      s: SparkSession,
-      dir: String,
-      arts: Seq[String],
-      gate: String,
-      keep: Int): Unit = {
-    val fs = fsOf(s, dir)
-    versions(s, dir, requiring = gate).sorted.dropRight(math.max(keep, 1)).foreach { v =>
-      arts.foreach { a =>
-        val p = new Path(s"$dir/v$v/$a")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
   }
 }

@@ -64,14 +64,6 @@ object CurationOps {
   private val MixRates: Seq[(String, Int)] = Seq("en" -> 40, "zh" -> 25)
   private val MixDefault = 10
 
-  /** q_sample_mix — deterministic per-stratum mixture sampling: keep a
-    * document iff its salted hash bucket falls under its language's rate.
-    * Entirely map-side — the rate ladder and the hash are evaluated inside
-    * the scan's stage, so at 100 TB this is a single pass with ZERO
-    * shuffles (the orderBy exists only for the oracle compare; a pipeline
-    * sink would drop it). Contrast with `df.sample`, whose per-partition
-    * RNG state changes the selected set under retries and repartitioning.
-    */
   /** The mixture predicate itself, shared by the batch query and the
     * streaming lift ([[StreamOps.liftSampleMix]]) — stateless, so the
     * batch and stream forms are the same expression.
@@ -83,6 +75,14 @@ object CurationOps {
     pmod(hkey("mix"), lit(100L)) < rate
   }
 
+  /** q_sample_mix — deterministic per-stratum mixture sampling: keep a
+    * document iff its salted hash bucket falls under its language's rate.
+    * Entirely map-side — the rate ladder and the hash are evaluated inside
+    * the scan's stage, so at 100 TB this is a single pass with ZERO
+    * shuffles (the orderBy exists only for the oracle compare; a pipeline
+    * sink would drop it). Contrast with `df.sample`, whose per-partition
+    * RNG state changes the selected set under retries and repartitioning.
+    */
   private def sampleMix(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     docs(s, d)

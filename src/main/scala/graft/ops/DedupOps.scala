@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, T}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -118,22 +118,6 @@ object DedupOps {
       s"(($acc) * 131 + mh${NearBandRows * j + k}) % $P"
     }
 
-  /** The shared banded-Jaccard pipeline: `sets` must carry
-    * (doc_id, lang, th = sorted distinct element hashes, n = |th|).
-    * Threshold θ = num/den, with the lossless size bound den·|A| ≥ num·|B|
-    * (∧ symmetric) applied inside the candidate join.
-    *
-    * Plan economics: the hash arrays ride along through the band explode
-    * and the self-join is pinned to SHUFFLE_HASH, so both sides share ONE
-    * shuffle of the hashed corpus (ReusedExchange — the expensive
-    * tokenize+hash lineage runs once, asserted in PlanShapeSpec). The
-    * alternative — slim (id, band) candidates plus fetch-back joins —
-    * shuffles less data but re-reads and re-hashes the corpus once per
-    * join under AQE's broadcasts, which is the wrong trade at every scale
-    * factor measured. A pair sharing both bands is verified per band and
-    * collapsed by the final distinct (identical i/sz both times); being a
-    * shuffle join, a hot band bucket splits under AQE skew handling.
-    */
   /** Band rows of a (doc_id, lang, th, n) sets frame: one (band_idx,
     * band_val) row per document per band, carrying lang/n/th for the
     * downstream candidate join + exact-Jaccard verify. Shared by the
@@ -154,6 +138,22 @@ object DedupOps {
         .as(Seq("band_idx", "band_val")))
   }
 
+  /** The shared banded-Jaccard pipeline: `sets` must carry
+    * (doc_id, lang, th = sorted distinct element hashes, n = |th|).
+    * Threshold θ = num/den, with the lossless size bound den·|A| ≥ num·|B|
+    * (∧ symmetric) applied inside the candidate join.
+    *
+    * Plan economics: the hash arrays ride along through the band explode
+    * and the self-join is pinned to SHUFFLE_HASH, so both sides share ONE
+    * shuffle of the hashed corpus (ReusedExchange — the expensive
+    * tokenize+hash lineage runs once, asserted in PlanShapeSpec). The
+    * alternative — slim (id, band) candidates plus fetch-back joins —
+    * shuffles less data but re-reads and re-hashes the corpus once per
+    * join under AQE's broadcasts, which is the wrong trade at every scale
+    * factor measured. A pair sharing both bands is verified per band and
+    * collapsed by the final distinct (identical i/sz both times); being a
+    * shuffle join, a hot band bucket splits under AQE skew handling.
+    */
   private[graft] def bandedJaccardPairs(
       s: SparkSession,
       sets: DataFrame,
@@ -475,16 +475,6 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
-  /** q_dedup_cc — transitive duplicate-cluster resolution: pairwise
-    * near-dup output is not a dedup decision (A≈B and B≈C put all three
-    * in one cluster even when A and C never pair), so the pair set from
-    * [[dedupNear]] is closed into connected components and every document
-    * gets (cluster_id = min doc_id of its component, cluster_size).
-    * Singletons are their own cluster, so the output is a total
-    * assignment a dedup sink can consume directly (keep iff doc_id =
-    * cluster_id). The oracle computes the identical closure as a DuckDB
-    * recursive CTE over the identical pair set.
-    */
   /** The full-rebuild closure over an arbitrary (doc_id, lang, text)
     * frame: exact-dup collapse → banded pairs over reps → min-label
     * closure, returning (doc_id, cluster_id) unsorted. [[dedupCc]]
@@ -526,6 +516,16 @@ object DedupOps {
       grouped.select($"doc_id", $"rep"))
   }
 
+  /** q_dedup_cc — transitive duplicate-cluster resolution: pairwise
+    * near-dup output is not a dedup decision (A≈B and B≈C put all three
+    * in one cluster even when A and C never pair), so the pair set from
+    * [[dedupNear]] is closed into connected components and every document
+    * gets (cluster_id = min doc_id of its component, cluster_size).
+    * Singletons are their own cluster, so the output is a total
+    * assignment a dedup sink can consume directly (keep iff doc_id =
+    * cluster_id). The oracle computes the identical closure as a DuckDB
+    * recursive CTE over the identical pair set.
+    */
   private def dedupCc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     fullAssign(s, docs(s, d))
@@ -616,28 +616,6 @@ object DedupOps {
     (labels.select($"doc_id", $"cluster_id"), pairs, md5Index, bandIndex)
   }
 
-  /** Incremental near-dedup apply: assign every document of a NEW batch a
-    * cluster over (base ∪ delta) using only the persisted index state —
-    * never the base corpus itself. Assumes batch doc_ids are greater than
-    * all base doc_ids (monotone ingest ids — the reference's serial
-    * PK shape), so every pre-existing cluster keeps its label and the
-    * delta assignment equals the full rebuild restricted to delta rows
-    * (IncrementalDedupSpec proves this; the q_dedup_incr oracle IS the
-    * full rebuild, so the correctness gate re-proves it every round).
-    *
-    * Steps, each a keyed shuffle or map: (1) exact-dup collapse within the
-    * batch; (2) batch reps equi-join the md5 index — an exact content match
-    * attaches to its cluster with zero band work; (3) md5-unmatched reps
-    * band-join ONLY the persisted band buckets (equi-join on
-    * (band_idx, band_val, lang) + the lossless size bound) and verify
-    * exact Jaccard ≥ 0.9 against the index-carried token hashes;
-    * (4) batch-internal near-dup pairs from the same banded self-join as
-    * q_dedup_near; (5) one closure over the delta-sized graph, where base
-    * clusters are terminal nodes (their label is the component min by the
-    * id-monotonicity invariant). Edges through md5-matched reps to other
-    * batch docs are NOT needed: an exact match shares its base rep's token
-    * set, so any batch doc near it band-matches the index directly.
-    */
   /** Verified (probe doc → base cluster) attachments of a probe sets
     * frame against the persisted band index: equi-join on
     * (band_idx, band_val, lang) + the lossless size bound, exact Jaccard
@@ -711,6 +689,28 @@ object DedupOps {
     DeltaGraph(grouped, unmatched, deltaToks, md5Edges, vsIndex, deltaPairs)
   }
 
+  /** Incremental near-dedup apply: assign every document of a NEW batch a
+    * cluster over (base ∪ delta) using only the persisted index state —
+    * never the base corpus itself. Assumes batch doc_ids are greater than
+    * all base doc_ids (monotone ingest ids — the reference's serial
+    * PK shape), so every pre-existing cluster keeps its label and the
+    * delta assignment equals the full rebuild restricted to delta rows
+    * (IncrementalDedupSpec proves this; the q_dedup_incr oracle IS the
+    * full rebuild, so the correctness gate re-proves it every round).
+    *
+    * Steps, each a keyed shuffle or map: (1) exact-dup collapse within the
+    * batch; (2) batch reps equi-join the md5 index — an exact content match
+    * attaches to its cluster with zero band work; (3) md5-unmatched reps
+    * band-join ONLY the persisted band buckets (equi-join on
+    * (band_idx, band_val, lang) + the lossless size bound) and verify
+    * exact Jaccard ≥ 0.9 against the index-carried token hashes;
+    * (4) batch-internal near-dup pairs from the same banded self-join as
+    * q_dedup_near; (5) one closure over the delta-sized graph, where base
+    * clusters are terminal nodes (their label is the component min by the
+    * id-monotonicity invariant). Edges through md5-matched reps to other
+    * batch docs are NOT needed: an exact match shares its base rep's token
+    * set, so any batch doc near it band-matches the index directly.
+    */
   private[graft] def applyDedupDelta(
       s: SparkSession,
       delta: DataFrame,
@@ -777,11 +777,11 @@ object DedupOps {
     * smaller label); labels only move down and a remapped old label's
     * rows leave the live index, so the accumulated log is a functional
     * acyclic pointer forest that composes transitively on read.
-    */
-  /** Since r18 the tuple also carries the batch's VERIFIED PAIR set
+    *
+    * The tuple also carries the batch's VERIFIED PAIR set
     * (md5-index attachments ∪ band-index attachments ∪ batch-internal
     * banded pairs) — O(batch) slim id pairs, the per-batch generation of
-    * the maintained pair graph (verdict-r17 #1): endpoints are batch
+    * the maintained pair graph: endpoints are batch
     * reps and as-of-commit cluster labels, so the union of all committed
     * pair generations closes to exactly the full-rebuild components
     * (a label is always a node of its own component, and later bridges
@@ -838,9 +838,10 @@ object DedupOps {
     * FULL rebuild over base ∪ delta restricted to delta rows, so the
     * hash-checked contract is precisely delta-apply ≡ full rebuild.
     * The query rides the persisted build-once index exactly like a daily
-    * ingest would: build writes the base md5/band index ONCE per
-    * warehouse root (the state a daily ingest already holds); serve
-    * applies the batch against the files — the daily-ingest latency.
+    * ingest would: build seeds the continuous-dedup index's v0 md5/band
+    * snapshot ONCE per warehouse root ([[StreamOps.seedDedupIndex]], the
+    * state a daily ingest already holds); serve applies the batch against
+    * that snapshot — the daily-ingest latency.
     */
   private[graft] def dedupIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
@@ -849,22 +850,19 @@ object DedupOps {
     val (base, delta) = TextOps.newestTenth(all)
     val root = graft.index.GenLog.datasetRoot(s, d) + "/dedup_incr"
     val build = () => {
-      graft.index.GenLog.buildOnce(s, root) {
-        val (md5Index, bandIndex) = buildDedupIndex(s, base)
-        md5Index.write.mode(SaveMode.Overwrite).parquet(s"$root/md5")
-        bandIndex.write.mode(SaveMode.Overwrite).parquet(s"$root/band")
-      }
+      graft.index.GenLog.buildOnce(s, root)(StreamOps.seedDedupIndex(s, base, root))
       ()
     }
-    val serve = () =>
-      applyDedupDelta(
-        s, delta, T.parquet(s, s"$root/md5"), T.parquet(s, s"$root/band"))
+    val serve = () => {
+      val (md5, band) = StreamOps.readDedupIndexState(s, root, upTo = 0)
+      applyDedupDelta(s, delta, md5, band)
         .crossJoin(broadcast(TextOps.tenthThreshold(all)))
         .select(
           $"doc_id",
           $"cluster_id",
           ($"cluster_id" > $"thr").as("is_new_cluster"))
         .orderBy($"doc_id")
+    }
     (build, serve)
   }
 
@@ -942,12 +940,9 @@ object DedupOps {
     val base = withThr.filter($"vec_id" <= $"thr").select($"vec_id", $"embedding")
     val delta = withThr.filter($"vec_id" > $"thr").select($"vec_id", $"embedding")
     val root = graft.index.GenLog.datasetRoot(s, d) + "/embed_incr"
-    val build = () => {
-      graft.index.GenLog.buildOnce(s, root)(
-        buildEmbedIndex(s, base).write.mode(SaveMode.Overwrite).parquet(root))
-      ()
-    }
-    val serve = () => applyEmbedDelta(s, delta, T.parquet(s, root))
+    val F = StreamOps.EmbedBandFamily
+    val build = () => { F.buildOnce(s, root)(Seq(base)); () }
+    val serve = () => applyEmbedDelta(s, delta, StreamOps.embedBands(s, F.roots(s, root)))
     (build, serve)
   }
 
@@ -964,14 +959,6 @@ object DedupOps {
       "SELECT doc_id, cluster_id, cluster_id > (SELECT t FROM thr) AS is_new_cluster " +
       "FROM asgn WHERE doc_id > (SELECT t FROM thr) ORDER BY doc_id"
 
-  /** q_dedup_ngram — n-gram (3-token shingle) Jaccard near-dup: the
-    * order-sensitive dedup variant (unigram sets can't tell a permuted
-    * rewrite from a copy; shingles can). Same banded-LSH candidate →
-    * exact-verify shape as [[dedupNear]], over the shingle-hash sets, at
-    * θ = 0.8. Documents with fewer than 3 tokens degrade to a single
-    * whole-text shingle. Shingle hashing is one pass; the signature/band
-    * lanes reuse the hashed shingle array.
-    */
   /** Shingle hash = polynomial combine of the three member TOKEN hashes
     * ((h_i·131 + h_{i+1}) mod P · 131 + h_{i+2}) mod P — one md5 per token
     * (computed once in the ht projection) instead of one md5 per shingle
@@ -992,6 +979,14 @@ object DedupOps {
       .withColumn("n", size($"th"))
   }
 
+  /** q_dedup_ngram — n-gram (3-token shingle) Jaccard near-dup: the
+    * order-sensitive dedup variant (unigram sets can't tell a permuted
+    * rewrite from a copy; shingles can). Same banded-LSH candidate →
+    * exact-verify shape as [[dedupNear]], over the shingle-hash sets, at
+    * θ = 0.8. Documents with fewer than 3 tokens degrade to a single
+    * whole-text shingle. Shingle hashing is one pass; the signature/band
+    * lanes reuse the hashed shingle array.
+    */
   private def dedupNgram(s: SparkSession, d: String): DataFrame =
     bandedJaccardPairs(s, shingleSets(s, d), 4, 5)
 
@@ -1524,23 +1519,6 @@ object DedupOps {
       "lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars " +
       "FROM d GROUP BY 1, 2 ORDER BY split, lang"
 
-  /** q_pipeline_corpus2 — the PRODUCTION corpus build: q_pipeline_corpus
-    * with the full quality battery and cluster-based near-dedup composed
-    * between the gate and the split. Stages: quality gate
-    * ([[CurationOps.qualityGate]] — length, lexical diversity, and the
-    * q_text_repetition duplicate/top-bigram signals, all map-side) →
-    * exact content dedup (first-writer-wins md5 window) → near-dup
-    * cluster closure over the survivors ([[bandedJaccardPairs]] at
-    * θ = 0.9 → [[ccAssign]]; keep iff doc_id = cluster_id, i.e. exactly
-    * one representative — the first writer — per transitive near-dup
-    * cluster) → deterministic 80/10/10 split → per-(split, lang)
-    * accounting. Exchange economics: the gate is a scan-time filter, the
-    * md5 window and the band self-join are the two data-sized shuffles,
-    * the closure loop runs over the contracted pair graph
-    * (O(log diameter) rounds, each over a shrinking edge set), and the
-    * final job is one small join + one aggregate + the output sort —
-    * every stage is a map or one keyed shuffle at any corpus size.
-    */
   /** The kept universe of the production corpus build — quality gate →
     * exact dedup → near-dup cluster closure (keep iff representative) →
     * deterministic split assignment — one (doc_id, lang, n_chars, split)
@@ -1577,6 +1555,23 @@ object DedupOps {
           .as("split"))
   }
 
+  /** q_pipeline_corpus2 — the PRODUCTION corpus build: q_pipeline_corpus
+    * with the full quality battery and cluster-based near-dedup composed
+    * between the gate and the split. Stages: quality gate
+    * ([[CurationOps.qualityGate]] — length, lexical diversity, and the
+    * q_text_repetition duplicate/top-bigram signals, all map-side) →
+    * exact content dedup (first-writer-wins md5 window) → near-dup
+    * cluster closure over the survivors ([[bandedJaccardPairs]] at
+    * θ = 0.9 → [[ccAssign]]; keep iff doc_id = cluster_id, i.e. exactly
+    * one representative — the first writer — per transitive near-dup
+    * cluster) → deterministic 80/10/10 split → per-(split, lang)
+    * accounting. Exchange economics: the gate is a scan-time filter, the
+    * md5 window and the band self-join are the two data-sized shuffles,
+    * the closure loop runs over the contracted pair graph
+    * (O(log diameter) rounds, each over a shrinking edge set), and the
+    * final job is one small join + one aggregate + the output sort —
+    * every stage is a map or one keyed shuffle at any corpus size.
+    */
   private def pipelineCorpus2(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     corpusKept(s, d)
@@ -1615,35 +1610,6 @@ object DedupOps {
       "lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars " +
       "FROM d GROUP BY 1, 2 ORDER BY split, lang"
 
-  /** q_dedup_passage_cc — cluster documents that share an exact
-    * ≥50-token passage: the Lee et al. (arXiv:2107.06499 §4.1,
-    * ExactSubstr) duplication relation turned into connected components
-    * over the corpus — the grouping a curation pipeline acts on when it
-    * keeps ONE carrier of a copied passage instead of scrubbing the
-    * passage everywhere (the complement of q_text_scrub50's deletion:
-    * there the passage is removed from all carriers, here the caller
-    * keeps cluster representatives whole).
-    *
-    * The edge relation is EXACT, not a chain heuristic: two documents
-    * share a ≥[[TextOps.PassageMinMatch]]-token passage iff they share
-    * at least one aligned 50-token window, so window-fingerprint
-    * equality (md5 of each 50-token slice, one per token position — the
-    * same row count as the 5-gram state, 16 bytes each) is a complete
-    * and sound pair witness. Components form by the min-doc STAR trick:
-    * each window links its carriers to the window's minimum doc_id —
-    * linear in occurrences, never the quadratic within-window pair
-    * blowup — and stars preserve connectivity exactly (every carrier
-    * pair is 2-hop via the hub). Closure runs on [[ccAssign]], the same
-    * hook-and-contract/bounded-driver-finish kernel as q_dedup_cc; the
-    * oracle replays it with the shared recursive-CTE fragment check.py
-    * replaces iteratively at 10× scale.
-    *
-    * Scale shape: one distinct on (window, doc) — a single shuffle on
-    * the fingerprint key that the min-doc aggregate and the hub join
-    * both reuse — then edges ≤ occurrences, and the ccAssign quotient
-    * graph is tiny (only docs that actually share passages carry
-    * edges).
-    */
   /** Distinct (doc_id, g50) window-fingerprint occurrences straight off
     * the corpus text — the registry path's edge witness.
     */
@@ -1689,6 +1655,35 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
+  /** q_dedup_passage_cc — cluster documents that share an exact
+    * ≥50-token passage: the Lee et al. (arXiv:2107.06499 §4.1,
+    * ExactSubstr) duplication relation turned into connected components
+    * over the corpus — the grouping a curation pipeline acts on when it
+    * keeps ONE carrier of a copied passage instead of scrubbing the
+    * passage everywhere (the complement of q_text_scrub50's deletion:
+    * there the passage is removed from all carriers, here the caller
+    * keeps cluster representatives whole).
+    *
+    * The edge relation is EXACT, not a chain heuristic: two documents
+    * share a ≥[[TextOps.PassageMinMatch]]-token passage iff they share
+    * at least one aligned 50-token window, so window-fingerprint
+    * equality (md5 of each 50-token slice, one per token position — the
+    * same row count as the 5-gram state, 16 bytes each) is a complete
+    * and sound pair witness. Components form by the min-doc STAR trick:
+    * each window links its carriers to the window's minimum doc_id —
+    * linear in occurrences, never the quadratic within-window pair
+    * blowup — and stars preserve connectivity exactly (every carrier
+    * pair is 2-hop via the hub). Closure runs on [[ccAssign]], the same
+    * hook-and-contract/bounded-driver-finish kernel as q_dedup_cc; the
+    * oracle replays it with the shared recursive-CTE fragment check.py
+    * replaces iteratively at 10× scale.
+    *
+    * Scale shape: one distinct on (window, doc) — a single shuffle on
+    * the fingerprint key that the min-doc aggregate and the hub join
+    * both reuse — then edges ≤ occurrences, and the ccAssign quotient
+    * graph is tiny (only docs that actually share passages carry
+    * edges).
+    */
   private def passageCc(s: SparkSession, d: String): DataFrame =
     passageCcFromOcc(
       s,

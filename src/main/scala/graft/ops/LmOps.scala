@@ -514,18 +514,6 @@ object LmOps {
           .as("bucket"))
   }
 
-  /** q_lm_bucket — the CCNet head/middle/tail assignment: per LANGUAGE,
-    * scored documents ranked by rarity (commonest language first) and
-    * cut into terciles — bucket 1 is the "head" CCNet keeps
-    * unconditionally, 3 the "tail" it drops or down-samples. The rank
-    * order is total (rarity6, then doc_id), so the assignment is
-    * deterministic under ties; unscorable docs (n_tokens = 0) carry no
-    * rank and are excluded — q_lm_score still reports them. The tercile
-    * assignment is [[langTerciles]]'s two-pass distributed rank — range
-    * partitioning bounds every sort by the range slice, not the
-    * language, so the plan survives Zipf-skewed language sizes at
-    * 100 TB where a per-language window would put English in one task.
-    */
   /** (doc_id, lang, rarity6) for every SCORABLE doc — the q_lm_bucket
     * input, computed as ONE inner join of the per-doc score aggregate
     * against the lake's (doc_id, lang) map. Row-identical to the old
@@ -546,6 +534,18 @@ object LmOps {
         X.r6($"sr".cast("double") / $"n_tokens".cast("double")).as("rarity6"))
   }
 
+  /** q_lm_bucket — the CCNet head/middle/tail assignment: per LANGUAGE,
+    * scored documents ranked by rarity (commonest language first) and
+    * cut into terciles — bucket 1 is the "head" CCNet keeps
+    * unconditionally, 3 the "tail" it drops or down-samples. The rank
+    * order is total (rarity6, then doc_id), so the assignment is
+    * deterministic under ties; unscorable docs (n_tokens = 0) carry no
+    * rank and are excluded — q_lm_score still reports them. The tercile
+    * assignment is [[langTerciles]]'s two-pass distributed rank — range
+    * partitioning bounds every sort by the range slice, not the
+    * language, so the plan survives Zipf-skewed language sizes at
+    * 100 TB where a per-language window would put English in one task.
+    */
   private def lmBucket(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ft = TextOps.bm25TokensOf(docs(s, d))

@@ -328,68 +328,35 @@ object RelationalOps {
     */
   private[graft] val QdK = 4096
 
-  /** q_agg_quantile_merge — QUANTILE sketch state as DATA, completing
-    * the warehouse-rollup story q_agg_sketch_merge tells for distinct
-    * counts: Spark persists HLL state as a binary column
-    * (`hll_sketch_agg`/`hll_union_agg`) but exposes no mergeable
-    * quantile state — `percentile_approx` recomputes from raw rows every
-    * time. [[graft.expr.QDigest]] fills the gap with a DETERMINISTIC
-    * q-digest (public algorithm, Shrivastava et al. SenSys'04): per-day
-    * sketches build as a binary column (persistable to parquet —
-    * QDigestSpec proves the round trip), re-aggregate associatively
-    * across days via key-wise count sums (merge order provably cannot
-    * change the bytes), and estimate with a PROVABLE ≤ LogU·n/k rank
-    * error — and, unlike Spark's KLL or Datasketches' KLL/REQ, no
-    * randomness anywhere, so every estimate is a pure function of the
-    * input multiset (the oracle-checkability contract).
-    *
-    * Emitted shape is the sketch-family contract pattern: exact
-    * oracle-checkable columns (event_type, n_days, n) + bound booleans
-    * the DuckDB oracle asserts literal-true — p50_ok/p95_ok pin the
-    * DAY-MERGED estimate's TRUE RANK inside the theoretical q-digest
-    * bound ([[quantileRankChecks]] — rank space, because that is what
-    * the sketch guarantees; value-space percentile brackets assume a
-    * dense distribution), whole_ok pins the single whole-data sketch
-    * the same way, so the hash gate re-proves build, merge, and
-    * estimate error every round at both scales.
-    *
-    * Scale shape: both aggregations are mergeable two-phase (map-side
-    * partials, constant-size shuffled state ≤ 3k nodes per group); the
-    * exact rank counts are gate-scale companions exactly as in
-    * q_agg_sketch (the production rollup at 100 TB reads yesterday's
-    * persisted day sketches and unions new days in — O(days·k) work,
-    * never a raw re-scan).
-    */
-  /** The events table in the sketch's integer-cents domain — cents via
+  /** Events in the sketch's integer-cents domain, keyed by day — cents via
     * decimal cast (half-up, the q_stat_corr idiom), no double arithmetic
-    * anywhere.
+    * anywhere. The one transform behind every q-digest: the in-session
+    * merge query's day sketches and the rollup state's `qd`
+    * ([[rollupStateFrom]]) are the same sketches of the same rows.
     */
-  private def quantileCents(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    T(s, d, "events")
+  private def cents(events: DataFrame): DataFrame =
+    events
       // NULL values must be absent, not counted-as-zero: the build
       // aggregator's scalaLong encoder would silently decode NULL to 0
       // cents and count it into n, while the exact rank companions (and
       // DuckDB's aggregates) skip nulls — a null-bearing corpus would
-      // skew the digest without failing loudly (ADVICE r16).
-      .where($"value".isNotNull)
+      // skew the digest without failing loudly.
+      .where(col("value").isNotNull)
       .select(
-        $"ts",
-        $"event_type",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("v100"))
-  }
+        to_date(col("ts")).as("day"),
+        col("event_type"),
+        col("user_id"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long").as("v100"))
 
-  /** Per-(day, event_type) q-digest state — the frame that persists as
-    * the rollup's parquet generation (binary `sk` column). Shared by the
-    * in-session merge query and the served form's build.
+  private def qdBuild = udaf(new graft.expr.QDigestBuildAgg(QdK), Encoders.scalaLong)
+
+  /** Per-(day, event_type) q-digest state (binary `sk` column): the
+    * in-session merge query's day sketches.
     */
-  private[graft] def quantileDaily(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val build = udaf(new graft.expr.QDigestBuildAgg(QdK), Encoders.scalaLong)
-    quantileCents(s, d)
-      .groupBy(to_date($"ts").as("day"), $"event_type")
-      .agg(build($"v100").as("sk"))
-  }
+  private[graft] def quantileDaily(s: SparkSession, d: String): DataFrame =
+    cents(T(s, d, "events"))
+      .groupBy(col("day"), col("event_type"))
+      .agg(qdBuild(col("v100")).as("sk"))
 
   /** The contract brackets live in RANK space, not value space (ADVICE
     * r16): the q-digest guarantees the estimate's TRUE RANK is within
@@ -403,8 +370,8 @@ object RelationalOps {
     * distribution-shape assumption. Bounds follow the spec: one
     * compression logU·(n/k + 1) for the whole-data sketch, the
     * day-merge path logU·(2n/k + n_days + 1).
-    */
-  /** One pass over the events with the (broadcast, ≤ |event types| rows)
+    *
+    * One pass over the events with the (broadcast, ≤ |event types| rows)
     * estimate frame: per type, n and the conditional rank counts for
     * each estimate column present (e50/e95, optionally w50), plus the
     * integer targets and bounds. ONE scan arms every boolean.
@@ -438,18 +405,49 @@ object RelationalOps {
         expr(s"${graft.expr.QDigest.LogU} * ((2 * n) DIV $QdK + n_days + 1)"))
   }
 
+  /** q_agg_quantile_merge — QUANTILE sketch state as DATA, completing
+    * the warehouse-rollup story q_agg_sketch_merge tells for distinct
+    * counts: Spark persists HLL state as a binary column
+    * (`hll_sketch_agg`/`hll_union_agg`) but exposes no mergeable
+    * quantile state — `percentile_approx` recomputes from raw rows every
+    * time. [[graft.expr.QDigest]] fills the gap with a DETERMINISTIC
+    * q-digest (public algorithm, Shrivastava et al. SenSys'04): per-day
+    * sketches build as a binary column (persistable to parquet —
+    * QDigestSpec proves the round trip), re-aggregate associatively
+    * across days via key-wise count sums (merge order provably cannot
+    * change the bytes), and estimate with a PROVABLE ≤ LogU·n/k rank
+    * error — and, unlike Spark's KLL or Datasketches' KLL/REQ, no
+    * randomness anywhere, so every estimate is a pure function of the
+    * input multiset (the oracle-checkability contract).
+    *
+    * Emitted shape is the sketch-family contract pattern: exact
+    * oracle-checkable columns (event_type, n_days, n) + bound booleans
+    * the DuckDB oracle asserts literal-true — p50_ok/p95_ok pin the
+    * DAY-MERGED estimate's TRUE RANK inside the theoretical q-digest
+    * bound ([[quantileRankChecks]] — rank space, because that is what
+    * the sketch guarantees; value-space percentile brackets assume a
+    * dense distribution), whole_ok pins the single whole-data sketch
+    * the same way, so the hash gate re-proves build, merge, and
+    * estimate error every round at both scales.
+    *
+    * Scale shape: both aggregations are mergeable two-phase (map-side
+    * partials, constant-size shuffled state ≤ 3k nodes per group); the
+    * exact rank counts are gate-scale companions exactly as in
+    * q_agg_sketch (the production rollup at 100 TB reads yesterday's
+    * persisted day sketches and unions new days in — O(days·k) work,
+    * never a raw re-scan).
+    */
   private def aggQuantileMerge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val build = udaf(new graft.expr.QDigestBuildAgg(QdK), Encoders.scalaLong)
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
-    val ev = quantileCents(s, d)
+    val ev = cents(T(s, d, "events"))
     val merged = quantileDaily(s, d)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_days"), union($"sk").as("msk"))
     val whole = ev
       .groupBy($"event_type")
-      .agg(build($"v100").as("wsk"))
+      .agg(qdBuild($"v100").as("wsk"))
     val ests = merged
       .join(whole, "event_type")
       .select(
@@ -479,62 +477,29 @@ object RelationalOps {
       "true AS p50_ok, true AS p95_ok, true AS whole_ok " +
       "FROM events WHERE value IS NOT NULL GROUP BY event_type ORDER BY event_type"
 
-  /** Dataset-keyed canonical day-sketch state — build-once-serve-many
-    * ([[GenLog.buildOnce]], the retrieval families' rule):
-    * the per-(day, event_type) q-digest generation persists under the
-    * shared index catalog, so every serve in the session reads the same
-    * committed bytes and a concurrent second builder skips.
-    */
-  private[graft] def writeQuantileState(s: SparkSession, d: String): String = {
-    val path = GenLog.datasetRoot(s, d) + "/qdigest"
-    GenLog.buildOnce(s, path) {
-      quantileDaily(s, d)
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/days")
-    }
-    path
-  }
-
-  /** The serve kernel: merged per-type quantile report from the
-    * PERSISTED day-sketch state alone — raw events are never touched
-    * (the rollup posture at 100 TB: O(days·k) state in, report out).
-    */
-  private[graft] def serveQuantile(s: SparkSession, path: String): DataFrame = {
-    import s.implicits._
-    val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
-    val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
-    T.parquet(s, s"$path/days")
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_days"), union($"sk").as("msk"))
-      .select(
-        $"event_type",
-        $"n_days",
-        est($"msk", lit(0.5)).as("p50_cents"),
-        est($"msk", lit(0.95)).as("p95_cents"))
-  }
-
   /** q_agg_quantile_served — the quantile rollup SERVED from persisted
     * state, completing the build/served symmetry the retrieval families
-    * have: [[writeQuantileState]] commits the day sketches once through
-    * the GenLog catalog (claims, markers, builds_run/skipped
-    * accounting), [[serveQuantile]] answers from that state without
-    * touching raw events. The exact companions joined here exist only to
-    * ARM the hash contract at gate scale (the q_agg_sketch rule); the
-    * production serve is [[serveQuantile]] alone, and QDigestSpec pins
-    * serve ≡ the in-session merge path row-for-row. It has no
-    * build/serve split: its registry output is that gate contract, not
-    * the served report, so a state-only serve could not equal it.
+    * have: the events table seeds [[StreamOps.RollupFamily]] once through
+    * the GenLog catalog (claims, markers, builds_run/skipped accounting),
+    * and [[serveRollup]] answers from that state over the family's roots
+    * without touching raw events. The exact companions joined here exist
+    * only to ARM the hash contract at gate scale (the q_agg_sketch rule);
+    * the production serve is [[serveRollup]] alone, and QDigestSpec pins
+    * serve ≡ the in-session merge path row-for-row. It has no build/serve
+    * split: its registry output is that gate contract, not the served
+    * report, so a state-only serve could not equal it.
     */
   private def aggQuantileServed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ests = serveQuantile(s, writeQuantileState(s, d))
+    val dir = GenLog.datasetRoot(s, d) + "/rollup"
+    StreamOps.RollupFamily.buildOnce(s, dir)(Seq(T(s, d, "events")))
+    val ests = serveRollup(s, StreamOps.RollupFamily.roots(s, dir))
       .select(
         $"event_type",
         $"n_days",
         $"p50_cents".as("e50"),
         $"p95_cents".as("e95"))
-    quantileRankChecks(s, quantileCents(s, d), ests)
+    quantileRankChecks(s, cents(T(s, d, "events")), ests)
       .select(
         $"event_type",
         $"n_days",
@@ -570,21 +535,12 @@ object RelationalOps {
     * identical whichever path built it (partition-invariant: both
     * aggregates are exact-state builds).
     */
-  private[graft] def rollupStateFrom(s: SparkSession, events: DataFrame): DataFrame = {
-    import s.implicits._
-    val build = udaf(new graft.expr.QDigestBuildAgg(QdK), Encoders.scalaLong)
-    events
-      .where($"value".isNotNull) // the quantileCents rule: NULL is absent, not 0
-      .select(
-        to_date($"ts").as("day"),
-        $"event_type",
-        $"user_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("v100"))
-      .groupBy($"day", $"event_type")
+  private[graft] def rollupStateFrom(s: SparkSession, events: DataFrame): DataFrame =
+    cents(events)
+      .groupBy(col("day"), col("event_type"))
       .agg(
-        hll_sketch_agg($"user_id").as("hll"),
-        build($"v100").as("qd"))
-  }
+        hll_sketch_agg(col("user_id")).as("hll"),
+        qdBuild(col("v100")).as("qd"))
 
   private[graft] def writeRollupStateFrom(
       s: SparkSession, events: DataFrame, path: String): Unit =
@@ -781,7 +737,7 @@ object RelationalOps {
       Encoders.scalaLong)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
     val ev = T(s, d, "events")
-      .where($"ts".isNotNull) // the quantileCents NULL rule
+      .where($"ts".isNotNull) // the cents NULL rule
       .select($"event_type", (unix_micros($"ts") % 86400000000L).as("vus"))
     val ests = ev
       .groupBy($"event_type")

@@ -991,21 +991,6 @@ object SimilarityOps {
       "FROM embeddings) ORDER BY vec_id"
   }
 
-  /** q_sim_quantized — two-stage retrieve/rescore over the int8-quantized
-    * store, the serving pattern `q_embed_quantize` exists for: stage 1
-    * ranks the probe's multi-probe bucket candidates by the INTEGER dot
-    * product of their quantized lanes (exact BIGINT arithmetic — the
-    * memory-bandwidth path: 4× smaller vectors, integer-SIMD products, and
-    * bit-portable by construction, so the cut is identical cross-engine);
-    * stage 2 rescores only the surviving 20 candidates with the exact
-    * float cosine and emits the top 10. At 100 TB the full-precision
-    * vectors live only in the rescore tier (20 rows/probe), while the
-    * scan tier reads int8 — the standard IVF-PQ-style split, here with
-    * symmetric per-vector scaling. Quantization error can reorder the
-    * stage-1 cut vs a float scan, which is the accepted ANN trade; the
-    * oracle replays the SAME quantized pipeline, so correctness is exact
-    * over the declared semantics, not a recall estimate.
-    */
   /** The quantized corpus frame: per-vector symmetric scale amax/127
     * (zero vectors quantize to zeros), int8 lanes as exact longs, float
     * vector + norm kept for the rescore tier, sign bucket for pruning.
@@ -1076,6 +1061,21 @@ object SimilarityOps {
       .limit(10)
   }
 
+  /** q_sim_quantized — two-stage retrieve/rescore over the int8-quantized
+    * store, the serving pattern `q_embed_quantize` exists for: stage 1
+    * ranks the probe's multi-probe bucket candidates by the INTEGER dot
+    * product of their quantized lanes (exact BIGINT arithmetic — the
+    * memory-bandwidth path: 4× smaller vectors, integer-SIMD products, and
+    * bit-portable by construction, so the cut is identical cross-engine);
+    * stage 2 rescores only the surviving 20 candidates with the exact
+    * float cosine and emits the top 10. At 100 TB the full-precision
+    * vectors live only in the rescore tier (20 rows/probe), while the
+    * scan tier reads int8 — the standard IVF-PQ-style split, here with
+    * symmetric per-vector scaling. Quantization error can reorder the
+    * stage-1 cut vs a float scan, which is the accepted ANN trade; the
+    * oracle replays the SAME quantized pipeline, so correctness is exact
+    * over the declared semantics, not a recall estimate.
+    */
   private def simQuantized(s: SparkSession, d: String): DataFrame = {
     val e = quantizedFrame(emb(s, d))
     quantStage(e, quantProbe(e))
@@ -1799,21 +1799,10 @@ object SimilarityOps {
       Seq("cell"))
   }
 
-  /** q_sim_pq_served — the codes table as the PERSISTED scan tier: build
-    * writes the sub-codebooks (PqM×PqK rows — the model artifact) and the
-    * corpus as (vec_id, k0..k3 SMALLINT) — the 64×-compressed index that
-    * is the entire point of PQ at 100 TB. Serve re-derives the lookup
-    * tables from the persisted codebooks (floats round-trip parquet
-    * exactly; norms recomputed through the same fold) and ADC-scans the
-    * codes; the raw embeddings table is touched only for the probe row.
-    * Same output contract and oracle as q_sim_pq: compressing the scan
-    * tier must not change a single hit.
-    */
   /** Codes write for an arbitrary corpus slice against a FIXED codebook —
-    * the shared kernel of the monolithic build and the per-generation
-    * incremental build (a batch encodes against the epoch's quantizer,
-    * exactly the IVF rule in [[writeIvfCellsFrom]]: increments stay
-    * generation-local, retraining is an epoch roll).
+    * the generation write of [[pqFamily]] (a batch encodes against the
+    * epoch's quantizer, exactly the IVF rule in [[writeIvfCellsFrom]]:
+    * increments stay generation-local, retraining is an epoch roll).
     */
   private[graft] def writePqCodesFor(
       vecs: DataFrame,
@@ -1830,18 +1819,49 @@ object SimilarityOps {
       .parquet(path)
   }
 
-  private[graft] def writePqIndex(s: SparkSession, d: String, path: String): Unit = {
+  /** The persisted sub-codebooks at `path`, with each centroid's norm
+    * recomputed through the same fold as the in-session codebook (floats
+    * round-trip parquet exactly, so the row is bit-identical).
+    */
+  private def pqCodebookAt(s: SparkSession, path: String): DataFrame =
+    pqCodebookRow(
+      T.parquet(s, path).select(col("m"), col("c_id"), col("c"), Vec.norm2(col("c")).as("cn2")))
+
+  /** PQ codes family, shaped like [[StreamOps.ivfFamily]]: the epoch's
+    * sub-codebooks live at `root/codebook`, and every generation encodes
+    * its vectors against them into (vec_id, k0..k3 SMALLINT) rows.
+    */
+  private[graft] def pqFamily(root: String): GenLog.GenFamily = GenLog.GenFamily(
+    label = "PQ codes",
+    write = (s, vecs, path) => writePqCodesFor(vecs, pqCodebookAt(s, s"$root/codebook"), path),
+    fold = (s, roots, path) =>
+      roots.map(T.parquet(s, _)).reduce(_ unionByName _)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path))
+
+  /** The persisted PQ index under one claim on `root`: the stand-in
+    * sub-codebooks (PqM×PqK rows — the model artifact) first, then the
+    * corpus seeded as [[pqFamily]]'s `v0/full` codes — the 64×-compressed
+    * scan tier. With `incr`, the seed holds the vectors up to ⌊9·max/10⌋
+    * and the newest tenth commits as generation `v1/gen`.
+    */
+  private[graft] def writePqIndex(
+      s: SparkSession, d: String, root: String, incr: Boolean = false): Unit = {
     import s.implicits._
-    GenLog.buildOnce(s, path) {
+    GenLog.buildOnce(s, root) {
       val e = emb(s, d).select($"vec_id", $"embedding")
-      val cents = pqStandinCents(e)
-      cents
+      pqStandinCents(e)
         .select($"m", $"c_id", $"c")
         .coalesce(1)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/codebook")
-      writePqCodesFor(e, pqCodebookRow(cents), s"$path/codes")
+        .parquet(s"$root/codebook")
+      val F = pqFamily(root)
+      if (!incr) F.seed(s, e, root)
+      else {
+        val thr = e.agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
+        F.seed(s, e.filter($"vec_id" <= thr), root)
+        F.commit(e.filter($"vec_id" > thr), root, 0L)
+      }
     }
     ()
   }
@@ -1860,9 +1880,7 @@ object SimilarityOps {
       codebookPath: String,
       codesPaths: Seq[String]): DataFrame = {
     import s.implicits._
-    val cents = T.parquet(s, codebookPath)
-      .select($"m", $"c_id", $"c", Vec.norm2($"c").as("cn2"))
-    val cbRow = pqCodebookRow(cents)
+    val cbRow = pqCodebookAt(s, codebookPath)
     val qtab = pqProbeTab(emb(s, d).select($"vec_id", $"embedding"), cbRow)
       .crossJoin(broadcast(cbRow.select(
         transform($"mcb", mc =>
@@ -1888,11 +1906,22 @@ object SimilarityOps {
       .limit(10)
   }
 
-  private[graft] def simPqServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${GenLog.datasetRoot(s, d)}/pq"
-    writePqIndex(s, d, path)
-    servePqCodes(s, d, s"$path/codebook", Seq(s"$path/codes"))
+  // the persisted PQ index at `datasetRoot/<name>`, served over its roots
+  private def servedPq(s: SparkSession, d: String, name: String, incr: Boolean): DataFrame = {
+    val root = s"${GenLog.datasetRoot(s, d)}/$name"
+    writePqIndex(s, d, root, incr)
+    servePqCodes(s, d, s"$root/codebook", pqFamily(root).roots(s, root))
   }
+
+  /** q_sim_pq_served — the codes table as the PERSISTED scan tier: build
+    * writes the sub-codebooks and the corpus codes once ([[writePqIndex]]);
+    * serve re-derives the lookup tables from the persisted codebooks and
+    * ADC-scans the codes; the raw embeddings table is touched only for
+    * the probe row. Same output contract and oracle as q_sim_pq:
+    * compressing the scan tier must not change a single hit.
+    */
+  private[graft] def simPqServed(s: SparkSession, d: String): DataFrame =
+    servedPq(s, d, "pq", incr = false)
 
   /** q_sim_pq_incr — incremental CODES maintenance, the PQ sibling of
     * q_sim_incr: the newest 10% of vector ids are today's batch, encoded
@@ -1901,25 +1930,8 @@ object SimilarityOps {
     * serving unions the generations on read (disjoint ids ⇒ exact). The
     * oracle is the monolithic PqSql: merge-on-read must not change a hit.
     */
-  private def simPqIncr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val root = s"${GenLog.datasetRoot(s, d)}/pq_incr"
-    GenLog.buildOnce(s, root) {
-      val e = emb(s, d).select($"vec_id", $"embedding")
-      val cents = pqStandinCents(e)
-      cents
-        .select($"m", $"c_id", $"c")
-        .coalesce(1)
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/codebook")
-      val cbRow = pqCodebookRow(cents)
-      val thr = e.agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
-      writePqCodesFor(e.filter($"vec_id" <= thr), cbRow, s"$root/gen0")
-      writePqCodesFor(e.filter($"vec_id" > thr), cbRow, s"$root/gen1")
-    }
-    servePqCodes(s, d, s"$root/codebook", Seq(s"$root/gen0", s"$root/gen1"))
-  }
+  private def simPqIncr(s: SparkSession, d: String): DataFrame =
+    servedPq(s, d, "pq_incr", incr = true)
 
   /** The m-values frame both engines iterate: DuckDB rendering. */
   private val PqMs = s"(SELECT unnest([${(0 until PqM).mkString(", ")}]) AS m) ms"

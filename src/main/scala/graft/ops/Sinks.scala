@@ -115,44 +115,17 @@ object Sinks {
     toWrite.write.mode(SaveMode.Append).jdbc(url, table, props)
   }
 
-  /** Keyed UPSERT into a JDBC table (the apply side of CDC — streaming
-    * complement of [[graft.ops.TemporalOps]]' q_merge_upsert): staged rows
-    * REPLACE existing rows with the same key, untouched existing rows are
-    * kept, new keys insert. Implemented as merge-then-overwrite — existing
-    * minus staged keys (left-anti) union staged, materialized BEFORE the
-    * overwrite drops the table it was read from. The materialization is
-    * `localCheckpoint(eager)`, which SEVERS the JDBC lineage — unlike a
-    * cache (whose evicted/lost blocks silently recompute from the
-    * by-then-truncated table, losing rows), a lost checkpoint block fails
-    * the job, which a driver retry converges by idempotence. Residual
-    * caveat, documented: the drop-then-write is not atomic — a driver
-    * crash mid-overwrite leaves a partial table until the retry;
-    * [[upsertSnapshotSwapJdbc]] is the zero-downtime variant that stages
-    * into a side table and publishes with one transactional rename.
-    * Idempotent by construction: applying the same staged batch twice
-    * converges to the same table — the exactly-once story for an
-    * update-mode stream, where retried batches re-offer rows. Sized for
+  /** The snapshot a keyed upsert publishes: the table's rows minus the
+    * staged keys (left-anti), union staged — staged rows REPLACE existing
+    * rows with the same key, untouched rows are kept, new keys insert.
+    * Materialized BEFORE the publish drops the table it was read from,
+    * with `localCheckpoint(eager)`, which SEVERS the JDBC lineage — unlike
+    * a cache (whose evicted/lost blocks silently recompute from the
+    * by-then-dropped table, losing rows), a lost checkpoint block fails
+    * the job, which a driver retry converges by idempotence. Sized for
     * DIMENSION-scale targets (the merged table passes through the
     * cluster); a fact-scale target wants the DB's own MERGE with this
     * same keyed contract.
-    */
-  def upsertSnapshotJdbc(
-      staged: DataFrame,
-      url: String,
-      table: String,
-      keys: Seq[String],
-      props: java.util.Properties = new java.util.Properties): Unit =
-    if (!tableExists(url, table, props)) {
-      staged.write.mode(SaveMode.ErrorIfExists).jdbc(url, table, props)
-    } else {
-      mergedSnapshot(staged, url, table, keys, props)
-        .write.mode(SaveMode.Overwrite).jdbc(url, table, props)
-    }
-
-  /** The snapshot both upserts write: the table's rows minus the staged
-    * keys (left-anti), union staged, materialized with an eager
-    * `localCheckpoint` that severs the JDBC lineage before the table it
-    * was read from is dropped ([[upsertSnapshotJdbc]]'s rationale).
     */
   private def mergedSnapshot(
       staged: DataFrame,
@@ -176,18 +149,21 @@ object Sinks {
       s"RENAME TABLE $from TO $to"
     else s"ALTER TABLE $from RENAME TO $to"
 
-  /** [[upsertSnapshotJdbc]] with an ATOMIC publish — the zero-downtime
-    * variant its doc comment names: the merged snapshot is written to a
-    * deterministic staging table (`<table>_swap_staging`, overwritten on
+  /** Keyed UPSERT into a JDBC table (the apply side of CDC — streaming
+    * complement of [[graft.ops.TemporalOps]]' q_merge_upsert) with an
+    * ATOMIC publish: the merged snapshot ([[mergedSnapshot]]) is written
+    * to a deterministic staging table (`<table>_swap_staging`, overwritten on
     * every run, so a crashed attempt's leftovers are reclaimed by the
     * retry), then published by ONE transaction that drops the live table
     * and renames the staging table into place. DDL is transactional on
     * the dimension-scale targets this sink addresses (Derby — the tested
     * embodiment — and Postgres), so a crash at any point leaves either
     * the old complete table or the new complete table, never the partial
-    * state the plain overwrite can expose; readers see the swap as an
-    * instantaneous flip. Same replace-by-key idempotence: re-applying a
-    * batch converges, proven in SinksSpec.
+    * state a drop-then-write overwrite can expose; readers see the swap
+    * as an instantaneous flip. Idempotent by construction: re-applying a
+    * batch converges to the same table (proven in SinksSpec) — the
+    * exactly-once story for an update-mode stream, where retried batches
+    * re-offer rows.
     */
   def upsertSnapshotSwapJdbc(
       staged: DataFrame,

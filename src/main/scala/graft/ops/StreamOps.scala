@@ -263,25 +263,6 @@ object StreamOps {
       .select($"doc_id", $"lang", $"source", $"n_chars")
   }
 
-  /** Streaming lift of the corpus build — the production stages composed
-    * on the continuous ingest feed: the full quality gate
-    * ([[CurationOps.qualityGate]] — length, lexical diversity, and the
-    * repetition signals) and the training-mix gate
-    * ([[CurationOps.mixPredicate]]) are STATELESS predicates evaluated at
-    * ingest; exact content dedup is `dropDuplicatesWithinWatermark` on
-    * md5(text) (first arrival wins, state evicted at the late-data
-    * horizon — bounded at any ingest rate); the split tag is a pure
-    * function of doc_id. Emits curated survivor rows in append mode —
-    * per-(split, lang) accounting is a downstream aggregate over the sink
-    * (which is how a production feed runs it: the curated stream IS the
-    * product; counters hang off it). Which physical row represents a
-    * content hash is arrival-order-dependent, exactly like the batch
-    * first-writer-wins — over an ordered single-file source the two
-    * coincide, which is what StreamingCorpusSpec pins; the near-dup
-    * closure stage is deliberately absent: a transitive global closure is
-    * not a streaming operator, so production runs it as a periodic batch
-    * compaction over the curated sink (q_pipeline_corpus2).
-    */
   /** The curated SURVIVOR stream with full document columns — what a
     * composed continuous pipeline feeds its downstream maintenance legs
     * (incremental dedup, index generations, the lake sink): the same
@@ -308,6 +289,25 @@ object StreamOps {
           .otherwise("test"))
   }
 
+  /** Streaming lift of the corpus build — the production stages composed
+    * on the continuous ingest feed: the full quality gate
+    * ([[CurationOps.qualityGate]] — length, lexical diversity, and the
+    * repetition signals) and the training-mix gate
+    * ([[CurationOps.mixPredicate]]) are STATELESS predicates evaluated at
+    * ingest; exact content dedup is `dropDuplicatesWithinWatermark` on
+    * md5(text) (first arrival wins, state evicted at the late-data
+    * horizon — bounded at any ingest rate); the split tag is a pure
+    * function of doc_id. Emits curated survivor rows in append mode —
+    * per-(split, lang) accounting is a downstream aggregate over the sink
+    * (which is how a production feed runs it: the curated stream IS the
+    * product; counters hang off it). Which physical row represents a
+    * content hash is arrival-order-dependent, exactly like the batch
+    * first-writer-wins — over an ordered single-file source the two
+    * coincide, which is what StreamingCorpusSpec pins; the near-dup
+    * closure stage is deliberately absent: a transitive global closure is
+    * not a streaming operator, so production runs it as a periodic batch
+    * compaction over the curated sink (q_pipeline_corpus2).
+    */
   def liftCorpusPipeline(s: SparkSession, sourceDir: String): DataFrame = {
     import s.implicits._
     liftCuratedDocs(s, sourceDir).select($"doc_id", $"lang", $"n_chars", $"split")
@@ -664,34 +664,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Maintenance for the versioned continuous-dedup indexes: drop the
-    * SUPERSEDED index snapshots (md5/band state of all but the newest
-    * `keep` versions), never the per-batch outputs (assign / pairs dirs
-    * stay — they are the committed product, each written exactly once).
-    * The writers pick their read version among versions that still HAVE
-    * index state, so a restart after pruning reads the newest surviving
-    * snapshot. At warehouse scale this is the compaction cadence that
-    * bounds the dir to O(keep) index copies.
-    */
-  def pruneDedupIndexVersions(
-      s: SparkSession,
-      indexDir: String,
-      keep: Int = 2): Unit =
-    GenLog.pruneSnapshots(
-      s, indexDir, arts = Seq("band_index", "md5_index"),
-      gate = "band_index", keep = keep)
-
-  /** [[pruneDedupIndexVersions]] for the embedding index: bounds the dir
-    * to O(keep) full band snapshots (each compaction writes one; without
-    * pruning they accumulate a corpus copy per fold).
-    */
-  def pruneEmbedIndexVersions(
-      s: SparkSession,
-      indexDir: String,
-      keep: Int = 2): Unit =
-    GenLog.pruneSnapshots(
-      s, indexDir, arts = Seq("band_index"), gate = "band_index", keep = keep)
-
   /** Seed the continuous-dedup index: build the base corpus's persisted
     * state ([[DedupOps.buildDedupIndex]]) and write it as version v0 —
     * the snapshot micro-batch 0 reads. Band rows are hive-partitioned on
@@ -748,13 +720,6 @@ object StreamOps {
       read("assign").withColumnRenamed("cluster_id", "rep"))
   }
 
-  /** Transitive composition of the accumulated (old_cid → new_cid) merge
-    * log. Labels only ever move DOWN and a remapped old label's rows
-    * leave the live index (so an old key never reappears) — the log is a
-    * functional acyclic pointer forest, and pointer-doubling self-joins
-    * compose every chain in O(log depth) rounds over a frame that is
-    * O(cluster merges), not O(corpus).
-    */
   /** Bound under which the remap log resolves driver-side: the log is
     * O(cluster merges) — bounded model state like the CC driver finish —
     * and below this row count one collect + a transitive Scala resolve +
@@ -765,6 +730,13 @@ object StreamOps {
     */
   private val RemapDriverResolveRows = 100000L
 
+  /** Transitive composition of the accumulated (old_cid → new_cid) merge
+    * log. Labels only ever move DOWN and a remapped old label's rows
+    * leave the live index (so an old key never reappears) — the log is a
+    * functional acyclic pointer forest, and pointer-doubling self-joins
+    * compose every chain in O(log depth) rounds over a frame that is
+    * O(cluster merges), not O(corpus).
+    */
   private def composeRemap(remap: DataFrame): DataFrame = {
     var r = remap
       .select(col("old_cid"), col("new_cid"))
@@ -929,9 +901,10 @@ object StreamOps {
     * folded `*_inc` dirs (superseded by the snapshot); committed `assign`
     * and `remap` dirs are never touched — assignments are immutable
     * as-of-commit labels and the remap log is what resolves them forward.
-    * [[pruneDedupIndexVersions]] then bounds the dir to O(keep) full
-    * snapshots; together they cap merge-on-read fan-in at O(batches since
-    * last compaction).
+    * Like [[GenLog.GenFamily.compact]], it then drops all but the newest
+    * [[GenLog.KeepFulls]] md5/band snapshots, so the dir holds O(1) index
+    * copies and merge-on-read fan-in stays O(batches since last
+    * compaction).
     */
   def compactDedupIndex(s: SparkSession, indexDir: String): Unit = {
     // a batch counts as committed only once its LAST artifact (band_inc)
@@ -964,11 +937,18 @@ object StreamOps {
     // state just before the fold committed finishes its scan.
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val snapVer = GenLog.versions(s, indexDir, requiring = "band_index").max
+    val snaps = GenLog.versions(s, indexDir, requiring = "band_index").sorted
     Seq("md5_inc", "band_inc").foreach { sub =>
-      GenLog.versions(s, indexDir, requiring = sub).filter(_ <= snapVer).foreach { v =>
+      GenLog.versions(s, indexDir, requiring = sub).filter(_ <= snaps.last).foreach { v =>
         GenLog.graceDelete(
           fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$sub"))
+      }
+    }
+    // band last: a crash mid-prune leaves the snapshot recognized, so the
+    // next compaction collects the rest
+    snaps.dropRight(GenLog.KeepFulls).foreach { v =>
+      Seq("md5_index", "band_index").foreach { a =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$a"), true)
       }
     }
   }
@@ -997,40 +977,42 @@ object StreamOps {
     }
   }
 
-  /** Seed the continuous EMBEDDING-dedup index: the base corpus's
-    * sign-LSH band rows ([[DedupOps.buildEmbedIndex]]) as version v0.
+  /** Embedding-dedup band family (q_dedup_embed_incr's index, and the
+    * state of [[incrEmbedDedupStreamWriter]]): the sign-LSH band rows of
+    * [[DedupOps.buildEmbedIndex]], partitioned on band_idx. Unlike the
+    * other families a generation is written after a read of prior state
+    * ([[incrEmbedDedupCommit]] probes the roots as of the batch), but the
+    * generation itself is the batch's own band rows, so seed, commit,
+    * roots and compaction are the family's.
     */
-  def seedEmbedIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
+  val EmbedBandFamily = GenLog.GenFamily(
+    label = "embedding-dedup index",
+    write = (s, vecs, path) =>
+      GenLog.writePartitioned(
+        DedupOps.buildEmbedIndex(s, vecs).select(EmbedCols: _*), "band_idx", path),
+    fold = (s, roots, path) => foldPartitioned(s, roots, "band_idx", path, EmbedCols: _*))
+
+  private val EmbedCols: Seq[Column] =
+    Seq("vec_id", "embedding", "n2", "band_idx", "band_val").map(col)
+
+  /** The band rows under `roots` of [[EmbedBandFamily]], merged on read. */
+  private[graft] def embedBands(s: SparkSession, roots: Seq[String]): DataFrame =
+    unionRoots(s, roots, EmbedCols: _*)
+
+  /** Commit micro-batch `batchId` of the embedding dedup: its near-dup
+    * pairs against the index as of version `batchId` (so a retry never
+    * probes its own generation) go to `v(batchId+1)/pairs`, then the
+    * batch's band rows commit as that version's generation — the gen is
+    * the batch's commit gate. The per-batch body of
+    * [[incrEmbedDedupStreamWriter]].
+    */
+  def incrEmbedDedupCommit(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
+    val sess = batch.sparkSession
+    val b = batch.select("vec_id", "embedding")
+    val index = embedBands(sess, EmbedBandFamily.roots(sess, indexDir, upTo = batchId))
     GenLog.commitParquet(
-      DedupOps.buildEmbedIndex(s, base),
-      s"$indexDir/v0/band_index",
-      partitionBy = Seq("band_idx"))
-
-  private val EmbedCols = Seq("vec_id", "embedding", "n2", "band_idx", "band_val")
-
-  /** Merge-on-read of the embedding index as of stream version `upTo`:
-    * newest full snapshot ≤ upTo plus later `band_inc` increments. No
-    * remap log — the pair contract has no labels to move.
-    */
-  private[graft] def readEmbedIndexState(
-      s: SparkSession,
-      indexDir: String,
-      upTo: Long): DataFrame = {
-    val snaps =
-      GenLog.versions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
-    require(
-      snaps.nonEmpty,
-      s"embed index at $indexDir has no snapshot version <= $upTo (run seedEmbedIndex)")
-    val snapVer = snaps.max
-    val incs = GenLog.versions(s, indexDir, requiring = "band_inc")
-      .filter(v => v > snapVer && v <= upTo)
-      .sorted
-      .map(v => s"$indexDir/v$v/band_inc")
-    // partitioned roots must be read separately (fan-in bounded by
-    // compaction cadence)
-    (s"$indexDir/v$snapVer/band_index" +: incs)
-      .map(p => T.parquet(s, p).select(EmbedCols.map(col): _*))
-      .reduce(_ unionByName _)
+      DedupOps.applyEmbedDelta(sess, b, index), s"$indexDir/v${batchId + 1}/pairs")
+    EmbedBandFamily.commit(b, indexDir, batchId)
   }
 
   /** Continuous incremental EMBEDDING near-dup — the vector-modality
@@ -1039,63 +1021,21 @@ object StreamOps {
     * maintenance is a pure append of the batch's band rows (no remap
     * log), and sequential micro-batch apply ≡ one-shot rebuild holds
     * directly — batch b emits exactly the full pair set's rows whose
-    * larger id lands in batch b (monotone ingest ids). Same append-only
-    * exactly-once shape: batch b reads the merged index ≤ b, writes its
-    * pairs + its OWN band rows only (`band_inc`, O(batch)) to the fresh
-    * `v(b+1)` directory; retries overwrite deterministically;
-    * [[compactEmbedIndex]] periodically folds increments into a full
-    * snapshot. StreamingEmbedIncrSpec proves the cross-batch union equals
-    * the one-shot rebuild, including a pair whose two sides arrive in
-    * different micro-batches.
+    * larger id lands in batch b (monotone ingest ids). Batch b reads the
+    * index as of b and writes its pairs and its OWN band rows (O(batch))
+    * to the fresh `v(b+1)` directory; retries overwrite
+    * deterministically; `EmbedBandFamily.compact` folds generations into
+    * a full snapshot. StreamingEmbedIncrSpec proves the cross-batch union
+    * equals the one-shot rebuild, including a pair whose two sides arrive
+    * in different micro-batches.
     */
   def incrEmbedDedupStreamWriter(
       vecs: DataFrame,
       indexDir: String,
       checkpoint: String): DataStreamWriter[Row] =
     GenLog.appendWriter(vecs, checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val sess = batch.sparkSession
-        val bandIndex = readEmbedIndexState(sess, indexDir, upTo = batchId)
-        val b = batch.select("vec_id", "embedding")
-        val pairs = DedupOps.applyEmbedDelta(sess, b, bandIndex)
-        val next = s"$indexDir/v${batchId + 1}"
-        GenLog.commitParquet(pairs, s"$next/pairs")
-        GenLog.commitParquet(
-          DedupOps.buildEmbedIndex(sess, b).select(EmbedCols.map(col): _*),
-          s"$next/band_inc",
-          partitionBy = Seq("band_idx"))
-      }
+      if (!batch.isEmpty) incrEmbedDedupCommit(batch, indexDir, batchId)
     }
-
-  /** Compaction for the embedding index: fold `band_inc` increments into
-    * a full snapshot at the newest committed version and drop the folded
-    * dirs. Committed `pairs` outputs are never touched.
-    */
-  def compactEmbedIndex(s: SparkSession, indexDir: String): Unit = {
-    // gate on band_inc, the batch's LAST-written artifact (the
-    // compactDedupIndex rationale)
-    val committed = GenLog.versions(s, indexDir, requiring = "band_inc")
-    // no committed band_index → unseeded (or seed crashed pre-commit):
-    // return before an empty-Seq .max can throw (compactDedupIndex shape)
-    val snaps0 = GenLog.versions(s, indexDir, requiring = "band_index")
-    if (snaps0.isEmpty) return
-    if (committed.nonEmpty && snaps0.max < committed.max) {
-      // write-then-mark: a crash mid-fold leaves an uncommitted snapshot
-      // that readEmbedIndexState ignores (the increments are still there)
-      GenLog.commitParquet(
-        readEmbedIndexState(s, indexDir, upTo = committed.max),
-        s"$indexDir/v${committed.max}/band_index",
-        partitionBy = Seq("band_idx"))
-    }
-    // grace cleanup, unconditionally (the compactDedupIndex shape)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val snapVer = GenLog.versions(s, indexDir, requiring = "band_index").max
-    GenLog.versions(s, indexDir, requiring = "band_inc").filter(_ <= snapVer).foreach { v =>
-      GenLog.graceDelete(
-        fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/band_inc"))
-    }
-  }
 
   /** All near-dup pairs the continuous embedding dedup has committed
     * (committed dirs only — an in-flight batch's partial write never
@@ -1127,12 +1067,16 @@ object StreamOps {
   // overwrites the same output from the same input, and version gaps
   // from empty batches are skipped on read.
 
+  // the union of every root's `cols`: each partitioned root is its own
+  // table, so roots are read separately
+  private def unionRoots(s: SparkSession, paths: Seq[String], cols: Column*): DataFrame =
+    paths.map(p => T.parquet(s, p).select(cols: _*)).reduce(_ unionByName _)
+
   // the fold of a partitioned artifact: the union of every root's `cols`,
   // rewritten partitioned on `key`
   private def foldPartitioned(
       s: SparkSession, paths: Seq[String], key: String, out: String, cols: Column*): Unit =
-    GenLog.writePartitioned(
-      paths.map(p => T.parquet(s, p).select(cols: _*)).reduce(_ unionByName _), key, out)
+    GenLog.writePartitioned(unionRoots(s, paths, cols: _*), key, out)
 
   /** Postings family (q_index_bm25_served's index, and the streaming
     * form of q_index_bm25_incr): fold unions postings shard-wise and sums
@@ -1955,7 +1899,7 @@ object StreamOps {
 
   /** update-mode stream → keyed JDBC upsert: the streaming CDC-apply.
     * Each micro-batch's changed rows go through
-    * [[Sinks.upsertSnapshotJdbc]], whose replace-by-key idempotence makes
+    * [[Sinks.upsertSnapshotSwapJdbc]], whose replace-by-key idempotence makes
     * batch retries and full reprocessing converge instead of duplicate —
     * the update-sink counterpart of the append sink
     * StreamingPipelineSpec proves.
@@ -1970,7 +1914,7 @@ object StreamOps {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Sinks.upsertSnapshotJdbc(batch, url, table, keys)
+        Sinks.upsertSnapshotSwapJdbc(batch, url, table, keys)
       }
 
   /** Custom-state streaming via `flatMapGroupsWithState` — the API tier

@@ -458,13 +458,6 @@ object TextOps {
       .distinct()
   }
 
-  /** The maximal shared-passage spans per document — (doc_id,
-    * span_start, span_end, span_tokens), 1-based inclusive token
-    * positions, ordered — the ACTIONABLE scrub output a remover consumes
-    * (q_text_passage_dup's report is this frame's per-doc account).
-    * Shared occurrences are [pos, pos+K-1] intervals; the union per doc
-    * is the islands split where a start exceeds the running max end.
-    */
   /** Interval-union islands over (doc_id, pos, pend) token intervals,
     * carrying `extra` per-doc columns through — the ONE islands kernel
     * behind q_text_passage_spans, q_split_decontaminate, and the
@@ -503,6 +496,13 @@ object TextOps {
       extra)
   }
 
+  /** The maximal shared-passage spans per document — (doc_id,
+    * span_start, span_end, span_tokens), 1-based inclusive token
+    * positions, ordered — the ACTIONABLE scrub output a remover consumes
+    * (q_text_passage_dup's report is this frame's per-doc account).
+    * Shared occurrences are [pos, pos+K-1] intervals; the union per doc
+    * is the islands split where a start exceeds the running max end.
+    */
   private[graft] def passageSpansOf(grams: DataFrame): DataFrame = {
     import grams.sparkSession.implicits._
     val shared = grams
@@ -769,20 +769,6 @@ object TextOps {
       "FROM toks d LEFT JOIN agg a USING (doc_id) LEFT JOIN ncov n USING (doc_id) " +
       "ORDER BY d.doc_id"
 
-  /** q_split_decontaminate — eval-set DECONTAMINATION at passage
-    * granularity (the GPT-3 appendix-C n-gram scrub, Brown et al.
-    * arXiv:2005.14165; q_split_contamination's doc-level flag made
-    * actionable): for every valid/test document, the maximal token
-    * spans covered by a 5-gram that also occurs in ANY train-split
-    * document — the rows an eval-set scrubber deletes before
-    * publishing a benchmark, where the doc-level flag would either
-    * discard the whole document or miss a quoted train passage inside
-    * an otherwise-clean one. Splits are the standard q_split_assign
-    * hash ladder (deterministic, engine-independent); the train-gram
-    * side is a distinct-projection (one hash aggregate); the
-    * eval⋈train join is 1:1 per occurrence; the span union is the one
-    * islands kernel shared with q_text_passage_spans.
-    */
   /** The decontamination spans over a (doc_id, pos, g5) gram frame —
     * split labels re-derived from doc_id (a pure hash function), so the
     * SAME persisted gram state serves this and the duplication report.
@@ -799,6 +785,20 @@ object TextOps {
       Seq("split"))
   }
 
+  /** q_split_decontaminate — eval-set DECONTAMINATION at passage
+    * granularity (the GPT-3 appendix-C n-gram scrub, Brown et al.
+    * arXiv:2005.14165; q_split_contamination's doc-level flag made
+    * actionable): for every valid/test document, the maximal token
+    * spans covered by a 5-gram that also occurs in ANY train-split
+    * document — the rows an eval-set scrubber deletes before
+    * publishing a benchmark, where the doc-level flag would either
+    * discard the whole document or miss a quoted train passage inside
+    * an otherwise-clean one. Splits are the standard q_split_assign
+    * hash ladder (deterministic, engine-independent); the train-gram
+    * side is a distinct-projection (one hash aggregate); the
+    * eval⋈train join is 1:1 per occurrence; the span union is the one
+    * islands kernel shared with q_text_passage_spans.
+    */
   private def splitDecontaminate(s: SparkSession, d: String): DataFrame =
     decontaminateSpansOf(passageGramsOf(docs(s, d)))
 
@@ -1840,20 +1840,6 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** q_bpe_train — BPE tokenizer training, [[BpeRounds]] greedy merge
-    * rounds (the iterated form of `q_bpe_pairs`): per round, count
-    * adjacent token pairs over the vocabulary weighted by word count,
-    * take the argmax pair (count DESC, pair ASC — the deterministic
-    * tie-break), and apply it as a non-overlapping left-to-right merge to
-    * every word's tokenization. Output is the merge TABLE — (round, pair,
-    * merged, n) — the artifact a tokenizer build actually ships. The
-    * corpus is touched ONCE (the word-histogram shuffle); every round
-    * after that runs on the vocabulary-sized distinct-word frame, with
-    * the argmax attached as a one-row broadcast — the only loop structure
-    * a 100 TB tokenizer build can afford. All arithmetic is integer and
-    * the merge fold is engine-portable, so the oracle re-proves every
-    * round's argmax AND the merged tokenizations behind it.
-    */
   /** The shared training loop behind `q_bpe_train` and `q_bpe_encode`:
     * runs [[BpeRounds]] greedy merge rounds over the word histogram and
     * returns both the merge table and the final per-term tokenization
@@ -1938,6 +1924,20 @@ object TextOps {
     (merges, vocab)
   }
 
+  /** q_bpe_train — BPE tokenizer training, [[BpeRounds]] greedy merge
+    * rounds (the iterated form of `q_bpe_pairs`): per round, count
+    * adjacent token pairs over the vocabulary weighted by word count,
+    * take the argmax pair (count DESC, pair ASC — the deterministic
+    * tie-break), and apply it as a non-overlapping left-to-right merge to
+    * every word's tokenization. Output is the merge TABLE — (round, pair,
+    * merged, n) — the artifact a tokenizer build actually ships. The
+    * corpus is touched ONCE (the word-histogram shuffle); every round
+    * after that runs on the vocabulary-sized distinct-word frame, with
+    * the argmax attached as a one-row broadcast — the only loop structure
+    * a 100 TB tokenizer build can afford. All arithmetic is integer and
+    * the merge fold is engine-portable, so the oracle re-proves every
+    * round's argmax AND the merged tokenizations behind it.
+    */
   private def bpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     trainBpe(s, d)._1.toDF("round", "pair", "merged", "n").orderBy("round")

@@ -321,24 +321,82 @@ class IndexCatalogSpec extends SparkSpec {
     })
   }
 
-  test("dedup/embed snapshot pruners bound the dir to O(keep) copies") {
-    val dir = Files.createTempDirectory("graft_cat_embprune").toString
+  test("roots(upTo): the newest full at or below upTo plus the gens up to it") {
+    val dir = Files.createTempDirectory("graft_cat_upto").toString
+    val F = GenLog.GenFamily(
+      label = "plain",
+      write = (_, df, path) => df.write.mode("overwrite").parquet(path),
+      fold = (s, roots, path) =>
+        roots.map(s.read.parquet(_)).reduce(_ unionByName _).write.mode("overwrite").parquet(path))
+    val ids = spark.range(30).toDF("id")
+    F.seed(spark, ids.filter($"id" < 10), dir)
+    F.commit(ids.filter($"id".between(10, 19)), dir, 0L)
+    F.commit(ids.filter($"id" >= 20), dir, 1L)
+    val asOf1 = Seq(s"$dir/v0/full", s"$dir/v1/gen")
+    assert(F.roots(spark, dir, upTo = 1) === asOf1)
+    assert(F.roots(spark, dir) === asOf1 :+ s"$dir/v2/gen")
+    F.compact(spark, dir)
+    // the fold lands at v2; the state as of v1 still resolves to the seed
+    // and v1's (tombstoned, not yet deleted) generation
+    assert(F.roots(spark, dir, upTo = 1) === asOf1)
+    assert(F.roots(spark, dir) === Seq(s"$dir/v2/full"))
+    assert(spark.read.parquet(F.roots(spark, dir): _*).count() === 30)
+  }
+
+  test("a retried embedding-dedup batch reads the index as of its own batchId") {
+    val dir = Files.createTempDirectory("graft_cat_embretry").toString
     val vecs = T(spark, sf, "embeddings").select($"vec_id", $"embedding")
-    StreamOps.seedEmbedIndex(spark, vecs.filter($"vec_id" <= 100), dir)
-    // two more committed snapshots at later versions (stand-ins for two
-    // compaction folds)
-    for (v <- Seq(3, 5)) {
-      GenLog.commitParquet(
-        graft.ops.DedupOps.buildEmbedIndex(
-          spark, vecs.filter($"vec_id" <= 100 + v)),
-        s"$dir/v$v/band_index",
-        partitionBy = Seq("band_idx"))
+    val n = vecs.agg(max($"vec_id")).head().getLong(0)
+    StreamOps.EmbedBandFamily.seed(spark, vecs.filter($"vec_id" <= n / 3), dir)
+    StreamOps.incrEmbedDedupCommit(
+      vecs.filter($"vec_id" > n / 3 && $"vec_id" <= 2 * n / 3), dir, batchId = 0L)
+    val batch = vecs.filter($"vec_id" > 2 * n / 3)
+    StreamOps.incrEmbedDedupCommit(batch, dir, batchId = 1L)
+    val first = rows(spark.read.parquet(s"$dir/v2/pairs").orderBy("a_id", "b_id"))
+    // the retry runs after its own generation (v2/gen) committed: read as
+    // of the latest roots it would probe the batch against itself
+    StreamOps.incrEmbedDedupCommit(batch, dir, batchId = 1L)
+    assert(rows(spark.read.parquet(s"$dir/v2/pairs").orderBy("a_id", "b_id")) === first)
+    assert(StreamOps.EmbedBandFamily.roots(spark, dir) ===
+      Seq(s"$dir/v0/full", s"$dir/v1/gen", s"$dir/v2/gen"))
+  }
+
+  test("dedup/embed compaction keeps KeepFulls snapshots, v0's is dropped") {
+    val docs = T(spark, sf, "documents").select($"doc_id", $"lang", $"text")
+    val vecs = T(spark, sf, "embeddings").select($"vec_id", $"embedding")
+    // the base and three batches: the quarters of each table by id
+    def quarters(df: DataFrame, id: String): Seq[DataFrame] = {
+      val n = df.agg(max(col(id))).head().getLong(0)
+      val cuts = Seq(Long.MinValue, n / 4, n / 2, 3 * n / 4, n)
+      cuts.zip(cuts.tail).map { case (lo, hi) => df.filter(col(id) > lo && col(id) <= hi) }
     }
-    StreamOps.pruneEmbedIndexVersions(spark, dir, keep = 2)
-    assert(
-      GenLog.versions(spark, dir, requiring = "band_index").sorted === Seq(3L, 5L))
-    // the newest surviving snapshot still reads
-    assert(
-      StreamOps.readEmbedIndexState(spark, dir, upTo = 5).count() > 0)
+    // three rounds fold at v1, v2 and v3; the newest KeepFulls survive
+    val kept = Seq(2L, 3L)
+    assert(kept.size === GenLog.KeepFulls)
+    def exists(dir: String, p: String) =
+      fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/$p"))
+
+    val near = Files.createTempDirectory("graft_cat_nearprune").toString
+    val d = quarters(docs, "doc_id")
+    StreamOps.seedDedupIndex(spark, d.head, near)
+    for (b <- 1 to 3) {
+      StreamOps.incrDedupCommit(d(b), near, batchId = b - 1L)
+      StreamOps.compactDedupIndex(spark, near)
+    }
+    assert(GenLog.versions(spark, near, requiring = "band_index").sorted === kept)
+    assert(!exists(near, "v0/band_index") && !exists(near, "v0/md5_index"))
+
+    val emb = Files.createTempDirectory("graft_cat_embprune").toString
+    val v = quarters(vecs, "vec_id")
+    StreamOps.EmbedBandFamily.seed(spark, v.head, emb)
+    for (b <- 1 to 3) {
+      StreamOps.incrEmbedDedupCommit(v(b), emb, batchId = b - 1L)
+      StreamOps.EmbedBandFamily.compact(spark, emb)
+    }
+    assert(GenLog.versions(spark, emb, requiring = "full").sorted === kept)
+    assert(!exists(emb, "v0/full"))
+    // the newest snapshot serves the whole corpus
+    assert(StreamOps.embedBands(spark, StreamOps.EmbedBandFamily.roots(spark, emb))
+      .select("vec_id").distinct().count() === vecs.count())
   }
 }

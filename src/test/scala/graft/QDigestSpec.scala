@@ -143,12 +143,15 @@ class QDigestSpec extends SparkSpec {
   test("served rollup == in-session merge path; build commits once") {
     import spark.implicits._
     import graft.ops.RelationalOps
+    val F = graft.ops.StreamOps.RollupFamily
+    val dir = graft.index.GenLog.datasetRoot(spark, sf) + "/rollup"
+    val events = T(spark, sf, "events")
     val runs0 = graft.index.GenLog.buildsRun.get()
-    val path = RelationalOps.writeQuantileState(spark, sf)
+    F.buildOnce(spark, dir)(Seq(events))
     val built = graft.index.GenLog.buildsRun.get() - runs0
-    RelationalOps.writeQuantileState(spark, sf) // second call must skip
+    F.buildOnce(spark, dir)(Seq(events)) // second call must skip
     assert(graft.index.GenLog.buildsRun.get() - runs0 === built,
-      "second writeQuantileState re-built instead of skipping")
+      "second RollupFamily.buildOnce re-built instead of skipping")
 
     // serve-from-state ≡ the same union+estimate over the in-memory
     // daily frame — the rollup's maintained state IS the whole input
@@ -161,7 +164,7 @@ class QDigestSpec extends SparkSpec {
       .select($"event_type", $"n_days",
         est($"m", lit(0.5)).as("p50"), est($"m", lit(0.95)).as("p95"))
       .collect().map(_.toString).sorted.toSeq
-    val fromState = RelationalOps.serveQuantile(spark, path)
+    val fromState = RelationalOps.serveRollup(spark, F.roots(spark, dir))
       .select($"event_type", $"n_days",
         $"p50_cents".as("p50"), $"p95_cents".as("p95"))
       .collect().map(_.toString).sorted.toSeq

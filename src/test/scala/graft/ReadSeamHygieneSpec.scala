@@ -15,6 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Sessions have one seam as well: [[Session.local]] is the only
   * `SparkSession.builder` in `src/main/scala/graft` apart from
   * ClusterCheck's `local-cluster` session.
+  *
+  * Persisted indexes keep one layout: outside the few serving builds
+  * pinned here, every `graft/ops` index is built through a
+  * [[graft.index.GenLog.GenFamily]], so a new raw `GenLog.buildOnce`
+  * layout is an explicit edit of this spec. And no scaladoc sits
+  * directly on another, where the first would document nothing.
   */
 class ReadSeamHygieneSpec extends AnyFunSuite {
 
@@ -22,14 +28,26 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
   private val Seam = Root.resolve("core.scala")
   private val Builder = """SparkSession\s*\.\s*builder\b""".r
   private val RawRead = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
+  private val RawBuildOnce = """GenLog\s*\.\s*buildOnce\s*\(""".r
+  private val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+
+  private def text(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
   /** Source text with comments blanked (line breaks kept), so prose may
     * name the raw call.
     */
   private def code(p: Path): String =
-    """(?s)/\*.*?\*/|//[^\n]*""".r.replaceAllIn(
-      new String(Files.readAllBytes(p), "UTF-8"),
-      m => "\n" * m.matched.count(_ == '\n'))
+    Comment.replaceAllIn(text(p), m => "\n" * m.matched.count(_ == '\n'))
+
+  /** Lines of the scaladocs in `src` that only whitespace separates from
+    * the next comment, itself a scaladoc.
+    */
+  private def stackedDocs(src: String): Seq[Int] =
+    Comment.findAllMatchIn(src).toSeq.sliding(2).collect {
+      case Seq(a, b) if a.matched.startsWith("/**") && b.matched.startsWith("/**") &&
+          src.substring(a.end, b.start).trim.isEmpty =>
+        src.substring(0, a.start).count(_ == '\n') + 1
+    }.toSeq
 
   /** `T.parquet`'s definition, up to the blank line that ends it. */
   private def seamDef(src: String): String = {
@@ -65,6 +83,27 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
     assert(builders === Map(
       Root.resolve("Session.scala") -> 1,
       Root.resolve("tools/ClusterCheck.scala") -> 1))
+  }
+
+  test("no scaladoc in src/main/scala/graft sits directly on another") {
+    assert(stackedDocs("/** a */\n  /** b */\n  def f = 1") === Seq(1))
+    assert(stackedDocs("/** a */\n  // note\n  /** b */\n  def f = 1").isEmpty)
+    val stacked = sources.map(p => p -> stackedDocs(text(p)))
+      .filter(_._2.nonEmpty).toMap
+    assert(stacked === Map.empty)
+  }
+
+  test("raw GenLog.buildOnce layouts in graft/ops are the pinned few") {
+    val ops = Root.resolve("ops")
+    val raw = sources.filter(_.startsWith(ops))
+      .map(p => p -> RawBuildOnce.findAllMatchIn(code(p)).size)
+      .filter(_._2 > 0).toMap
+    // SimilarityOps: ivf, semcells, pq; LmOps: lm_score_incr;
+    // DedupOps: dedup_incr, cc_incr
+    assert(raw === Map(
+      ops.resolve("SimilarityOps.scala") -> 3,
+      ops.resolve("LmOps.scala") -> 1,
+      ops.resolve("DedupOps.scala") -> 2))
   }
 
   test("the pattern catches the single-line and split-line spellings") {

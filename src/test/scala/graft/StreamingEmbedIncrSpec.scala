@@ -63,7 +63,7 @@ class StreamingEmbedIncrSpec extends SparkSpec {
     import spark.implicits._
     val dir = stage()
     val indexDir = Files.createTempDirectory("graft_embed_idx").toString
-    StreamOps.seedEmbedIndex(spark, base, indexDir)
+    StreamOps.EmbedBandFamily.seed(spark, base, indexDir)
     val q = StreamOps
       .incrEmbedDedupStreamWriter(
         spark.readStream
@@ -89,27 +89,25 @@ class StreamingEmbedIncrSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$p"))
-    assert(!exists("v1/band_index") && !exists("v2/band_index"),
+    assert(!exists("v1/full") && !exists("v2/full"),
       "batches must not rewrite the full index")
-    assert(spark.read.parquet(s"$indexDir/v1/band_inc")
+    assert(spark.read.parquet(s"$indexDir/v1/gen")
       .select("vec_id").distinct().count() === 2, "batch-1 rows only")
 
-    // maintenance: compaction folds increments into a full snapshot and
-    // pruning drops the superseded seed — committed pairs never move
-    StreamOps.compactEmbedIndex(spark, indexDir)
+    // maintenance: compaction folds the generations into a full snapshot
+    // — committed pairs never move
+    StreamOps.EmbedBandFamily.compact(spark, indexDir)
     // grace contract: folded increments are tombstoned first (files
     // intact for readers that resolved pre-fold), deleted a compaction
     // later
-    assert(exists("v2/band_index"))
-    for (v <- Seq("v1/band_inc", "v2/band_inc"))
+    assert(exists("v2/full"))
+    for (v <- Seq("v1/gen", "v2/gen"))
       assert(exists(s"$v/${graft.index.GenLog.Superseded}"), v)
-    StreamOps.compactEmbedIndex(spark, indexDir)
-    assert(!exists("v1/band_inc") && !exists("v2/band_inc"))
-    StreamOps.pruneDedupIndexVersions(spark, indexDir, keep = 1)
+    StreamOps.EmbedBandFamily.compact(spark, indexDir)
+    assert(!exists("v1/gen") && !exists("v2/gen"))
     assert(pairs(StreamOps.readEmbedPairs(spark, indexDir)) === got,
       "maintenance must never touch committed per-batch outputs")
-    val latest = spark.read.parquet(s"$indexDir/v2/band_index")
-    assert(latest.count() > 0, "newest index snapshot survives the prune")
-    assert(!exists("v0/band_index"), "superseded seed snapshot is dropped")
+    val latest = spark.read.parquet(s"$indexDir/v2/full")
+    assert(latest.count() > 0, "newest index snapshot survives compaction")
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** The streaming CDC-apply: an UPDATE-mode change feed (per-user running
   * counts) maintained into a keyed JDBC dimension via
-  * [[Sinks.upsertSnapshotJdbc]]. Three contracts:
+  * [[Sinks.upsertSnapshotSwapJdbc]]. Three contracts:
   *
   *   1. batch upsert semantics — staged rows replace matched keys, keep
   *      unmatched, insert new, and re-applying the same batch converges;
@@ -20,20 +20,20 @@ class StreamingUpsertSpec extends SparkSpec {
 
   private val props = new java.util.Properties
 
-  test("upsertSnapshotJdbc replaces matched keys, keeps rest, inserts new, idempotently") {
+  test("swap upsert replaces, keeps, inserts, idempotently") {
     import spark.implicits._
     val db = Files.createTempDirectory("graft_ups_db").resolve("db")
     val url = s"jdbc:derby:$db;create=true"
     Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "n")
       .write.jdbc(url, "dim", props)
     val staged = Seq((2L, 25L), (4L, 40L)).toDF("k", "n")
-    Sinks.upsertSnapshotJdbc(staged, url, "dim", Seq("k"), props)
+    Sinks.upsertSnapshotSwapJdbc(staged, url, "dim", Seq("k"), props)
     def table() = spark.read.jdbc(url, "dim", props)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = Map(1L -> 10L, 2L -> 25L, 3L -> 30L, 4L -> 40L)
     assert(table() == expect)
     // idempotent: same staged batch again converges, no duplicates
-    Sinks.upsertSnapshotJdbc(staged, url, "dim", Seq("k"), props)
+    Sinks.upsertSnapshotSwapJdbc(staged, url, "dim", Seq("k"), props)
     assert(table() == expect)
   }
 
