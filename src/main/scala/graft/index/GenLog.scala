@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.T
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -23,6 +24,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * partially-written full snapshot can never silently supersede the
   * generations it was folding (the write-then-mark protocol; an atomic
   * rename would need same-filesystem guarantees the marker does not).
+  * A compaction that empties a version directory removes it.
+  *
+  * Read contract: every serve, fold, epoch roll and prior-state probe
+  * reads an index's roots through [[read]], the one merge-on-read. The
+  * layout decision — each root is its own (possibly hive-partitioned)
+  * table, read separately and unioned; a probe prunes every root's scan
+  * by a literal partition filter — lives there and nowhere else.
   *
   * Keying contract: serving builds are keyed by (dataset, artifact
   * params) under ONE configurable warehouse root ([[RootKey]]) — the
@@ -79,8 +87,18 @@ object GenLog {
     */
   private[graft] def graceDelete(fs: FileSystem, path: Path): Unit = {
     val tomb = new Path(path, Superseded)
-    if (fs.exists(tomb)) fs.delete(path, true)
+    if (fs.exists(tomb)) dropArtifact(fs, path)
     else fs.create(tomb, true).close()
+  }
+
+  /** Delete an artifact directory, then its `v<N>` directory once that
+    * holds nothing else — otherwise every later [[versions]] listing
+    * would walk the emptied version again. Shared by the compactions.
+    */
+  private[graft] def dropArtifact(fs: FileSystem, artifact: Path): Unit = {
+    fs.delete(artifact, true)
+    val version = artifact.getParent
+    if (fs.exists(version) && fs.listStatus(version).isEmpty) fs.delete(version, true)
   }
 
   /** A claim whose mtime is older than this is a crash orphan and
@@ -438,6 +456,33 @@ object GenLog {
   def writePartitioned(df: DataFrame, key: String, path: String): Unit =
     df.repartition(col(key)).write.mode(SaveMode.Overwrite).partitionBy(key).parquet(path)
 
+  /** The one merge-on-read: the `artifact` rows (the root itself when
+    * empty) of every root, unioned by name. Each root is read on its own
+    * through [[T.parquet]], so hive-partitioned roots stay separate
+    * tables. `within = Some(key -> probe)` prunes every root to the
+    * partition values in `probe`'s single column: they are collected
+    * once and put on each scan as a literal `isin` on `key`, which
+    * Catalyst turns into a partition-listing prune. That collect is
+    * bounded by the index's partition count (bm25/phrase term shards,
+    * ANN/quantized buckets, IVF/semantic cells, 64 id shards); an empty
+    * probe reads no rows.
+    */
+  def read(
+      s: SparkSession,
+      roots: Seq[String],
+      artifact: String = "",
+      within: Option[(String, DataFrame)] = None): DataFrame = {
+    val keep = within.map { case (key, probe) =>
+      col(key).isin(probe.distinct().collect().map(_.get(0)).toSeq: _*)
+    }
+    roots
+      .map { r =>
+        val df = T.parquet(s, if (artifact.isEmpty) r else s"$r/$artifact")
+        keep.fold(df)(df.filter)
+      }
+      .reduce(_ unionByName _)
+  }
+
   /** Versions present in an index directory: `v<N>` subdirectories,
     * restricted (when `requiring` is set) to those whose named artifact
     * is COMMITTED — the marker gate that makes partial writes invisible.
@@ -561,7 +606,7 @@ object GenLog {
         if (!batch.isEmpty) commit(batch, dir, batchId)
       }
 
-    /** The roots a merge-on-read serve unions: the newest COMMITTED full
+    /** The roots a merge-on-read ([[read]]) unions: the newest COMMITTED full
       * snapshot (seed or compaction) plus every later committed batch
       * generation. Generations at or below the newest full are superseded
       * (folded into it); an uncommitted full (compaction crashed
@@ -580,7 +625,8 @@ object GenLog {
       * newest committed generation version, commit it, then bound the
       * directory — superseded generations are dropped and all but the
       * newest [[KeepFulls]] full snapshots are pruned (without pruning,
-      * each compaction would strand one full corpus copy forever).
+      * each compaction would strand one full corpus copy forever); a
+      * version directory goes with its last artifact ([[dropArtifact]]).
       * Crash-safe at every cut: the fold's partial output is uncommitted
       * (ignored), deletes only begin after the marker lands, and a crash
       * mid-delete leaves superseded dirs that the next compaction
@@ -617,7 +663,7 @@ object GenLog {
         graceDelete(fs, new Path(s"$dir/v$v/$GenSub"))
       }
       fulls.dropRight(KeepFulls).foreach { v =>
-        fs.delete(new Path(s"$dir/v$v/$FullSub"), true)
+        dropArtifact(fs, new Path(s"$dir/v$v/$FullSub"))
       }
     }
 

@@ -186,7 +186,7 @@ object LmOps {
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val dir = GenLog.datasetRoot(s, d) + "/bigram"
     (() => { StreamOps.BigramFamily.buildOnce(s, dir)(Seq(docs(s, d))); () },
-      () => T.parquet(s, StreamOps.BigramFamily.roots(s, dir): _*)
+      () => GenLog.read(s, StreamOps.BigramFamily.roots(s, dir))
         .select(col("w1"), col("w2"), col("cf2")))
   }
 
@@ -210,11 +210,8 @@ object LmOps {
     * because each generation's `l` is its own batch's token count).
     */
   private[graft] def lmFrames(s: SparkSession, roots: Seq[String]): (DataFrame, DataFrame) =
-    (roots.map(p => T.parquet(s, s"$p/postings")).reduce(_ unionByName _),
-      roots
-        .map(p => T.parquet(s, s"$p/stats"))
-        .reduce(_ unionByName _)
-        .agg(sum(col("l")).as("n_total")))
+    (GenLog.read(s, roots, "postings"),
+      GenLog.read(s, roots, "stats").agg(sum(col("l")).as("n_total")))
 
   private[graft] def lmKnSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {

@@ -562,9 +562,7 @@ object RelationalOps {
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
     val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
-    paths
-      .map(p => T.parquet(s, p))
-      .reduce(_ unionByName _)
+    GenLog.read(s, paths)
       .groupBy($"event_type")
       .agg(
         countDistinct($"day").as("n_days"),
@@ -591,9 +589,7 @@ object RelationalOps {
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
     val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
-    paths
-      .map(p => T.parquet(s, p))
-      .reduce(_ unionByName _)
+    GenLog.read(s, paths)
       .groupBy($"day", $"event_type")
       .agg(
         hll_sketch_estimate(hll_union_agg($"hll")).as("users"),

@@ -717,12 +717,8 @@ object SimilarityOps {
       indexPaths: Seq[String],
       probes: DataFrame): DataFrame = {
     import s.implicits._
-    val idx = indexPaths.map(p => T.parquet(s, p)).reduce(_.unionByName(_))
-    val probeBuckets =
-      probes.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     val w = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
-    idx
-      .filter($"bucket".isin(probeBuckets: _*))
+    GenLog.read(s, indexPaths, within = Some("bucket" -> probes.select($"pbucket")))
       .join(broadcast(probes), $"bucket" === $"pbucket" && $"vec_id" =!= $"probe_id")
       .select(
         $"probe_id",
@@ -756,14 +752,6 @@ object SimilarityOps {
               (0 until SignBits).map(j => $"bucket".bitwiseXOR(lit(1L << j))): _*))
           .as("pbucket"))
   }
-
-  /** The distinct bucket ids the standard batch probe set touches —
-    * exactly the literal partition filter [[serveAnnBatch]] pushes;
-    * exposed so ServeIndexSpec can assert the probed set is a strict
-    * subset of the index's bucket directories.
-    */
-  private[graft] def serveProbedBuckets(s: SparkSession, d: String): Seq[Any] =
-    batchProbeFrame(s, d).select(col("pbucket")).distinct().collect().map(_.get(0)).toSeq
 
   /** q_sim_served — q_sim_batch's result served from the PERSISTED bucket
     * index: build writes the bucket-partitioned corpus, serve reads back
@@ -869,7 +857,7 @@ object SimilarityOps {
       indexPaths: Seq[String],
       probeVecs: DataFrame): DataFrame = {
     import s.implicits._
-    val cbRead = T.parquet(s, s"${indexPaths.head}/codebook")
+    val cbRead = GenLog.read(s, indexPaths.take(1), "codebook")
     val probeCells = probeVecs
       .crossJoin(broadcast(codebookRow(cbRead)))
       .select(
@@ -878,11 +866,7 @@ object SimilarityOps {
         $"n2".as("pn2"),
         explode(slice(reverse(array_sort(scoredCol)), 1, NProbe)).as("sc"))
       .select($"probe_id", $"p", $"pn2", (-$"sc.nid").as("pcell"))
-    val pcells =
-      probeCells.select($"pcell").distinct().collect().map(_.get(0)).toSeq
-    val idx = indexPaths
-      .map(p => T.parquet(s, s"$p/cells").filter($"cell".isin(pcells: _*)))
-      .reduce(_ unionByName _)
+    val idx = GenLog.read(s, indexPaths, "cells", Some("cell" -> probeCells.select($"pcell")))
     val w = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
     idx
       .join(broadcast(probeCells), $"cell" === $"pcell" && $"vec_id" =!= $"probe_id")
@@ -1112,11 +1096,8 @@ object SimilarityOps {
       indexPaths: Seq[String],
       probes: DataFrame): DataFrame = {
     import s.implicits._
-    val pbuckets = probes.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     quantStage(
-      indexPaths
-        .map(p => T.parquet(s, p).filter($"bucket".isin(pbuckets: _*)))
-        .reduce(_ unionByName _),
+      GenLog.read(s, indexPaths, within = Some("bucket" -> probes.select($"pbucket"))),
       probes)
   }
 
@@ -1293,9 +1274,7 @@ object SimilarityOps {
     }
     val serve = () => {
       val batch = cells.filter($"vec_id" > thr).localCheckpoint(true)
-      val probed = batch.select($"cell").distinct().collect().map(_.get(0))
-      val base = T.parquet(s, path)
-        .filter($"cell".isin(probed.toSeq: _*))
+      val base = GenLog.read(s, Seq(path), within = Some("cell" -> batch.select($"cell")))
         .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell"))
       batch
         .join(
@@ -1463,13 +1442,8 @@ object SimilarityOps {
         .select($"vec_id", $"embedding")
         .withColumn("n2", Vec.norm2($"embedding")),
       cents).localCheckpoint(eager = true)
-    val probed = b.select($"cell").distinct().collect().map(_.get(0)).toSeq
-    val prior = memberRoots
-      .map(p =>
-        T.parquet(s, s"$p/cells")
-          .filter($"cell".isin(probed: _*))
-          .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell")))
-      .reduce(_ unionByName _)
+    val prior = GenLog.read(s, memberRoots, "cells", Some("cell" -> b.select($"cell")))
+      .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell"))
     val survivors = b
       .join(semWitnessed(prior.unionByName(b), b), Seq("vec_id"), "left_anti")
       .select($"vec_id", $"cell")
@@ -1835,8 +1809,7 @@ object SimilarityOps {
     label = "PQ codes",
     write = (s, vecs, path) => writePqCodesFor(vecs, pqCodebookAt(s, s"$root/codebook"), path),
     fold = (s, roots, path) =>
-      roots.map(T.parquet(s, _)).reduce(_ unionByName _)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path))
+      GenLog.read(s, roots).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path))
 
   /** The persisted PQ index under one claim on `root`: the stand-in
     * sub-codebooks (PqM×PqK rows — the model artifact) first, then the
@@ -1885,7 +1858,7 @@ object SimilarityOps {
       .crossJoin(broadcast(cbRow.select(
         transform($"mcb", mc =>
           transform(mc.getField("cb"), c => c.getField("cn2"))).as("ct"))))
-    val codes = codesPaths.map(p => T.parquet(s, p)).reduce(_ unionByName _)
+    val codes = GenLog.read(s, codesPaths)
     val dotSum = (0 until PqM)
       .map(m =>
         element_at(

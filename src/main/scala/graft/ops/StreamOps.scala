@@ -377,7 +377,7 @@ object StreamOps {
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(path),
       fold = (s, roots, path) =>
-        aggregateSummaries(T.parquet(s, roots: _*))
+        aggregateSummaries(GenLog.read(s, roots))
           .coalesce(1)
           .write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -388,7 +388,7 @@ object StreamOps {
     * rows; the daily compaction folds it back to one file.
     */
   def publishedCorpusReport(s: SparkSession, summaryDir: String): DataFrame =
-    aggregateSummaries(T.parquet(s, ReportFamily.roots(s, summaryDir): _*))
+    aggregateSummaries(GenLog.read(s, ReportFamily.roots(s, summaryDir)))
 
   /** ONE micro-batch through every leg of the composed program: curated
     * rows land in a deterministic per-batch lake partition, the near-dup
@@ -709,24 +709,31 @@ object StreamOps {
     * consumer rides to get the VERIFIED pair graph without re-running
     * the banded-Jaccard lineage.
     */
-  def ccFromPairState(s: SparkSession, indexDir: String): DataFrame = {
-    def read(sub: String): DataFrame = T.parquet(s,
-      GenLog.versions(s, indexDir, requiring = sub)
-        .sorted
-        .map(v => s"$indexDir/v$v/$sub"): _*)
+  def ccFromPairState(s: SparkSession, indexDir: String): DataFrame =
     DedupOps.ccAssign(
       s,
-      read("pairs"),
-      read("assign").withColumnRenamed("cluster_id", "rep"))
-  }
+      GenLog.read(s, logPaths(s, indexDir, "pairs")),
+      GenLog.read(s, logPaths(s, indexDir, "assign")).withColumnRenamed("cluster_id", "rep"))
+
+  /** The committed `sub` artifacts of the near-dup log, oldest first,
+    * at the versions `keep` admits.
+    */
+  private def logPaths(
+      s: SparkSession,
+      indexDir: String,
+      sub: String,
+      keep: Long => Boolean = _ => true): Seq[String] =
+    GenLog.versions(s, indexDir, requiring = sub)
+      .filter(keep)
+      .sorted
+      .map(v => s"$indexDir/v$v/$sub")
 
   /** Bound under which the remap log resolves driver-side: the log is
     * O(cluster merges) — bounded model state like the CC driver finish —
-    * and below this row count one collect + a transitive Scala resolve +
-    * one broadcast frame replaces a pointer-doubling loop whose per-hop
+    * and below this row count one collect + a local union-find + one
+    * broadcast frame replaces a pointer-doubling loop whose per-hop
     * fixed cost (self-join + eager checkpoint + emptiness job) dwarfs
-    * logs this small. Above the bound the distributed loop runs as
-    * before.
+    * logs this small. Above the bound the distributed loop runs.
     */
   private val RemapDriverResolveRows = 100000L
 
@@ -735,23 +742,19 @@ object StreamOps {
     * leave the live index (so an old key never reappears) — the log is a
     * functional acyclic pointer forest, and pointer-doubling self-joins
     * compose every chain in O(log depth) rounds over a frame that is
-    * O(cluster merges), not O(corpus).
+    * O(cluster merges), not O(corpus). Each chain therefore ends at its
+    * component's minimum, so under the driver bound the composition is
+    * [[DedupOps.minRootRemap]] over the collected log.
     */
   private def composeRemap(remap: DataFrame): DataFrame = {
     var r = remap
       .select(col("old_cid"), col("new_cid"))
       .localCheckpoint(eager = true)
     if (r.count() <= RemapDriverResolveRows) {
-      val local = r.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-      def resolve(x: Long): Long = {
-        var v = x
-        var hops = 0
-        while (local.contains(v) && hops < local.size + 1) { v = local(v); hops += 1 }
-        v
-      }
       val s = r.sparkSession
       import s.implicits._
-      return local.keys.toSeq.map(k => (k, resolve(k))).toDF("old_cid", "new_cid")
+      return DedupOps.minRootRemap(r.collect().map(x => (x.getLong(0), x.getLong(1))))
+        .toDF("old_cid", "new_cid")
     }
     var done = false
     var hops = 0
@@ -807,28 +810,19 @@ object StreamOps {
       snaps.nonEmpty,
       s"dedup index at $indexDir has no snapshot version <= $upTo (run seedDedupIndex)")
     val snapVer = snaps.max
-    def vers(sub: String): Seq[String] = GenLog.versions(s, indexDir, requiring = sub)
-      .filter(v => v > snapVer && v <= upTo)
-      .sorted
-      .map(v => s"$indexDir/v$v/$sub")
-    // each increment dir is its own partitioned root — read separately
-    // and union (fan-in is O(batches since last compaction) by contract)
-    def union(base: DataFrame, paths: Seq[String], cols: Seq[String]) =
-      (base +: paths.map(T.parquet(s, _)))
-        .map(_.select(cols.map(col): _*))
-        .reduce(_ unionByName _)
-    val md5 = union(
-      T.parquet(s, s"$indexDir/v$snapVer/md5_index"),
-      vers("md5_inc"),
-      Md5Cols :+ "cluster_id")
-    val band = union(
-      T.parquet(s, s"$indexDir/v$snapVer/band_index"),
-      vers("band_inc"),
-      BandCols :+ "cluster_id")
+    def vers(sub: String): Seq[String] =
+      logPaths(s, indexDir, sub, v => v > snapVer && v <= upTo)
+    // the snapshot plus the increments since (fan-in is O(batches since
+    // last compaction) by contract)
+    def state(snap: String, inc: String, cols: Seq[String]): DataFrame =
+      GenLog.read(s, s"$indexDir/v$snapVer/$snap" +: vers(inc))
+        .select(cols.map(col): _*)
+    val md5 = state("md5_index", "md5_inc", Md5Cols :+ "cluster_id")
+    val band = state("band_index", "band_inc", BandCols :+ "cluster_id")
     val remapPaths = vers("remap")
     if (remapPaths.isEmpty) (md5, band)
     else {
-      val r = composeRemap(T.parquet(s, remapPaths: _*))
+      val r = composeRemap(GenLog.read(s, remapPaths))
       (applyRemap(md5, r, Md5Cols), applyRemap(band, r, BandCols))
     }
   }
@@ -948,7 +942,7 @@ object StreamOps {
     // next compaction collects the rest
     snaps.dropRight(GenLog.KeepFulls).foreach { v =>
       Seq("md5_index", "band_index").foreach { a =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$a"), true)
+        GenLog.dropArtifact(fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$a"))
       }
     }
   }
@@ -963,15 +957,11 @@ object StreamOps {
   def readDedupAssignments(s: SparkSession, indexDir: String): DataFrame = {
     // committed assign dirs only (not a v*/assign glob): an in-flight
     // batch's partial write must never leak into the read view
-    val a = T.parquet(s,
-      GenLog.versions(s, indexDir, requiring = "assign")
-        .sorted
-        .map(v => s"$indexDir/v$v/assign"): _*)
-    val remapVers = GenLog.versions(s, indexDir, requiring = "remap")
-    if (remapVers.isEmpty) a
+    val a = GenLog.read(s, logPaths(s, indexDir, "assign"))
+    val remapPaths = logPaths(s, indexDir, "remap")
+    if (remapPaths.isEmpty) a
     else {
-      val r = composeRemap(
-        T.parquet(s, remapVers.map(v => s"$indexDir/v$v/remap"): _*))
+      val r = composeRemap(GenLog.read(s, remapPaths))
       a.join(r, a("cluster_id") === r("old_cid"), "left")
         .select(a("doc_id"), coalesce(r("new_cid"), a("cluster_id")).as("cluster_id"))
     }
@@ -990,14 +980,14 @@ object StreamOps {
     write = (s, vecs, path) =>
       GenLog.writePartitioned(
         DedupOps.buildEmbedIndex(s, vecs).select(EmbedCols: _*), "band_idx", path),
-    fold = (s, roots, path) => foldPartitioned(s, roots, "band_idx", path, EmbedCols: _*))
+    fold = (s, roots, path) => GenLog.writePartitioned(embedBands(s, roots), "band_idx", path))
 
   private val EmbedCols: Seq[Column] =
     Seq("vec_id", "embedding", "n2", "band_idx", "band_val").map(col)
 
   /** The band rows under `roots` of [[EmbedBandFamily]], merged on read. */
   private[graft] def embedBands(s: SparkSession, roots: Seq[String]): DataFrame =
-    unionRoots(s, roots, EmbedCols: _*)
+    GenLog.read(s, roots).select(EmbedCols: _*)
 
   /** Commit micro-batch `batchId` of the embedding dedup: its near-dup
     * pairs against the index as of version `batchId` (so a retry never
@@ -1042,10 +1032,7 @@ object StreamOps {
     * leaks into the read view).
     */
   def readEmbedPairs(s: SparkSession, indexDir: String): DataFrame =
-    T.parquet(s,
-      GenLog.versions(s, indexDir, requiring = "pairs")
-        .sorted
-        .map(v => s"$indexDir/v$v/pairs"): _*)
+    GenLog.read(s, logPaths(s, indexDir, "pairs"))
 
   // ---- the generation-local index families, over the shared kernel ---
   //
@@ -1067,17 +1054,6 @@ object StreamOps {
   // overwrites the same output from the same input, and version gaps
   // from empty batches are skipped on read.
 
-  // the union of every root's `cols`: each partitioned root is its own
-  // table, so roots are read separately
-  private def unionRoots(s: SparkSession, paths: Seq[String], cols: Column*): DataFrame =
-    paths.map(p => T.parquet(s, p).select(cols: _*)).reduce(_ unionByName _)
-
-  // the fold of a partitioned artifact: the union of every root's `cols`,
-  // rewritten partitioned on `key`
-  private def foldPartitioned(
-      s: SparkSession, paths: Seq[String], key: String, out: String, cols: Column*): Unit =
-    GenLog.writePartitioned(unionRoots(s, paths, cols: _*), key, out)
-
   /** Postings family (q_index_bm25_served's index, and the streaming
     * form of q_index_bm25_incr): fold unions postings shard-wise and sums
     * the one-row corpus stats — union-preserving, so no read changes (df
@@ -1089,12 +1065,12 @@ object StreamOps {
     label = "lexical index",
     write = (s, docs, path) => { TextOps.writeBm25IndexFrom(s, docs, path); () },
     fold = (s, roots, path) => {
-      foldPartitioned(
-        s, roots.map(p => s"$p/postings"), "tshard", s"$path/postings",
-        col("term"), col("doc_id"), col("tf"), col("dl"), col("tshard"))
-      roots
-        .map(p => T.parquet(s, s"$p/stats"))
-        .reduce(_ unionByName _)
+      GenLog.writePartitioned(
+        GenLog.read(s, roots, "postings")
+          .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tshard")),
+        "tshard",
+        s"$path/postings")
+      GenLog.read(s, roots, "stats")
         .agg(sum(col("l")).as("l"), sum(col("n")).as("n"))
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1108,8 +1084,10 @@ object StreamOps {
     label = "ANN index",
     write = (s, vecs, path) => SimilarityOps.writeAnnIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
-      foldPartitioned(
-        s, roots, "bucket", path, col("vec_id"), col("embedding"), col("n2"), col("bucket")))
+      GenLog.writePartitioned(
+        GenLog.read(s, roots).select(col("vec_id"), col("embedding"), col("n2"), col("bucket")),
+        "bucket",
+        path))
 
   /** Id-sharded embedding-store family — the by-id lookup complement of
     * the ANN buckets (the serving tier's feedback-seed fetch): same
@@ -1119,9 +1097,11 @@ object StreamOps {
     label = "embedding store",
     write = (s, vecs, path) => SimilarityOps.writeEmbStoreFor(s, vecs, path),
     fold = (s, roots, path) =>
-      foldPartitioned(
-        s, roots, "ishard", path,
-        col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("ishard")))
+      GenLog.writePartitioned(
+        GenLog.read(s, roots)
+          .select(col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("ishard")),
+        "ishard",
+        path))
 
   /** Metrics-rollup family — the events table's maintained family:
     * per-(day, event_type) HLL + q-digest sketch state
@@ -1148,9 +1128,7 @@ object StreamOps {
       val union = org.apache.spark.sql.functions.udaf(
         new graft.expr.QDigestMergeAgg(RelationalOps.QdK),
         org.apache.spark.sql.Encoders.BINARY)
-      roots
-        .map(p => T.parquet(s, p))
-        .reduce(_ unionByName _)
+      GenLog.read(s, roots)
         .groupBy(col("day"), col("event_type"))
         .agg(
           hll_union_agg(col("hll")).as("hll"),
@@ -1173,9 +1151,11 @@ object StreamOps {
     label = "phrase index",
     write = (s, docs, path) => TextOps.writePhraseIndexFrom(s, docs, path),
     fold = (s, roots, path) =>
-      foldPartitioned(
-        s, roots.map(p => s"$p/postings"), "tshard", s"$path/postings",
-        col("term"), col("doc_id"), col("pos"), col("tshard")))
+      GenLog.writePartitioned(
+        GenLog.read(s, roots, "postings")
+          .select(col("term"), col("doc_id"), col("pos"), col("tshard")),
+        "tshard",
+        s"$path/postings"))
 
   /** Serve the q_lm_unigram model from the continuous LEXICAL index —
     * cf = Σ tf over merge-on-read postings, N = Σ generation stats — so
@@ -1255,9 +1235,11 @@ object StreamOps {
     label = "quantized index",
     write = (s, vecs, path) => SimilarityOps.writeQuantIndexFor(s, vecs, path),
     fold = (s, roots, path) =>
-      foldPartitioned(
-        s, roots, "bucket", path,
-        col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("qv")))
+      GenLog.writePartitioned(
+        GenLog.read(s, roots)
+          .select(col("vec_id"), col("embedding"), col("n2"), col("bucket"), col("qv")),
+        "bucket",
+        path))
 
   /** IVF family — the cell-partitioned similarity index. Unlike the
     * sign-bucket families, a cell assignment DEPENDS on model state:
@@ -1272,14 +1254,16 @@ object StreamOps {
   def ivfFamily(indexDir: String): GenLog.GenFamily = GenLog.GenFamily(
     label = "IVF index",
     write = (s, vecs, path) => {
-      val cb = T.parquet(s, s"${ivfFamily(indexDir).roots(s, indexDir).head}/codebook")
+      val cb = GenLog.read(s, ivfFamily(indexDir).roots(s, indexDir).take(1), "codebook")
       SimilarityOps.writeIvfCellsFrom(s, vecs, cb, path)
     },
     fold = (s, roots, path) => {
-      foldPartitioned(
-        s, roots.map(p => s"$p/cells"), "cell", s"$path/cells",
-        col("vec_id"), col("embedding"), col("n2"), col("cell"))
-      T.parquet(s, s"${roots.head}/codebook")
+      GenLog.writePartitioned(
+        GenLog.read(s, roots, "cells")
+          .select(col("vec_id"), col("embedding"), col("n2"), col("cell")),
+        "cell",
+        s"$path/cells")
+      GenLog.read(s, roots.take(1), "codebook")
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/codebook")
@@ -1323,10 +1307,8 @@ object StreamOps {
       indexDir: String,
       newCents: DataFrame,
       newIndexDir: String): Unit = {
-    val vectors = ivfFamily(indexDir).roots(s, indexDir)
-      .map(p => T.parquet(s, s"$p/cells")
-        .select(col("vec_id"), col("embedding")))
-      .reduce(_ unionByName _)
+    val vectors = GenLog.read(s, ivfFamily(indexDir).roots(s, indexDir), "cells")
+      .select(col("vec_id"), col("embedding"))
     val p = s"$newIndexDir/v0/full"
     SimilarityOps.writeIvfIndexFrom(s, vectors, newCents, p)
     GenLog.markCommitted(s, p)
@@ -1365,20 +1347,20 @@ object StreamOps {
       // strict a < b excludes self-pairs — the retry reproduces the
       // identical artifacts without ever reading its own target.
       val roots = semFamily(indexDir).roots(s, indexDir).filterNot(_ == path)
-      val cents = T.parquet(s, s"${roots.head}/cents")
+      val cents = GenLog.read(s, roots.take(1), "cents")
       SimilarityOps.writeSemGeneration(s, batch, cents, roots, path)
     },
     fold = (s, roots, path) => {
-      foldPartitioned(
-        s, roots.map(p => s"$p/cells"), "cell", s"$path/cells",
-        col("vec_id"), col("embedding"), col("n2"), col("cell").cast("long").as("cell"))
-      roots
-        .map(p => T.parquet(s, s"$p/survivors"))
-        .reduce(_ unionByName _)
+      GenLog.writePartitioned(
+        GenLog.read(s, roots, "cells").select(
+          col("vec_id"), col("embedding"), col("n2"), col("cell").cast("long").as("cell")),
+        "cell",
+        s"$path/cells")
+      GenLog.read(s, roots, "survivors")
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/survivors")
-      T.parquet(s, s"${roots.head}/cents")
+      GenLog.read(s, roots.take(1), "cents")
         .coalesce(1)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1399,9 +1381,7 @@ object StreamOps {
     * q_dedup_semantic's output shape.
     */
   def serveSemanticContinuous(s: SparkSession, indexDir: String): DataFrame =
-    semFamily(indexDir).roots(s, indexDir)
-      .map(p => T.parquet(s, s"$p/survivors"))
-      .reduce(_ unionByName _)
+    GenLog.read(s, semFamily(indexDir).roots(s, indexDir), "survivors")
       .orderBy(col("vec_id"))
 
   /** The cluster report served from the MAINTAINED semantic index
@@ -1413,13 +1393,9 @@ object StreamOps {
     */
   def serveClusterStatsContinuous(s: SparkSession, indexDir: String): DataFrame = {
     val roots = semFamily(indexDir).roots(s, indexDir)
-    val members = roots
-      .map(p => T.parquet(s, s"$p/cells")
-        .select(col("vec_id"), col("cell").cast("long").as("cell")))
-      .reduce(_ unionByName _)
-    val kept = roots
-      .map(p => T.parquet(s, s"$p/survivors"))
-      .reduce(_ unionByName _)
+    val members = GenLog.read(s, roots, "cells")
+      .select(col("vec_id"), col("cell").cast("long").as("cell"))
+    val kept = GenLog.read(s, roots, "survivors")
     members
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -1444,13 +1420,12 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       newIndexDir: String): Unit =
-    seedSemanticIndex(
-      s,
-      semFamily(indexDir).roots(s, indexDir)
-        .map(p => T.parquet(s, s"$p/cells")
-          .select(col("vec_id"), col("embedding")))
-        .reduce(_ unionByName _),
-      newIndexDir)
+    seedSemanticIndex(s, epochVectors(s, indexDir), newIndexDir)
+
+  // every vector across the semantic index's current roots
+  private def epochVectors(s: SparkSession, indexDir: String): DataFrame =
+    GenLog.read(s, semFamily(indexDir).roots(s, indexDir), "cells")
+      .select(col("vec_id"), col("embedding"))
 
   /** The TRAINED epoch roll — production retraining, the
     * q_dedup_semantic_trained quantizer lifted to the continuous
@@ -1468,13 +1443,7 @@ object StreamOps {
       indexDir: String,
       newIndexDir: String): Unit = {
     val p = s"$newIndexDir/v0/full"
-    SimilarityOps.writeSemSeedTrained(
-      s,
-      semFamily(indexDir).roots(s, indexDir)
-        .map(r => T.parquet(s, s"$r/cells")
-          .select(col("vec_id"), col("embedding")))
-        .reduce(_ unionByName _),
-      p)
+    SimilarityOps.writeSemSeedTrained(s, epochVectors(s, indexDir), p)
     GenLog.markCommitted(s, p)
   }
 
@@ -1497,7 +1466,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      T.parquet(s, roots: _*)
+      GenLog.read(s, roots)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
@@ -1508,7 +1477,7 @@ object StreamOps {
     * (StreamingBoilerplateSpec).
     */
   def serveBoilerplateContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateReportOf(T.parquet(s, BoilerFamily.roots(s, dir): _*))
+    TextOps.boilerplateReportOf(GenLog.read(s, BoilerFamily.roots(s, dir)))
 
   /** The corpus-scale (df-fraction) report from the SAME maintained
     * counts — the threshold is derived from the served state's document
@@ -1516,7 +1485,7 @@ object StreamOps {
     * the corpus: no family change, no re-seed, one serve-side knob.
     */
   def serveBoilerplateFracContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateFracReportOf(T.parquet(s, BoilerFamily.roots(s, dir): _*))
+    TextOps.boilerplateFracReportOf(GenLog.read(s, BoilerFamily.roots(s, dir)))
 
   /** Bigram-count family — the continuous lift of q_lm_bigram: each
     * micro-batch persists its docs' (w1, w2, cf2) pair counts
@@ -1543,7 +1512,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      T.parquet(s, roots: _*)
+      GenLog.read(s, roots)
         .groupBy(col("split"), col("w1"), col("w2"))
         .agg(sum(col("cf2")).as("cf2"))
         .write
@@ -1555,7 +1524,7 @@ object StreamOps {
     * ingested documents at every point in time (StreamingLmSpec).
     */
   def serveLmBigramContinuous(s: SparkSession, dir: String): DataFrame =
-    LmOps.lmBigramFromCounts(T.parquet(s, BigramFamily.roots(s, dir): _*))
+    LmOps.lmBigramFromCounts(GenLog.read(s, BigramFamily.roots(s, dir)))
 
   /** q_lm_bigram_apply served from the SAME maintained counts: the
     * split-keyed payload filtered to split = 'train' IS the train-only
@@ -1569,7 +1538,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmBigramApplyFromCounts(
-      T.parquet(s, BigramFamily.roots(s, dir): _*)
+      GenLog.read(s, BigramFamily.roots(s, dir))
         .filter(col("split") === "train")
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
@@ -1587,7 +1556,7 @@ object StreamOps {
       dir: String,
       allDocs: DataFrame): DataFrame =
     LmOps.lmKnFromCounts(
-      T.parquet(s, BigramFamily.roots(s, dir): _*)
+      GenLog.read(s, BigramFamily.roots(s, dir))
         .select(col("w1"), col("w2"), col("cf2")),
       allDocs)
 
@@ -1605,7 +1574,7 @@ object StreamOps {
       allDocs: DataFrame): DataFrame = {
     val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
     LmOps.lmInterpFromCounts(
-      T.parquet(s, BigramFamily.roots(s, bigramDir): _*)
+      GenLog.read(s, BigramFamily.roots(s, bigramDir))
         .select(col("w1"), col("w2"), col("cf2")),
       postings.groupBy(col("term").as("w2")).agg(sum(col("tf")).as("cf1")),
       nTotal.select(col("n_total").as("lt")),
@@ -1649,7 +1618,7 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path),
     fold = (s, roots, path) =>
-      T.parquet(s, roots: _*)
+      GenLog.read(s, roots)
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
@@ -1691,7 +1660,7 @@ object StreamOps {
       TextOps.passageMinlenSpansOf(passageState(s, dir)))
 
   private def passageState(s: SparkSession, dir: String): DataFrame =
-    T.parquet(s, PassageFamily.roots(s, dir): _*)
+    GenLog.read(s, PassageFamily.roots(s, dir))
 
   /** The eval-set decontamination spans served from the SAME maintained
     * passage grams — the split label is a pure function of doc_id (the

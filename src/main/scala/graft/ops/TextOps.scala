@@ -1178,34 +1178,21 @@ object TextOps {
     GenLog.writePartitioned(occurrences, "tshard", s"$path/postings")
   }
 
-  /** The shard ids a phrase set's terms probe — the literal partition
-    * filter every phrase serve pushes (bounded by 2·|phrases| values).
-    */
-  private[graft] def phraseProbedShards(
-      s: SparkSession, phrases: Seq[(Int, String, String)]): Seq[Any] = {
-    import s.implicits._
-    phrases.flatMap(p => Seq(p._2, p._3)).distinct.toDF("term")
-      .select(pmod(hash($"term"), lit(Bm25Shards)))
-      .distinct().collect().map(_.get(0)).toSeq
-  }
-
   /** Serve an ARBITRARY phrase set from the roots of a persisted
     * positional-postings index (merge-on-read: generations' doc sets are
     * disjoint by the ingest contract, so occurrence rows union cleanly):
-    * the phrase terms' shard ids become the literal partition filter on
-    * every root's scan — at 100 TB only the probed shards' files are
-    * ever read — then the identical adjacency join + rank cut as the
-    * in-session q_index_phrase.
+    * the phrase terms' shard ids (≤ 2·|phrases| values) become the
+    * literal partition filter on every root's scan — at 100 TB only the
+    * probed shards' files are ever read — then the identical adjacency
+    * join + rank cut as the in-session q_index_phrase.
     */
   private[graft] def servePhrase(
       s: SparkSession,
       paths: Seq[String],
       phrases: Seq[(Int, String, String)]): DataFrame = {
     import s.implicits._
-    val shards = phraseProbedShards(s, phrases)
-    val toks = paths
-      .map(p => T.parquet(s, s"$p/postings").filter($"tshard".isin(shards: _*)))
-      .reduce(_ unionByName _)
+    val terms = phrases.flatMap(p => Seq(p._2, p._3)).distinct.toDF("term")
+    val toks = GenLog.read(s, paths, "postings", Some("tshard" -> termShards(terms)))
       .select($"doc_id", $"pos", $"term")
     phraseHitsFromToks(toks, phrases)
   }
@@ -1479,14 +1466,9 @@ object TextOps {
       paths: Seq[String],
       q: DataFrame): DataFrame = {
     import s.implicits._
-    val shards = bm25ProbedShardsOf(q)
-    val postings = paths
-      .map(p => T.parquet(s, s"$p/postings").filter($"tshard".isin(shards: _*)))
-      .reduce(_ unionByName _)
+    val postings = GenLog.read(s, paths, "postings", Some("tshard" -> termShards(q)))
     val dfreq = postings.groupBy($"term").agg(count(lit(1)).as("df"))
-    val stats = paths
-      .map(p => T.parquet(s, s"$p/stats"))
-      .reduce(_ unionByName _)
+    val stats = GenLog.read(s, paths, "stats")
       .agg(sum($"l").as("l"), sum($"n").as("n"))
     val hits = postings
       .join(broadcast(q), Seq("term"))
@@ -1671,17 +1653,9 @@ object TextOps {
       storePaths: Seq[String],
       lex: DataFrame): DataFrame = {
     import s.implicits._
-    // the ≤ topK·|queries| candidate ids' shards — bounded model state
-    val lexShards = lex
-      .select(pmod(hash($"doc_id"), lit(64)))
-      .distinct()
-      .collect()
-      .map(_.get(0))
-      .toSeq
-    val store = storePaths
-      .map(p => T.parquet(s, p))
-      .reduce(_ unionByName _)
-      .filter($"ishard".isin(lexShards: _*))
+    // the ≤ topK·|queries| candidate ids' shards
+    val store = GenLog.read(
+      s, storePaths, within = Some("ishard" -> lex.select(pmod(hash($"doc_id"), lit(64)))))
     val sw = Window.partitionBy($"query_id").orderBy($"lex_rank")
     store
       .join(broadcast(lex), store("vec_id") === lex("doc_id"))
@@ -1743,14 +1717,9 @@ object TextOps {
     val seed = s.createDataFrame(
       java.util.Arrays.asList(seedDist.collect(): _*),
       seedDist.schema)
-    // LocalRelation plan: distinct folds driver-side, no Spark job
-    val probeBuckets =
-      seed.select($"pbucket").distinct().collect().map(_.get(0)).toSeq
     val cw = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id")
-    val sem = annPaths
-      .map(p => T.parquet(s, p))
-      .reduce(_ unionByName _)
-      .filter($"bucket".isin(probeBuckets: _*))
+    // LocalRelation probe: its distinct folds driver-side, no Spark job
+    val sem = GenLog.read(s, annPaths, within = Some("bucket" -> seed.select($"pbucket")))
       .join(broadcast(seed), $"bucket" === $"pbucket")
       .select(
         $"query_id",
@@ -2025,22 +1994,11 @@ object TextOps {
       s"JOIN w$BpeRounds v ON t.term = v.term " +
       "GROUP BY t.doc_id ORDER BY doc_id"
 
-  /** The distinct shard ids the fixed query set probes — the literal
-    * partition filter [[serveBm25]] pushes; exposed so ServeIndexSpec can
-    * assert the probed set is a strict subset of the shard directories.
+  /** The term shard of each row of a frame with a `term` column — the
+    * probe a postings serve prunes its roots to.
     */
-  private[graft] def bm25ProbedShards(s: SparkSession): Seq[Any] =
-    bm25ProbedShardsOf(queryFrame(s))
-
-  /** The shard ids a query frame's terms probe — ≤ |distinct terms|
-    * values of bounded model state, the literal partition filter every
-    * BM25 serve pushes.
-    */
-  private def bm25ProbedShardsOf(q: DataFrame): Seq[Any] = {
-    import q.sparkSession.implicits._
-    q.select(pmod(hash($"term"), lit(Bm25Shards)))
-      .distinct().collect().map(_.get(0)).toSeq
-  }
+  private def termShards(terms: DataFrame): DataFrame =
+    terms.select(pmod(hash(col("term")), lit(Bm25Shards)))
 
   private def queryFrame(s: SparkSession): DataFrame = {
     import s.implicits._

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
+import graft.index.GenLog
 import org.apache.spark.sql.SparkSession
 
 /** Multi-executor correctness harness, driven by LocalClusterSpec: runs
@@ -200,7 +201,7 @@ object ClusterCheck {
       "lake" -> s.read.parquet(pipe.corpus.lakeDir)
         .select("doc_id", "lang", "source", "n_chars", "split"),
       "dedup" -> StreamOps.readDedupAssignments(s, pipe.corpus.dedupIndexDir),
-      // the pair-graph family's two serves (r18): the remap-forest view
+      // the pair-graph family's two serves: the remap-forest view
       // above, and the closure over the persisted verified pair
       // generations with as-of-commit attachments — both across the
       // executor boundary
@@ -224,10 +225,8 @@ object ClusterCheck {
         StreamOps.ivfFamily(pipe.vectors.ivfDir).roots(s, pipe.vectors.ivfDir),
         e.filter(col("vec_id") < 5)),
       "sem" -> StreamOps.serveSemanticContinuous(s, pipe.vectors.semDir),
-      "store" -> StreamOps
-        .EmbStoreFamily.roots(s, pipe.vectors.storeDir)
-        .map(r => s.read.parquet(r))
-        .reduce(_ unionByName _)
+      "store" -> GenLog
+        .read(s, StreamOps.EmbStoreFamily.roots(s, pipe.vectors.storeDir))
         .select(col("vec_id"), col("ishard").cast("long").as("ishard")),
       "rollup" -> RelationalOps.serveRollup(s, StreamOps.RollupFamily.roots(s, rollupDir))
         .orderBy(col("event_type")),

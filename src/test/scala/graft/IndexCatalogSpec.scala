@@ -385,6 +385,9 @@ class IndexCatalogSpec extends SparkSpec {
     }
     assert(GenLog.versions(spark, near, requiring = "band_index").sorted === kept)
     assert(!exists(near, "v0/band_index") && !exists(near, "v0/md5_index"))
+    // the emptied seed version goes with its last artifact; every batch
+    // version keeps its assign/remap/pairs log
+    assert(GenLog.versions(spark, near).sorted === Seq(1L, 2L, 3L))
 
     val emb = Files.createTempDirectory("graft_cat_embprune").toString
     val v = quarters(vecs, "vec_id")
@@ -395,6 +398,7 @@ class IndexCatalogSpec extends SparkSpec {
     }
     assert(GenLog.versions(spark, emb, requiring = "full").sorted === kept)
     assert(!exists(emb, "v0/full"))
+    assert(GenLog.versions(spark, emb).sorted === Seq(1L, 2L, 3L))
     // the newest snapshot serves the whole corpus
     assert(StreamOps.embedBands(spark, StreamOps.EmbedBandFamily.roots(spark, emb))
       .select("vec_id").distinct().count() === vecs.count())

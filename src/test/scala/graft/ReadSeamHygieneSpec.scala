@@ -19,8 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Persisted indexes keep one layout: outside the few serving builds
   * pinned here, every `graft/ops` index is built through a
   * [[graft.index.GenLog.GenFamily]], so a new raw `GenLog.buildOnce`
-  * layout is an explicit edit of this spec. And no scaladoc sits
-  * directly on another, where the first would document nothing.
+  * layout is an explicit edit of this spec. Index roots are read the
+  * same way everywhere: `graft/ops` unions no roots and collects no
+  * probe keys by hand — [[graft.index.GenLog.read]] does both. And no
+  * scaladoc sits directly on another, where the first would document
+  * nothing.
   */
 class ReadSeamHygieneSpec extends AnyFunSuite {
 
@@ -29,6 +32,9 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
   private val Builder = """SparkSession\s*\.\s*builder\b""".r
   private val RawRead = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
   private val RawBuildOnce = """GenLog\s*\.\s*buildOnce\s*\(""".r
+  private val RootUnion = """reduce\(\s*_\s*(unionByName\s+_|\.\s*unionByName\(\s*_\s*\))\s*\)""".r
+  private val KeyCollect = """\.distinct\(\)\s*\.collect\(\)""".r
+  private val SplatIsin = """\.isin\([^()]*:\s*_\*\s*\)""".r
   private val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
 
   private def text(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
@@ -104,6 +110,23 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
       ops.resolve("SimilarityOps.scala") -> 3,
       ops.resolve("LmOps.scala") -> 1,
       ops.resolve("DedupOps.scala") -> 2))
+  }
+
+  test("graft/ops reads index roots only through GenLog.read") {
+    Seq("xs.reduce(_ unionByName _)", "xs.reduce(_.unionByName(_))")
+      .foreach(t => assert(RootUnion.findFirstIn(t).nonEmpty, t))
+    Seq("df.select(k).distinct().collect()", "df.select(k)\n  .distinct()\n  .collect()")
+      .foreach(t => assert(KeyCollect.findFirstIn(t).nonEmpty, t))
+    assert(SplatIsin.findFirstIn("col(k).isin(keys: _*)").nonEmpty)
+    assert(SplatIsin.findFirstIn("$\"t\".isin(\"a\", \"b\")").isEmpty)
+    val ops = Root.resolve("ops")
+    val offenders = sources.filter(_.startsWith(ops)).flatMap { p =>
+      val src = code(p)
+      Seq(RootUnion, KeyCollect, SplatIsin).flatMap(_.findAllMatchIn(src)).map { m =>
+        s"$p:${src.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("hand-written root reads:\n", "\n", ""))
   }
 
   test("the pattern catches the single-line and split-line spellings") {

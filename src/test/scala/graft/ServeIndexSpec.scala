@@ -26,38 +26,39 @@ class ServeIndexSpec extends SparkSpec {
           .select(col("probe_id"), col("vec_id"), col("cell").cast("long").as("cell"), col("cos"))))
   }
 
+  // the partition directories named `key=…` that a served frame's scans read
+  private def probedDirs(df: org.apache.spark.sql.DataFrame, key: String): Set[String] =
+    scannedDirs(df).map(_.split('/').last).filter(_.startsWith(s"$key="))
+
   test("the served scan carries a literal partition filter over probed buckets") {
-    val p = SparkEntry.queries("q_sim_served")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val served = SparkEntry.queries("q_sim_served")(spark, sf)
+    val p = served.queryExecution.executedPlan.toString
     assert(
       "PartitionFilters: \\[[^\\]]*bucket[^\\]]*(INSET|IN \\()".r.findFirstIn(p).isDefined,
       p)
-    // directory-level proof: the index holds more bucket directories than
-    // the probe set touches, so a pruned listing reads a strict subset
+    // directory-level proof: the served scan lists a strict subset of the
+    // index's bucket directories
     val idxDir = s"${GenLog.datasetRoot(spark, sf)}/ann/v0/full"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketDirs = fs
       .listStatus(new org.apache.hadoop.fs.Path(idxDir))
       .count(_.getPath.getName.startsWith("bucket="))
-    import spark.implicits._
-    val probed = SimilarityOps
-      .serveProbedBuckets(spark, sf)
+    val probed = probedDirs(served, "bucket")
     assert(probed.nonEmpty && probed.size < bucketDirs,
       s"probed ${probed.size} of $bucketDirs bucket dirs")
   }
 
   test("q_index_bm25_served equals its in-session twin from a pruned scan") {
-    import graft.ops.TextOps
     assert(
       rows(SparkEntry.queries("q_index_bm25_served")(spark, sf)) ===
         rows(SparkEntry.queries("q_index_bm25")(spark, sf)))
-    val p = SparkEntry.queries("q_index_bm25_served")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val served = SparkEntry.queries("q_index_bm25_served")(spark, sf)
+    val p = served.queryExecution.executedPlan.toString
     assert(
       "PartitionFilters: \\[[^\\]]*tshard[^\\]]*(INSET|IN \\()".r.findFirstIn(p).isDefined,
       p)
-    // directory-level proof: the probed shard set is a strict subset of
+    // directory-level proof: the served scan lists a strict subset of
     // the index's shard directories
     val idxDir = s"${GenLog.datasetRoot(spark, sf)}/bm25/v0/full/postings"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
@@ -65,22 +66,21 @@ class ServeIndexSpec extends SparkSpec {
     val shardDirs = fs
       .listStatus(new org.apache.hadoop.fs.Path(idxDir))
       .count(_.getPath.getName.startsWith("tshard="))
-    val probed = TextOps.bm25ProbedShards(spark)
+    val probed = probedDirs(served, "tshard")
     assert(probed.nonEmpty && probed.size < shardDirs,
       s"probed ${probed.size} of $shardDirs shard dirs")
   }
 
   test("q_index_phrase_served equals its in-session twin from a pruned scan") {
-    import graft.ops.TextOps
     assert(
       rows(SparkEntry.queries("q_index_phrase_served")(spark, sf)) ===
         rows(SparkEntry.queries("q_index_phrase")(spark, sf)))
-    val p = SparkEntry.queries("q_index_phrase_served")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val served = SparkEntry.queries("q_index_phrase_served")(spark, sf)
+    val p = served.queryExecution.executedPlan.toString
     assert(
       "PartitionFilters: \\[[^\\]]*tshard[^\\]]*(INSET|IN \\()".r.findFirstIn(p).isDefined,
       p)
-    // directory-level proof: the phrase terms probe a strict subset of
+    // directory-level proof: the served scan lists a strict subset of
     // the positional index's shard directories
     val idxDir = s"${GenLog.datasetRoot(spark, sf)}/phrase/v0/full/postings"
     val fs = new org.apache.hadoop.fs.Path(idxDir)
@@ -88,7 +88,7 @@ class ServeIndexSpec extends SparkSpec {
     val shardDirs = fs
       .listStatus(new org.apache.hadoop.fs.Path(idxDir))
       .count(_.getPath.getName.startsWith("tshard="))
-    val probed = TextOps.phraseProbedShards(spark, TextOps.PhraseQueries)
+    val probed = probedDirs(served, "tshard")
     assert(probed.nonEmpty && probed.size < shardDirs,
       s"probed ${probed.size} of $shardDirs shard dirs")
   }
