@@ -373,9 +373,9 @@ object Bench {
     // from-cold index cost (and q_retrieval_rrf_served's build still
     // drops to store-only, because the sibling splits commit the shared
     // bm25/ann artifacts under this root first).
-    spark.conf.set(
-      graft.index.GenLog.RootKey,
-      s"${System.getProperty("java.io.tmpdir")}/graft_bench_splits_${spark.sparkContext.applicationId}")
+    val splitsRoot =
+      s"${System.getProperty("java.io.tmpdir")}/graft_bench_splits_${spark.sparkContext.applicationId}"
+    spark.conf.set(graft.index.GenLog.RootKey, splitsRoot)
     val splits = timeSplits(spark, sfDir, SparkEntry.splits, iters, errors)
     // Per-query latency budgets (BUDGETS.json: 2x the last recorded
     // median, floored): the 2x TOTAL gate can hide one query regressing
@@ -413,6 +413,7 @@ object Bench {
       val out = java.nio.file.Paths.get("BENCH_LAST.json")
       java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] write BENCH_LAST.json: $e") }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(splitsRoot))
     spark.stop()
   }
 }

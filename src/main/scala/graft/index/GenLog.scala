@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.T
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -49,7 +50,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object GenLog {
 
   /** Conf key for the index warehouse root. Unset → a per-application
-    * temp root (correct for tests/bench: no stale state, no races).
+    * temp root, deleted when the application ends (correct for
+    * tests/bench: no stale state, no races, nothing left behind).
     */
   val RootKey = "spark.graft.index.root"
 
@@ -147,9 +149,35 @@ object GenLog {
   private val GenSub = "gen"
   private val FullSub = "full"
 
+  /** The index warehouse root: [[RootKey]] when set, else a
+    * per-application `graft_serve_<appId>` directory under
+    * `java.io.tmpdir`. The default root is scratch that lives as long as
+    * its application: handing it out registers its deletion at
+    * application end ([[deleteAtEnd]]). A root set through [[RootKey]] is
+    * never deleted.
+    */
   def root(s: SparkSession): String =
-    s.conf.getOption(RootKey).getOrElse(
-      s"${System.getProperty("java.io.tmpdir")}/graft_serve_${s.sparkContext.applicationId}")
+    s.conf.getOption(RootKey).getOrElse {
+      val dir =
+        s"${System.getProperty("java.io.tmpdir")}/graft_serve_${s.sparkContext.applicationId}"
+      deleteAtEnd(s, dir)
+      dir
+    }
+
+  private val endDeletes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Deletes the local directory `dir` when `s`'s application ends
+    * (`SparkContext.stop`, which Spark's shutdown hook also runs); one
+    * listener per directory.
+    */
+  private def deleteAtEnd(s: SparkSession, dir: String): Unit =
+    if (endDeletes.add(dir))
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+          endDeletes.remove(dir)
+        }
+      })
 
   /** The per-dataset directory all of a dataset's serving indexes live
     * under: sanitized path (not hashCode), so distinct datasets never

@@ -553,19 +553,24 @@ object RelationalOps {
     * never touched (O(days·k) state in, report out): per event type, the
     * exact day and row counts (total mass rides IN each digest, so n is
     * EXACT — conservation through any merge shape), the HLL distinct-user
-    * estimate, and the q-digest p50/p95. countDistinct(day), not
-    * count(1): a day may be split across generations until compaction
-    * re-merges it, and day-count must not depend on generation shape.
+    * estimate, and the q-digest p50/p95. Days count as the size of the
+    * type's day set, not count(1): a day may be split across generations
+    * until compaction re-merges it, and day-count must not depend on
+    * generation shape. The set is one more mergeable buffer beside the
+    * HLL and digest unions, so the whole report is ONE partial/final
+    * aggregate over one exchange on event_type; countDistinct would plan
+    * a second aggregation level with its own exchange on (event_type,
+    * day). RollupServePlanSpec pins the shape.
     */
   private[graft] def serveRollup(s: SparkSession, paths: Seq[String]): DataFrame = {
     import s.implicits._
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
-    val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
+    val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.mass(sk))
     GenLog.read(s, paths)
       .groupBy($"event_type")
       .agg(
-        countDistinct($"day").as("n_days"),
+        size(collect_set($"day")).cast("bigint").as("n_days"),
         hll_sketch_estimate(hll_union_agg($"hll")).as("users"),
         union($"qd").as("msk"))
       .select(
@@ -588,7 +593,7 @@ object RelationalOps {
     import s.implicits._
     val union = udaf(new graft.expr.QDigestMergeAgg(QdK), Encoders.BINARY)
     val est = udf((sk: Array[Byte], q: Double) => graft.expr.QDigest.quantile(sk, q))
-    val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.counts(sk).getOrElse(0L, 0L))
+    val mass = udf((sk: Array[Byte]) => graft.expr.QDigest.mass(sk))
     GenLog.read(s, paths)
       .groupBy($"day", $"event_type")
       .agg(

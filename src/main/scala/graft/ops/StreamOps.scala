@@ -1114,8 +1114,8 @@ object StreamOps {
     * like the registry's incremental queries. Fold re-merges same-day
     * partials by key — both sketches' unions are associative
     * (register-wise max / key-wise count sum), so compaction never moves
-    * an exact column (n rides IN the digests; day counts are
-    * countDistinct). Day-straddling batches keep every exact
+    * an exact column (n rides IN the digests; a day count is the size
+    * of the type's day set). Day-straddling batches keep every exact
     * column and the rank/rsd bounds but not bit-identity of the merged
     * digest (extra early compressions) — StreamingRollupSpec pins exact
     * identity on day-aligned feeds and the invariants on straddled ones.

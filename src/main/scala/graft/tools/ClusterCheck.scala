@@ -161,7 +161,7 @@ object ClusterCheck {
     // event-metric state, not document state): seed + streamed
     // generations + compaction + serve, all across the same executor
     // boundary. The event_id split deliberately straddles days — the
-    // family's exact columns (in-digest mass, countDistinct days) must
+    // family's exact columns (in-digest mass, day-set sizes) must
     // not depend on generation shape, and both sides of the fork run
     // the identical batch schedule so the serve is row-identical.
     val ev = graft.T(s, sfDir, "events")

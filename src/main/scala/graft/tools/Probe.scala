@@ -35,7 +35,8 @@ import graft.{JobCounter, Session, SparkEntry}
   *  - `phases`: each query's fastest of `iters` runs, split into construct,
   *    plan and exec.
   *  - `stages`: every stage of one run of one query: tasks, task-seconds,
-  *    wall and the first engine call site.
+  *    wall and the first engine call site, or the stage's operation scopes
+  *    when its call site holds no engine frame.
   *  - `plans`: `explain("formatted")` of each query into
   *    `<outDir>/<q>_<suffix>.txt`, the before/after record of a plan
   *    change. `grep -rlE 'InMemory(Relation|TableScan)' <outDir>`
@@ -84,6 +85,16 @@ object Probe {
     f"${p.sec}%7.3f s  jobs=${p.c.jobs}%3d stages=${p.c.stages}%3d " +
       f"taskSec=${p.c.taskMs / 1e3}%7.2f gcSec=${p.c.gcMs / 1e3}%5.2f"
 
+  /** A stage's label when its call site holds no engine frame, as for
+    * every adaptive query stage (submitted from a `CompletableFuture`
+    * thread): the operation scopes of its RDDs in creation order, e.g.
+    * `Exchange / WholeStageCodegen (3) / ObjectHashAggregate`.
+    */
+  private def scopes(si: StageInfo): String = {
+    val names = si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
+    if (names.isEmpty) si.name else names.mkString(" / ")
+  }
+
   private def sfArg(a: Option[String]): String =
     a.filter(_.nonEmpty).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse(sys.error("no sfDir: pass one or set SPARK_GRAFT_SF_DIR"))
@@ -125,7 +136,7 @@ object Probe {
             (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
           val site = si.details.linesIterator
             .find(l => l.contains("graft") || l.contains("Ops.scala"))
-            .getOrElse(si.name).trim
+            .fold(scopes(si))(_.trim)
           println(f"[stages] ${si.stageId}%4d tasks=${si.numTasks}%3d " +
             f"taskSec=${si.taskMetrics.executorRunTime / 1e3}%7.2f wall=$wall%6.2f  $site")
         }

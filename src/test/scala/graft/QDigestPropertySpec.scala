@@ -22,8 +22,10 @@ import graft.expr.QDigest
   */
 class QDigestPropertySpec extends SparkSpec {
 
-  private def buildBytes(vals: Seq[Long], k: Int): Array[Byte] =
-    QDigest.serialize(vals.foldLeft(Map.empty[Long, Long])(QDigest.add), k)
+  private def buildBytes(vals: Seq[Long], k: Int): Array[Byte] = {
+    val agg = new graft.expr.QDigestBuildAgg(k)
+    agg.finish(vals.foldLeft(agg.zero)(agg.reduce))
+  }
 
   private def rankOf(vals: Seq[Long], x: Long): Long =
     vals.count(QDigest.clamp(_) <= x).toLong
@@ -64,8 +66,8 @@ class QDigestPropertySpec extends SparkSpec {
         .map { case (_, vs) => buildBytes(vs.map(_._1), k) }
       def mergeAll(ps: Seq[Array[Byte]]): Array[Byte] =
         QDigest.serialize(
-          ps.map(QDigest.counts)
-            .foldLeft(Map.empty[Long, Long])(QDigest.sum),
+          ps.map(QDigest.pairs)
+            .foldLeft(QDigest.empty)(QDigest.sum),
           k)
       val a = mergeAll(parts)
       val b = mergeAll(parts.reverse)
@@ -126,7 +128,7 @@ class QDigestPropertySpec extends SparkSpec {
         assert(rank31(est - 1) <= target + corridor,
           s"parts=$nParts q=$q est=$est corridor=$corridor")
       }
-      val kept = QDigest.counts(sk).size - 1
+      val kept = QDigest.nodes(QDigest.pairs(sk))
       assert(kept <= 3 * k, s"parts=$nParts kept $kept nodes > 3k")
     }
   }
@@ -147,7 +149,7 @@ class QDigestPropertySpec extends SparkSpec {
         (0 until 400).map(i => u - 1L + (i % 7)) // u-1 and beyond, clamped
     val sk = buildBytes(vals, k)
     val n = vals.size
-    assert(QDigest.counts(sk)(0L) === n.toLong, "clamped mass must still count into n")
+    assert(QDigest.mass(sk) === n.toLong, "clamped mass must still count into n")
     // everything from rank .61 up sits in the saturated top leaf
     for (q <- Seq(0.7, 0.9, 1.0))
       assert(QDigest.quantile(sk, q) === u - 1L, s"q=$q must saturate to U-1")

@@ -24,8 +24,10 @@ import graft.expr.QDigest
   */
 class QDigestSpec extends SparkSpec {
 
-  private def buildBytes(vals: Seq[Long], k: Int): Array[Byte] =
-    QDigest.serialize(vals.foldLeft(Map.empty[Long, Long])(QDigest.add), k)
+  private def buildBytes(vals: Seq[Long], k: Int): Array[Byte] = {
+    val agg = new graft.expr.QDigestBuildAgg(k)
+    agg.finish(vals.foldLeft(agg.zero)(agg.reduce))
+  }
 
   /** Count of sample values ≤ x — the true rank the estimate is judged
     * against.
@@ -65,7 +67,7 @@ class QDigestSpec extends SparkSpec {
       assert(r >= target - bound, s"q=$q est=$est rank=$r target=$target")
       assert(rBelow <= target + bound, s"q=$q est=$est rankBelow=$rBelow target=$target")
     }
-    val nodes = QDigest.counts(sk).size - 1 // minus the n entry
+    val nodes = QDigest.nodes(QDigest.pairs(sk))
     assert(nodes <= 3 * k, s"kept $nodes nodes > 3k=${3 * k}")
   }
 
@@ -77,7 +79,7 @@ class QDigestSpec extends SparkSpec {
     val parts = chunks.map(buildBytes(_, k))
     def mergeAll(ps: Seq[Array[Byte]]): Array[Byte] =
       QDigest.serialize(
-        ps.map(QDigest.counts).foldLeft(Map.empty[Long, Long])(QDigest.sum),
+        ps.map(QDigest.pairs).foldLeft(QDigest.empty)(QDigest.sum),
         k)
     val a = mergeAll(parts)
     val b = mergeAll(parts.reverse)
