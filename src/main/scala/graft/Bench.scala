@@ -41,19 +41,34 @@ object Bench {
       if (ts.isEmpty) None else Some(name -> ts.min)
     }
 
-  /** A budget file's JSON when the file exists and budgets this run's
+  /** A budget file: its scale, per-query budgets in seconds, and the
+    * calibration probe they were derived under, when recorded.
+    */
+  private final case class Budgets(sf: String, budgets: Map[String, Double], probe: Option[Double])
+
+  /** A budget file's content when the file exists and budgets this run's
     * scale: its `sf` equals the basename of `sfDir` exactly, since
     * substring containment would apply an sf0.1 budget file to sf0.15 or
-    * sf0.1-alt dirs at the wrong scale. Parse errors propagate.
+    * sf0.1-alt dirs at the wrong scale. A file that exists but does not
+    * parse, or lacks `sf` or `budgets`, is an error naming the file: a
+    * gate that turned itself off would guard nothing.
     */
-  private def budgetsFor(sfDir: String, budgetFile: String): Option[JValue] = {
+  private def budgetsFor(sfDir: String, budgetFile: String): Option[Budgets] = {
     val f = java.nio.file.Paths.get(budgetFile)
     if (!java.nio.file.Files.exists(f)) None
     else {
-      val json = JsonMethods.parse(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-      if (new java.io.File(sfDir).getName == (json \ "sf").extract[String]) Some(json)
-      else None
+      val b =
+        try {
+          val json = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+          // extraction would read a missing map as empty
+          Seq("sf", "budgets").foreach(k => require(json \ k != JNothing, s"no `$k` key"))
+          json.extract[Budgets]
+        } catch {
+          case NonFatal(e) =>
+            throw new IllegalArgumentException(
+              s"budget file $budgetFile is unreadable: ${describe(e)}", e)
+        }
+      Some(b).filter(_.sf == new java.io.File(sfDir).getName)
     }
   }
 
@@ -72,17 +87,16 @@ object Bench {
     * When the file records the derivation-time calibration probe and
     * this run measured one, each budget is scaled by the probe ratio
     * (clamped to [1, 4]: slow hosts relax, fast probes never tighten —
-    * see the clamp comment below). A malformed or absent budget file
-    * disables the check rather than failing the bench (the budgets
-    * guard regressions; they must never cost the record itself).
+    * see the clamp comment below). An absent budget file means no
+    * budgets; an unreadable one raises (see [[budgetsFor]]).
     */
   private[graft] def budgetViolations(
       sfDir: String,
       results: Seq[(String, Double)],
       budgetFile: String,
       calibration: Double = 0.0): Seq[(String, Double, Double)] =
-    try budgetsFor(sfDir, budgetFile).toSeq.flatMap { json =>
-      val probe = (json \ "probe").extractOpt[Double].getOrElse(0.0)
+    budgetsFor(sfDir, budgetFile).toSeq.flatMap { b =>
+      val probe = b.probe.getOrElse(0.0)
       // ASYMMETRIC clamp [1, 4]: a FAST probe never tightens budgets
       // below raw. The probe ratio has read 0.41 between two windows
       // whose QUERY medians moved 0.95-1.0×, and 0.38 on a run whose true
@@ -97,16 +111,12 @@ object Bench {
         if (probe > 0.0 && calibration > 0.0)
           math.min(4.0, math.max(1.0, calibration / probe))
         else 1.0
-      (json \ "budgets").extract[Map[String, Double]].toSeq.sorted.flatMap {
-        case (q, budget) =>
-          val eff = budget * ratio
-          results.collectFirst {
-            case (`q`, t) if t > eff => (q, t, eff)
-          }
+      b.budgets.toSeq.sorted.flatMap { case (q, budget) =>
+        val eff = budget * ratio
+        results.collectFirst {
+          case (`q`, t) if t > eff => (q, t, eff)
+        }
       }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] budget check skipped: $e"); Nil
     }
 
   /** The RAW (pre-clamp) probe ratio a budget file's gate would scale
@@ -114,19 +124,17 @@ object Bench {
     * the record so a consumer can tell a gate that ran in force (ratio
     * ≥ 1) from one running de-sensitized on a fast host (ratio < 1,
     * clamped up to 1 — a genuine regression up to 1/ratio× can pass raw
-    * budgets there). A file without a probe, and parsing failures, yield
-    * no entry — the diagnostics must never cost the record.
+    * budgets there). A file without a probe yields no entry; an
+    * unreadable one raises (see [[budgetsFor]]).
     */
   private[graft] def probeRatios(
       sfDir: String,
       files: Seq[String],
       calibration: Double): Seq[(String, Double)] =
     files.flatMap { bf =>
-      try budgetsFor(sfDir, bf).flatMap { json =>
-        (json \ "probe").extractOpt[Double].collect {
-          case p if p > 0.0 && calibration > 0.0 => bf -> calibration / p
-        }
-      } catch { case _: Throwable => None }
+      budgetsFor(sfDir, bf).flatMap(_.probe).collect {
+        case p if p > 0.0 && calibration > 0.0 => bf -> calibration / p
+      }
     }
 
   private def describe(e: Throwable): String =

@@ -29,8 +29,8 @@ object CurationOps {
     h32Sql(s"concat(CAST(doc_id AS VARCHAR), '|$salt')")
 
   /** The corpus-quality gate shared by the batch corpus build
-    * (q_pipeline_corpus2) and the streaming lift
-    * ([[StreamOps.liftCorpusPipeline]]): minimum length, lexical
+    * (q_pipeline_corpus2) and the curated stream
+    * ([[StreamOps.liftCuratedDocs]]): minimum length, lexical
     * diversity, and the q_text_repetition signals (a document must HAVE
     * bigrams, and its duplicate-bigram and top-bigram fractions must both
     * be ≤ 0.08). Entirely map-side — one fused [[graft.expr.BigramStats]]
@@ -64,9 +64,8 @@ object CurationOps {
   private val MixRates: Seq[(String, Int)] = Seq("en" -> 40, "zh" -> 25)
   private val MixDefault = 10
 
-  /** The mixture predicate itself, shared by the batch query and the
-    * streaming lift ([[StreamOps.liftSampleMix]]) — stateless, so the
-    * batch and stream forms are the same expression.
+  /** The mixture predicate: a pure function of the document key, so it
+    * gates a batch table and a stream alike.
     */
   private[graft] def mixPredicate: Column = {
     val rate = MixRates.foldLeft(lit(MixDefault): Column) { case (acc, (l, r)) =>
@@ -82,14 +81,18 @@ object CurationOps {
     * shuffles (the orderBy exists only for the oracle compare; a pipeline
     * sink would drop it). Contrast with `df.sample`, whose per-partition
     * RNG state changes the selected set under retries and repartitioning.
+    * [[sampleMixOf]] is the body; on [[StreamOps.docsStream]] it is the
+    * streaming lift, STATELESS (no state store, no watermark
+    * interaction), so a document is selected alike in a batch backfill
+    * and on the stream.
     */
-  private def sampleMix(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d)
+  private def sampleMix(s: SparkSession, d: String): DataFrame =
+    sampleMixOf(docs(s, d)).orderBy(col("doc_id"))
+
+  private[graft] def sampleMixOf(docsDf: DataFrame): DataFrame =
+    docsDf
       .filter(mixPredicate)
-      .select($"doc_id", $"lang", $"source", $"n_chars")
-      .orderBy($"doc_id")
-  }
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
 
   private val MixSql = {
     val ladder = MixRates.reverse

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{QueryDef, T}
 import graft.expr.LenientJson
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -305,6 +305,17 @@ object IngestOps {
       "min(v) AS min_v, max(v) AS max_v " +
       "FROM u GROUP BY col_name ORDER BY col_name"
 
+  /** q_expect_constraints' row-level rules as (check name, violated):
+    * the batch audit sums each predicate, and
+    * [[StreamOps.liftExpectations]] tags each streamed row with the names
+    * it violates.
+    */
+  private[graft] val RowRules: Seq[(String, Column)] = Seq(
+    "null_user_id" -> col("user_id").isNull,
+    "bad_event_type" ->
+      !col("event_type").isin("click", "error", "purchase", "signup", "view"),
+    "negative_value" -> (col("value") < 0d))
+
   /** q_expect_constraints — declarative data-quality expectations (the
     * Deequ / dbt-tests primitive a production pipeline gates loads on):
     * each constraint is evaluated distributedly and reports its violation
@@ -330,18 +341,13 @@ object IngestOps {
       .select($"event_id", $"user_id", $"event_type", $"value")
       .unionByName(dirt)
     val single = ev.select(
-      (count(lit(1)) - countDistinct($"event_id")).as("dup_event_id"),
-      sum(when($"user_id".isNull, 1L).otherwise(0L)).as("null_user_id"),
-      sum(when(!$"event_type".isin("click", "error", "purchase", "signup", "view"), 1L)
-        .otherwise(0L)).as("bad_event_type"),
-      sum(when($"value" < 0d, 1L).otherwise(0L)).as("negative_value"))
+      (count(lit(1)) - countDistinct($"event_id")).as("dup_event_id") +:
+        RowRules.map { case (name, violated) =>
+          sum(when(violated, 1L).otherwise(0L)).as(name)
+        }: _*)
+    val names = "dup_event_id" +: RowRules.map(_._1)
     val unpivoted = single.select(
-      explode(
-        map(
-          lit("dup_event_id"), $"dup_event_id",
-          lit("null_user_id"), $"null_user_id",
-          lit("bad_event_type"), $"bad_event_type",
-          lit("negative_value"), $"negative_value"))
+      explode(map(names.flatMap(n => Seq(lit(n), col(n))): _*))
         .as(Seq("check_name", "n_violations")))
     val orphanOrders = T(s, d, "orders")
       .select($"o_custkey")

@@ -31,10 +31,9 @@ import graft.index.GenLog
   *
   * Tokenizer: exactly [[TextOps.bm25TokensOf]] (lower, space-split,
   * `[a-z0-9]{3,}`), so the model is derivable from the maintained BM25
-  * postings state (cf = Σ tf per term, N = stats.l) — the continuous
-  * serve ([[StreamOps.serveLmUnigramContinuous]]) reads the SAME index
-  * the lexical family already maintains: one state, one more serve, no
-  * new stream.
+  * postings state (cf = Σ tf per term, N = stats.l) — a serve over
+  * [[lmFrames]] reads the SAME index the lexical family already
+  * maintains: one state, one more serve, no new stream.
   *
   * Scale shape at 100 TB: the model is ONE hash aggregate over tokens
   * (map-side partial combine); scoring joins tokens to the vocab-sized
@@ -112,6 +111,17 @@ object LmOps {
   private[graft] def lmUnigramOf(docsDf: DataFrame): DataFrame =
     lmUnigramFromCounts(unigramCountsOf(TextOps.bm25TokensOf(docsDf)))
 
+  /** The (term, cf, n_total) counts of [[unigramCountsOf]] from a
+    * lexical index's [[lmFrames]]: cf = Σ tf per term.
+    */
+  private[graft] def unigramCountsFromPostings(
+      postings: DataFrame,
+      nTotal: DataFrame): DataFrame =
+    postings
+      .groupBy(col("term"))
+      .agg(sum(col("tf")).as("cf"))
+      .crossJoin(broadcast(nTotal.select(col("n_total"))))
+
   /** Per-doc scores STRAIGHT FROM THE POSTINGS STATE: the registry sums
     * r6(N/cf) once per token; the postings carry (term, doc_id, tf), and
     * tf occurrences of a term all round to the same fixed-point rarity,
@@ -129,12 +139,8 @@ object LmOps {
       postings: DataFrame,
       nTotal: DataFrame): DataFrame = {
     import postings.sparkSession.implicits._
-    val counts = postings
-      .groupBy($"term")
-      .agg(sum($"tf").as("cf"))
-      .crossJoin(broadcast(nTotal.select($"n_total")))
     postings
-      .join(pinned(counts), Seq("term"))
+      .join(pinned(unigramCountsFromPostings(postings, nTotal)), Seq("term"))
       .select(
         $"doc_id",
         ($"tf".cast("decimal(12,0)") *
@@ -145,103 +151,121 @@ object LmOps {
       .agg(sum($"rterm").as("sr"), sum($"tf").as("n_tokens"))
   }
 
-  private[graft] def lmScoreFromPostings(
-      postings: DataFrame,
-      nTotal: DataFrame): DataFrame = {
-    import postings.sparkSession.implicits._
-    lmScoreAggFromPostings(postings, nTotal)
-      .select(
-        $"doc_id",
-        $"n_tokens",
-        X.r6($"sr".cast("double") / $"n_tokens".cast("double")).as("rarity6"))
-      .orderBy($"doc_id")
-  }
-
   /** Build/serve split of q_lm_score: build seeds the canonical lexical
     * index ([[TextOps.bm25Index]]) — PHYSICALLY the same build-once
     * artifact the bm25 splits build, not a byte-identical copy under a
     * private path, so when the lexical splits have already committed it this build is
     * a marker check and the LM genuinely rides the index for free (the
-    * production story). Serve scores the whole corpus from its postings
-    * + the lake's doc-id universe (totality: unscorable docs emit their
-    * n_tokens = 0 row exactly like the composed query).
+    * production story). Serve is [[lmScoreServe]] over that index.
     */
   private[graft] def lmScoreSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val (build, roots) = TextOps.bm25Index(s, d)
-    val serve = () => {
-      val (postings, nTotal) = lmFrames(s, roots())
-      lmScoreOf(docs(s, d), lmScoreAggFromPostings(postings, nTotal))
-    }
-    (build, serve)
+    val (build, dir) = TextOps.bm25Index(s, d)
+    (build, () => lmScoreServe(s, dir, docs(s, d)))
+  }
+
+  /** q_lm_score served from the lexical index under `bm25Dir` and the
+    * lake `lake`: the split's serve over the dataset's index, and the
+    * continuous serve over a stream's. Total: a doc with no model token
+    * has no postings and gets its n_tokens = 0 row from the lake, as in
+    * the composed query.
+    */
+  private[graft] def lmScoreServe(
+      s: SparkSession, bm25Dir: String, lake: DataFrame): DataFrame = {
+    val (postings, nTotal) = lmFrames(s, bm25Dir)
+    lmScoreOf(lake, lmScoreAggFromPostings(postings, nTotal))
   }
 
   /** The canonical bigram pair counts of a dataset — a
     * [[StreamOps.BigramFamily]] seeded once from the whole corpus — as
-    * its build and its (w1, w2, cf2) counts: the split-keyed rows are
-    * read as they are, and every model built on them re-aggregates over
-    * (w1, w2), so the split column sums away.
+    * its build and its family dir.
     */
-  private[graft] def bigramIndex(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
+  private[graft] def bigramIndex(s: SparkSession, d: String): (() => Unit, String) = {
     val dir = GenLog.datasetRoot(s, d) + "/bigram"
-    (() => { StreamOps.BigramFamily.buildOnce(s, dir)(Seq(docs(s, d))); () },
-      () => GenLog.read(s, StreamOps.BigramFamily.roots(s, dir))
-        .select(col("w1"), col("w2"), col("cf2")))
+    (() => { StreamOps.BigramFamily.buildOnce(s, dir)(Seq(docs(s, d))); () }, dir)
   }
+
+  /** The (w1, w2, cf2) counts under a [[StreamOps.BigramFamily]] dir:
+    * the split-keyed rows are read as they are, and every model built on
+    * them re-aggregates over (w1, w2), so the split column sums away.
+    */
+  private[graft] def bigramCounts(s: SparkSession, dir: String): DataFrame =
+    GenLog.read(s, StreamOps.BigramFamily.roots(s, dir))
+      .select(col("w1"), col("w2"), col("cf2"))
 
   // ---- build/serve splits for the model-state LM queries -------------
   //
   // The composed q_lm_kn / q_lm_interp / q_lm_bucket / q_lm_score_lang
   // charge MODEL construction (pair counts, unigram postings) to every
   // run, burying how much of their wall is one-time state build vs
-  // serve — the figure the continuous forms
-  // (StreamOps.serveLmKnContinuous etc., StreamingLmSpec) already
-  // amortize. Each split's build seeds the canonical lexical/bigram
-  // family (build-once: when a sibling split built it first, the build
-  // leg is a marker check — the production story); serve derives the
-  // model from that state and scores through the registry's own seams, so serve ≡ composed
-  // (BenchSplitSpec) by the tf-grouping / additive-count identities
-  // StreamingLmSpec pins.
+  // serve. Each split's build seeds the canonical lexical/bigram family
+  // (build-once: when a sibling split built it first, the build leg is
+  // a marker check — the production story). Each serve is a function of
+  // the family dirs and the lake: the split passes the dataset's dirs,
+  // the streaming specs a stream's, so the two run one body. It derives
+  // the model from that state and scores through the registry's own
+  // seams, so serve ≡ composed (BenchSplitSpec) by the tf-grouping /
+  // additive-count identities StreamingLmSpec pins.
 
-  /** Merge-on-read postings + summed corpus stats over the roots of a
-    * lexical index — the two frames every LM serve derives from
-    * (generation-local postings union like the BM25 serve; stats rows sum
-    * because each generation's `l` is its own batch's token count).
+  /** Merge-on-read postings + summed corpus stats over the roots of the
+    * lexical index under `bm25Dir` — the two frames every LM serve
+    * derives from (generation-local postings union like the BM25 serve;
+    * stats rows sum because each generation's `l` is its own batch's
+    * token count).
     */
-  private[graft] def lmFrames(s: SparkSession, roots: Seq[String]): (DataFrame, DataFrame) =
+  private[graft] def lmFrames(s: SparkSession, bm25Dir: String): (DataFrame, DataFrame) = {
+    val roots = StreamOps.Bm25Family.roots(s, bm25Dir)
     (GenLog.read(s, roots, "postings"),
       GenLog.read(s, roots, "stats").agg(sum(col("l")).as("n_total")))
+  }
 
   private[graft] def lmKnSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val (build, counts) = bigramIndex(s, d)
-    (build, () => lmKnFromCounts(counts(), docs(s, d)))
+    val (build, dir) = bigramIndex(s, d)
+    (build, () => lmKnServe(s, dir, docs(s, d)))
   }
+
+  /** q_lm_kn served from the pair counts under `bigramDir`: every
+    * Kneser-Ney quantity derives from them, so they are the whole model
+    * input.
+    */
+  private[graft] def lmKnServe(
+      s: SparkSession, bigramDir: String, lake: DataFrame): DataFrame =
+    lmKnFromCounts(bigramCounts(s, bigramDir), lake)
 
   private[graft] def lmInterpSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    import s.implicits._
-    val (bigramBuild, counts) = bigramIndex(s, d)
-    val (bm25Build, roots) = TextOps.bm25Index(s, d)
+    val (bigramBuild, bigramDir) = bigramIndex(s, d)
+    val (bm25Build, bm25Dir) = TextOps.bm25Index(s, d)
     val build = () => { bigramBuild(); bm25Build() }
-    val serve = () => {
-      val (postings, nTotal) = lmFrames(s, roots())
-      lmInterpFromCounts(
-        counts(),
-        postings.groupBy($"term".as("w2")).agg(sum($"tf").as("cf1")),
-        nTotal.select($"n_total".as("lt")),
-        docs(s, d))
-    }
-    (build, serve)
+    (build, () => lmInterpServe(s, bigramDir, bm25Dir, docs(s, d)))
+  }
+
+  /** q_lm_interp served from BOTH states: pair counts from the bigram
+    * family, unigram counts and the token total from the lexical
+    * postings (cf1 = Σ tf, lt = Σ stats.l — exact by the tf-grouping
+    * identity).
+    */
+  private[graft] def lmInterpServe(
+      s: SparkSession,
+      bigramDir: String,
+      bm25Dir: String,
+      lake: DataFrame): DataFrame = {
+    import s.implicits._
+    val (postings, nTotal) = lmFrames(s, bm25Dir)
+    lmInterpFromCounts(
+      bigramCounts(s, bigramDir),
+      postings.groupBy($"term".as("w2")).agg(sum($"tf").as("cf1")),
+      nTotal.select($"n_total".as("lt")),
+      lake)
   }
 
   private[graft] def lmBucketSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
-    val (build, roots) = TextOps.bm25Index(s, d)
+    val (build, dir) = TextOps.bm25Index(s, d)
     val serve = () => {
-      val (postings, nTotal) = lmFrames(s, roots())
+      val (postings, nTotal) = lmFrames(s, dir)
       // same one-join scorable frame as the composed query (scoredLangOf)
       langTerciles(
         docs(s, d)
@@ -259,26 +283,33 @@ object LmOps {
 
   private[graft] def lmScoreLangSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
+    val (build, dir) = TextOps.bm25Index(s, d)
+    (build, () => lmScoreLangServe(s, dir, docs(s, d)))
+  }
+
+  /** q_lm_score_lang served from the lexical index under `bm25Dir`: the
+    * lake's (doc_id, lang) map joins language onto each posting (the
+    * index persists no lake metadata), then the tf-grouping identity
+    * applies per (lang, term) ([[lmScoreLangAggFromPostings]]).
+    */
+  private[graft] def lmScoreLangServe(
+      s: SparkSession, bm25Dir: String, lake: DataFrame): DataFrame = {
     import s.implicits._
-    val (build, roots) = TextOps.bm25Index(s, d)
-    val serve = () => {
-      val (postings, _) = lmFrames(s, roots())
-      val dl = docs(s, d).select($"doc_id", $"lang")
-      // totality: the composed query emits n_tokens = 0 rows (null
-      // rarity6) for docs with no model token — postings carry no row
-      // for them, so re-add via the doc universe exactly like lmScoreOf
-      dl.join(lmScoreLangAggFromPostings(postings, dl), Seq("doc_id"), "left")
-        .select(
-          $"doc_id",
-          $"lang",
-          coalesce($"n_tokens", lit(0L)).as("n_tokens"),
-          when(
-            $"n_tokens" > 0,
-            X.r6($"sr".cast("double") / $"n_tokens".cast("double")))
-            .as("rarity6"))
-        .orderBy($"doc_id")
-    }
-    (build, serve)
+    val (postings, _) = lmFrames(s, bm25Dir)
+    val dl = lake.select($"doc_id", $"lang")
+    // totality: the composed query emits n_tokens = 0 rows (null
+    // rarity6) for docs with no model token — postings carry no row for
+    // them, so re-add via the doc universe exactly like lmScoreOf
+    dl.join(lmScoreLangAggFromPostings(postings, dl), Seq("doc_id"), "left")
+      .select(
+        $"doc_id",
+        $"lang",
+        coalesce($"n_tokens", lit(0L)).as("n_tokens"),
+        when(
+          $"n_tokens" > 0,
+          X.r6($"sr".cast("double") / $"n_tokens".cast("double")))
+          .as("rarity6"))
+      .orderBy($"doc_id")
   }
 
   private def lmUnigram(s: SparkSession, d: String): DataFrame =
@@ -889,8 +920,7 @@ object LmOps {
   }
 
   /** The interpolated model over ANY pair-count + unigram-count frames —
-    * the seam the continuous serve shares with the registry query
-    * ([[graft.ops.StreamOps.serveLmInterpContinuous]]): pair counts may
+    * the seam [[lmInterpServe]] shares with the registry query: pair counts may
     * arrive split-keyed from the maintained bigram state (re-aggregated
     * here), unigram counts and the token total from the maintained
     * postings (cf1 = Σ tf, lt = Σ stats.l — both exact).
@@ -984,9 +1014,8 @@ object LmOps {
   private[graft] def lmKnOf(docsDf: DataFrame): DataFrame =
     lmKnFromCounts(bigramCountsOf(docsDf), docsDf)
 
-  /** The Kneser-Ney model over ANY pair-count frame — the seam the
-    * continuous serve shares with the registry query
-    * ([[graft.ops.StreamOps.serveLmKnContinuous]]): every model quantity
+  /** The Kneser-Ney model over ANY pair-count frame — the seam
+    * [[lmKnServe]] shares with the registry query: every model quantity
     * (cfl, n1, ncont, npairs) derives from the pair counts alone, so the
     * maintained bigram state is the WHOLE model input (split-keyed rows
     * re-aggregated here).
@@ -1169,17 +1198,16 @@ object LmOps {
   /** The apply seam over any TRAIN-split (w1, w2, cf2) counts frame —
     * re-aggregated first, so merge-on-read generation unions from the
     * continuous BigramFamily ([[bigramCountsSplitOf]] payloads filtered
-    * to split = 'train') serve the byte-identical answer
-    * ([[graft.ops.StreamOps.serveLmBigramApplyContinuous]]).
+    * to split = 'train') serve the byte-identical answer (StreamingLmSpec).
     */
   private[graft] def lmBigramApplyFromCounts(
       trainCounts: DataFrame,
       allDocs: DataFrame): DataFrame = {
     import allDocs.sparkSession.implicits._
-    // pin the re-aggregated pair counts, derive cfl from the checkpoint
-    // (r19 opt, the lmBigramScore/lmKnFromCounts shape): pinning agg ⋈
-    // cfl ran the train-corpus pair aggregate on both sides of the pin
-    // job; the model join of two checkpoint-derived frames stays
+    // pin the re-aggregated pair counts and derive cfl from the
+    // checkpoint (the lmBigramScore/lmKnFromCounts shape): pinning agg ⋈
+    // cfl would run the train-corpus pair aggregate on both sides of the
+    // pin job; the model join of two checkpoint-derived frames stays
     // materialization-backed for the skew split.
     val agg = pinned(
       trainCounts.groupBy($"w1", $"w2").agg(sum($"cf2").as("cf2")))
@@ -1255,9 +1283,8 @@ object LmOps {
     * not persist — language is lake metadata, not index state), then
     * cf(lang, term) = Σ tf and n_total(lang) = Σ tf group per language,
     * and the same tf-grouping identity makes the decimal sums exact.
-    * The continuous serve ([[graft.ops.StreamOps.serveLmScoreLangContinuous]])
-    * rides this seam so the per-language production default needs no new
-    * stream either.
+    * [[lmScoreLangServe]] rides this seam, so the per-language
+    * production default needs no new stream either.
     */
   private[graft] def lmScoreLangAggFromPostings(
       postings: DataFrame,

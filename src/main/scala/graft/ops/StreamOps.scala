@@ -11,23 +11,30 @@ import org.apache.spark.sql.functions._
   * stream in disguise — a daily job re-extracting a 7-day overlapping
   * window with key-dedup at the sink (/root/reference/main.py:25,104-105,
   * 202) ≡ Structured Streaming's watermark + dropDuplicates + idempotent
-  * sink. Queries here are the batch forms the harness verifies; the same
-  * plans lift to readStream via [[lift]] (exercised in StreamingLiftSpec).
+  * sink. Queries here are the batch forms the harness verifies. A
+  * streamable query has one body over its source frame: the registry
+  * applies it to the batch table and adds the batch-only sort, its
+  * `lift*` applies it to [[eventsStream]] or [[docsStream]]. A lift keeps
+  * a body of its own only where Structured Streaming cannot run the
+  * registry's, and says why.
   */
 object StreamOps {
 
   /** q_stream_tumble — tumbling 1-day event-time window (the daily report
     * cadence, main.py:288). window() is epoch-aligned so day windows equal
-    * date_trunc in UTC.
+    * date_trunc in UTC. The body of both the registry query and
+    * [[liftTumble]].
     */
-  private def streamTumble(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    T(s, d, "events")
+  private def tumbleOf(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    events
       .groupBy(window($"ts", "1 day"), $"event_type")
       .agg(count(lit(1)).as("n"), X.dsum2($"value").as("sum_value"))
       .select($"window.start".as("win_start"), $"event_type", $"n", $"sum_value")
-      .orderBy("win_start", "event_type")
   }
+
+  private def streamTumble(s: SparkSession, d: String): DataFrame =
+    tumbleOf(T(s, d, "events")).orderBy("win_start", "event_type")
 
   /** q_stream_slide — 7-day window sliding by 1 day (the rolling re-extract,
     * main.py:104-105): each event lands in 7 windows.
@@ -164,21 +171,16 @@ object StreamOps {
     withTs.withWatermark("ts", "7 days")
   }
 
-  /** Streaming lift of the tumbling-window report: identical logic on a
-    * readStream source. Used by the streaming spec; not part of the batch
-    * harness.
+  /** Streaming lift of q_stream_tumble: the registry's body on a
+    * readStream source.
     */
-  def liftTumble(s: SparkSession, sourceDir: String): DataFrame = {
-    import s.implicits._
-    eventsStream(s, sourceDir)
-      .groupBy(window($"ts", "1 day"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select($"window.start".as("win_start"), $"event_type", $"n")
-  }
+  def liftTumble(s: SparkSession, sourceDir: String): DataFrame =
+    tumbleOf(eventsStream(s, sourceDir))
 
   /** Streaming lift of the 7-day sliding window (the rolling re-extract,
     * main.py:104-105): each event contributes to 7 windows; watermark
-    * bounds the open-window state to 14 days of windows.
+    * bounds the open-window state to 14 days of windows. Its own body:
+    * q_stream_slide's `countDistinct` is not a streaming aggregate.
     */
   def liftSlide(s: SparkSession, sourceDir: String): DataFrame = {
     import s.implicits._
@@ -204,6 +206,8 @@ object StreamOps {
     * when exact all-history dedup must scale past executor memory, push
     * the state into the sink itself via foreachBatch + idempotent append
     * (the [[graft.ops.Sinks]] pattern StreamingPipelineSpec proves).
+    * Its own body: q_stream_dedup picks the earliest row with a
+    * `row_number` window, which a stream cannot run.
     */
   def liftDedup(s: SparkSession, sourceDir: String): DataFrame =
     eventsStream(s, sourceDir).dropDuplicates("user_id", "event_type")
@@ -241,6 +245,8 @@ object StreamOps {
     * Which physical row represents a hash is arrival-order-dependent
     * (exactly the batch first-writer-wins), so the lift contract is
     * key-set equality with batch q_dedup_exact (StreamingLiftDedupSessionSpec).
+    * Its own body for the same reason as [[liftDedup]]: q_dedup_exact's
+    * `row_number` window.
     */
   def liftDedupExact(s: SparkSession, sourceDir: String): DataFrame = {
     import s.implicits._
@@ -249,68 +255,36 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("content_md5")
   }
 
-  /** Streaming lift of q_sample_mix — the training-mix gate on the
-    * continuous ingest feed. The mixture predicate is a pure function of
-    * the document key ([[CurationOps.mixPredicate]]), so the lift is
-    * STATELESS: no state store, no watermark interaction, identical
-    * selection whether a document arrives in a batch backfill or on the
-    * stream — the property that lets one curation definition serve both.
-    */
-  def liftSampleMix(s: SparkSession, sourceDir: String): DataFrame = {
-    import s.implicits._
-    docsStream(s, sourceDir)
-      .filter(CurationOps.mixPredicate)
-      .select($"doc_id", $"lang", $"source", $"n_chars")
-  }
-
-  /** The curated SURVIVOR stream with full document columns — what a
-    * composed continuous pipeline feeds its downstream maintenance legs
-    * (incremental dedup, index generations, the lake sink): the same
-    * gate ∧ mix → watermarked exact dedup → split composition as
-    * [[liftCorpusPipeline]], keeping text/source so the consumers can
-    * tokenize and hash.
+  /** The curated SURVIVOR stream — the corpus build's production stages
+    * on the continuous ingest feed, with full document columns for the
+    * maintenance legs downstream (incremental dedup, index generations,
+    * the lake sink). The full quality gate ([[CurationOps.qualityGate]])
+    * and the training-mix gate ([[CurationOps.mixPredicate]]) are
+    * STATELESS predicates evaluated at ingest; exact content dedup is
+    * `dropDuplicatesWithinWatermark` on md5(text) (first arrival wins,
+    * state evicted at the late-data horizon — bounded at any ingest
+    * rate); the split tag is a pure function of doc_id. Append mode:
+    * per-(split, lang) accounting is a downstream aggregate over the sink.
+    * Which physical row represents a content hash is arrival-order-
+    * dependent, exactly like the batch first-writer-wins — over an
+    * ordered single-file source the two coincide, which is what
+    * StreamingCorpusSpec pins. The near-dup closure stage is deliberately
+    * absent: a transitive global closure is not a streaming operator, so
+    * production runs it as a periodic batch compaction over the curated
+    * sink (q_pipeline_corpus2).
     */
   def liftCuratedDocs(
       s: SparkSession,
       sourceDir: String,
       options: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
-    val bucket = pmod(Hashing.h32($"doc_id".cast("string")), lit(100L))
     CurationOps
       .qualityGate(docsStream(s, sourceDir, options))
       .filter(CurationOps.mixPredicate)
       .withColumn("content_md5", md5($"text"))
       .dropDuplicatesWithinWatermark("content_md5")
       .drop("content_md5")
-      .withColumn(
-        "split",
-        when(bucket < 80, "train")
-          .when(bucket < 90, "valid")
-          .otherwise("test"))
-  }
-
-  /** Streaming lift of the corpus build — the production stages composed
-    * on the continuous ingest feed: the full quality gate
-    * ([[CurationOps.qualityGate]] — length, lexical diversity, and the
-    * repetition signals) and the training-mix gate
-    * ([[CurationOps.mixPredicate]]) are STATELESS predicates evaluated at
-    * ingest; exact content dedup is `dropDuplicatesWithinWatermark` on
-    * md5(text) (first arrival wins, state evicted at the late-data
-    * horizon — bounded at any ingest rate); the split tag is a pure
-    * function of doc_id. Emits curated survivor rows in append mode —
-    * per-(split, lang) accounting is a downstream aggregate over the sink
-    * (which is how a production feed runs it: the curated stream IS the
-    * product; counters hang off it). Which physical row represents a
-    * content hash is arrival-order-dependent, exactly like the batch
-    * first-writer-wins — over an ordered single-file source the two
-    * coincide, which is what StreamingCorpusSpec pins; the near-dup
-    * closure stage is deliberately absent: a transitive global closure is
-    * not a streaming operator, so production runs it as a periodic batch
-    * compaction over the curated sink (q_pipeline_corpus2).
-    */
-  def liftCorpusPipeline(s: SparkSession, sourceDir: String): DataFrame = {
-    import s.implicits._
-    liftCuratedDocs(s, sourceDir).select($"doc_id", $"lang", $"n_chars", $"split")
+      .withColumn("split", LmOps.splitCol($"doc_id"))
   }
 
   /** Targets of the composed continuous corpus program — the engine-side
@@ -344,7 +318,7 @@ object StreamOps {
   /** Per-(split, lang) accounting over curated rows — the published
     * report's shape.
     */
-  def corpusReport(curated: DataFrame): DataFrame =
+  private[graft] def corpusReport(curated: DataFrame): DataFrame =
     curated
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -511,15 +485,14 @@ object StreamOps {
     GenLog.appendWriter(curated, checkpoint)(corpusPipelineBatch(_, _, p))
 
   /** Streaming lift of q_expect_constraints' ROW-LEVEL rules — the
-    * at-ingest quarantine channel: every event carries its violation list
-    * (null key, domain membership, value range — the stateless subset;
-    * key uniqueness and referential integrity are corpus-global, so they
-    * stay in the periodic batch audit q_expect_constraints runs). A sink
+    * at-ingest quarantine channel: every event carries the names of the
+    * [[IngestOps.RowRules]] it violates, the same (name, predicate) list
+    * the batch audit sums. Key uniqueness and referential integrity are
+    * corpus-global, so they stay in the periodic batch audit. A sink
     * routes empty-violation rows onward and quarantines the rest — the
     * Deequ-style row gate, STATELESS at any ingest rate: no watermark
     * interaction, no state store, identical verdicts for a row whether
-    * it arrives in a backfill batch or on the stream
-    * (StreamingExpectationsSpec pins stream ≡ batch verdict sets).
+    * it arrives in a backfill batch or on the stream.
     */
   def liftExpectations(s: SparkSession, sourceDir: String): DataFrame = {
     import s.implicits._
@@ -529,13 +502,9 @@ object StreamOps {
         $"user_id",
         $"event_type",
         $"value",
-        array_compact(
-          array(
-            when($"user_id".isNull, "null_user_id"),
-            when(
-              !$"event_type".isin("click", "error", "purchase", "signup", "view"),
-              "bad_event_type"),
-            when($"value" < 0d, "negative_value"))).as("violations"))
+        array_compact(array(IngestOps.RowRules.map { case (name, violated) =>
+          when(violated, name)
+        }: _*)).as("violations"))
   }
 
   /** Streaming lift of q_agg_sketch_merge's build side — per-day HLL user
@@ -546,7 +515,9 @@ object StreamOps {
     * the batch-built ones do — register-wise max is associative whether
     * the partial came from a batch job or a micro-batch — which is what
     * StreamingSketchSpec pins: union(streamed day sketches) estimates ≡
-    * the batch whole-data sketch, per event type.
+    * the batch whole-data sketch, per event type. Its own body: the
+    * registry's `to_date` day key is not an event-time window, so the
+    * watermark could never evict its groups.
     */
   def liftSketchRollup(s: SparkSession, sourceDir: String): DataFrame = {
     import s.implicits._
@@ -715,10 +686,12 @@ object StreamOps {
       GenLog.read(s, logPaths(s, indexDir, "pairs")),
       GenLog.read(s, logPaths(s, indexDir, "assign")).withColumnRenamed("cluster_id", "rep"))
 
-  /** The committed `sub` artifacts of the near-dup log, oldest first,
-    * at the versions `keep` admits.
+  /** The committed `sub` artifacts of a per-batch log (the near-dup
+    * log's assign/remap/pairs, the embedding dedup's pairs), oldest
+    * first, at the versions `keep` admits. Committed dirs only: an
+    * in-flight batch's partial write never leaks into a read.
     */
-  private def logPaths(
+  private[graft] def logPaths(
       s: SparkSession,
       indexDir: String,
       sub: String,
@@ -1027,13 +1000,6 @@ object StreamOps {
       if (!batch.isEmpty) incrEmbedDedupCommit(batch, indexDir, batchId)
     }
 
-  /** All near-dup pairs the continuous embedding dedup has committed
-    * (committed dirs only — an in-flight batch's partial write never
-    * leaks into the read view).
-    */
-  def readEmbedPairs(s: SparkSession, indexDir: String): DataFrame =
-    GenLog.read(s, logPaths(s, indexDir, "pairs"))
-
   // ---- the generation-local index families, over the shared kernel ---
   //
   // Each family is two functions — build one generation from a frame,
@@ -1156,74 +1122,6 @@ object StreamOps {
           .select(col("term"), col("doc_id"), col("pos"), col("tshard")),
         "tshard",
         s"$path/postings"))
-
-  /** Serve the q_lm_unigram model from the continuous LEXICAL index —
-    * cf = Σ tf over merge-on-read postings, N = Σ generation stats — so
-    * the unigram LM is one more serve on the state the BM25 family
-    * already maintains: no new stream, no corpus re-read
-    * (StreamingLmSpec asserts ≡ the registry query at every stage).
-    */
-  def serveLmUnigramContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
-    LmOps.lmUnigramFromCounts(
-      postings
-        .groupBy(col("term"))
-        .agg(sum(col("tf")).as("cf"))
-        .crossJoin(broadcast(nTotal)))
-  }
-
-  /** Serve q_lm_score's scored rows from the SAME postings state —
-    * exact by the tf-grouping identity documented at
-    * [[LmOps.lmScoreFromPostings]]; docs with zero model tokens carry no
-    * postings and no score (the registry query reports them with
-    * n_tokens = 0 from the corpus side, which an index serve by design
-    * never reads).
-    */
-  def serveLmScoreContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
-    LmOps.lmScoreFromPostings(postings, nTotal)
-  }
-
-  /** Serve q_sample_importance from the SAME postings state — the DSIR
-    * selection weights are one more serve on the maintained lexical
-    * index: per-term corpus/target counts from merge-on-read postings
-    * (target totals via the lake's (doc_id, lang) map), per-doc means by
-    * the tf-grouping identity ([[CurationOps.sampleImportanceFromPostings]]).
-    * docLang must carry EVERY lake doc's (doc_id, lang) so zero-token
-    * docs keep their n_toks = 0 row.
-    */
-  def serveSampleImportanceContinuous(
-      s: SparkSession,
-      indexDir: String,
-      docLang: DataFrame): DataFrame = {
-    val (postings, _) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
-    CurationOps.sampleImportanceFromPostings(postings, docLang)
-  }
-
-  /** Serve q_lm_score_lang's scored rows from the SAME postings state —
-    * the per-language production default (one LM per language, CCNet
-    * arXiv:1911.00359) still rides the maintained lexical index: the
-    * lake's (doc_id, lang) map joins language onto each posting (the
-    * index deliberately persists no lake metadata), then the tf-grouping
-    * identity applies per (lang, term) exactly as it does per term
-    * ([[LmOps.lmScoreLangAggFromPostings]]). Docs with zero model tokens
-    * carry no postings and no row, as with [[serveLmScoreContinuous]].
-    */
-  def serveLmScoreLangContinuous(
-      s: SparkSession,
-      indexDir: String,
-      docLang: DataFrame): DataFrame = {
-    import s.implicits._
-    val (postings, _) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
-    LmOps.lmScoreLangAggFromPostings(postings, docLang)
-      .join(docLang.select($"doc_id", $"lang"), Seq("doc_id"))
-      .select(
-        $"doc_id",
-        $"lang",
-        $"n_tokens",
-        X.r6($"sr".cast("double") / $"n_tokens".cast("double")).as("rarity6"))
-      .orderBy($"doc_id")
-  }
 
   /** Quantized-index family — the int8 scan tier maintained
     * continuously beside the float tier: same generation-local shape as
@@ -1376,40 +1274,6 @@ object StreamOps {
     GenLog.markCommitted(s, p)
   }
 
-  /** The maintained corpus-wide survivor set: the union of per-root
-    * survivor logs (final at commit under the monotone anchor rule), in
-    * q_dedup_semantic's output shape.
-    */
-  def serveSemanticContinuous(s: SparkSession, indexDir: String): DataFrame =
-    GenLog.read(s, semFamily(indexDir).roots(s, indexDir), "survivors")
-      .orderBy(col("vec_id"))
-
-  /** The cluster report served from the MAINTAINED semantic index
-    * (q_cluster_stats' shape): member counts from the cells artifacts,
-    * survivor counts from the survivor logs, merge-on-read — no
-    * recomputation of assignments or witnesses. Pinned to the index's
-    * epoch codebook (the batch query re-derives k over the current
-    * corpus; an epoch roll re-aligns them).
-    */
-  def serveClusterStatsContinuous(s: SparkSession, indexDir: String): DataFrame = {
-    val roots = semFamily(indexDir).roots(s, indexDir)
-    val members = GenLog.read(s, roots, "cells")
-      .select(col("vec_id"), col("cell").cast("long").as("cell"))
-    val kept = GenLog.read(s, roots, "survivors")
-    members
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vecs"))
-      .join(
-        kept.groupBy(col("cell")).agg(count(lit(1)).as("n_kept")),
-        Seq("cell"),
-        "left")
-      .select(
-        col("cell"),
-        col("n_vecs"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-      .orderBy(col("cell"))
-  }
-
   /** The EPOCH ROLL: re-seed a NEW index directory from every vector
     * across the current roots — k and the codebook re-derive from the
     * GROWN corpus (that is the retrain), survivors recompute under the
@@ -1471,22 +1335,6 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
 
-  /** The corpus-wide boilerplate report served merge-on-read from the
-    * maintained counts — ≡ the monolithic q_text_boilerplate over the
-    * union of all ingested documents at every point in time
-    * (StreamingBoilerplateSpec).
-    */
-  def serveBoilerplateContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateReportOf(GenLog.read(s, BoilerFamily.roots(s, dir)))
-
-  /** The corpus-scale (df-fraction) report from the SAME maintained
-    * counts — the threshold is derived from the served state's document
-    * count at read time, so it rises automatically as the stream grows
-    * the corpus: no family change, no re-seed, one serve-side knob.
-    */
-  def serveBoilerplateFracContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.boilerplateFracReportOf(GenLog.read(s, BoilerFamily.roots(s, dir)))
-
   /** Bigram-count family — the continuous lift of q_lm_bigram: each
     * micro-batch persists its docs' (w1, w2, cf2) pair counts
     * ([[LmOps.bigramCountsOf]] — O(batch) work and bytes, no prior
@@ -1518,68 +1366,6 @@ object StreamOps {
         .write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
-
-  /** The conditional model served merge-on-read from the maintained
-    * counts — ≡ the monolithic q_lm_bigram over the union of all
-    * ingested documents at every point in time (StreamingLmSpec).
-    */
-  def serveLmBigramContinuous(s: SparkSession, dir: String): DataFrame =
-    LmOps.lmBigramFromCounts(GenLog.read(s, BigramFamily.roots(s, dir)))
-
-  /** q_lm_bigram_apply served from the SAME maintained counts: the
-    * split-keyed payload filtered to split = 'train' IS the train-only
-    * pair model (merge-on-read re-aggregation restores exact counts),
-    * and the eval docs score against it through the registry's own seam
-    * — cross-split leakage protection with no second state
-    * (StreamingLmSpec asserts ≡ the registry query at every stage).
-    */
-  def serveLmBigramApplyContinuous(
-      s: SparkSession,
-      dir: String,
-      allDocs: DataFrame): DataFrame =
-    LmOps.lmBigramApplyFromCounts(
-      GenLog.read(s, BigramFamily.roots(s, dir))
-        .filter(col("split") === "train")
-        .select(col("w1"), col("w2"), col("cf2")),
-      allDocs)
-
-  /** q_lm_kn served from the SAME maintained pair counts: every
-    * Kneser-Ney model quantity (cfl, n1, ncont, npairs) derives from the
-    * pair-count table alone, so the split-keyed bigram state
-    * (re-aggregated merge-on-read) is the WHOLE model input — the
-    * smoothed production LM is one more serve on the state, no new
-    * stream, no corpus re-read (StreamingLmSpec asserts ≡ the registry
-    * query at every stage).
-    */
-  def serveLmKnContinuous(
-      s: SparkSession,
-      dir: String,
-      allDocs: DataFrame): DataFrame =
-    LmOps.lmKnFromCounts(
-      GenLog.read(s, BigramFamily.roots(s, dir))
-        .select(col("w1"), col("w2"), col("cf2")),
-      allDocs)
-
-  /** q_lm_interp served from BOTH maintained states: pair counts from
-    * the bigram family (split-keyed rows re-aggregated), unigram counts
-    * and the token total from the lexical postings family (cf1 = Σ tf,
-    * lt = Σ stats.l — exact by the tf-grouping identity) — the
-    * Jelinek-Mercer mixture composes two states the pipeline already
-    * maintains, no new stream.
-    */
-  def serveLmInterpContinuous(
-      s: SparkSession,
-      bigramDir: String,
-      indexDir: String,
-      allDocs: DataFrame): DataFrame = {
-    val (postings, nTotal) = LmOps.lmFrames(s, Bm25Family.roots(s, indexDir))
-    LmOps.lmInterpFromCounts(
-      GenLog.read(s, BigramFamily.roots(s, bigramDir))
-        .select(col("w1"), col("w2"), col("cf2")),
-      postings.groupBy(col("term").as("w2")).agg(sum(col("tf")).as("cf1")),
-      nTotal.select(col("n_total").as("lt")),
-      allDocs)
-  }
 
   /** Passage-gram family — the continuous lift of q_text_passage_dup:
     * each micro-batch persists its docs' positioned 5-gram rows
@@ -1623,74 +1409,6 @@ object StreamOps {
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(path))
 
-  /** The corpus-wide passage-duplication report served merge-on-read
-    * from the maintained grams — ≡ the monolithic q_text_passage_dup
-    * over the union of all ingested documents at every point in time.
-    */
-  def servePassageDupContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.passageDupReportOf(passageState(s, dir))
-
-  /** The maximal scrub spans served from the same maintained grams
-    * (≡ q_text_passage_spans over the union at every point in time).
-    */
-  def servePassageSpansContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.passageSpansOf(passageState(s, dir))
-
-  /** The corpus-scale ≥50-token-match report served from the SAME
-    * maintained grams (≡ q_text_passage_dup50 over the union): the
-    * min-match-length contract is a serve-side knob on one state — the
-    * q_text_boilerplate_frac precedent, no re-seed, no second family.
-    */
-  def servePassageDup50Continuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.passageMinlenReportOf(passageState(s, dir))
-
-  /** The ≥50-token scrub spans from the same state (≡ q_text_passage_spans50). */
-  def servePassageSpans50Continuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.passageMinlenSpansOf(passageState(s, dir))
-
-  /** The scrubbed corpus served from the maintained grams plus a text
-    * frame (the curated lake): spans come merge-on-read from the gram
-    * state, the deletion itself is the within-row kernel — the corpus
-    * is never re-grammed (≡ q_text_scrub50 over the union at every
-    * point in time; the publish output a curation stream ships).
-    */
-  def serveScrub50Continuous(s: SparkSession, dir: String, docsDf: DataFrame): DataFrame =
-    TextOps.scrubWithSpans(
-      docsDf,
-      TextOps.passageMinlenSpansOf(passageState(s, dir)))
-
-  private def passageState(s: SparkSession, dir: String): DataFrame =
-    GenLog.read(s, PassageFamily.roots(s, dir))
-
-  /** The eval-set decontamination spans served from the SAME maintained
-    * passage grams — the split label is a pure function of doc_id (the
-    * q_split_assign hash ladder), so it is re-derived at read time and
-    * the one gram state serves both the duplication report and the
-    * scrub: a train document ingested TODAY retroactively contaminates
-    * an eval document ingested last month, with no generation recompute
-    * (≡ the monolithic q_split_decontaminate over the union at every
-    * point in time).
-    */
-  def serveDecontaminateContinuous(s: SparkSession, dir: String): DataFrame =
-    TextOps.decontaminateSpansOf(passageState(s, dir))
-
-  /** q_dedup_passage_cc served from the SAME maintained passage grams —
-    * no second persisted family: a 50-token window is exactly 46
-    * consecutive gram fingerprints ([[TextOps.windowFingerprintsFromGrams]]),
-    * so the edge witness re-derives merge-on-read from the state, the
-    * closure runs on the same ccAssign kernel, and the doc universe
-    * comes from the curated lake (the scrub-serve pattern: one state,
-    * one lake, the corpus never re-grammed). Retroactive like every
-    * serve on this state: a newly ingested copy of an OLD document's
-    * passage links the old document the moment the batch commits.
-    */
-  def servePassageCcContinuous(
-      s: SparkSession, dir: String, docsDf: DataFrame): DataFrame =
-    DedupOps.passageCcFromOcc(
-      s,
-      TextOps.windowFingerprintsFromGrams(passageState(s, dir)),
-      docsDf.select(col("doc_id")))
-
   /** Targets of the composed continuous VECTOR program — the embeddings
     * side of [[CorpusPipeline]]: all five vector index families (float
     * ANN buckets, int8 quantized scan tier, IVF cells, semantic-dedup
@@ -1728,7 +1446,7 @@ object StreamOps {
     * share one implementation and per-leg idempotence
     * (overwrite-then-mark per batchId) is inherited unchanged.
     */
-  def vectorPipelineBatch(
+  private def vectorPipelineBatch(
       batch0: DataFrame,
       batchId: Long,
       p: VectorPipeline): Unit =
@@ -1810,7 +1528,7 @@ object StreamOps {
     * full batch, the five vector legs on the embedded rows re-keyed to
     * the vector schema.
     */
-  def unifiedPipelineBatch(
+  private def unifiedPipelineBatch(
       batch0: DataFrame,
       batchId: Long,
       p: UnifiedPipeline): Unit =
@@ -1938,7 +1656,7 @@ object StreamOps {
     * sessionization with watermark eviction instead of a full-corpus
     * window sort.
     */
-  def sessionWindowAgg(df: DataFrame): DataFrame = {
+  private[graft] def sessionWindowAgg(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
     df.groupBy(session_window($"ts", "30 minutes"), $"user_id")
       .agg(count(lit(1)).as("n_events"))

@@ -1394,8 +1394,8 @@ object TextOps {
     */
   private[graft] def bm25Split(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val (build, roots) = bm25Index(s, d)
-    (build, () => serveBm25(s, roots()))
+    val (build, dir) = bm25Index(s, d)
+    (build, () => serveBm25(s, StreamOps.Bm25Family.roots(s, dir)))
   }
 
   /** Write one GENERATION of the postings index from an arbitrary doc
@@ -1433,14 +1433,12 @@ object TextOps {
   }
 
   /** The canonical postings index of a dataset — a [[StreamOps.Bm25Family]]
-    * seeded once from the whole corpus — as its build and its roots: the
-    * lexical, RRF and LM serves all read this one physical index.
+    * seeded once from the whole corpus — as its build and its family dir:
+    * the lexical, RRF and LM serves all read this one physical index.
     */
-  private[graft] def bm25Index(
-      s: SparkSession, d: String): (() => Unit, () => Seq[String]) = {
+  private[graft] def bm25Index(s: SparkSession, d: String): (() => Unit, String) = {
     val dir = GenLog.datasetRoot(s, d) + "/bm25"
-    (() => { StreamOps.Bm25Family.buildOnce(s, dir)(Seq(docs(s, d))); () },
-      () => StreamOps.Bm25Family.roots(s, dir))
+    (() => { StreamOps.Bm25Family.buildOnce(s, dir)(Seq(docs(s, d))); () }, dir)
   }
 
   /** Serve the fixed query set from the roots of a postings index
@@ -1625,7 +1623,7 @@ object TextOps {
     // shared with q_index_bm25_served / q_sim_served (same params, same
     // corpus — one physical index each, built once per warehouse root):
     // when a sibling already committed them, this build is store-only
-    val (bm25Build, bm25Roots) = bm25Index(s, d)
+    val (bm25Build, bm25Dir) = bm25Index(s, d)
     val (annBuild, annRoots) = SimilarityOps.annIndex(s, d)
     val storeDir = GenLog.datasetRoot(s, d) + "/embstore"
     val build = () => {
@@ -1636,7 +1634,10 @@ object TextOps {
     }
     (build,
       () => serveRrf(
-        s, bm25Roots(), annRoots(), StreamOps.EmbStoreFamily.roots(s, storeDir)))
+        s,
+        StreamOps.Bm25Family.roots(s, bm25Dir),
+        annRoots(),
+        StreamOps.EmbStoreFamily.roots(s, storeDir)))
   }
 
   /** The feedback-seed frame of the served RRF tier: each query's

@@ -45,17 +45,17 @@ object ClusterCheck {
     "q_index_bm25_served",
     "q_join_broadcast",
     "q_text_passage_dup50",
-    // round-13 batch 2: the closure kernel (localCheckpoint blocks live
+    // the closure kernel (localCheckpoint blocks live
     // on executor block managers; the bounded driver finish collects
     // across RPC) and the LM ladder's decimal aggregation
     "q_dedup_passage_cc",
     "q_lm_bigram_score",
-    // round-14: the PQ family's HOF argmin encode + broadcast ADC lookup
+    // the PQ family's HOF argmin encode + broadcast ADC lookup
     // tables (nested-lambda eval on executors) and the Lloyd trainer's
     // driver-collect/broadcast alternation across real processes
     "q_sim_pq",
     "q_sim_pq_trained",
-    // round-16: the q-digest Aggregator pair — its Map[Long,Long] buffer
+    // the q-digest Aggregator pair — its pair-array buffer
     // encoder and binary digests cross the executor serialization
     // boundary, and merge-order invariance is exactly what a real
     // multi-process shuffle exercises that local[*] cannot
@@ -83,7 +83,7 @@ object ClusterCheck {
       work: String): Seq[(String, org.apache.spark.sql.DataFrame)] = {
     import org.apache.spark.sql.{DataFrame, functions => F}
     import F.{col, lit, max, md5, pmod, row_number, when}
-    import graft.ops.{CurationOps, Hashing, RelationalOps, StreamOps, TextOps}
+    import graft.ops.{CurationOps, Hashing, LmOps, RelationalOps, StreamOps, TextOps}
     val all = graft.T(s, sfDir, "documents")
     val mx = all.agg(max(col("doc_id"))).head().getLong(0)
     val cut = mx * 8 / 10
@@ -197,6 +197,7 @@ object ClusterCheck {
         F.explode(F.array(
           col("bucket") +: (0 until SimilarityOps.SignBits)
             .map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("pbucket"))
+    val semDir = pipe.vectors.semDir
     Seq(
       "lake" -> s.read.parquet(pipe.corpus.lakeDir)
         .select("doc_id", "lang", "source", "n_chars", "split"),
@@ -208,9 +209,11 @@ object ClusterCheck {
       "cc_pairs" -> StreamOps.ccFromPairState(s, pipe.corpus.dedupIndexDir),
       "bm25" -> TextOps.serveBm25(
         s, StreamOps.Bm25Family.roots(s, pipe.corpus.bm25IndexDir)),
-      "boiler" -> StreamOps.serveBoilerplateContinuous(s, pipe.corpus.boilerStatsDir),
-      "passage50" -> StreamOps.servePassageDup50Continuous(s, pipe.corpus.passageGramsDir),
-      "bigram" -> StreamOps.serveLmBigramContinuous(s, pipe.corpus.bigramStatsDir),
+      "boiler" -> TextOps.boilerplateReportOf(
+        GenLog.read(s, StreamOps.BoilerFamily.roots(s, pipe.corpus.boilerStatsDir))),
+      "passage50" -> TextOps.passageMinlenReportOf(
+        GenLog.read(s, StreamOps.PassageFamily.roots(s, pipe.corpus.passageGramsDir))),
+      "bigram" -> LmOps.lmBigramFromCounts(LmOps.bigramCounts(s, pipe.corpus.bigramStatsDir)),
       "phrase" -> TextOps.servePhrase(
         s, StreamOps.PhraseFamily.roots(s, pipe.corpus.phraseIndexDir), TextOps.PhraseQueries),
       "report" -> StreamOps.publishedCorpusReport(s, pipe.corpus.reportSummaryDir),
@@ -224,7 +227,9 @@ object ClusterCheck {
         s,
         StreamOps.ivfFamily(pipe.vectors.ivfDir).roots(s, pipe.vectors.ivfDir),
         e.filter(col("vec_id") < 5)),
-      "sem" -> StreamOps.serveSemanticContinuous(s, pipe.vectors.semDir),
+      "sem" -> GenLog
+        .read(s, StreamOps.semFamily(semDir).roots(s, semDir), "survivors")
+        .orderBy(col("vec_id")),
       "store" -> GenLog
         .read(s, StreamOps.EmbStoreFamily.roots(s, pipe.vectors.storeDir))
         .select(col("vec_id"), col("ishard").cast("long").as("ishard")),

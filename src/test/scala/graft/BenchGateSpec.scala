@@ -45,12 +45,16 @@ class BenchGateSpec extends AnyFunSuite {
     // scale mismatch: budgets are sf0.1-specific, an sf0.01 run never flags
     assert(Bench.budgetViolations("/root/testdata/sf0.01", results, f.toString)
       === Nil)
-    // absent or malformed file disables the check, never fails the bench
+    // an absent file means no budgets; a malformed one fails the gate
+    // closed with an error naming the file
     assert(Bench.budgetViolations("/root/testdata/sf0.1", results,
       "/nonexistent/budgets.json") === Nil)
-    java.nio.file.Files.write(f, "not json".getBytes("UTF-8"))
-    assert(Bench.budgetViolations("/root/testdata/sf0.1", results, f.toString)
-      === Nil)
+    for (bad <- Seq("not json", """{"sf":"sf0.1"}""", """{"budgets":{"q_a":1.0}}""")) {
+      java.nio.file.Files.write(f, bad.getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException](
+        Bench.budgetViolations("/root/testdata/sf0.1", results, f.toString))
+      assert(e.getMessage.contains(f.toString), s"$bad: ${e.getMessage}")
+    }
     // calibration-normalized gate: with a recorded derivation probe,
     // budgets scale by thisRun/baseline — a slow host (ratio 2) stops
     // flagging uniform inflation; a FAST probe never tightens below the

@@ -136,6 +136,9 @@ class EndToEndPipelineSpec extends SparkSpec {
     val boilerIdx = Files.createTempDirectory("graft_e2e_boiler").toString
     val passageIdx = Files.createTempDirectory("graft_e2e_passage").toString
     val bigramIdx = Files.createTempDirectory("graft_e2e_bigram").toString
+    // the maintained text-frequency state each served surface reads
+    def boilerState() = familyState(StreamOps.BoilerFamily, boilerIdx)
+    def grams() = familyState(StreamOps.PassageFamily, passageIdx)
     val pipe = StreamOps.CorpusPipeline(
       lakeDir = lake,
       dedupIndexDir = dedupIdx,
@@ -237,15 +240,15 @@ class EndToEndPipelineSpec extends SparkSpec {
       TextOps.passageGramsOf(curatedAll)))
     val decontWant = rows(TextOps.decontaminateSpansOf(
       TextOps.passageGramsOf(curatedAll)))
-    assert(rows(StreamOps.serveBoilerplateContinuous(spark, boilerIdx)) ===
+    assert(rows(TextOps.boilerplateReportOf(boilerState())) ===
       boilerWant)
-    assert(rows(StreamOps.serveBoilerplateFracContinuous(spark, boilerIdx)) ===
+    assert(rows(TextOps.boilerplateFracReportOf(boilerState())) ===
       fracWant)
-    assert(rows(StreamOps.servePassageDupContinuous(spark, passageIdx)) ===
+    assert(rows(TextOps.passageDupReportOf(grams())) ===
       passageWant)
-    assert(rows(StreamOps.servePassageDup50Continuous(spark, passageIdx)) ===
+    assert(rows(TextOps.passageMinlenReportOf(grams())) ===
       passage50Want)
-    assert(rows(StreamOps.serveDecontaminateContinuous(spark, passageIdx)) ===
+    assert(rows(TextOps.decontaminateSpansOf(grams())) ===
       decontWant, "the decontaminate publish output diverged")
 
     // published JDBC report ≡ the batch report (atomic swap each batch)
@@ -273,9 +276,9 @@ class EndToEndPipelineSpec extends SparkSpec {
       rows(spark.read.jdbc(url, "corpus_report", props)) ===
         rows(report(curatedAll)),
       "batch retry changed the published report")
-    assert(rows(StreamOps.serveBoilerplateContinuous(spark, boilerIdx)) ===
+    assert(rows(TextOps.boilerplateReportOf(boilerState())) ===
       boilerWant, "batch retry changed the boilerplate stats")
-    assert(rows(StreamOps.servePassageDupContinuous(spark, passageIdx)) ===
+    assert(rows(TextOps.passageDupReportOf(grams())) ===
       passageWant, "batch retry changed the passage report")
 
     // the report leg is O(batch): the published frame re-aggregates the
@@ -299,9 +302,9 @@ class EndToEndPipelineSpec extends SparkSpec {
       rows(StreamOps.publishedCorpusReport(spark, sumIdx)) ===
         rows(report(curatedAll)),
       "report summary compaction changed the aggregate")
-    assert(rows(StreamOps.serveBoilerplateFracContinuous(spark, boilerIdx)) ===
+    assert(rows(TextOps.boilerplateFracReportOf(boilerState())) ===
       fracWant, "boilerplate compaction changed the frac report")
-    assert(rows(StreamOps.serveDecontaminateContinuous(spark, passageIdx)) ===
+    assert(rows(TextOps.decontaminateSpansOf(grams())) ===
       decontWant, "passage compaction changed the decontaminate spans")
     val got2 = StreamOps
       .readDedupAssignments(spark, dedupIdx)
@@ -401,8 +404,9 @@ class EndToEndPipelineSpec extends SparkSpec {
     // the LM rides the SAME postings state the pipeline maintains for
     // BM25 — across day-2 restart + compaction, the model must equal a
     // from-scratch train over the curated corpus (zero LM-specific legs)
+    val (postings, nTotal) = LmOps.lmFrames(spark, bm25Idx)
     assert(
-      rows(StreamOps.serveLmUnigramContinuous(spark, bm25Idx)) ===
+      rows(LmOps.lmUnigramFromCounts(LmOps.unigramCountsFromPostings(postings, nTotal))) ===
         rows(LmOps.lmUnigramOf(curatedAll2)),
       "day-2 LM model diverged from the batch train")
     assert(
@@ -413,24 +417,25 @@ class EndToEndPipelineSpec extends SparkSpec {
     // compacted day-1 fulls plus day-2 generations serve the monolithic
     // day-2 corpus answers
     assert(
-      rows(StreamOps.serveBoilerplateFracContinuous(spark, boilerIdx)) ===
+      rows(TextOps.boilerplateFracReportOf(boilerState())) ===
         rows(TextOps.boilerplateFracReportOf(
           TextOps.shingleCountsOf(curatedAll2))),
       "day-2 boilerplate frac diverged")
     assert(
-      rows(StreamOps.servePassageDup50Continuous(spark, passageIdx)) ===
+      rows(TextOps.passageMinlenReportOf(grams())) ===
         rows(TextOps.passageMinlenReportOf(
           TextOps.passageGramsOf(curatedAll2))),
       "day-2 passage 50-token report diverged")
     assert(
-      rows(StreamOps.servePassageCcContinuous(spark, passageIdx, curatedAll2)) ===
+      rows(DedupOps.passageCcFromOcc(
+        spark, TextOps.windowFingerprintsFromGrams(grams()), curatedAll2.select($"doc_id"))) ===
         rows(DedupOps.passageCcFromOcc(
           spark,
           DedupOps.passageWindowsOf(curatedAll2),
           curatedAll2.select($"doc_id"))),
       "day-2 passage clusters diverged from the batch closure")
     assert(
-      rows(StreamOps.serveLmBigramContinuous(spark, bigramIdx)) ===
+      rows(LmOps.lmBigramFromCounts(LmOps.bigramCounts(spark, bigramIdx))) ===
         rows(LmOps.lmBigramFromCounts(LmOps.bigramCountsOf(curatedAll2))),
       "day-2 bigram model diverged from the batch train")
   }

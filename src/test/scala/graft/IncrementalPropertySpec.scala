@@ -285,19 +285,16 @@ class IncrementalPropertySpec extends SparkSpec {
     val nTotal = spark.read.parquet(s"$dir/base/stats")
       .unionByName(spark.read.parquet(s"$dir/inc/stats"))
       .agg(sum($"l").as("n_total"))
-    val gotModel = LmOps.lmUnigramFromCounts(
-      postings.groupBy($"term").agg(sum($"tf").as("cf"))
-        .crossJoin(broadcast(nTotal)))
+    val gotModel = LmOps.lmUnigramFromCounts(LmOps.unigramCountsFromPostings(postings, nTotal))
       .collect().map(_.toString).toSeq
     val wantModel = LmOps.lmUnigramOf(union).collect().map(_.toString).toSeq
     assert(gotModel === wantModel)
     assert(gotModel.nonEmpty)
-    val gotScores = LmOps.lmScoreFromPostings(postings, nTotal)
+    val gotScores = LmOps.lmScoreOf(union, LmOps.lmScoreAggFromPostings(postings, nTotal))
       .collect().map(_.toString).toSeq
     val ft = TextOps.bm25TokensOf(union)
     val wantScores = LmOps
       .lmScoreOf(union, LmOps.rarityAggOf(ft, LmOps.unigramCountsOf(ft)))
-      .filter($"n_tokens" > 0)
       .collect().map(_.toString).toSeq
     assert(gotScores === wantScores)
     assert(gotScores.nonEmpty)

@@ -24,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * probe keys by hand — [[graft.index.GenLog.read]] does both. And no
   * scaladoc sits directly on another, where the first would document
   * nothing.
+  *
+  * The streaming surface stays the entry points: a public
+  * [[graft.ops.StreamOps]] def is either called from the engine or named
+  * in [[StreamEntryPoints]], so a spec-only serve or a twin of a registry
+  * query cannot come back unnoticed.
   */
 class ReadSeamHygieneSpec extends AnyFunSuite {
 
@@ -36,6 +41,29 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
   private val KeyCollect = """\.distinct\(\)\s*\.collect\(\)""".r
   private val SplatIsin = """\.isin\([^()]*:\s*_\*\s*\)""".r
   private val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+
+  private val Stream = Root.resolve("ops/StreamOps.scala")
+  private val PublicDef = """(?m)^  def (\w+)""".r
+
+  /** StreamOps defs no engine code calls: what a streaming deployment
+    * drives itself.
+    */
+  private val StreamEntryPoints = Set(
+    // sources and lifts
+    "docsStream", "liftCuratedDocs", "liftTumble", "liftExpectations", "liftStreamJoin",
+    "liftSession", "liftStreamStaticJoin", "liftSimRetrieve", "liftUserCounts",
+    "liftUserTotals",
+    // twins of registry queries whose bodies Structured Streaming cannot
+    // run (countDistinct, row_number windows, a to_date day key)
+    "liftSlide", "liftDedup", "liftDedupExact", "liftSketchRollup",
+    // seeds, per-batch commits and stream writers
+    "seedCorpusPipeline", "seedSemanticIndex", "seedVectorPipeline",
+    "corpusPipelineBatch", "incrEmbedDedupCommit", "corpusPipelineWriter",
+    "incrDedupStreamWriter", "incrEmbedDedupStreamWriter", "vectorPipelineWriter",
+    "upsertStreamWriter",
+    // compactions and epoch rolls
+    "compactDedupIndex", "compactVectorPipeline", "rollIvfEpoch", "rollSemanticEpoch",
+    "rollSemanticEpochTrained")
 
   private def text(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
@@ -127,6 +155,18 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
       }
     }
     assert(offenders.isEmpty, offenders.mkString("hand-written root reads:\n", "\n", ""))
+  }
+
+  test("every public StreamOps def is called from src/main or is a streaming entry point") {
+    assert(PublicDef.findAllMatchIn("  def a(x: Int)\n  private def b\n    def c").map(_.group(1))
+      .toSeq === Seq("a"))
+    val defs = PublicDef.findAllMatchIn(code(Stream)).map(_.group(1)).toSet
+    val engine = sources.filterNot(_ == Stream).map(code).mkString("\n")
+    val uncalled = defs.filterNot(d => s"\\b$d\\b".r.findFirstIn(engine).nonEmpty)
+    assert(uncalled -- StreamEntryPoints === Set.empty,
+      "public StreamOps defs only specs reach: delete them, or compose the kernel in the spec")
+    // the allowlist names live, uncalled defs only
+    assert(StreamEntryPoints -- uncalled === Set.empty)
   }
 
   test("the pattern catches the single-line and split-line spellings") {

@@ -849,7 +849,7 @@ class ScaleSpec extends SparkSpec {
         spark, all10, cents10,
         s"${Files.createTempDirectory("graft_scale_semi_rb").toString}/full"))
     assert(
-      StreamOps.serveSemanticContinuous(spark, idx10)
+      familyState(StreamOps.semFamily(idx10), idx10, "survivors").orderBy("vec_id")
         .collect().map(_.toString).toSeq ===
         SimilarityOps.semSurvivorsWith(all10, cents10)
           .orderBy($"vec_id").collect().map(_.toString).toSeq,

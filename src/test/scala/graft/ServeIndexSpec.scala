@@ -155,16 +155,17 @@ class ServeIndexSpec extends SparkSpec {
   test("serveBm25For answers an arbitrary query frame (library API)") {
     import spark.implicits._
     import graft.ops.TextOps
-    val (build, roots) = TextOps.bm25Index(spark, sf)
+    val (build, dir) = TextOps.bm25Index(spark, sf)
     build()
+    val roots = graft.ops.StreamOps.Bm25Family.roots(spark, dir)
     // per-query scoring is independent of which other queries ride the
     // batch, so a subset query frame must reproduce the full serve's
     // rows for those query ids exactly (through a smaller pruned scan)
     val subset = TextOps.Bm25Queries.filter(q => q._1 == 1 || q._1 == 4)
       .toDF("query_id", "term")
-    val got = rows(TextOps.serveBm25For(spark, roots(), subset))
+    val got = rows(TextOps.serveBm25For(spark, roots, subset))
     val want = rows(
-      TextOps.serveBm25(spark, roots()).filter($"query_id".isin(1, 4)))
+      TextOps.serveBm25(spark, roots).filter($"query_id".isin(1, 4)))
     assert(got === want && got.nonEmpty)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.GenLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -11,6 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
+
+  /** Everything committed under the family dir `dir`, merged on read:
+    * the state a serve over the family's roots reads.
+    */
+  def familyState(fam: GenLog.GenFamily, dir: String, artifact: String = ""): DataFrame =
+    GenLog.read(spark, fam.roots(spark, dir), artifact)
 
   /** The directories whose files `df`'s parquet scans read: each scan's
     * listing under its own static partition filters (a dynamic pruning

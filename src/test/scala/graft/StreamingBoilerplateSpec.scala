@@ -73,11 +73,12 @@ class StreamingBoilerplateSpec extends SparkSpec {
 
     // end-of-feed identity with the oracle-checked registry queries —
     // both thresholds serve from the SAME maintained counts
+    def counts() = familyState(StreamOps.BoilerFamily, dir)
     assert(
-      rows(StreamOps.serveBoilerplateContinuous(spark, dir)) ===
+      rows(TextOps.boilerplateReportOf(counts())) ===
         rows(SparkEntry.queries("q_text_boilerplate")(spark, sf)))
     assert(
-      rows(StreamOps.serveBoilerplateFracContinuous(spark, dir)) ===
+      rows(TextOps.boilerplateFracReportOf(counts())) ===
         rows(SparkEntry.queries("q_text_boilerplate_frac")(spark, sf)))
 
     // RETROACTIVE frequency: serving over base+batches must raise some
@@ -88,7 +89,7 @@ class StreamingBoilerplateSpec extends SparkSpec {
     val baseOnly = TextOps
       .boilerplateReportOf(TextOps.shingleCountsOf(all.filter($"doc_id" <= c0)))
       .select($"doc_id", $"n_boiler".as("nb_base"))
-    val nowBase = StreamOps.serveBoilerplateContinuous(spark, dir)
+    val nowBase = TextOps.boilerplateReportOf(counts())
       .filter($"doc_id" <= c0)
       .select($"doc_id", $"n_boiler")
     val risen = nowBase
@@ -106,9 +107,9 @@ class StreamingBoilerplateSpec extends SparkSpec {
 
     // compaction (fold = concatenation over disjoint docs) is
     // read-invariant, and the grace contract holds
-    val want = rows(StreamOps.serveBoilerplateContinuous(spark, dir))
+    val want = rows(TextOps.boilerplateReportOf(counts()))
     StreamOps.BoilerFamily.compact(spark, dir)
-    assert(rows(StreamOps.serveBoilerplateContinuous(spark, dir)) === want)
+    assert(rows(TextOps.boilerplateReportOf(counts())) === want)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v2/full")))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.ops.StreamOps
 import org.apache.spark.sql.functions._
 
-/** The continuous-ingest corpus build ([[StreamOps.liftCorpusPipeline]]):
+/** The continuous-ingest corpus build ([[StreamOps.liftCuratedDocs]]):
   * streamed curation must produce the same per-(split, lang) accounting
   * as the identical batch composition (gate ∧ mix → first-writer exact
   * dedup → split), and a fresh-checkpoint rerun must reproduce it exactly
@@ -51,9 +51,11 @@ class StreamingCorpusSpec extends SparkSpec {
       .toSeq
   }
 
+  private def curated(dir: String) =
+    StreamOps.liftCuratedDocs(spark, dir).select("doc_id", "lang", "n_chars", "split")
+
   private def runStream(dir: String, sinkName: String): Seq[String] = {
-    val q = StreamOps
-      .liftCorpusPipeline(spark, dir)
+    val q = curated(dir)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -99,7 +101,7 @@ class StreamingCorpusSpec extends SparkSpec {
     // pair making the append transactional
     def run(): Unit = {
       val q = graft.ops.Sinks
-        .corpusShardsStreamWriter(StreamOps.liftCorpusPipeline(spark, dir), sink, ckpt)
+        .corpusShardsStreamWriter(curated(dir), sink, ckpt)
         .start()
       try q.processAllAvailable()
       finally q.stop()

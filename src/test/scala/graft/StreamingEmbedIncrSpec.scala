@@ -75,7 +75,10 @@ class StreamingEmbedIncrSpec extends SparkSpec {
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    val got = pairs(StreamOps.readEmbedPairs(spark, indexDir))
+    // every committed per-batch pair output
+    def committed() =
+      pairs(graft.index.GenLog.read(spark, StreamOps.logPaths(spark, indexDir, "pairs")))
+    val got = committed()
     val all = base.unionByName(batch1).unionByName(batch2)
     val full = pairs(DedupOps.verifyCosinePairsFrom(
       all.select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2")),
@@ -105,7 +108,7 @@ class StreamingEmbedIncrSpec extends SparkSpec {
       assert(exists(s"$v/${graft.index.GenLog.Superseded}"), v)
     StreamOps.EmbedBandFamily.compact(spark, indexDir)
     assert(!exists("v1/gen") && !exists("v2/gen"))
-    assert(pairs(StreamOps.readEmbedPairs(spark, indexDir)) === got,
+    assert(committed() === got,
       "maintenance must never touch committed per-batch outputs")
     val latest = spark.read.parquet(s"$indexDir/v2/full")
     assert(latest.count() > 0, "newest index snapshot survives compaction")

@@ -2,14 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.ops.StreamOps
+import graft.ops.{IngestOps, StreamOps}
 import org.apache.spark.sql.functions._
 
 /** Streaming row-level expectations ([[StreamOps.liftExpectations]]):
-  * the at-ingest quarantine verdicts must equal the identical predicates
-  * evaluated in batch — planted dirt rows (null key, bad domain, negative
-  * value, and a doubly-violating row) each carry exactly their violation
-  * list, clean testdata rows carry none.
+  * the at-ingest quarantine verdicts come from the same
+  * [[IngestOps.RowRules]] list the batch q_expect_constraints sums —
+  * planted dirt rows (null key, bad domain, negative value, and a
+  * doubly-violating row) each carry exactly their violation list, clean
+  * testdata rows carry none, and per rule the stream's count over the
+  * testdata rows is the registry's count less its one planted row.
   */
 class StreamingExpectationsSpec extends SparkSpec {
 
@@ -82,10 +84,20 @@ class StreamingExpectationsSpec extends SparkSpec {
     val verdicts = out
       .select($"event_id", concat_ws(",", $"violations").as("v"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(verdicts(-1L) === "null_user_id")
-    assert(verdicts(-2L) === "bad_event_type")
-    assert(verdicts(-3L) === "negative_value")
-    assert(verdicts(-4L) === "null_user_id,bad_event_type")
+    val Seq(nullUser, badType, negative) = IngestOps.RowRules.map(_._1)
+    assert(verdicts(-1L) === nullUser)
+    assert(verdicts(-2L) === badType)
+    assert(verdicts(-3L) === negative)
+    assert(verdicts(-4L) === s"$nullUser,$badType")
+    // the registry audit sums the same rules over the testdata plus one
+    // planted violation per rule
+    val audit = SparkEntry.queries("q_expect_constraints")(spark, sf)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (rule <- Seq(nullUser, badType, negative)) {
+      val streamed =
+        out.filter($"event_id" >= 0 && array_contains($"violations", rule)).count()
+      assert(streamed === audit(rule) - 1, rule)
+    }
     // clean testdata rows all pass, and the row count reconciles
     val clean = out.filter(size($"violations") === 0).count()
     val total = T(spark, sf, "events").count()

@@ -226,8 +226,9 @@ class StreamingLiftDedupSessionSpec extends SparkSpec {
       Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    val q = StreamOps
-      .liftSampleMix(spark, dir.toString)
+    // the registry's own body on the document stream
+    val q = graft.ops.CurationOps
+      .sampleMixOf(StreamOps.docsStream(spark, dir.toString))
       .writeStream
       .outputMode("append")
       .format("memory")

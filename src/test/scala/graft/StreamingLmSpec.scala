@@ -2,20 +2,20 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.{LmOps, StreamOps, TextOps}
+import graft.ops.{CurationOps, LmOps, StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The unigram LM served from the CONTINUOUS lexical index
-  * ([[StreamOps.serveLmUnigramContinuous]] / serveLmScoreContinuous):
-  * the model (cf = Σ tf over merge-on-read postings, N = Σ generation
-  * stats) and the per-doc scores (the tf-grouping identity documented at
-  * [[LmOps.lmScoreFromPostings]]) must equal the registry queries at
-  * every point — mid-stream against the prefix corpus, after
-  * compaction, and at end-of-feed against the oracle-checked q_lm_*.
-  * One state, one more serve: the stream feeding this spec is the SAME
-  * Bm25Family.streamWriter the lexical family runs — no LM-specific
-  * maintenance exists to test.
+/** The LM served from the CONTINUOUS lexical index: the unigram model
+  * (cf = Σ tf over merge-on-read postings, N = Σ generation stats) and
+  * the registry splits' own serves ([[LmOps.lmScoreServe]] and its
+  * siblings, the tf-grouping identity documented at
+  * [[LmOps.lmScoreAggFromPostings]]) over the stream's index dir must
+  * equal the registry queries on every row — mid-stream against the
+  * prefix corpus, after compaction, and at end-of-feed against the
+  * oracle-checked q_lm_*. One state, one more serve: the stream feeding
+  * this spec is the SAME Bm25Family.streamWriter the lexical family
+  * runs — no LM-specific maintenance exists to test.
   */
 class StreamingLmSpec extends SparkSpec {
   import spark.implicits._
@@ -34,10 +34,19 @@ class StreamingLmSpec extends SparkSpec {
     rows(LmOps.lmUnigramOf(dd))
   private def wantScore(dd: DataFrame): Seq[String] = {
     val ft = TextOps.bm25TokensOf(dd)
-    rows(
-      LmOps.lmScoreOf(dd, LmOps.rarityAggOf(ft, LmOps.unigramCountsOf(ft)))
-        .filter($"n_tokens" > 0))
+    rows(LmOps.lmScoreOf(dd, LmOps.rarityAggOf(ft, LmOps.unigramCountsOf(ft))))
   }
+
+  // the unigram model from the postings state: cf = Σ tf, N = Σ stats.l
+  private def gotUnigram(indexDir: String): Seq[String] = {
+    val (postings, nTotal) = LmOps.lmFrames(spark, indexDir)
+    rows(LmOps.lmUnigramFromCounts(LmOps.unigramCountsFromPostings(postings, nTotal)))
+  }
+
+  // the DSIR weights from the same postings, lang from the lake's map
+  private def gotImportance(indexDir: String, dd: DataFrame): Seq[String] =
+    rows(CurationOps.sampleImportanceFromPostings(
+      LmOps.lmFrames(spark, indexDir)._1, dd.select($"doc_id", $"lang")))
 
   private def stageFile(dir: String, df: DataFrame, name: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -77,47 +86,29 @@ class StreamingLmSpec extends SparkSpec {
     run()
 
     // mid-stream: seed + one streamed generation ≡ the prefix corpus
+    // the split serves are total: zero-token docs keep their row
     val prefix = all.filter($"doc_id" <= c1)
-    assert(rows(StreamOps.serveLmUnigramContinuous(spark, indexDir)) ===
-      wantUnigram(prefix))
-    assert(rows(StreamOps.serveLmScoreContinuous(spark, indexDir)) ===
-      wantScore(prefix))
+    assert(gotUnigram(indexDir) === wantUnigram(prefix))
+    assert(rows(LmOps.lmScoreServe(spark, indexDir, prefix)) === wantScore(prefix))
     // the per-language production default rides the SAME postings: lang
     // joins on from the lake map, and the (lang, term) tf-grouping
     // identity must reproduce the registry computation exactly
-    assert(
-      rows(StreamOps.serveLmScoreLangContinuous(
-        spark, indexDir, prefix.select($"doc_id", $"lang"))) ===
-        rows(LmOps.lmScoreLangOf(prefix).filter($"n_tokens" > 0)))
-
-    // the DSIR selection weights are one more serve on the same postings
-    // (tf-grouping identity; target totals via the lake's lang map)
-    assert(
-      rows(StreamOps.serveSampleImportanceContinuous(
-        spark, indexDir, prefix.select($"doc_id", $"lang"))) ===
-        rows(graft.ops.CurationOps.sampleImportanceOf(prefix)))
+    assert(rows(LmOps.lmScoreLangServe(spark, indexDir, prefix)) ===
+      rows(LmOps.lmScoreLangOf(prefix)))
+    assert(gotImportance(indexDir, prefix) === rows(CurationOps.sampleImportanceOf(prefix)))
 
     // compaction folds generations without moving a probability
     StreamOps.Bm25Family.compact(spark, indexDir)
-    assert(rows(StreamOps.serveLmUnigramContinuous(spark, indexDir)) ===
-      wantUnigram(prefix))
+    assert(gotUnigram(indexDir) === wantUnigram(prefix))
 
     // end-of-feed: the serves land on the oracle-checked registry queries
     stageFile(src, all.filter($"doc_id" > c1), "batch2")
     run()
-    assert(rows(StreamOps.serveLmUnigramContinuous(spark, indexDir)) ===
-      rows(SparkEntry.queries("q_lm_unigram")(spark, sf)))
-    assert(rows(StreamOps.serveLmScoreContinuous(spark, indexDir)) ===
-      rows(SparkEntry.queries("q_lm_score")(spark, sf).filter($"n_tokens" > 0)))
-    assert(
-      rows(StreamOps.serveLmScoreLangContinuous(
-        spark, indexDir, all.select($"doc_id", $"lang"))) ===
-        rows(SparkEntry.queries("q_lm_score_lang")(spark, sf)
-          .filter($"n_tokens" > 0)))
-    assert(
-      rows(StreamOps.serveSampleImportanceContinuous(
-        spark, indexDir, all.select($"doc_id", $"lang"))) ===
-        rows(SparkEntry.queries("q_sample_importance")(spark, sf)))
+    def registry(q: String) = rows(SparkEntry.queries(q)(spark, sf))
+    assert(gotUnigram(indexDir) === registry("q_lm_unigram"))
+    assert(rows(LmOps.lmScoreServe(spark, indexDir, all)) === registry("q_lm_score"))
+    assert(rows(LmOps.lmScoreLangServe(spark, indexDir, all)) === registry("q_lm_score_lang"))
+    assert(gotImportance(indexDir, all) === registry("q_sample_importance"))
   }
 
   test("bigram model from streamed counts ≡ monolithic train at every stage") {
@@ -160,16 +151,21 @@ class StreamingLmSpec extends SparkSpec {
         LmOps.bigramCountsOf(dd.filter(LmOps.splitCol($"doc_id") === "train")),
         dd))
     def gotApply(dd: DataFrame): Seq[String] =
-      rows(StreamOps.serveLmBigramApplyContinuous(spark, dir, dd))
-    // the SMOOTHED models from the same state(s): Kneser-Ney's whole
-    // model derives from the pair counts; Jelinek-Mercer composes the
-    // pair counts with the postings' unigram leg
-    def gotKn(dd: DataFrame): Seq[String] =
-      rows(StreamOps.serveLmKnContinuous(spark, dir, dd))
+      rows(LmOps.lmBigramApplyFromCounts(
+        familyState(StreamOps.BigramFamily, dir)
+          .filter($"split" === "train")
+          .select($"w1", $"w2", $"cf2"),
+        dd))
+    // the SMOOTHED models from the same state(s), through the registry
+    // splits' own serves: Kneser-Ney's whole model derives from the pair
+    // counts; Jelinek-Mercer composes the pair counts with the postings'
+    // unigram leg
+    def gotKn(dd: DataFrame): Seq[String] = rows(LmOps.lmKnServe(spark, dir, dd))
     def gotInterp(dd: DataFrame): Seq[String] =
-      rows(StreamOps.serveLmInterpContinuous(spark, dir, idx, dd))
+      rows(LmOps.lmInterpServe(spark, dir, idx, dd))
+    def got(): Seq[String] = rows(LmOps.lmBigramFromCounts(LmOps.bigramCounts(spark, dir)))
     val prefix = all.filter($"doc_id" <= c1)
-    assert(rows(StreamOps.serveLmBigramContinuous(spark, dir)) === want(prefix))
+    assert(got() === want(prefix))
     assert(gotApply(prefix) === wantApply(prefix))
     assert(gotKn(prefix) === rows(LmOps.lmKnOf(prefix)))
     assert(gotInterp(prefix) === rows(LmOps.lmInterpOf(prefix)))
@@ -177,15 +173,14 @@ class StreamingLmSpec extends SparkSpec {
     // compaction folds by RE-AGGREGATION (not concatenation): the
     // snapshot stays O(bigram types) and no probability moves
     StreamOps.BigramFamily.compact(spark, dir)
-    assert(rows(StreamOps.serveLmBigramContinuous(spark, dir)) === want(prefix))
+    assert(got() === want(prefix))
     assert(gotApply(prefix) === wantApply(prefix))
     assert(gotKn(prefix) === rows(LmOps.lmKnOf(prefix)))
 
     // end-of-feed: the serves land on the oracle-checked registry queries
     stageFile(src, all.filter($"doc_id" > c1), "batch2")
     run()
-    assert(rows(StreamOps.serveLmBigramContinuous(spark, dir)) ===
-      rows(SparkEntry.queries("q_lm_bigram")(spark, sf)))
+    assert(got() === rows(SparkEntry.queries("q_lm_bigram")(spark, sf)))
     assert(gotApply(all) ===
       rows(SparkEntry.queries("q_lm_bigram_apply")(spark, sf)))
     assert(gotKn(all) === rows(SparkEntry.queries("q_lm_kn")(spark, sf)))

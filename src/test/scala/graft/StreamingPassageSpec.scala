@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.{StreamOps, TextOps}
+import graft.ops.{DedupOps, StreamOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -69,30 +69,26 @@ class StreamingPassageSpec extends SparkSpec {
 
     // end-of-feed identity with the oracle-checked registry queries —
     // EVERY passage surface (duplication report, scrub spans, both
-    // ≥50-token min-match variants, the decontamination scrub) serves
-    // from the one maintained gram state
+    // ≥50-token min-match variants, the decontamination scrub) is one
+    // kernel over the one maintained gram state
+    def grams() = familyState(StreamOps.PassageFamily, dir)
+    def registry(q: String) = rows(SparkEntry.queries(q)(spark, sf))
+    assert(rows(TextOps.passageDupReportOf(grams())) === registry("q_text_passage_dup"))
+    assert(rows(TextOps.passageSpansOf(grams())) === registry("q_text_passage_spans"))
+    assert(rows(TextOps.passageMinlenReportOf(grams())) === registry("q_text_passage_dup50"))
+    assert(rows(TextOps.passageMinlenSpansOf(grams())) === registry("q_text_passage_spans50"))
+    assert(rows(TextOps.decontaminateSpansOf(grams())) === registry("q_split_decontaminate"))
     assert(
-      rows(StreamOps.servePassageDupContinuous(spark, dir)) ===
-        rows(SparkEntry.queries("q_text_passage_dup")(spark, sf)))
-    assert(
-      rows(StreamOps.servePassageSpansContinuous(spark, dir)) ===
-        rows(SparkEntry.queries("q_text_passage_spans")(spark, sf)))
-    assert(
-      rows(StreamOps.servePassageDup50Continuous(spark, dir)) ===
-        rows(SparkEntry.queries("q_text_passage_dup50")(spark, sf)))
-    assert(
-      rows(StreamOps.servePassageSpans50Continuous(spark, dir)) ===
-        rows(SparkEntry.queries("q_text_passage_spans50")(spark, sf)))
-    assert(
-      rows(StreamOps.serveDecontaminateContinuous(spark, dir)) ===
-        rows(SparkEntry.queries("q_split_decontaminate")(spark, sf)))
-    assert(
-      rows(StreamOps.serveScrub50Continuous(spark, dir, all)) ===
-        rows(SparkEntry.queries("q_text_scrub50")(spark, sf)),
+      rows(TextOps.scrubWithSpans(all, TextOps.passageMinlenSpansOf(grams()))) ===
+        registry("q_text_scrub50"),
       "the served scrub (state spans + lake text, no re-gram) diverged")
+    // a 50-token window is exactly 46 consecutive gram fingerprints, so
+    // the edge witness re-derives from the state; the doc universe comes
+    // from the lake
     assert(
-      rows(StreamOps.servePassageCcContinuous(spark, dir, all)) ===
-        rows(SparkEntry.queries("q_dedup_passage_cc")(spark, sf)),
+      rows(DedupOps.passageCcFromOcc(
+        spark, TextOps.windowFingerprintsFromGrams(grams()), all.select($"doc_id"))) ===
+        registry("q_dedup_passage_cc"),
       "the served passage clusters (windows re-derived from gram chains, " +
         "universe from the lake) diverged from the registry closure")
 
@@ -120,7 +116,7 @@ class StreamingPassageSpec extends SparkSpec {
     val baseOnly = TextOps
       .passageDupReportOf(TextOps.passageGramsOf(all.filter($"doc_id" <= c0)))
       .select($"doc_id", $"n_covered".as("nc_base"))
-    val risen = StreamOps.servePassageDupContinuous(spark, dir)
+    val risen = TextOps.passageDupReportOf(grams())
       .filter($"doc_id" <= c0)
       .select($"doc_id", $"n_covered")
       .join(baseOnly, Seq("doc_id"))
@@ -138,12 +134,12 @@ class StreamingPassageSpec extends SparkSpec {
     // the POLICY drives this family's compaction too: at maxGens=2 the
     // two committed generations trip the count trigger, and the fold is
     // read-invariant
-    val want = rows(StreamOps.servePassageDupContinuous(spark, dir))
+    val want = rows(TextOps.passageDupReportOf(grams()))
     spark.conf.set(graft.index.GenLog.CompactMaxGensKey, "2")
     try {
       assert(StreamOps.PassageFamily.maybeCompact(spark, dir),
         "two gens at maxGens=2 must trigger the policy fold")
-      assert(rows(StreamOps.servePassageDupContinuous(spark, dir)) === want)
+      assert(rows(TextOps.passageDupReportOf(grams())) === want)
     } finally spark.conf.unset(graft.index.GenLog.CompactMaxGensKey)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -49,13 +49,10 @@ class StreamingPipelineSpec extends SparkSpec {
     val rows = spark.read.jdbc(url, "daily_report", props)
     assert(rows.count() == first, "rerun duplicated sink rows")
     // and what landed is exactly the batch q_stream_tumble report
-    val landed =
-      rows.collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = SparkEntry
-      .queries("q_stream_tumble")(spark, sf)
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-      .toSet
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))
+    val landed = rows.collect().map(key).toSet
+    val batch = SparkEntry.queries("q_stream_tumble")(spark, sf).collect().map(key).toSet
     assert(landed == batch)
   }
 }

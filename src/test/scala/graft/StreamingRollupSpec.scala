@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *     prefix corpus, after compaction, and at end-of-feed;
   *  2. day-straddling generations (the production case: one day's
   *     events arrive across micro-batches) conserve every EXACT column
-  *     (n via in-digest mass, n_days via countDistinct) and keep the
-  *     quantile estimates inside the q-digest rank bound — bit-identity
-  *     is not promised there (extra early compressions) and not
-  *     asserted;
+  *     (n via in-digest mass, n_days via size(collect_set(day))) and
+  *     keep the quantile estimates inside the q-digest rank bound —
+  *     bit-identity is not promised there (extra early compressions) and
+  *     not asserted;
   *  3. the O(batch) discipline: streamed generations never rewrite the
   *     seed, and compaction folds without moving an exact column.
   */

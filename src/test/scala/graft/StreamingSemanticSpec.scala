@@ -45,6 +45,12 @@ class StreamingSemanticSpec extends SparkSpec {
     new java.io.File(s"$dir/embeddings.parquet/$name.parquet").setLastModified(mtime)
   }
 
+  /** The maintained survivor set: the union of the survivor logs under
+    * the index's roots, in q_dedup_semantic's shape.
+    */
+  private def survivors(indexDir: String): DataFrame =
+    familyState(StreamOps.semFamily(indexDir), indexDir, "survivors").orderBy($"vec_id")
+
   /** Monolithic anchor prune over `e` with the given codebook — the
     * rebuild every streamed state must match.
     */
@@ -90,7 +96,7 @@ class StreamingSemanticSpec extends SparkSpec {
     // mid-stream identity: union of survivor logs ≡ the monolithic
     // prune over the prefix, under the seed-epoch codebook
     val prefixWant = rebuilt(all.filter($"vec_id" <= c2), seedCents)
-    assert(rows(StreamOps.serveSemanticContinuous(spark, indexDir)) === prefixWant)
+    assert(rows(survivors(indexDir)) === prefixWant)
 
     // O(batch) commits: each generation's members are a fraction of the
     // base, and the seed snapshot is never rewritten
@@ -110,35 +116,39 @@ class StreamingSemanticSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$indexDir/v1/gen/${graft.index.GenLog.Superseded}")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/v2/full/cents")))
-    assert(rows(StreamOps.serveSemanticContinuous(spark, indexDir)) === prefixWant)
+    assert(rows(survivors(indexDir)) === prefixWant)
 
     // resume over the compacted index: the final batch probes the folded
     // members through the carried codebook
     stageFile(src, all.filter($"vec_id" > c2), "batch3", 3000000L)
     run()
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, indexDir)) ===
+      rows(survivors(indexDir)) ===
         rebuilt(all, seedCents))
 
-    // the maintained cluster report: member + survivor counts served
-    // merge-on-read from the generation artifacts, no recomputation —
-    // must equal per-cell counts derived from a monolithic assignment +
-    // prune under the seed epoch
+    // the cluster report from the maintained index: member + survivor
+    // counts per cell read merge-on-read from the generation artifacts,
+    // no recomputation — must equal per-cell counts derived from a
+    // monolithic assignment + prune under the seed epoch, and every
+    // nonempty cell keeps its lowest id
+    def stats(members: DataFrame, kept: DataFrame): Seq[String] =
+      rows(members.groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
+        .join(kept.groupBy($"cell").agg(count(lit(1)).as("n_kept")), Seq("cell"), "left")
+        .select($"cell", $"n_vecs", coalesce($"n_kept", lit(0L)).as("n_kept"))
+        .orderBy($"cell"))
+    val fam = StreamOps.semFamily(indexDir)
+    val got = stats(
+      familyState(fam, indexDir, "cells").select($"cell".cast("long").as("cell")),
+      familyState(fam, indexDir, "survivors"))
     val eAll = all
       .select($"vec_id", $"embedding")
       .withColumn("n2", Vec.norm2($"embedding"))
-    val cellsAll = SimilarityOps.semanticCellsWith(eAll, seedCents)
-    val survAll = SimilarityOps.semSurvivorsWith(eAll, seedCents)
-    val wantStats = cellsAll
-      .groupBy($"cell")
-      .agg(count(lit(1)).as("n_vecs"))
-      .join(survAll.groupBy($"cell").agg(count(lit(1)).as("n_kept")), Seq("cell"))
-      .select($"cell", $"n_vecs", $"n_kept")
-      .orderBy($"cell")
     assert(
-      rows(StreamOps.serveClusterStatsContinuous(spark, indexDir)) ===
-        rows(wantStats),
+      got === stats(
+        SimilarityOps.semanticCellsWith(eAll, seedCents),
+        SimilarityOps.semSurvivorsWith(eAll, seedCents)),
       "maintained cluster report diverged from the monolithic counts")
+    assert(got.nonEmpty && got.forall(!_.endsWith(",0]")), "a cell kept no survivor")
 
     // EPOCH ROLL (blue/green): re-seed over the grown corpus — k and the
     // codebook re-derive from the full vector set, survivors recompute
@@ -148,10 +158,10 @@ class StreamingSemanticSpec extends SparkSpec {
     val rolledDir = Files.createTempDirectory("graft_sem_rolled").toString
     StreamOps.rollSemanticEpoch(spark, indexDir, rolledDir)
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, rolledDir)) ===
+      rows(survivors(rolledDir)) ===
         rows(SparkEntry.queries("q_dedup_semantic")(spark, sf)))
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, indexDir)) ===
+      rows(survivors(indexDir)) ===
         rebuilt(all, seedCents))
   }
 
@@ -198,11 +208,11 @@ class StreamingSemanticSpec extends SparkSpec {
     // assignment + prune are deterministic
     val prefix = all.filter($"vec_id" <= c2)
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, rolledDir)) ===
+      rows(survivors(rolledDir)) ===
         rebuilt(prefix, rolledCents))
     // the OLD epoch serves untouched (blue/green)
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, indexDir)) ===
+      rows(survivors(indexDir)) ===
         rebuilt(prefix, standInCents))
 
     // day 2 under the new epoch: the ingest stream restarts against the
@@ -227,7 +237,7 @@ class StreamingSemanticSpec extends SparkSpec {
     try q2.processAllAvailable()
     finally q2.stop()
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, rolledDir)) ===
+      rows(survivors(rolledDir)) ===
         rebuilt(all, rolledCents))
 
     // a second trained roll at full corpus lands exactly on the
@@ -236,7 +246,7 @@ class StreamingSemanticSpec extends SparkSpec {
     val fullDir = Files.createTempDirectory("graft_semt_full").toString
     StreamOps.rollSemanticEpochTrained(spark, rolledDir, fullDir)
     assert(
-      rows(StreamOps.serveSemanticContinuous(spark, fullDir)) ===
+      rows(survivors(fullDir)) ===
         rows(SparkEntry.queries("q_dedup_semantic_trained")(spark, sf)))
   }
 
@@ -247,7 +257,7 @@ class StreamingSemanticSpec extends SparkSpec {
     val batch = all.filter($"vec_id" > c0 && $"vec_id" <= c1)
     val fam = StreamOps.semFamily(indexDir)
     fam.commit(batch, indexDir, batchId = 0L)
-    val first = rows(StreamOps.serveSemanticContinuous(spark, indexDir))
+    val first = rows(survivors(indexDir))
     // The crash window: generation v1 already committed, the stream
     // restarts, and foreachBatch re-delivers batch 0. The write must not
     // scan its own target through the merge-on-read roots — before the
@@ -255,6 +265,6 @@ class StreamingSemanticSpec extends SparkSpec {
     // (the cached listing of $path/cells raced the Overwrite) and wedged
     // the pipeline on every restart.
     fam.commit(batch, indexDir, batchId = 0L)
-    assert(rows(StreamOps.serveSemanticContinuous(spark, indexDir)) === first)
+    assert(rows(survivors(indexDir)) === first)
   }
 }

@@ -206,7 +206,9 @@ class StreamingUnifiedPipelineSpec extends SparkSpec {
 
     // semantic: survivor-log union ≡ the monolithic anchor prune over
     // embCur under the seed-epoch codebook
-    def semGot() = rows(StreamOps.serveSemanticContinuous(spark, p.vectors.semDir))
+    val semDir = p.vectors.semDir
+    def semGot() =
+      rows(familyState(StreamOps.semFamily(semDir), semDir, "survivors").orderBy("vec_id"))
     val semWant = rows(
       SimilarityOps.semSurvivorsWith(embCur, seedSemCents).orderBy($"vec_id"))
     assert(semGot() === semWant, "semantic leg diverged")

@@ -134,7 +134,8 @@ class StreamingVectorPipelineSpec extends SparkSpec {
 
     // semantic: survivor-log union ≡ the monolithic anchor prune under
     // the seed-epoch codebook
-    def semGot() = rows(StreamOps.serveSemanticContinuous(spark, p.semDir))
+    def semGot() =
+      rows(familyState(StreamOps.semFamily(p.semDir), p.semDir, "survivors").orderBy("vec_id"))
     val semWant = rows(
       SimilarityOps.semSurvivorsWith(e, seedSemCents).orderBy($"vec_id"))
     assert(semGot() === semWant, "semantic leg diverged")
