@@ -260,7 +260,7 @@ object Bench {
     //     same ones the measured run needs: compilation and JIT happen
     //     here instead of inside the first measured query.
     def quietly(step: => Unit): Unit =
-      try step catch { case _: Throwable => () }
+      try step catch { case NonFatal(_) => () }
     quietly(graft.T(spark, sfDir, "events").limit(1000)
       .groupBy("event_type").count().count())
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -417,11 +417,15 @@ object Bench {
       "n_queries" -> JInt((rec \ "queries").children.size),
       "n_errors" -> JInt(errors.size),
       "n_budget_violations" -> JInt(violations.size)))))
+    // The record goes to target/ (build output), never over the tracked
+    // records at the repo root; a failed write fails the run.
     try {
-      val out = java.nio.file.Paths.get("BENCH_LAST.json")
+      val out = java.nio.file.Paths.get("target", "BENCH_LAST.json")
+      java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] write BENCH_LAST.json: $e") }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(splitsRoot))
-    spark.stop()
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(splitsRoot))
+      spark.stop()
+    }
   }
 }

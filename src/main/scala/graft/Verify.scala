@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 import org.json4s.{JObject, JString}
 import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -18,7 +19,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -30,7 +31,7 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .flatMap { case (name, gen) =>
         try Some(name -> gen(spark, sfDir))
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] oracle gen $name failed: ${e.getMessage}")
           None
         }

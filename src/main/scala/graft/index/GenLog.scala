@@ -10,16 +10,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The shared generation-log kernel behind every persisted index in the
   * library — the ONE implementation of version directories, commit
   * markers, merge-on-read root resolution, compaction, and snapshot
-  * pruning that every maintained index family rides: the generation-local
-  * families ([[GenFamily]]) — streamed, or built once for a served or
-  * incremental query ([[GenFamily.buildOnce]]) — the near-dup index's
-  * stateful log, whose compaction keeps [[KeepFulls]] snapshots and
-  * grace-deletes ([[graceDelete]]) like a family's, and the few serving
-  * builds with a layout of their own ([[buildOnce]]).
+  * pruning that every persisted index rides as a [[GenFamily]]: streamed,
+  * or built once for a served or incremental query
+  * ([[GenFamily.buildOnce]]). A family whose generation depends on prior
+  * state (the near-dup log, the embedding dedup) reads its roots as of
+  * the batch and commits the generation it computed; no index keeps a
+  * lifecycle of its own.
   *
   * Layout contract: an index directory holds `v<N>` version directories,
-  * each holding named ARTIFACT directories (`full`, `gen`, `assign`,
-  * `remap`, `md5_inc`, ...). An artifact exists only once its writer has
+  * each holding named ARTIFACT directories (`full`, `gen`, and a
+  * family's per-batch log beside its generation: `assign`, `remap`,
+  * `pairs`). An artifact exists only once its writer has
   * dropped the [[Marker]] file inside it — a crash mid-write leaves an
   * uncommitted directory that every reader and compactor ignores, so a
   * partially-written full snapshot can never silently supersede the
@@ -84,10 +85,9 @@ object GenLog {
     * first call (files stay intact for readers whose scan listing was
     * resolved before the fold committed), delete it on a later call —
     * a live reader outlives its snapshot for one full compaction
-    * interval. Shared by [[GenFamily.compact]] and the near-dup index's
-    * compaction.
+    * interval ([[GenFamily.compact]]).
     */
-  private[graft] def graceDelete(fs: FileSystem, path: Path): Unit = {
+  private def graceDelete(fs: FileSystem, path: Path): Unit = {
     val tomb = new Path(path, Superseded)
     if (fs.exists(tomb)) dropArtifact(fs, path)
     else fs.create(tomb, true).close()
@@ -95,9 +95,9 @@ object GenLog {
 
   /** Delete an artifact directory, then its `v<N>` directory once that
     * holds nothing else — otherwise every later [[versions]] listing
-    * would walk the emptied version again. Shared by the compactions.
+    * would walk the emptied version again.
     */
-  private[graft] def dropArtifact(fs: FileSystem, artifact: Path): Unit = {
+  private def dropArtifact(fs: FileSystem, artifact: Path): Unit = {
     fs.delete(artifact, true)
     val version = artifact.getParent
     if (fs.exists(version) && fs.listStatus(version).isEmpty) fs.delete(version, true)
@@ -467,10 +467,11 @@ object GenLog {
       try { fs.create(claim, false).close(); true }
       catch { case _: java.io.IOException => false }
 
-  /** Overwrite-write a frame as one committed artifact. */
-  def commitParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+  /** Overwrite-write a frame as one committed artifact — a per-batch log
+    * artifact beside a family's generation.
+    */
+  def commitParquet(df: DataFrame, path: String): Unit = {
+    df.write.mode(SaveMode.Overwrite).parquet(path)
     markCommitted(df.sparkSession, path)
   }
 
@@ -587,24 +588,34 @@ object GenLog {
     /** Seed an index: the base corpus becomes the committed v0 full
       * snapshot.
       */
-    def seed(s: SparkSession, base: DataFrame, dir: String): Unit = {
-      val p = s"$dir/v0/$FullSub"
-      write(s, base, p)
-      markCommitted(s, p)
-    }
+    def seed(s: SparkSession, base: DataFrame, dir: String): Unit =
+      seedWith(s, dir)(write(s, base, _))
 
-    /** Build-once over the family layout: under one [[GenLog.buildOnce]]
-      * claim on `dir`, the first frame seeds `v0/full` and each further
-      * frame commits the next generation (`v1/gen`, `v2/gen`, ...). The
-      * frames are constructed inside the claim, so a skipped build runs
-      * no Spark job. A served query is a seeded family; an incremental
-      * one adds one generation. Returns whether the build ran.
+    /** Seed an index through `body`, which writes the v0 full snapshot
+      * under the path it is given — where a seed holds more than `write`
+      * makes of one frame, such as an epoch model beside the corpus.
+      */
+    def seedWith(s: SparkSession, dir: String)(body: String => Unit): Unit =
+      put(s, s"$dir/v0/$FullSub")(body)
+
+    /** Build-once over the family layout: [[buildOnceWith]] over
+      * `write` of each frame.
       */
     def buildOnce(s: SparkSession, dir: String)(frames: => Seq[DataFrame]): Boolean =
+      buildOnceWith(s, dir)(frames.map(f => write(s, f, _)))
+
+    /** Under one [[GenLog.buildOnce]] claim on `dir`, the first body
+      * seeds `v0/full` and each further body commits the next generation
+      * (`v1/gen`, `v2/gen`, ...). The bodies are constructed inside the
+      * claim, so a skipped build runs no Spark job. A served query is a
+      * seeded family; an incremental one adds one generation. Returns
+      * whether the build ran.
+      */
+    def buildOnceWith(s: SparkSession, dir: String)(bodies: => Seq[String => Unit]): Boolean =
       GenLog.buildOnce(s, dir) {
-        val gens = frames
-        seed(s, gens.head, dir)
-        gens.tail.zipWithIndex.foreach { case (g, i) => commit(g, dir, i.toLong) }
+        val gens = bodies
+        seedWith(s, dir)(gens.head)
+        gens.tail.zipWithIndex.foreach { case (g, i) => commitWith(s, dir, i.toLong)(g) }
       }
 
     /** Commit micro-batch `batchId`'s rows as generation v(batchId+1) —
@@ -614,12 +625,15 @@ object GenLog {
       * (batchId, input): a retry deterministically overwrites the same
       * uncommitted directory before the marker lands.
       */
-    def commit(batch: DataFrame, dir: String, batchId: Long): Unit = {
-      val sess = batch.sparkSession
-      val p = s"$dir/v${batchId + 1}/$GenSub"
-      write(sess, batch, p)
-      markCommitted(sess, p)
-    }
+    def commit(batch: DataFrame, dir: String, batchId: Long): Unit =
+      commitWith(batch.sparkSession, dir, batchId)(write(batch.sparkSession, batch, _))
+
+    /** Commit generation v(batchId+1) through `body`, which writes it
+      * under the path it is given — for a generation computed against
+      * prior state rather than by `write` from the batch alone.
+      */
+    def commitWith(s: SparkSession, dir: String, batchId: Long)(body: String => Unit): Unit =
+      put(s, s"$dir/v${batchId + 1}/$GenSub")(body)
 
     /** Continuous maintenance: each micro-batch writes its OWN committed
       * generation — O(batch) work and bytes, no prior state read, the
@@ -679,11 +693,8 @@ object GenLog {
       // deriving `k` from a second listing would let a gen that landed
       // between the listings be superseded without ever being folded
       val (f, gens) = live(s, dir)
-      if (gens.nonEmpty) {
-        val p = s"$dir/v${gens.max}/$FullSub"
-        fold(s, paths(dir, f, gens), p)
-        markCommitted(s, p)
-      }
+      if (gens.nonEmpty)
+        put(s, s"$dir/v${gens.max}/$FullSub")(fold(s, paths(dir, f, gens), _))
       val fs = fsOf(s, dir)
       val fulls = versions(s, dir, requiring = FullSub).sorted
       val newestFull = fulls.max
@@ -741,6 +752,12 @@ object GenLog {
         s"$label at $dir has no committed full snapshot (seed it first)")
       val f = fulls.max
       (f, versions(s, dir, requiring = GenSub).filter(v => v > f && v <= upTo).sorted)
+    }
+
+    // Every artifact of the family lands here: written whole, then marked.
+    private def put(s: SparkSession, path: String)(body: String => Unit): Unit = {
+      body(path)
+      markCommitted(s, path)
     }
 
     private def paths(dir: String, f: Long, gens: Seq[Long]): Seq[String] =

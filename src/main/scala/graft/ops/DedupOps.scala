@@ -649,7 +649,7 @@ object DedupOps {
   }
 
   /** The per-batch graph pieces shared by [[applyDedupDelta]] (assignment
-    * only) and [[applyDedupDeltaFull]] (assignment + index maintenance):
+    * only) and [[applyDedupDeltaIncr]] (assignment + index maintenance):
     * batch exact-dup collapse, md5-index edges, band-index edges, and the
     * batch-internal banded pairs. `checkpointToks` eagerly checkpoints the
     * tokenized unmatched reps when the caller consumes them more than
@@ -725,58 +725,29 @@ object DedupOps {
   }
 
   /** [[applyDedupDelta]] plus INDEX MAINTENANCE — the full per-batch step
-    * of a continuous ingest: returns (assignment, updated md5 index,
-    * updated band index) such that the updated index is semantically
-    * `buildDedupIndex(base ∪ batch)` — without ever reading the base
-    * corpus. Three pieces beyond the assignment:
+    * of a continuous ingest, as what it COMMITS per batch instead of a
+    * rewritten index: (assignment, merge remap, new md5 groups, new band
+    * rows), such that `assignment ∪ remap-applied-index ∪ new rows` is
+    * semantically `buildDedupIndex(base ∪ batch)` without ever reading
+    * the base corpus. Every returned frame is bounded by the BATCH:
     *
     *  - merge remap: a batch doc can BRIDGE two base clusters; the closure
     *    runs over a universe extended with the touched base-cluster nodes,
-    *    so their final labels fall out of the same pass, and index rows of
-    *    a merged cluster are rewritten to the surviving (smaller) label —
-    *    a broadcast join against the batch-bounded remap set.
+    *    so their final labels fall out of the same pass. The remap set is
+    *    the batch's cluster merges (old label → surviving smaller label);
+    *    labels only move down and a remapped old label's rows leave the
+    *    live index, so the accumulated log is a functional acyclic pointer
+    *    forest that composes transitively on read.
     *  - new md5 groups: every batch (lang, md5) group absent from the
-    *    index is added under its rep's final cluster.
+    *    index, under its rep's final cluster.
     *  - new band rows: the md5-unmatched reps' band rows under their final
     *    clusters (an exact match adds no band rows — its token set is
     *    already indexed under its base rep).
     *
-    * With monotone batch ids this makes sequential apply ≡ one-shot apply
-    * ≡ full rebuild, inductively batch over batch
-    * (StreamingIncrDedupSpec proves the chain end-to-end, including a
-    * probe in batch k+1 hitting content first seen in batch k and a
-    * post-bridge probe hitting remapped rows).
-    */
-  private[graft] def applyDedupDeltaFull(
-      s: SparkSession,
-      delta: DataFrame,
-      md5Index: DataFrame,
-      bandIndex: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    val (assign, remap, md5New, bandNew, _) =
-      applyDedupDeltaIncr(s, delta, md5Index, bandIndex)
-    def remapped(idx: DataFrame, cols: Seq[String]): DataFrame =
-      idx
-        .join(broadcast(remap), idx("cluster_id") === remap("old_cid"), "left")
-        .select(cols.map(idx(_)) :+ coalesce($"new_cid", idx("cluster_id")).as("cluster_id"): _*)
-    (
-      assign,
-      remapped(md5Index, Seq("lang", "h")).unionByName(md5New),
-      remapped(bandIndex, Seq("band_idx", "band_val", "lang", "n", "th"))
-        .unionByName(bandNew))
-  }
-
-  /** The O(batch) decomposition of [[applyDedupDeltaFull]] — what a
-    * continuous ingest actually COMMITS per batch, instead of a rewritten
-    * index: (assignment, merge remap, new md5 groups, new band rows).
-    * `assignment ∪ remap-applied-index ∪ increments` is semantically
-    * `buildDedupIndex(base ∪ batch)`, but every returned frame is bounded
-    * by the BATCH (touched clusters, new groups, new reps × bands), never
-    * the corpus — the append-only commit a versioned index layout wants.
-    * The remap set is the batch's cluster merges (old label → surviving
-    * smaller label); labels only move down and a remapped old label's
-    * rows leave the live index, so the accumulated log is a functional
-    * acyclic pointer forest that composes transitively on read.
+    * With monotone batch ids, sequential apply ≡ one-shot apply ≡ full
+    * rebuild, inductively batch over batch (StreamingIncrDedupSpec proves
+    * the chain end-to-end, including a probe in batch k+1 hitting content
+    * first seen in batch k and a post-bridge probe hitting remapped rows).
     *
     * The tuple also carries the batch's VERIFIED PAIR set
     * (md5-index attachments ∪ band-index attachments ∪ batch-internal
@@ -838,10 +809,10 @@ object DedupOps {
     * FULL rebuild over base ∪ delta restricted to delta rows, so the
     * hash-checked contract is precisely delta-apply ≡ full rebuild.
     * The query rides the persisted build-once index exactly like a daily
-    * ingest would: build seeds the continuous-dedup index's v0 md5/band
-    * snapshot ONCE per warehouse root ([[StreamOps.seedDedupIndex]], the
-    * state a daily ingest already holds); serve applies the batch against
-    * that snapshot — the daily-ingest latency.
+    * ingest would: build seeds the near-dup log's v0 md5/band snapshot
+    * ONCE per warehouse root ([[StreamOps.NearDupFamily]], the state a
+    * daily ingest already holds); serve applies the batch against that
+    * snapshot — the daily-ingest latency.
     */
   private[graft] def dedupIncrSplit(
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
@@ -849,12 +820,10 @@ object DedupOps {
     val all = docs(s, d).select($"doc_id", $"lang", $"text")
     val (base, delta) = TextOps.newestTenth(all)
     val root = graft.index.GenLog.datasetRoot(s, d) + "/dedup_incr"
-    val build = () => {
-      graft.index.GenLog.buildOnce(s, root)(StreamOps.seedDedupIndex(s, base, root))
-      ()
-    }
+    val F = StreamOps.NearDupFamily
+    val build = () => { F.buildOnce(s, root)(Seq(base)); () }
     val serve = () => {
-      val (md5, band) = StreamOps.readDedupIndexState(s, root, upTo = 0)
+      val (md5, band) = StreamOps.nearDupState(s, F.roots(s, root))
       applyDedupDelta(s, delta, md5, band)
         .crossJoin(broadcast(TextOps.tenthThreshold(all)))
         .select(
@@ -871,17 +840,17 @@ object DedupOps {
     * q_dedup_cc's complete (doc_id, cluster_id, cluster_size) contract
     * WITHOUT re-running the banded-Jaccard pair lineage that
     * six closure/rank queries otherwise recompute. State is the
-    * FIFTEENTH maintained family — the versioned dedup log grown with
-    * per-generation verified pairs and a v0 full assignment
-    * ([[StreamOps.seedDedupState]] / [[StreamOps.incrDedupCommit]]):
-    * each ingest batch commits O(batch) frames (assign, remap, pairs,
-    * md5/band increments), and the serve is a SLIM-STATE read — union
-    * the committed assignments, compose the remap pointer forest, one
-    * window for sizes. No tokenization, no band self-join, no closure
-    * loop at read time; the closure ran once per batch at commit. The
-    * oracle is q_dedup_cc's own full-rebuild recursive CTE, so the hash
-    * gate re-proves chain-apply ≡ one-shot rebuild at both scales every
-    * round (the q_dedup_incr identity, extended to the full corpus).
+    * near-dup log grown with per-generation verified pairs and a v0 full
+    * assignment ([[StreamOps.dedupStateSeed]] /
+    * [[StreamOps.incrDedupCommit]]): each ingest batch commits O(batch)
+    * frames (assign, remap, pairs, and the md5/band generation), and the
+    * serve is a SLIM-STATE read — union the committed assignments,
+    * compose the remap pointer forest, one window for sizes. No
+    * tokenization, no band self-join, no closure loop at read time; the
+    * closure ran once per batch at commit. The oracle is q_dedup_cc's own
+    * full-rebuild recursive CTE, so the hash gate re-proves chain-apply ≡
+    * one-shot rebuild at both scales on every check (the q_dedup_incr
+    * identity, extended to the full corpus).
     *
     * Build seeds the base state ONCE (the full-rebuild-shaped cost a
     * warehouse pays at bootstrap); serve is the daily-ingest figure —
@@ -896,10 +865,8 @@ object DedupOps {
     import s.implicits._
     val (base, batch) = TextOps.newestTenth(docs(s, d).select($"doc_id", $"lang", $"text"))
     val root = graft.index.GenLog.datasetRoot(s, d) + "/cc_incr"
-    val build = () => {
-      graft.index.GenLog.buildOnce(s, root)(StreamOps.seedDedupState(s, base, root))
-      ()
-    }
+    val F = StreamOps.NearDupFamily
+    val build = () => { F.buildOnceWith(s, root)(Seq(StreamOps.dedupStateSeed(s, base, root))); () }
     val serve = () => {
       StreamOps.incrDedupCommit(batch, root, batchId = 0L)
       StreamOps.readDedupAssignments(s, root)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -420,30 +420,42 @@ object LmOps {
     import s.implicits._
     val (base, delta) = TextOps.newestTenth(docs(s, d).select($"doc_id", $"lang", $"text"))
     val root = GenLog.datasetRoot(s, d) + "/lm_score_incr"
+    val F = lmScoreFamily(root)
     val build = () => {
-      GenLog.buildOnce(s, root) {
-        val ftBase = TextOps.bm25TokensOf(base)
-        val counts = unigramCountsOf(ftBase).localCheckpoint(eager = true)
-        counts.write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/model")
-        lmScoreOf(base, rarityAggOf(ftBase, counts))
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/scores_v0")
-      }
+      F.buildOnceWith(s, root)(Seq { path =>
+        val counts = unigramCountsOf(TextOps.bm25TokensOf(base)).localCheckpoint(eager = true)
+        counts.write.mode(SaveMode.Overwrite).parquet(s"$path/model")
+        scoresUnder(base, counts).write.mode(SaveMode.Overwrite).parquet(s"$path/scores")
+      })
       ()
     }
     val serve = () => {
-      val model = T.parquet(s, s"$root/model")
-      val deltaScores = lmScoreOf(
-        delta, rarityAggOf(TextOps.bm25TokensOf(delta), model))
-      T.parquet(s, s"$root/scores_v0")
-        .unionByName(deltaScores)
+      val roots = F.roots(s, root)
+      GenLog.read(s, roots, "scores")
+        .unionByName(scoresUnder(delta, GenLog.read(s, roots.take(1), "model")))
         .orderBy($"doc_id")
     }
     (build, serve)
   }
+
+  // the per-doc scores of `docs` under `model`'s (term, cf, n_total)
+  private def scoresUnder(docs: DataFrame, model: DataFrame): DataFrame =
+    lmScoreOf(docs, rarityAggOf(TextOps.bm25TokensOf(docs), model))
+
+  /** q_lm_score_incr's state, with the model pinned per epoch: a full
+    * snapshot holds the epoch's (term, cf, n_total) `model` beside the
+    * per-doc `scores`; a generation holds its docs' `scores` under the
+    * newest full's model, and the fold copies the model forward.
+    */
+  private[graft] def lmScoreFamily(root: String): GenLog.GenFamily = GenLog.GenFamily(
+    label = "LM score state",
+    write = (s, docs, path) =>
+      scoresUnder(docs, GenLog.read(s, lmScoreFamily(root).roots(s, root).take(1), "model"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$path/scores"),
+    fold = (s, roots, path) => {
+      GenLog.read(s, roots, "scores").write.mode(SaveMode.Overwrite).parquet(s"$path/scores")
+      GenLog.read(s, roots.take(1), "model").write.mode(SaveMode.Overwrite).parquet(s"$path/model")
+    })
 
   /** [[LmScoreSql]] with the model CTEs pinned to the base epoch
     * (doc_id ≤ (9·max) div 10) while scoring the full corpus — the

@@ -890,21 +890,22 @@ object SimilarityOps {
       s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     import s.implicits._
     val dir = s"${GenLog.datasetRoot(s, d)}/ivf"
+    val F = StreamOps.ivfFamily(dir)
     val build = () => {
-      // a raw claim, not ivfFamily's buildOnce: the seed needs the codebook
-      GenLog.buildOnce(s, dir) {
+      // the seed body writes the stand-in codebook beside the cells
+      F.buildOnceWith(s, dir) {
         val e = emb(s, d)
         val cents = e
           .filter($"vec_id" < IvfCells)
           .select($"vec_id".as("c_id"), $"embedding".as("c"), Vec.norm2($"embedding").as("cn2"))
-        StreamOps.seedIvfIndex(s, e, cents, dir)
+        Seq(writeIvfIndexFrom(s, e.select($"vec_id", $"embedding"), cents, _))
       }
       ()
     }
     (build,
       () => serveIvfBatch(
         s,
-        StreamOps.ivfFamily(dir).roots(s, dir),
+        F.roots(s, dir),
         emb(s, d)
           .select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
           .filter($"vec_id" < BatchProbes)))
@@ -1261,20 +1262,11 @@ object SimilarityOps {
     val thr = e.agg(max($"vec_id")).head().getLong(0) / 2
     val cells = semanticCells(e, k)
     val path = s"${GenLog.datasetRoot(s, d)}/semcells"
-    val build = () => {
-      GenLog.buildOnce(s, path) {
-        cells
-          .filter($"vec_id" <= thr)
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cell")
-          .parquet(path)
-      }
-      ()
-    }
+    val build = () => { SemCellsFamily.buildOnce(s, path)(Seq(cells.filter($"vec_id" <= thr))); () }
     val serve = () => {
       val batch = cells.filter($"vec_id" > thr).localCheckpoint(true)
-      val base = GenLog.read(s, Seq(path), within = Some("cell" -> batch.select($"cell")))
+      val base = GenLog.read(
+        s, SemCellsFamily.roots(s, path), within = Some("cell" -> batch.select($"cell")))
         .select($"vec_id", $"embedding", $"n2", $"cell".cast("long").as("cell"))
       batch
         .join(
@@ -1286,6 +1278,21 @@ object SimilarityOps {
     }
     (build, serve)
   }
+
+  /** q_dedup_semantic_incr's cell store: (vec_id, embedding, n2, cell)
+    * rows partitioned by cell, written and folded as they are, without a
+    * repartition on the key.
+    */
+  private[graft] val SemCellsFamily = GenLog.GenFamily(
+    label = "semantic cell store",
+    write = (_, cells, path) =>
+      cells.write.mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy("cell").parquet(path),
+    fold = (s, roots, path) =>
+      GenLog.read(s, roots)
+        .write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cell")
+        .parquet(path))
 
   /** q_cluster_stats — the cluster-size/prune report of the semantic
     * dedup pass (the distribution SemDeDup §4 reports): per cell, its
@@ -1355,11 +1362,7 @@ object SimilarityOps {
     import s.implicits._
     val e =
       emb(s, d).select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
-    val cb = trainCodebook(e, semCellCount(e).toInt, iters = 2)
-    val cents = cb
-      .toDF("c_id", "c")
-      .select($"c_id", $"c", Vec.norm2($"c").as("cn2"))
-    semSurvivorsWith(e, cents).orderBy($"vec_id")
+    semSurvivorsWith(e, semTrainedCents(e)).orderBy($"vec_id")
   }
 
   /** Monolithic anchor prune under an explicit epoch codebook:
@@ -1375,33 +1378,32 @@ object SimilarityOps {
   }
 
   /** Seed artifact of the continuous semantic-dedup family: the epoch
-    * codebook (`cents`, k = max(16, ⌈√N_base⌉) pinned HERE — the epoch
-    * contract), the base's cell-partitioned members (`cells`), and the
-    * base survivor log (`survivors`) under one snapshot path.
+    * codebook `cents(e)` of the base's vectors `e` (k = max(16,
+    * ⌈√N_base⌉) pinned HERE — the epoch contract), the base's
+    * cell-partitioned members (`cells`), and the base survivor log
+    * (`survivors`) under one snapshot path. The codebook is the first-k
+    * oracle stand-in ([[semStandinCents]]) or, for the trained epoch
+    * roll, a Lloyd-trained one ([[semTrainedCents]]).
     */
-  private[graft] def writeSemSeed(s: SparkSession, base: DataFrame, path: String): Unit = {
-    import s.implicits._
-    val e = base
-      .select($"vec_id", $"embedding")
-      .withColumn("n2", Vec.norm2($"embedding"))
-    writeSemSeedWith(s, e, semCentsOf(e, semCellCount(e)).localCheckpoint(true), path)
+  private[graft] def writeSemSeed(
+      s: SparkSession,
+      base: DataFrame,
+      cents: DataFrame => DataFrame)(path: String): Unit = {
+    val e = base.select(col("vec_id"), col("embedding"), Vec.norm2(col("embedding")).as("n2"))
+    writeSemSeedWith(s, e, cents(e), path)
   }
 
-  /** Seed under a Lloyd-TRAINED epoch codebook — the production
-    * retraining path ([[trainCodebook]], the q_dedup_semantic_trained
-    * quantizer) instead of the first-k oracle stand-in. Used by the
-    * trained epoch roll: train over the grown corpus, re-assign and
-    * re-prune everything under the new quantizer.
+  private[graft] def semStandinCents(e: DataFrame): DataFrame =
+    semCentsOf(e, semCellCount(e)).localCheckpoint(true)
+
+  /** The production quantizer of the semantic family: a Lloyd-trained
+    * ([[trainCodebook]], two iterations) codebook over `e`'s vectors.
     */
-  private[graft] def writeSemSeedTrained(s: SparkSession, base: DataFrame, path: String): Unit = {
-    import s.implicits._
-    val e = base
-      .select($"vec_id", $"embedding")
-      .withColumn("n2", Vec.norm2($"embedding"))
-    val cents = trainCodebook(e, semCellCount(e).toInt, iters = 2)
+  private[graft] def semTrainedCents(e: DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    trainCodebook(e, semCellCount(e).toInt, iters = 2)
       .toDF("c_id", "c")
       .select($"c_id", $"c", Vec.norm2($"c").as("cn2"))
-    writeSemSeedWith(s, e, cents, path)
   }
 
   /** The shared seed writer under an EXPLICIT epoch codebook: codebook +
@@ -1793,56 +1795,67 @@ object SimilarityOps {
       .parquet(path)
   }
 
-  /** The persisted sub-codebooks at `path`, with each centroid's norm
-    * recomputed through the same fold as the in-session codebook (floats
-    * round-trip parquet exactly, so the row is bit-identical).
+  /** The sub-codebooks persisted in the full snapshot `full`, with each
+    * centroid's norm recomputed through the same fold as the in-session
+    * codebook (floats round-trip parquet exactly, so the row is
+    * bit-identical).
     */
-  private def pqCodebookAt(s: SparkSession, path: String): DataFrame =
+  private def pqCodebookAt(s: SparkSession, full: String): DataFrame =
     pqCodebookRow(
-      T.parquet(s, path).select(col("m"), col("c_id"), col("c"), Vec.norm2(col("c")).as("cn2")))
+      T.parquet(s, s"$full/codebook")
+        .select(col("m"), col("c_id"), col("c"), Vec.norm2(col("c")).as("cn2")))
 
-  /** PQ codes family, shaped like [[StreamOps.ivfFamily]]: the epoch's
-    * sub-codebooks live at `root/codebook`, and every generation encodes
-    * its vectors against them into (vec_id, k0..k3 SMALLINT) rows.
+  /** PQ codes family, shaped like [[StreamOps.ivfFamily]]: a full snapshot
+    * holds the epoch's sub-codebooks (`codebook`, PqM×PqK rows) beside
+    * its `codes`, and every generation encodes its vectors against the
+    * newest full's codebook into (vec_id, k0..k3 SMALLINT) `codes` rows.
+    * The fold copies the codebook forward.
     */
   private[graft] def pqFamily(root: String): GenLog.GenFamily = GenLog.GenFamily(
     label = "PQ codes",
-    write = (s, vecs, path) => writePqCodesFor(vecs, pqCodebookAt(s, s"$root/codebook"), path),
-    fold = (s, roots, path) =>
-      GenLog.read(s, roots).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path))
+    write = (s, vecs, path) =>
+      writePqCodesFor(vecs, pqCodebookAt(s, pqFamily(root).roots(s, root).head), s"$path/codes"),
+    fold = (s, roots, path) => {
+      GenLog.read(s, roots, "codes")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/codes")
+      GenLog.read(s, roots.take(1), "codebook")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/codebook")
+    })
 
-  /** The persisted PQ index under one claim on `root`: the stand-in
-    * sub-codebooks (PqM×PqK rows — the model artifact) first, then the
-    * corpus seeded as [[pqFamily]]'s `v0/full` codes — the 64×-compressed
-    * scan tier. With `incr`, the seed holds the vectors up to ⌊9·max/10⌋
-    * and the newest tenth commits as generation `v1/gen`.
+  /** The persisted PQ index under one claim on `root`: the seed writes
+    * the stand-in sub-codebooks, then the corpus codes against them — the
+    * 64×-compressed scan tier. With `incr`, the seed holds the vectors up
+    * to ⌊9·max/10⌋ and the newest tenth commits as generation `v1/gen`.
     */
   private[graft] def writePqIndex(
       s: SparkSession, d: String, root: String, incr: Boolean = false): Unit = {
     import s.implicits._
-    GenLog.buildOnce(s, root) {
+    val F = pqFamily(root)
+    F.buildOnceWith(s, root) {
       val e = emb(s, d).select($"vec_id", $"embedding")
-      pqStandinCents(e)
-        .select($"m", $"c_id", $"c")
-        .coalesce(1)
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/codebook")
-      val F = pqFamily(root)
-      if (!incr) F.seed(s, e, root)
+      def seed(base: DataFrame)(path: String): Unit = {
+        pqStandinCents(e)
+          .select($"m", $"c_id", $"c")
+          .coalesce(1)
+          .write
+          .mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/codebook")
+        writePqCodesFor(base, pqCodebookAt(s, path), s"$path/codes")
+      }
+      if (!incr) Seq(seed(e))
       else {
         val thr = e.agg(expr("(max(vec_id) * 9) div 10")).head().getLong(0)
-        F.seed(s, e.filter($"vec_id" <= thr), root)
-        F.commit(e.filter($"vec_id" > thr), root, 0L)
+        Seq(seed(e.filter($"vec_id" <= thr)), F.write(s, e.filter($"vec_id" > thr), _))
       }
     }
     ()
   }
 
-  /** ADC serve from a persisted codebook + one or more codes GENERATIONS
-    * merged on read: vector ids are disjoint across generations (monotone
-    * ingest) so the union is exact, and every generation's scan reads the
-    * 4-smallint payload only. The cn2 lookup tables ride next to qd in the
+  /** ADC serve from the roots of a persisted [[pqFamily]] index: the
+    * newest full's codebook and every root's codes, merged on read.
+    * Vector ids are disjoint across generations (monotone ingest) so the
+    * union is exact, and every generation's scan reads the 4-smallint
+    * payload only. The cn2 lookup tables ride next to qd in the
     * same (m, c_id)-positional shape; norms are recomputed through the
     * same fold from the persisted float centroids (exact parquet
     * round-trip), so serving is bit-identical to the in-session path.
@@ -1850,15 +1863,14 @@ object SimilarityOps {
   private[graft] def servePqCodes(
       s: SparkSession,
       d: String,
-      codebookPath: String,
-      codesPaths: Seq[String]): DataFrame = {
+      roots: Seq[String]): DataFrame = {
     import s.implicits._
-    val cbRow = pqCodebookAt(s, codebookPath)
+    val cbRow = pqCodebookAt(s, roots.head)
     val qtab = pqProbeTab(emb(s, d).select($"vec_id", $"embedding"), cbRow)
       .crossJoin(broadcast(cbRow.select(
         transform($"mcb", mc =>
           transform(mc.getField("cb"), c => c.getField("cn2"))).as("ct"))))
-    val codes = GenLog.read(s, codesPaths)
+    val codes = GenLog.read(s, roots, "codes")
     val dotSum = (0 until PqM)
       .map(m =>
         element_at(
@@ -1883,7 +1895,7 @@ object SimilarityOps {
   private def servedPq(s: SparkSession, d: String, name: String, incr: Boolean): DataFrame = {
     val root = s"${GenLog.datasetRoot(s, d)}/$name"
     writePqIndex(s, d, root, incr)
-    servePqCodes(s, d, s"$root/codebook", pqFamily(root).roots(s, root))
+    servePqCodes(s, d, pqFamily(root).roots(s, root))
   }
 
   /** q_sim_pq_served — the codes table as the PERSISTED scan tier: build

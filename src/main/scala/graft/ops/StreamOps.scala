@@ -445,14 +445,12 @@ object StreamOps {
       s: SparkSession,
       curatedBase: DataFrame,
       p: CorpusPipeline): Unit = {
-    // seedDedupState, not seedDedupIndex: the composed pipeline's
-    // dedup leg serves the FULL-corpus assignment (base + streamed) and
-    // starts the verified pair log at v0 — the q_dedup_cc_incr family's
-    // state, at no extra pass (the seed build computes the base closure
-    // anyway)
-    seedDedupState(
-      s, curatedBase.select(col("doc_id"), col("lang"), col("text")),
-      p.dedupIndexDir)
+    // the full-view seed: the composed pipeline's dedup leg serves the
+    // whole corpus's assignment (base + streamed) and starts the verified
+    // pair log at v0, at no extra pass (the seed build computes the base
+    // closure anyway)
+    NearDupFamily.seedWith(s, p.dedupIndexDir)(dedupStateSeed(
+      s, curatedBase.select(col("doc_id"), col("lang"), col("text")), p.dedupIndexDir))
     Bm25Family.seed(s, curatedBase, p.bm25IndexDir)
     BoilerFamily.seed(s, curatedBase, p.boilerStatsDir)
     PassageFamily.seed(s, curatedBase, p.passageGramsDir)
@@ -473,7 +471,7 @@ object StreamOps {
 
   /** The composed continuous corpus program as a stream writer: feed it
     * [[liftCuratedDocs]] and start. Stop/compact/resume is the daily
-    * loop — [[compactDedupIndex]] and the Bm25Family / ReportFamily
+    * loop — the NearDupFamily, Bm25Family and ReportFamily
     * compactions while stopped, then restart from the same checkpoint
     * (EndToEndPipelineSpec proves the whole cycle ≡ the batch pipeline,
     * day over day).
@@ -635,35 +633,49 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Seed the continuous-dedup index: build the base corpus's persisted
-    * state ([[DedupOps.buildDedupIndex]]) and write it as version v0 —
-    * the snapshot micro-batch 0 reads. Band rows are hive-partitioned on
-    * band_idx, the index's natural layout. md5 commits before band: the
-    * snapshot is recognized by its band marker, so a crash between the
-    * two writes leaves no half-snapshot a reader could pick.
+  /** The near-dup log: the continuous-dedup index as a family. A full
+    * snapshot and a generation each hold `md5` (one row per (lang,
+    * md5(text)) group with its cluster) and `band` (the rep-level band
+    * rows, hive-partitioned on band_idx), the two frames of
+    * [[DedupOps.buildDedupIndex]], which `write` runs over a base corpus.
+    * A batch's generation is computed against the state as of the batch
+    * ([[incrDedupCommit]]); beside it, in the same version and committed
+    * before it, lie the batch's log artifacts `assign`, `remap` and
+    * `pairs`, which no compaction folds or prunes. The fold is the
+    * merge-on-read state ([[nearDupState]]).
     */
-  def seedDedupIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
-    val (md5Index, bandIndex) = DedupOps.buildDedupIndex(s, base)
-    GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
-    GenLog.commitParquet(
-      bandIndex, s"$indexDir/v0/band_index", partitionBy = Seq("band_idx"))
+  val NearDupFamily = GenLog.GenFamily(
+    label = "near-dup index",
+    write = (s, docs, path) => writeNearDup(DedupOps.buildDedupIndex(s, docs))(path),
+    fold = (s, roots, path) => writeNearDup(nearDupState(s, roots))(path))
+
+  // the (md5, band) frames of a full snapshot or a generation
+  private def writeNearDup(index: (DataFrame, DataFrame))(path: String): Unit = {
+    val (md5, band) = index
+    md5.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/md5")
+    band.write
+      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("band_idx")
+      .parquet(s"$path/band")
   }
 
-  /** [[seedDedupIndex]] plus the FULL-VIEW state the pair-graph family
-    * (q_dedup_cc_incr) starts from: the base corpus's assignment
-    * (v0/assign — so [[readDedupAssignments]] serves ALL docs, not just
-    * streamed batches) and its verified rep-level pair set (v0/pairs —
-    * the seed generation of the maintained pair graph). One build pass
-    * produces all four frames ([[DedupOps.buildDedupState]]); band_index
-    * stays last as the seed's recognition marker.
+  /** The seed body of the full-view near-dup log (q_dedup_cc_incr and the
+    * corpus pipeline), for [[NearDupFamily]]'s `seedWith`: besides the
+    * index snapshot, the base corpus's assignment (`v0/assign`, so
+    * [[readDedupAssignments]] serves every doc, not only streamed ones)
+    * and its verified rep-level pairs (`v0/pairs`, the seed of the pair
+    * graph), all from one [[DedupOps.buildDedupState]] pass. The log
+    * artifacts commit before the snapshot, as a batch's commit before its
+    * generation.
     */
-  def seedDedupState(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
-    val (assign, pairs, md5Index, bandIndex) = DedupOps.buildDedupState(s, base)
+  private[graft] def dedupStateSeed(
+      s: SparkSession,
+      base: DataFrame,
+      indexDir: String)(path: String): Unit = {
+    val (assign, pairs, md5, band) = DedupOps.buildDedupState(s, base)
     GenLog.commitParquet(assign, s"$indexDir/v0/assign")
     GenLog.commitParquet(pairs, s"$indexDir/v0/pairs")
-    GenLog.commitParquet(md5Index, s"$indexDir/v0/md5_index")
-    GenLog.commitParquet(
-      bandIndex, s"$indexDir/v0/band_index", partitionBy = Seq("band_idx"))
+    writeNearDup((md5, band))(path)
   }
 
   /** Closure SERVED from the maintained pair state alone — the
@@ -688,18 +700,11 @@ object StreamOps {
 
   /** The committed `sub` artifacts of a per-batch log (the near-dup
     * log's assign/remap/pairs, the embedding dedup's pairs), oldest
-    * first, at the versions `keep` admits. Committed dirs only: an
-    * in-flight batch's partial write never leaks into a read.
+    * first. Committed dirs only: an in-flight batch's partial write never
+    * leaks into a read.
     */
-  private[graft] def logPaths(
-      s: SparkSession,
-      indexDir: String,
-      sub: String,
-      keep: Long => Boolean = _ => true): Seq[String] =
-    GenLog.versions(s, indexDir, requiring = sub)
-      .filter(keep)
-      .sorted
-      .map(v => s"$indexDir/v$v/$sub")
+  private[graft] def logPaths(s: SparkSession, indexDir: String, sub: String): Seq[String] =
+    GenLog.versions(s, indexDir, requiring = sub).sorted.map(v => s"$indexDir/v$v/$sub")
 
   /** Bound under which the remap log resolves driver-side: the log is
     * O(cluster merges) — bounded model state like the CC driver finish —
@@ -763,52 +768,40 @@ object StreamOps {
   private val Md5Cols = Seq("lang", "h")
   private val BandCols = Seq("band_idx", "band_val", "lang", "n", "th")
 
-  /** Merge-on-read of the dedup index as of stream version `upTo`: the
-    * newest FULL snapshot ≤ upTo (the v0 seed or a
-    * [[compactDedupIndex]] rewrite) plus every later batch's O(batch)
-    * `md5_inc`/`band_inc` increments, with the remap log over the same
-    * version window composed transitively and applied. Increments carry
-    * labels current as of their own commit, so only LATER remaps can
-    * touch them — and applying a remap below a row's version is a no-op
-    * (old labels are dead keys) — which is why one window works for the
-    * whole union.
+  /** Merge-on-read of the near-dup log over `roots` of [[NearDupFamily]]:
+    * the `md5`/`band` rows of every root, with the remap log of the
+    * roots' generations composed transitively and applied. A
+    * generation's rows carry labels current as of its own commit, so only
+    * later remaps can touch them, and a remap applied below a row's
+    * version is a no-op (old labels are dead keys): one composed log
+    * serves the whole union. A generation's `remap` commits before it, so
+    * every generation root has one beside it.
     */
-  private[graft] def readDedupIndexState(
+  private[graft] def nearDupState(
       s: SparkSession,
-      indexDir: String,
-      upTo: Long): (DataFrame, DataFrame) = {
-    val snaps =
-      GenLog.versions(s, indexDir, requiring = "band_index").filter(_ <= upTo)
-    require(
-      snaps.nonEmpty,
-      s"dedup index at $indexDir has no snapshot version <= $upTo (run seedDedupIndex)")
-    val snapVer = snaps.max
-    def vers(sub: String): Seq[String] =
-      logPaths(s, indexDir, sub, v => v > snapVer && v <= upTo)
-    // the snapshot plus the increments since (fan-in is O(batches since
-    // last compaction) by contract)
-    def state(snap: String, inc: String, cols: Seq[String]): DataFrame =
-      GenLog.read(s, s"$indexDir/v$snapVer/$snap" +: vers(inc))
-        .select(cols.map(col): _*)
-    val md5 = state("md5_index", "md5_inc", Md5Cols :+ "cluster_id")
-    val band = state("band_index", "band_inc", BandCols :+ "cluster_id")
-    val remapPaths = vers("remap")
-    if (remapPaths.isEmpty) (md5, band)
+      roots: Seq[String]): (DataFrame, DataFrame) = {
+    val md5 = GenLog.read(s, roots, "md5").select((Md5Cols :+ "cluster_id").map(col): _*)
+    val band = GenLog.read(s, roots, "band").select((BandCols :+ "cluster_id").map(col): _*)
+    val remaps = roots.tail.map(_.stripSuffix("/gen") + "/remap")
+    if (remaps.isEmpty) (md5, band)
     else {
-      val r = composeRemap(GenLog.read(s, remapPaths))
+      val r = composeRemap(GenLog.read(s, remaps))
       (applyRemap(md5, r, Md5Cols), applyRemap(band, r, BandCols))
     }
   }
 
-  /** Commit micro-batch `batchId`'s O(batch) dedup increments as version
-    * v(batchId+1) — the per-batch body of [[incrDedupStreamWriter]],
-    * exposed so a COMPOSED pipeline (curate → dedup → index → publish in
-    * one foreachBatch) can drive this leg from the same micro-batch.
+  /** Commit micro-batch `batchId` of the near-dup log as version
+    * v(batchId+1): the batch is applied against the state as of
+    * `batchId` (so a retry never reads its own generation), its
+    * `assign`, `remap` and `pairs` log artifacts commit, and its index
+    * rows commit last as the generation, the batch's commit gate. The
+    * per-batch body of [[incrDedupStreamWriter]], which a composed
+    * pipeline drives from its own foreachBatch.
     */
   def incrDedupCommit(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
     val sess = batch.sparkSession
     val (md5Index, bandIndex) =
-      readDedupIndexState(sess, indexDir, upTo = batchId)
+      nearDupState(sess, NearDupFamily.roots(sess, indexDir, upTo = batchId))
     val (assign, remap, md5New, bandNew, pairs) = DedupOps.applyDedupDeltaIncr(
       sess,
       batch.select("doc_id", "lang", "text"),
@@ -817,26 +810,21 @@ object StreamOps {
     val next = s"$indexDir/v${batchId + 1}"
     GenLog.commitParquet(assign, s"$next/assign")
     GenLog.commitParquet(remap, s"$next/remap")
-    // the batch's verified-pair generation: slim id pairs, part of
-    // the permanent per-batch log like assign/remap — never folded or
-    // pruned; band_inc stays LAST as the batch's commit gate
     GenLog.commitParquet(pairs, s"$next/pairs")
-    GenLog.commitParquet(md5New, s"$next/md5_inc")
-    GenLog.commitParquet(
-      bandNew, s"$next/band_inc", partitionBy = Seq("band_idx"))
+    NearDupFamily.commitWith(sess, indexDir, batchId)(writeNearDup((md5New, bandNew)))
   }
 
   /** Continuous incremental near-dedup — the streaming form of
     * q_dedup_incr: each micro-batch runs the full incremental semantics
     * ([[DedupOps.applyDedupDeltaIncr]] — md5 set probe, band-join against
     * the persisted buckets, batch-internal banded pairs, one batch-sized
-    * closure) against the merge-on-read index state, then commits FOUR
+    * closure) against the merge-on-read index state, then commits its
     * batch-bounded frames as one new versioned directory: `assign` (the
     * batch's labels as of commit), `remap` (the batch's cluster merges),
-    * and the `md5_inc`/`band_inc` index increments. Bytes written per
+    * `pairs`, and the generation of new md5/band rows. Bytes written per
     * batch are O(batch) — the full index is never rewritten
-    * ([[compactDedupIndex]] is the periodic fold that bounds read
-    * fan-in); StreamingIncrDedupSpec asserts the exact increment row
+    * (`NearDupFamily.compact` is the periodic fold that bounds read
+    * fan-in); StreamingIncrDedupSpec asserts the exact generation row
     * counts.
     *
     * Exactly-once without a transaction log: batch b reads versions ≤ b
@@ -862,64 +850,6 @@ object StreamOps {
       if (!batch.isEmpty) incrDedupCommit(batch, indexDir, batchId)
     }
 
-  /** Fold the accumulated O(batch) increments into a fresh FULL snapshot
-    * at the newest committed version — the compaction leg of the
-    * append-only protocol, run while the stream is stopped. Drops the
-    * folded `*_inc` dirs (superseded by the snapshot); committed `assign`
-    * and `remap` dirs are never touched — assignments are immutable
-    * as-of-commit labels and the remap log is what resolves them forward.
-    * Like [[GenLog.GenFamily.compact]], it then drops all but the newest
-    * [[GenLog.KeepFulls]] md5/band snapshots, so the dir holds O(1) index
-    * copies and merge-on-read fan-in stays O(batches since last
-    * compaction).
-    */
-  def compactDedupIndex(s: SparkSession, indexDir: String): Unit = {
-    // a batch counts as committed only once its LAST artifact (band_inc)
-    // is marked: gating on the first-written one (assign) would let a
-    // compaction that runs after a mid-batch crash fold a snapshot at
-    // version k WITHOUT that batch's increments — and the retried
-    // batch's increments, landing at v == snapVer, would then be
-    // invisible to every merge-on-read forever
-    val committed = GenLog.versions(s, indexDir, requiring = "band_inc")
-    // an unseeded dir (or one whose seed crashed pre-commit) has no
-    // committed band_index at all — nothing to fold against and no
-    // snapshot to gate cleanup on, so return before any .max on an
-    // empty version list can throw
-    val snaps0 = GenLog.versions(s, indexDir, requiring = "band_index")
-    if (snaps0.isEmpty) return
-    if (committed.nonEmpty && snaps0.max < committed.max) {
-      val k = committed.max
-      val (md5, band) = readDedupIndexState(s, indexDir, upTo = k)
-      // md5 first, band last: recognition keys on the band marker, so a
-      // crash anywhere before it leaves the fold invisible (the increments
-      // are still in place — reads are unchanged) and a rerun overwrites
-      GenLog.commitParquet(md5, s"$indexDir/v$k/md5_index")
-      GenLog.commitParquet(
-        band, s"$indexDir/v$k/band_index", partitionBy = Seq("band_idx"))
-    }
-    // cleanup runs even with nothing to fold (the GenFamily.compact shape),
-    // so a grace tombstone planted last compaction is collected now.
-    // Live-reader grace: folded increments are tombstoned first, deleted
-    // a compaction later — a reader that resolved its merge-on-read
-    // state just before the fold committed finishes its scan.
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val snaps = GenLog.versions(s, indexDir, requiring = "band_index").sorted
-    Seq("md5_inc", "band_inc").foreach { sub =>
-      GenLog.versions(s, indexDir, requiring = sub).filter(_ <= snaps.last).foreach { v =>
-        GenLog.graceDelete(
-          fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$sub"))
-      }
-    }
-    // band last: a crash mid-prune leaves the snapshot recognized, so the
-    // next compaction collects the rest
-    snaps.dropRight(GenLog.KeepFulls).foreach { v =>
-      Seq("md5_index", "band_index").foreach { a =>
-        GenLog.dropArtifact(fs, new org.apache.hadoop.fs.Path(s"$indexDir/v$v/$a"))
-      }
-    }
-  }
-
   /** All (doc_id, cluster_id) assignments the continuous dedup has
     * committed — the union of every version's per-batch assignment dir
     * (v0 is the seed and has none) — with the FULL remap log composed
@@ -933,11 +863,7 @@ object StreamOps {
     val a = GenLog.read(s, logPaths(s, indexDir, "assign"))
     val remapPaths = logPaths(s, indexDir, "remap")
     if (remapPaths.isEmpty) a
-    else {
-      val r = composeRemap(GenLog.read(s, remapPaths))
-      a.join(r, a("cluster_id") === r("old_cid"), "left")
-        .select(a("doc_id"), coalesce(r("new_cid"), a("cluster_id")).as("cluster_id"))
-    }
+    else applyRemap(a, composeRemap(GenLog.read(s, remapPaths)), Seq("doc_id"))
   }
 
   /** Embedding-dedup band family (q_dedup_embed_incr's index, and the
@@ -1176,14 +1102,11 @@ object StreamOps {
       s: SparkSession,
       base: DataFrame,
       cents: DataFrame,
-      indexDir: String): Unit = {
-    val p = s"$indexDir/v0/full"
+      indexDir: String): Unit =
     // raw (vec_id, embedding) is the kernel contract — writeIvfCellsFrom
     // derives n2 itself
-    SimilarityOps.writeIvfIndexFrom(
-      s, base.select(col("vec_id"), col("embedding")), cents, p)
-    GenLog.markCommitted(s, p)
-  }
+    ivfFamily(indexDir).seedWith(s, indexDir)(
+      SimilarityOps.writeIvfIndexFrom(s, base.select(col("vec_id"), col("embedding")), cents, _))
 
   /** The EPOCH ROLL — the operation the streaming contract defers
     * quantizer retraining to: reassign every vector across the current
@@ -1204,13 +1127,9 @@ object StreamOps {
       s: SparkSession,
       indexDir: String,
       newCents: DataFrame,
-      newIndexDir: String): Unit = {
-    val vectors = GenLog.read(s, ivfFamily(indexDir).roots(s, indexDir), "cells")
-      .select(col("vec_id"), col("embedding"))
-    val p = s"$newIndexDir/v0/full"
-    SimilarityOps.writeIvfIndexFrom(s, vectors, newCents, p)
-    GenLog.markCommitted(s, p)
-  }
+      newIndexDir: String): Unit =
+    seedIvfIndex(
+      s, GenLog.read(s, ivfFamily(indexDir).roots(s, indexDir), "cells"), newCents, newIndexDir)
 
   /** SEMANTIC dedup family (SemDeDup). Model state = the epoch codebook
     * (the first-k base vectors, k = max(16, ⌈√N_base⌉), pinned at seed —
@@ -1268,11 +1187,9 @@ object StreamOps {
   /** Seed the continuous semantic-dedup index: epoch codebook + base
     * cells + base survivor log as the committed v0 full snapshot.
     */
-  def seedSemanticIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit = {
-    val p = s"$indexDir/v0/full"
-    SimilarityOps.writeSemSeed(s, base, p)
-    GenLog.markCommitted(s, p)
-  }
+  def seedSemanticIndex(s: SparkSession, base: DataFrame, indexDir: String): Unit =
+    semFamily(indexDir).seedWith(s, indexDir)(
+      SimilarityOps.writeSemSeed(s, base, SimilarityOps.semStandinCents))
 
   /** The EPOCH ROLL: re-seed a NEW index directory from every vector
     * across the current roots — k and the codebook re-derive from the
@@ -1305,11 +1222,9 @@ object StreamOps {
   def rollSemanticEpochTrained(
       s: SparkSession,
       indexDir: String,
-      newIndexDir: String): Unit = {
-    val p = s"$newIndexDir/v0/full"
-    SimilarityOps.writeSemSeedTrained(s, epochVectors(s, indexDir), p)
-    GenLog.markCommitted(s, p)
-  }
+      newIndexDir: String): Unit =
+    semFamily(newIndexDir).seedWith(s, newIndexDir)(
+      SimilarityOps.writeSemSeed(s, epochVectors(s, indexDir), SimilarityOps.semTrainedCents))
 
   /** Boilerplate shingle-stats family — the continuous lift of
     * q_text_boilerplate: each micro-batch persists its docs' per-doc
@@ -1576,7 +1491,7 @@ object StreamOps {
 
   /** Stopped-stream compaction for all thirteen families. */
   def compactUnifiedPipeline(s: SparkSession, p: UnifiedPipeline): Unit = {
-    compactDedupIndex(s, p.corpus.dedupIndexDir)
+    NearDupFamily.compact(s, p.corpus.dedupIndexDir)
     Bm25Family.compact(s, p.corpus.bm25IndexDir)
     if (p.corpus.phraseIndexDir.nonEmpty)
       PhraseFamily.compact(s, p.corpus.phraseIndexDir)

@@ -292,9 +292,11 @@ object ClusterCheck {
       if (streamMode) {
         val work = java.nio.file.Files
           .createTempDirectory("graft_cluster_stream").toString
-        runPipeline(spark, sfDir, work).foreach { case (name, df) =>
-          df.write.mode("overwrite").parquet(s"$outDir/$name")
-        }
+        try
+          runPipeline(spark, sfDir, work).foreach { case (name, df) =>
+            df.write.mode("overwrite").parquet(s"$outDir/$name")
+          }
+        finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
         println(s"[cluster] executors=$execs surfaces=${StreamSurfaces.size}")
       } else {
         Queries.foreach { n =>

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
@@ -78,7 +79,7 @@ object Probe {
   private def warm(s: SparkSession, counter: JobCounter, names: Seq[String], sfDir: String): Seq[String] =
     names.filter { n =>
       try { timedRun(s, counter, n, sfDir); true }
-      catch { case e: Throwable => println(s"[probe] $n FAILED: $e"); false }
+      catch { case NonFatal(e) => println(s"[probe] $n FAILED: $e"); false }
     }
 
   private def show(p: Phase): String =
@@ -152,7 +153,7 @@ object Probe {
               .queryExecution.explainString(FormattedMode)
             Files.write(Paths.get(outDir, s"${n}_$suffix.txt"), txt.getBytes("UTF-8"))
             println(s"[plans] wrote $n")
-          } catch { case e: Throwable => println(s"[plans] $n FAILED: $e") }
+          } catch { case NonFatal(e) => println(s"[plans] $n FAILED: $e") }
 
       case Some("smoke") =>
         val df = SparkEntry.entry(spark)

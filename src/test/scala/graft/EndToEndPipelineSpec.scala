@@ -202,7 +202,7 @@ class EndToEndPipelineSpec extends SparkSpec {
       "mid-stream report diverged from the prefix batch pipeline")
 
     // dedup assignments ≡ the full near-dup rebuild over the WHOLE
-    // corpus (r18: seedCorpusPipeline seeds the v0 assignment, so the
+    // corpus (seedCorpusPipeline seeds the v0 assignment, so the
     // continuous view covers base + streamed rows), including the
     // planted doc attaching to a BASE cluster
     val got = StreamOps
@@ -293,7 +293,7 @@ class EndToEndPipelineSpec extends SparkSpec {
       "report publish plan reads the curated lake")
 
     // compaction of all five maintained families is read-invariant
-    StreamOps.compactDedupIndex(spark, dedupIdx)
+    StreamOps.NearDupFamily.compact(spark, dedupIdx)
     StreamOps.Bm25Family.compact(spark, bm25Idx)
     StreamOps.BoilerFamily.compact(spark, boilerIdx)
     StreamOps.PassageFamily.compact(spark, passageIdx)

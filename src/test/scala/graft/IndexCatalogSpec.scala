@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.index.GenLog
-import graft.ops.{SimilarityOps, StreamOps}
+import graft.ops.{SimilarityOps, StreamOps, Vec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,9 @@ class IndexCatalogSpec extends SparkSpec {
   private def fsOf(dir: String) =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def exists(dir: String, p: String) =
+    fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/$p"))
 
   test("build-once: a second build call for committed params is a no-op") {
     val dir = s"${Files.createTempDirectory("graft_cat_once")}/idx"
@@ -141,14 +144,12 @@ class IndexCatalogSpec extends SparkSpec {
     // compaction deletes it.
     StreamOps.AnnFamily.compact(spark, dir)
     assert(GenLog.versions(spark, dir, requiring = "full").max === 1L)
-    assert(
-      fsOf(dir).exists(
-        new org.apache.hadoop.fs.Path(s"$dir/v1/gen/${GenLog.Superseded}")))
+    assert(exists(dir, s"v1/gen/${GenLog.Superseded}"))
     assert(!StreamOps.AnnFamily.roots(spark, dir).exists(_.endsWith("v1/gen")))
     assert(rows(SimilarityOps.serveAnnBatch(
       spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
     StreamOps.AnnFamily.compact(spark, dir)
-    assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
+    assert(!exists(dir, "v1/gen"))
     assert(rows(SimilarityOps.serveAnnBatch(
       spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
   }
@@ -187,9 +188,7 @@ class IndexCatalogSpec extends SparkSpec {
     // gone, v3/gen rides out its grace tombstoned, and the next
     // compaction collects it too
     assert(GenLog.versions(spark, dir, requiring = "gen") === Seq(3L))
-    assert(
-      fsOf(dir).exists(
-        new org.apache.hadoop.fs.Path(s"$dir/v3/gen/${GenLog.Superseded}")))
+    assert(exists(dir, s"v3/gen/${GenLog.Superseded}"))
     StreamOps.AnnFamily.compact(spark, dir)
     assert(GenLog.versions(spark, dir, requiring = "gen").isEmpty)
   }
@@ -294,7 +293,7 @@ class IndexCatalogSpec extends SparkSpec {
     assert(rows(preCompact) === want)
     // post-grace, the next compaction collects the directory
     StreamOps.AnnFamily.compact(spark, dir)
-    assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/v1/gen")))
+    assert(!exists(dir, "v1/gen"))
     assert(rows(SimilarityOps.serveAnnBatch(
       spark, StreamOps.AnnFamily.roots(spark, dir), probes)) === want)
   }
@@ -304,21 +303,83 @@ class IndexCatalogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_cat_halfbatch").toString
     val docs = T(spark, sf, "documents").select($"doc_id", $"lang", $"text")
     val cut = docs.agg(max($"doc_id")).head().getLong(0) * 9 / 10
-    StreamOps.seedDedupIndex(spark, docs.filter($"doc_id" <= cut), dir)
+    StreamOps.NearDupFamily.seed(spark, docs.filter($"doc_id" <= cut), dir)
     // simulate a batch that crashed after committing its FIRST artifact
-    // (assign) but before its index increments
+    // (assign) but before its generation
     GenLog.commitParquet(
       docs.filter($"doc_id" > cut).select($"doc_id", $"doc_id".as("cluster_id")),
       s"$dir/v2/assign")
-    // compaction must NOT fold a snapshot at v2 (the increments are not
+    // compaction must NOT fold a snapshot at v2 (the generation is not
     // committed): gating on the first-written artifact would strand the
-    // retried batch's increments at v == snapVer forever
-    StreamOps.compactDedupIndex(spark, dir)
-    assert(GenLog.versions(spark, dir, requiring = "band_index") === Seq(0L))
+    // retried batch's generation at v == the snapshot's version forever
+    StreamOps.NearDupFamily.compact(spark, dir)
+    assert(GenLog.versions(spark, dir, requiring = "full") === Seq(0L))
     assert(!GenLog.manifest(spark, dir).exists {
-      case (2L, "band_index", _) => true
-      case _                     => false
+      case (2L, "full", _) => true
+      case _               => false
     })
+    assert(StreamOps.NearDupFamily.roots(spark, dir) === Seq(s"$dir/v0/full"))
+  }
+
+  test("a retried near-dup batch reads the index as of its own batchId") {
+    val dir = Files.createTempDirectory("graft_cat_nearretry").toString
+    val docs = T(spark, sf, "documents").select($"doc_id", $"lang", $"text")
+    val n = docs.agg(max($"doc_id")).head().getLong(0)
+    StreamOps.NearDupFamily.seed(spark, docs.filter($"doc_id" <= n / 3), dir)
+    StreamOps.incrDedupCommit(
+      docs.filter($"doc_id" > n / 3 && $"doc_id" <= 2 * n / 3), dir, batchId = 0L)
+    val batch = docs.filter($"doc_id" > 2 * n / 3)
+    StreamOps.incrDedupCommit(batch, dir, batchId = 1L)
+    def state(): Seq[Seq[String]] =
+      Seq("assign", "remap", "gen/md5", "gen/band")
+        .map(a => rows(spark.read.parquet(s"$dir/v2/$a")).sorted)
+    val first = state()
+    assert(first(3).nonEmpty, "the batch adds band rows")
+    // the retry runs after its own generation (v2/gen) committed: read as
+    // of the latest roots it would find the batch's own rows in the index
+    // and add none
+    StreamOps.incrDedupCommit(batch, dir, batchId = 1L)
+    assert(state() === first)
+    assert(StreamOps.NearDupFamily.roots(spark, dir) ===
+      Seq(s"$dir/v0/full", s"$dir/v1/gen", s"$dir/v2/gen"))
+  }
+
+  test("IVF and PQ compactions carry the epoch artifact forward and serve unchanged rows") {
+    val e = T(spark, sf, "embeddings").select($"vec_id", $"embedding")
+    val n = e.agg(max($"vec_id")).head().getLong(0)
+    // each compaction leaves the served rows as they were; the second
+    // one's fold lands at v2, prunes the v0 seed and keeps the codebook
+    def compactTwice(dir: String, F: GenLog.GenFamily, serve: () => DataFrame)(
+        batch2: DataFrame): Unit = {
+      def compacted(): Unit = {
+        val before = rows(serve())
+        F.compact(spark, dir)
+        assert(rows(serve()) === before)
+      }
+      compacted()
+      F.commit(batch2, dir, 1L)
+      compacted()
+      assert(GenLog.versions(spark, dir, requiring = "full").sorted === Seq(1L, 2L))
+      assert(!exists(dir, "v0/full") && exists(dir, "v2/full/codebook"))
+    }
+
+    val ivf = Files.createTempDirectory("graft_cat_ivfepoch").toString
+    val cents = e.filter($"vec_id" < 16)
+      .select($"vec_id".as("c_id"), $"embedding".as("c"), Vec.norm2($"embedding").as("cn2"))
+    val I = StreamOps.ivfFamily(ivf)
+    StreamOps.seedIvfIndex(spark, e.filter($"vec_id" <= n / 2), cents, ivf)
+    I.commit(e.filter($"vec_id" > n / 2 && $"vec_id" <= 3 * n / 4), ivf, 0L)
+    val probes = e.select($"vec_id", $"embedding", Vec.norm2($"embedding").as("n2"))
+      .filter($"vec_id" < 5)
+    compactTwice(ivf, I, () => SimilarityOps.serveIvfBatch(spark, I.roots(spark, ivf), probes))(
+      e.filter($"vec_id" > 3 * n / 4))
+
+    val pq = Files.createTempDirectory("graft_cat_pqepoch").toString
+    val P = SimilarityOps.pqFamily(pq)
+    SimilarityOps.writePqIndex(spark, sf, pq, incr = true)
+    // a second batch of fresh ids: copies of the first vectors
+    compactTwice(pq, P, () => SimilarityOps.servePqCodes(spark, sf, P.roots(spark, pq)))(
+      e.filter($"vec_id" < 50).select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
   }
 
   test("roots(upTo): the newest full at or below upTo plus the gens up to it") {
@@ -373,18 +434,16 @@ class IndexCatalogSpec extends SparkSpec {
     // three rounds fold at v1, v2 and v3; the newest KeepFulls survive
     val kept = Seq(2L, 3L)
     assert(kept.size === GenLog.KeepFulls)
-    def exists(dir: String, p: String) =
-      fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/$p"))
 
     val near = Files.createTempDirectory("graft_cat_nearprune").toString
     val d = quarters(docs, "doc_id")
-    StreamOps.seedDedupIndex(spark, d.head, near)
+    StreamOps.NearDupFamily.seed(spark, d.head, near)
     for (b <- 1 to 3) {
       StreamOps.incrDedupCommit(d(b), near, batchId = b - 1L)
-      StreamOps.compactDedupIndex(spark, near)
+      StreamOps.NearDupFamily.compact(spark, near)
     }
-    assert(GenLog.versions(spark, near, requiring = "band_index").sorted === kept)
-    assert(!exists(near, "v0/band_index") && !exists(near, "v0/md5_index"))
+    assert(GenLog.versions(spark, near, requiring = "full").sorted === kept)
+    assert(!exists(near, "v0/full"))
     // the emptied seed version goes with its last artifact; every batch
     // version keeps its assign/remap/pairs log
     assert(GenLog.versions(spark, near).sorted === Seq(1L, 2L, 3L))

@@ -245,7 +245,7 @@ class PqSpec extends SparkSpec {
       if (p.isDirectory) p.listFiles().map(bytes).sum
       else if (p.getName.endsWith(".parquet")) p.length()
       else 0L
-    val codes = bytes(new java.io.File(S.pqFamily(dir).roots(spark, dir).head))
+    val codes = bytes(new java.io.File(s"${S.pqFamily(dir).roots(spark, dir).head}/codes"))
     val raw = bytes(new java.io.File(s"$sf/embeddings.parquet").getAbsoluteFile)
     assert(codes > 0 && raw > 0)
     // 4 small ints vs 64 floats + label: parquet overhead included, the
@@ -265,7 +265,7 @@ class PqSpec extends SparkSpec {
     val mono = S.simPq(spark, sf).collect().toSeq
     assert(incr == mono, s"merge-on-read diverged:\n$incr\nvs\n$mono")
     val root = s"${graft.index.GenLog.datasetRoot(spark, sf)}/pq_incr"
-    val gen1 = spark.read.parquet(s"$root/v1/gen").count()
+    val gen1 = spark.read.parquet(s"$root/v1/gen/codes").count()
     val n = e.count()
     assert(gen1 > 0 && gen1 <= n / 5, s"gen1 $gen1 of $n is not batch-sized")
   }

@@ -16,10 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SparkSession.builder` in `src/main/scala/graft` apart from
   * ClusterCheck's `local-cluster` session.
   *
-  * Persisted indexes keep one layout: outside the few serving builds
-  * pinned here, every `graft/ops` index is built through a
-  * [[graft.index.GenLog.GenFamily]], so a new raw `GenLog.buildOnce`
-  * layout is an explicit edit of this spec. Index roots are read the
+  * Persisted indexes keep one lifecycle: every `graft/ops` index is
+  * seeded, built once, committed and compacted through a
+  * [[graft.index.GenLog.GenFamily]], so `graft/ops` holds no raw
+  * `GenLog.buildOnce` claim and no hand-written `GenLog.markCommitted`
+  * marker. Index roots are read the
   * same way everywhere: `graft/ops` unions no roots and collects no
   * probe keys by hand — [[graft.index.GenLog.read]] does both. And no
   * scaladoc sits directly on another, where the first would document
@@ -37,6 +38,7 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
   private val Builder = """SparkSession\s*\.\s*builder\b""".r
   private val RawRead = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
   private val RawBuildOnce = """GenLog\s*\.\s*buildOnce\s*\(""".r
+  private val RawMark = """GenLog\s*\.\s*markCommitted\s*\(""".r
   private val RootUnion = """reduce\(\s*_\s*(unionByName\s+_|\.\s*unionByName\(\s*_\s*\))\s*\)""".r
   private val KeyCollect = """\.distinct\(\)\s*\.collect\(\)""".r
   private val SplatIsin = """\.isin\([^()]*:\s*_\*\s*\)""".r
@@ -57,13 +59,12 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
     // run (countDistinct, row_number windows, a to_date day key)
     "liftSlide", "liftDedup", "liftDedupExact", "liftSketchRollup",
     // seeds, per-batch commits and stream writers
-    "seedCorpusPipeline", "seedSemanticIndex", "seedVectorPipeline",
+    "seedCorpusPipeline", "seedIvfIndex", "seedSemanticIndex", "seedVectorPipeline",
     "corpusPipelineBatch", "incrEmbedDedupCommit", "corpusPipelineWriter",
     "incrDedupStreamWriter", "incrEmbedDedupStreamWriter", "vectorPipelineWriter",
     "upsertStreamWriter",
     // compactions and epoch rolls
-    "compactDedupIndex", "compactVectorPipeline", "rollIvfEpoch", "rollSemanticEpoch",
-    "rollSemanticEpochTrained")
+    "compactVectorPipeline", "rollIvfEpoch", "rollSemanticEpoch", "rollSemanticEpochTrained")
 
   private def text(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
@@ -127,17 +128,18 @@ class ReadSeamHygieneSpec extends AnyFunSuite {
     assert(stacked === Map.empty)
   }
 
-  test("raw GenLog.buildOnce layouts in graft/ops are the pinned few") {
+  test("graft/ops claims and marks index artifacts only through GenFamily") {
+    assert(RawBuildOnce.findFirstIn("GenLog\n  .buildOnce(s, dir)").nonEmpty)
+    assert(RawBuildOnce.findFirstIn("F.buildOnce(s, dir)").isEmpty)
+    assert(RawMark.findFirstIn("GenLog.markCommitted(s, p)").nonEmpty)
     val ops = Root.resolve("ops")
-    val raw = sources.filter(_.startsWith(ops))
-      .map(p => p -> RawBuildOnce.findAllMatchIn(code(p)).size)
-      .filter(_._2 > 0).toMap
-    // SimilarityOps: ivf, semcells, pq; LmOps: lm_score_incr;
-    // DedupOps: dedup_incr, cc_incr
-    assert(raw === Map(
-      ops.resolve("SimilarityOps.scala") -> 3,
-      ops.resolve("LmOps.scala") -> 1,
-      ops.resolve("DedupOps.scala") -> 2))
+    val raw = for {
+      p <- sources.filter(_.startsWith(ops))
+      (call, pattern) <- Seq("buildOnce" -> RawBuildOnce, "markCommitted" -> RawMark)
+      n = pattern.findAllMatchIn(code(p)).size
+      if n > 0
+    } yield s"$p: GenLog.$call" -> n
+    assert(raw.toMap === Map.empty)
   }
 
   test("graft/ops reads index roots only through GenLog.read") {

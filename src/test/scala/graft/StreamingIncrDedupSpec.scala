@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   *  - remaps CHAIN across batches (5→3 in batch 1, 3→1 in batch 2) and
   *    readers compose them transitively.
   *
-  * Plus the scale contract: each batch commits O(batch) increments
+  * Plus the scale contract: each batch commits an O(batch) generation
   * (exact row counts asserted — never a corpus rewrite), compaction
   * folds them into a full snapshot without changing any read, and the
   * stream resumes correctly from a compacted index. And the
@@ -126,7 +126,7 @@ class StreamingIncrDedupSpec extends SparkSpec {
     val src = stageSource()
     val indexDir = Files.createTempDirectory("graft_incr_idx").toString
     val ckpt = Files.createTempDirectory("graft_incr_ckpt").toString
-    StreamOps.seedDedupIndex(spark, base.select("doc_id", "lang", "text"), indexDir)
+    StreamOps.NearDupFamily.seed(spark, base.select("doc_id", "lang", "text"), indexDir)
     val got = runStream(src, indexDir, ckpt)
     assert(got === fullWant(Seq(base, batch1, batch2)))
     // the effects only index maintenance + the remap log can produce:
@@ -144,30 +144,30 @@ class StreamingIncrDedupSpec extends SparkSpec {
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$p"))
     def rows(p: String) = spark.read.parquet(s"$indexDir/$p").count()
 
-    // O(batch) commits: increments only — exactly (unmatched reps × 2
+    // O(batch) commits: generations only — exactly (unmatched reps × 2
     // bands) band rows and (new md5 groups) rows; never a snapshot
-    assert(!exists("v1/band_index") && !exists("v2/band_index"),
+    assert(!exists("v1/full") && !exists("v2/full"),
       "batches must not rewrite the full index")
-    assert(rows("v1/band_inc") === 3 * 2, "batch-1: U1, Q, F bands only")
-    assert(rows("v1/md5_inc") === 3)
-    assert(rows("v2/band_inc") === 2 * 2, "batch-2: U2, WB bands only (202/203 are md5 hits)")
-    assert(rows("v2/md5_inc") === 2)
+    assert(rows("v1/gen/band") === 3 * 2, "batch-1: U1, Q, F bands only")
+    assert(rows("v1/gen/md5") === 3)
+    assert(rows("v2/gen/band") === 2 * 2, "batch-2: U2, WB bands only (202/203 are md5 hits)")
+    assert(rows("v2/gen/md5") === 2)
     // the persisted remap log carries exactly the merges
     def remaps(p: String) = spark.read.parquet(s"$indexDir/$p")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(remaps("v1/remap") === Set(5L -> 3L))
     assert(remaps("v2/remap") === Set(3L -> 1L, 102L -> 9L))
 
-    // compaction folds increments into a full snapshot; no read changes
-    StreamOps.compactDedupIndex(spark, indexDir)
-    assert(exists("v2/band_index") && exists("v2/md5_index"))
-    // grace contract: folded increments are tombstoned first (files
+    // compaction folds generations into a full snapshot; no read changes
+    StreamOps.NearDupFamily.compact(spark, indexDir)
+    assert(exists("v2/full/band") && exists("v2/full/md5"))
+    // grace contract: folded generations are tombstoned first (files
     // intact for readers that resolved pre-fold), deleted a compaction
     // later
-    for (v <- Seq("v1/band_inc", "v2/band_inc", "v1/md5_inc"))
+    for (v <- Seq("v1/gen", "v2/gen"))
       assert(exists(s"$v/${graft.index.GenLog.Superseded}"), v)
-    StreamOps.compactDedupIndex(spark, indexDir)
-    assert(!exists("v1/band_inc") && !exists("v2/band_inc") && !exists("v1/md5_inc"))
+    StreamOps.NearDupFamily.compact(spark, indexDir)
+    assert(!exists("v1/gen") && !exists("v2/gen"))
     assert(exists("v1/remap") && exists("v1/assign"), "assign/remap dirs are permanent")
     val afterCompact = StreamOps
       .readDedupAssignments(spark, indexDir)
@@ -176,7 +176,7 @@ class StreamingIncrDedupSpec extends SparkSpec {
       .toMap
     assert(afterCompact === got)
     // the folded snapshot carries RESOLVED labels (5→3→1 composed)
-    val md5Labels = spark.read.parquet(s"$indexDir/v2/md5_index")
+    val md5Labels = spark.read.parquet(s"$indexDir/v2/full/md5")
       .collect().map(r => r.getAs[Long]("cluster_id")).toSet
     assert(!md5Labels.contains(5L) && !md5Labels.contains(3L) && !md5Labels.contains(102L),
       s"dead labels must not survive compaction: $md5Labels")
@@ -194,7 +194,7 @@ class StreamingIncrDedupSpec extends SparkSpec {
     val src = stageSource()
     def run(): Map[Long, Long] = {
       val idx = Files.createTempDirectory("graft_incr_idx").toString
-      StreamOps.seedDedupIndex(spark, base.select("doc_id", "lang", "text"), idx)
+      StreamOps.NearDupFamily.seed(spark, base.select("doc_id", "lang", "text"), idx)
       runStream(src, idx, Files.createTempDirectory("graft_incr_ckpt").toString)
     }
     val first = run()

@@ -6,11 +6,11 @@ import graft.ops.{DedupOps, StreamOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The maintained PAIR-GRAPH family (verdict-r17 #1, the q_dedup_cc_incr
-  * state): [[StreamOps.seedDedupState]] seeds the base corpus's full
-  * assignment + verified rep-level pair set alongside the md5/band index,
-  * and each [[StreamOps.incrDedupCommit]] appends the batch's O(batch)
-  * verified pairs next to its assign/remap/index increments. Three
+/** The maintained PAIR-GRAPH family (the q_dedup_cc_incr state):
+  * [[StreamOps.dedupStateSeed]] seeds the base corpus's full assignment +
+  * verified rep-level pair set alongside the md5/band index, and each
+  * [[StreamOps.incrDedupCommit]] appends the batch's O(batch) verified
+  * pairs next to its assign/remap log and index generation. Three
   * contracts on a chain that exercises exact-dup collapse, cross-batch
   * near matches, base-cluster bridges, and a two-hop remap:
   *
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     banded-Jaccard lineage).
   *  3. O(batch) boundedness: each generation's pairs dir holds exactly
   *     the batch's verified edges (asserted counts), never a corpus
-  *     rewrite; compaction folds the index increments but leaves the
+  *     rewrite; compaction folds the index generations but leaves the
   *     pair log (with assign/remap) untouched, and reads are unchanged.
   */
 class StreamingPairSpec extends SparkSpec {
@@ -92,9 +92,13 @@ class StreamingPairSpec extends SparkSpec {
     a.map { case (d, c) => d -> (c, sizes(c)) }.toMap
   }
 
+  private def seedState(indexDir: String): Unit =
+    StreamOps.NearDupFamily.seedWith(spark, indexDir)(
+      StreamOps.dedupStateSeed(spark, base, indexDir))
+
   test("pair-graph family: full-view identity, pair-state closure identity, O(batch) pair log") {
     val indexDir = Files.createTempDirectory("graft_pair_idx").toString
-    StreamOps.seedDedupState(spark, base, indexDir)
+    seedState(indexDir)
     StreamOps.incrDedupCommit(batch1, indexDir, batchId = 0L)
     StreamOps.incrDedupCommit(batch2, indexDir, batchId = 1L)
 
@@ -130,14 +134,14 @@ class StreamingPairSpec extends SparkSpec {
     assert(pairRows("v2") === 6L, "batch-2 verified edges")
 
     // compaction folds index increments, leaves the pair log + reads
-    StreamOps.compactDedupIndex(spark, indexDir)
-    StreamOps.compactDedupIndex(spark, indexDir)
+    StreamOps.NearDupFamily.compact(spark, indexDir)
+    StreamOps.NearDupFamily.compact(spark, indexDir)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$p"))
     assert(exists("v0/pairs") && exists("v1/pairs") && exists("v2/pairs"),
       "pair generations are permanent log, never folded")
-    assert(!exists("v1/band_inc"), "index increments fold away")
+    assert(!exists("v1/gen"), "index generations fold away")
     assert(sizedView(indexDir) === want, "compaction changed a read")
     assert(
       StreamOps.ccFromPairState(spark, indexDir)
@@ -147,7 +151,7 @@ class StreamingPairSpec extends SparkSpec {
 
   test("idempotent apply: re-committing the same batch rewrites identical state") {
     val indexDir = Files.createTempDirectory("graft_pair_idem").toString
-    StreamOps.seedDedupState(spark, base, indexDir)
+    seedState(indexDir)
     StreamOps.incrDedupCommit(batch1, indexDir, batchId = 0L)
     val first = sizedView(indexDir)
     StreamOps.incrDedupCommit(batch1, indexDir, batchId = 0L) // retry shape

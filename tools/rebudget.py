@@ -8,7 +8,7 @@ fossilize slack into the gate (lowering is never capped: the gate only
 gets sharper for free). Capped raises are listed so the round close can
 note them.
 
-Usage: python3 tools/rebudget.py [BENCH_LAST.json] [OUT.json] [--force]
+Usage: python3 tools/rebudget.py [target/BENCH_LAST.json] [OUT.json] [--force]
 Writes OUT.json (default BUDGETS.json) in the cwd — pass
 BUDGETS_sf1.json with a 10x bench record to (re)generate the 10x gate.
 """
@@ -24,7 +24,7 @@ RAISE_CAP = 1.25
 def main():
     args = [a for a in sys.argv[1:] if a != "--force"]
     force = "--force" in sys.argv[1:]
-    src = args[0] if args else "BENCH_LAST.json"
+    src = args[0] if args else "target/BENCH_LAST.json"
     dst = args[1] if len(args) > 1 else "BUDGETS.json"
     with open(src) as f:
         rec = json.load(f)
